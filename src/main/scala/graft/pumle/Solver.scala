@@ -77,7 +77,10 @@ object Solver {
   /** Dispatch the external solver over staging dirs: one Spark task per
     * dir, `completed.flag` skip semantics (simulation.cpp:14-20), one
     * external process per task (`cmd stagingDir`). The solver writes
-    * its own outputs (bronze JSONs); we record exit codes. */
+    * its own outputs (bronze JSONs); we record exit codes. A solver that
+    * cannot start (missing binary, no exec bit) fails its sim with exit
+    * code 127, not the Spark job. Of the solver's merged output only the
+    * last 4 KiB are kept, for the failure message. */
   def dispatch(spark: SparkSession, stagingDirs: Seq[String],
       cmd: Seq[String]): Seq[RunResult] = {
     if (stagingDirs.isEmpty) return Seq.empty
@@ -87,15 +90,16 @@ object Solver {
         val flag = new java.io.File(dir, "completed.flag")
         if (flag.exists) RunResult(dir, 0, skipped = true)
         else {
-          val pb = new ProcessBuilder((cmd :+ dir): _*)
-          pb.redirectErrorStream(true)
-          val proc = pb.start()
-          val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
-          val code = proc.waitFor()
+          val (code, out) =
+            try {
+              val proc = new ProcessBuilder((cmd :+ dir): _*).redirectErrorStream(true).start()
+              val out = tail(proc.getInputStream, LogTailBytes)
+              (proc.waitFor(), out)
+            } catch { case e: java.io.IOException => (127, e.toString) }
           if (code == 0) {
             java.nio.file.Files.writeString(flag.toPath, "done\n")
           } else {
-            System.err.println(s"[solver] $dir exit=$code: ${out.take(500)}")
+            System.err.println(s"[solver] $dir exit=$code: $out")
           }
           RunResult(dir, code, skipped = false)
         }
@@ -103,36 +107,61 @@ object Solver {
       .collect().toSeq
   }
 
+  private val LogTailBytes = 4096
+
+  /** The last `max` bytes of `in`, read to its end, as UTF-8; never
+    * holds more than about twice `max` at once. */
+  private def tail(in: java.io.InputStream, max: Int): String = {
+    val buf = new java.io.ByteArrayOutputStream
+    val chunk = new Array[Byte](8192)
+    var n = in.read(chunk)
+    while (n >= 0) {
+      buf.write(chunk, 0, n)
+      if (buf.size > 2 * max) {
+        val b = buf.toByteArray
+        buf.reset()
+        buf.write(b, b.length - max, max)
+      }
+      n = in.read(chunk)
+    }
+    val b = buf.toByteArray
+    val from = math.max(0, b.length - max)
+    new String(b, from, b.length - from, java.nio.charset.StandardCharsets.UTF_8)
+  }
+
   /** Full entry-point-A drive: sweep → catalog upsert (CREATED) →
-    * staging → dispatch → status COMPLETED/FAILED per result. Returns
-    * the updated catalog. */
+    * staging → dispatch → one status move per sim. Returns the updated
+    * catalog.
+    *
+    * The status step is one pass. One collect reads `(sim_hash, status)`
+    * of the freshly run sims; the driver checks each one's whole walk
+    * against [[Catalog.Status.transitions]] (CREATED → RUNNING → end,
+    * or FAILED → CREATED → RUNNING → end for a re-queued sim) and throws
+    * `IllegalArgumentException` on an illegal step; the final status
+    * lands in one projection ([[Catalog.applyStatus]]). Chaining a
+    * validated [[Catalog.setStatus]] per step ran about two jobs per
+    * step over a growing plan: in the benchmark's 100-sim round the
+    * bookkeeping took ~0.6 s against ~0.25 s of dispatch. */
   def runSimulations(spark: SparkSession, catalog: DataFrame,
       variants: Seq[Sweep.Variant], stagingRoot: String,
       cmd: Seq[String],
       base: SimConfig = SimConfig(scala.collection.immutable.ListMap.empty)): (DataFrame, Seq[RunResult]) = {
-    val cat1 = Catalog.upsert(catalog, Catalog.rowsFor(spark, variants))
+    import Catalog.Status.{Completed, Created, Failed, Running}
+    val cat = Catalog.upsert(catalog, Catalog.rowsFor(spark, variants))
     val dirs = writeStaging(spark, variants, stagingRoot, base)
     val results = dispatch(spark, dirs, cmd)
-    val byHash = results.map(r =>
-      r.stagingDir.split("staging_").last -> r).toMap
-    val fresh = variants.filter(v => byHash.get(v.simHash).exists(!_.skipped))
-    val (ok, failed) = fresh.partition(v => byHash(v.simHash).exitCode == 0)
-    var cat = cat1
-    // re-queue previously FAILED sims first (the only legal exit from
-    // FAILED is back to CREATED) so retries don't trip the state machine
-    val freshHashes = fresh.map(_.simHash)
-    val previouslyFailed = cat
-      .filter(org.apache.spark.sql.functions.col("status") === Catalog.Status.Failed &&
-        org.apache.spark.sql.functions.col("sim_hash").isin(freshHashes: _*))
-      .select("sim_hash").collect().map(_.getString(0)).toSeq
-    if (previouslyFailed.nonEmpty)
-      cat = Catalog.setStatus(cat, previouslyFailed, Catalog.Status.Created)
-    if (fresh.nonEmpty)
-      cat = Catalog.setStatus(cat, freshHashes, Catalog.Status.Running)
-    if (ok.nonEmpty)
-      cat = Catalog.setStatus(cat, ok.map(_.simHash), Catalog.Status.Completed)
-    if (failed.nonEmpty)
-      cat = Catalog.setStatus(cat, failed.map(_.simHash), Catalog.Status.Failed)
-    (cat, results)
+    val end = results.filter(!_.skipped).map(r =>
+      r.stagingDir.split("staging_").last -> (if (r.exitCode == 0) Completed else Failed)).toMap
+    if (end.isEmpty) return (cat, results)
+    val current = cat
+      .filter(org.apache.spark.sql.functions.col("sim_hash").isin(end.keys.toSeq: _*))
+      .select("sim_hash", "status").collect()
+    // a previously FAILED sim re-queues first: FAILED's only exit is CREATED
+    Catalog.requireLegal(current.toSeq.flatMap { r =>
+      val walk = (if (r.getString(1) == Failed) Seq(Failed, Created) else Seq(r.getString(1))) ++
+        Seq(Running, end(r.getString(0)))
+      walk.zip(walk.tail)
+    })
+    (Catalog.applyStatus(cat, end.toSeq.groupMap(_._2)(_._1)), results)
   }
 }

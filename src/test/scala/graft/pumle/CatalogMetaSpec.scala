@@ -38,6 +38,46 @@ class CatalogMetaSpec extends SparkSpec {
     }
   }
 
+  test("setStatus validates duplicate and unknown hashes, and moves only its hashes") {
+    val three = variants :+ Sweep.Variant(3, "cccc3333", Map("pe" -> 7.0))
+    val cat = Catalog.upsert(Catalog.empty(spark), Catalog.rowsFor(spark, three))
+    def statusOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("sim_hash", "status").collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    // a hash listed twice and one not in the catalog
+    val running = Catalog.setStatus(cat, Seq("aaaa1111", "aaaa1111", "zzzz9999"), Catalog.Status.Running)
+    assert(statusOf(running) ==
+      Map("aaaa1111" -> "RUNNING", "bbbb2222" -> "CREATED", "cccc3333" -> "CREATED"))
+    assert(running.count() == 3)
+    // only unknown hashes: nothing to validate, nothing moves
+    assert(statusOf(Catalog.setStatus(cat, Seq("zzzz9999"), Catalog.Status.Completed)) == statusOf(cat))
+    val done = Catalog.setStatus(running, Seq("aaaa1111", "aaaa1111"), Catalog.Status.Completed)
+    assert(statusOf(done) ==
+      Map("aaaa1111" -> "COMPLETED", "bbbb2222" -> "CREATED", "cccc3333" -> "CREATED"))
+    val e = intercept[IllegalArgumentException] {
+      Catalog.setStatus(done, Seq("aaaa1111", "bbbb2222", "zzzz9999"), Catalog.Status.Completed)
+    }
+    assert(e.getMessage == "requirement failed: illegal transition COMPLETED -> COMPLETED, CREATED -> COMPLETED")
+  }
+
+  test("catalog commit swaps through .old, and read recovers from .old alone") {
+    val dir = java.nio.file.Files.createTempDirectory("catalog-commit")
+    val path = dir.resolve("catalog").toString
+    def hashes(df: org.apache.spark.sql.DataFrame) = df.select("sim_hash").collect().map(_.getString(0)).toSet
+    Catalog.write(Catalog.upsert(Catalog.empty(spark), Catalog.rowsFor(spark, variants)), path)
+    Catalog.write(Catalog.setStatus(Catalog.read(spark, path), Seq("aaaa1111"), Catalog.Status.Running), path)
+    assert(dir.toFile.list().toSet == Set("catalog"))
+    // a crash between the two renames leaves only <path>.old
+    assert(new java.io.File(path).renameTo(new java.io.File(s"$path.old")))
+    val recovered = Catalog.read(spark, path)
+    assert(hashes(recovered) == Set("aaaa1111", "bbbb2222"))
+    assert(recovered.filter(col("status") === "RUNNING").count() == 1)
+    // the next commit restores the live copy and drops .old
+    Catalog.write(Catalog.upsert(recovered,
+      Catalog.rowsFor(spark, Seq(Sweep.Variant(3, "cccc3333", Map("pe" -> 7.0))))), path)
+    assert(dir.toFile.list().toSet == Set("catalog"))
+    assert(hashes(Catalog.read(spark, path)) == Set("aaaa1111", "bbbb2222", "cccc3333"))
+  }
+
   test("catalog serves the CLI's verbatim SQL (main.py:129)") {
     val cat = Catalog.upsert(Catalog.empty(spark), Catalog.rowsFor(spark, variants))
     Catalog.registerView(spark, cat)

@@ -2,7 +2,9 @@ package graft.pumle
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.ListenerAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 
 /** Entry-point-A machinery with a mock external solver (a shell script
   * standing in for the Octave/MRST boundary — the reference's
@@ -134,5 +136,65 @@ class SolverSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(statuses2("bbbb0002") == "COMPLETED")
     assert(statuses2("aaaa0001") == "COMPLETED")
+  }
+
+  private def statusOf(cat: DataFrame): Map[String, String] =
+    cat.select("sim_hash", "status").collect().map(r => r.getString(0) -> r.getString(1)).toMap
+
+  /** Runs `body` and counts the Spark jobs it submits. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) seen.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    try {
+      val out = body
+      ListenerAccess.drain(sc)
+      (out, seen.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a solver that cannot start fails each sim, not the job") {
+    val root = Files.createTempDirectory("solver-missing").toString
+    val cmd = Seq(Paths.get(root, "no-such-solver").toString)
+    val dirs = Solver.writeStaging(spark, variants, root)
+    val results = Solver.dispatch(spark, dirs, cmd)
+    assert(results.map(_.stagingDir).toSet == dirs.toSet)
+    assert(results.forall(r => r.exitCode != 0 && !r.skipped))
+    dirs.foreach(d => assert(!new java.io.File(d, "completed.flag").exists))
+    val (cat, _) = Solver.runSimulations(spark, Catalog.empty(spark), variants, root, cmd)
+    assert(statusOf(cat) == variants.map(_.simHash -> Catalog.Status.Failed).toMap)
+  }
+
+  test("runSimulations moves statuses in one read and one projection") {
+    val root = Files.createTempDirectory("solver-jobs").toString
+    val cmd = Seq("/bin/sh", mockSolver(root, failHash = Some("bbbb0002")))
+    Catalog.write(Catalog.upsert(Catalog.empty(spark), Catalog.rowsFor(spark, variants)), s"$root/catalog")
+    val committed = Catalog.read(spark, s"$root/catalog")
+    val ((cat, _), jobs) = jobsOf(Solver.runSimulations(spark, committed, variants, root, cmd))
+    // staging, dispatch, and the status read (its upsert's broadcast
+    // and result); a validated setStatus chained per step made it 12
+    assert(jobs == 4)
+    assert(statusOf(cat) == Map("aaaa0001" -> "COMPLETED", "bbbb0002" -> "FAILED", "cccc0003" -> "COMPLETED"))
+  }
+
+  test("runSimulations rejects an illegal walk: a fresh run of a RUNNING sim") {
+    val root = Files.createTempDirectory("solver-running").toString
+    val cmd = Seq("/bin/sh", mockSolver(root, failHash = None))
+    val cat = Catalog.setStatus(
+      Catalog.upsert(Catalog.empty(spark), Catalog.rowsFor(spark, variants)),
+      Seq("cccc0003"), Catalog.Status.Running)
+    val e = intercept[IllegalArgumentException] {
+      Solver.runSimulations(spark, cat, variants, root, cmd)
+    }
+    assert(e.getMessage.contains("RUNNING -> RUNNING"))
   }
 }
