@@ -1582,12 +1582,12 @@ object Dedup {
     * required (AQE empty-relation propagation can erase the observed
     * subtree when every bucket is capped).
     *
-    * `maxBucket` DEFAULTS TO 0 = census-derived ([[hammingNearDup64]]'s
+    * `maxBucket` DEFAULTS TO 0 = census-derived ([[hammingNearDup]]'s
     * in-plan derivation — ScaleProbe measured the old fixed default
     * sitting below the MEAN bucket size at 2M signatures, silently
     * keeping ~4% of true pairs); pass an explicit cap to pin it.
     * Past ~4M documents the 4×16-bit band space saturates (see
-    * [[hammingNearDup64]]'s SCALE BOUNDARY note) — corpus-wide runs at
+    * [[hammingNearDup]]'s SCALE BOUNDARY note) — corpus-wide runs at
     * that size belong on [[simhashNearDup128]], whose 32-bit bands
     * keep pruning at any feasible corpus. */
   def simhashNearDup(spark: SparkSession, docs: DataFrame, maxDist: Int = 3,
@@ -1608,7 +1608,7 @@ object Dedup {
     val packed = lanes.select(col("doc_id"),
       expr("lanes[0] | shiftleft(lanes[1], 16) | shiftleft(lanes[2], 32)" +
         " | shiftleft(lanes[3], 48)").as("packed"))
-      // LAZY checkpoint: hammingNearDup64 references its input twice
+      // LAZY checkpoint: hammingNearDup references its input twice
       // (bucket census + id-collecting join-back) under different
       // projections — ReuseExchange never dedupes them, so without this
       // the per-word signature pass runs twice per action. Two flat
@@ -1616,60 +1616,63 @@ object Dedup {
       // NOT scale-gated — the round-15 gating probe measured worse at
       // sf0.1 too (see lshCandidatesTracked).
       .localCheckpoint(false)
-    hammingNearDup64(spark, packed, maxDist, maxBucket, capMetrics)
+    hammingNearDup(spark, packed, maxDist, maxBucket, capMetrics)
   }
 
-  /** Hamming near-dup search over ANY packed 64-bit signature column —
-    * [[simhashNearDup]]'s banding/verify machinery factored to its
-    * real input contract `(doc_id, packed)`, so non-text signatures
-    * (perceptual image hashes — [[graft.multimodal.Multimodal
-    * .imageHashes]]' dHash/aHash — or any caller-computed 64-bit
-    * sketch) reuse it verbatim. Semantics, caps, observability and the
-    * physical plan are exactly simhashNearDup's: 4×16-bit band split,
-    * exact lane match on ≥1 band → candidate (pigeonhole-complete for
-    * distance ≤ 3), mega-buckets dropped pre-collect at `maxBucket`
-    * with observable drop stats, exact `bit_count(xor)` verification,
-    * one row per pair.
+  /** Hamming near-dup search over ANY signature frame —
+    * [[simhashNearDup]]'s banding/verify machinery factored to its real
+    * input contract, so non-text signatures (perceptual image hashes —
+    * [[graft.multimodal.Multimodal.imageHashes]]' dHash/aHash — or any
+    * caller-computed sketch) reuse it verbatim. The width comes from
+    * the columns ([[HammingWidth]]): `(doc_id, packed)` is a 64-bit
+    * signature split into four 16-bit bands, `(doc_id, lo, hi)` a
+    * 128-bit one (band b = bits [32b, 32b+32) of hi·2⁶⁴+lo) split into
+    * four 32-bit bands. Exact lane match on ≥1 band → candidate
+    * (pigeonhole-complete for distance ≤ 3), mega-buckets dropped
+    * pre-collect at `maxBucket` with observable drop stats, exact
+    * `bit_count(xor)` verification (summed over both longs at 128
+    * bits), one row per pair `(a_id, b_id, hamming)`.
     *
-    * `maxBucket = 0` (the DEFAULT) derives the cap from the census the
-    * filter already computes — [[deriveHammingCap]]'s rule (10 × the
-    * mean per-band bucket occupancy, floor 10) evaluated IN-PLAN: the
-    * corpus total is a global window sum over the metadata-scale
-    * census (≤ 4·2¹⁶ rows — one window partition is fine), so
-    * derivation adds no job and no second corpus scan and stays lazy.
-    * (BATCH only: the global non-time window is rejected by streaming
-    * analysis — a streaming caller must pass an explicit cap or use
-    * [[graft.streaming.Streams.hammingIntake]], which derives the cap
-    * driver-side from the persisted census.) The fixed default it
-    * replaces was a measured recall scale-killer: at 2M signatures the
-    * MEAN band bucket holds ~30 members, so cap 10 sat below the mean
-    * and kept ~4% of true pairs (band-space saturation — ScaleProbe's
-    * `hamming-intake` census). An explicit cap still applies verbatim
-    * (floor 1); the drop stats always report against the cap in
-    * effect.
+    * `maxBucket = 0` (the DEFAULT) derives the cap from the census:
+    * 10 × the mean per-band bucket occupancy, floor 10
+    * ([[deriveHammingCap]]'s rule), evaluated IN-PLAN so derivation
+    * adds no job and stays lazy — BATCH only (a streaming caller
+    * passes an explicit cap or uses [[graft.streaming.Streams
+    * .hammingIntake]]). How the total is computed is the width's
+    * census policy: a global window over the metadata-scale 64-bit
+    * census, a one-row count broadcast at 128 bits. The fixed default
+    * it replaces was a measured recall scale-killer: at 2M 64-bit
+    * signatures the MEAN band bucket holds ~30 members, so cap 10 kept
+    * ~4% of true pairs (ScaleProbe's `hamming-intake` census). An
+    * explicit cap still applies verbatim (floor 1); the drop stats
+    * always report against the cap in effect.
     *
-    * SCALE BOUNDARY (~4M signatures): the derived cap tracks the mean
-    * bucket (10 × n/2¹⁶), so it is deliberately UNBOUNDED — and past
-    * ~4M signatures the 16-bit band space itself saturates: kept pair
-    * volume grows as Σc² ≈ n²/2¹⁶ per band (at 20M sigs the mean
-    * bucket holds ~305 members — tens of billions of candidate pairs;
-    * ScaleProbe gates its corpus-wide row off there for exactly this
-    * reason). Above that, corpus-wide dedup belongs on the 32-bit-band
-    * machinery — [[hammingNearDup128]] / [[simhashNearDup128]], whose
-    * band space (2³²) does not saturate at any feasible corpus — or on
-    * the increment-bounded [[hammingIntake]]; an explicit cap bounds
-    * the work but reintroduces the measured recall loss. */
-  def hammingNearDup64(spark: SparkSession, packedDf: DataFrame,
+    * SCALE BOUNDARY of the 64-bit form (~4M signatures): the derived
+    * cap tracks the mean bucket (10 × n/2¹⁶) and is deliberately
+    * UNBOUNDED, and past ~4M signatures the 16-bit band space
+    * saturates: kept pair volume grows as Σc² ≈ n²/2¹⁶ per band (at
+    * 20M the mean bucket holds ~305 members; ScaleProbe gates its
+    * corpus-wide 64-bit row off there). The 128-bit form's 2³² buckets
+    * per band keep the mean below one member until ~4B signatures, so
+    * kept pair volume stays ∝ the true duplicate structure — corpus-
+    * wide dedup past the boundary belongs there ([[simhashNearDup128]])
+    * or on the increment-bounded [[hammingIntake]]. At the same
+    * `maxDist` the 128-bit test is strictly finer (twice the bits must
+    * agree). */
+  def hammingNearDup(spark: SparkSession, sigDf: DataFrame,
       maxDist: Int = 3, maxBucket: Int = 0,
       capMetrics: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
     requirePigeonhole(maxDist)
     require(maxBucket >= 0,
       s"maxBucket=$maxBucket must be >= 1, or 0 to derive from the census")
-    val packed = packedDf.select(col("doc_id"), col("packed"))
-    val buckets = hammingBands(packed)
-    val sized0 = withHammingCap(
-      buckets.groupBy(col("band"), col("bval"))
-        .agg(count(lit(1)).as("bsize")), maxBucket)
+    val w = HammingWidth.of(sigDf)
+    val sigs = sigDf.select(w.columns: _*)
+    val buckets = w.bands(sigs)
+    val census = buckets.groupBy(col("band"), col("bval"))
+      .agg(count(lit(1)).as("bsize"))
+    val sized0 =
+      if (maxBucket == 0) w.withDerivedCap(census, sigs)
+      else withHammingCap(census, maxBucket)
     val sized = capMetrics.fold(sized0)(o => sized0.observe(o,
       sum(when(col("bsize") > col("_cap"), lit(1L)).otherwise(lit(0L)))
         .as("dropped_buckets"),
@@ -1678,16 +1681,19 @@ object Dedup {
     val small = sized
       .filter(col("bsize").between(lit(2), col("_cap")))
       .select(col("band"), col("bval"))
+    val sides = w.sigCols
+      .map(c => s"x.$c AS ${w.side(c, "a")}, y.$c AS ${w.side(c, "b")}")
     buckets.join(small, Seq("band", "bval")) // mega-buckets die pre-collect
       .groupBy(col("band"), col("bval"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("packed")))).as("ms"))
+      .agg(sort_array(collect_list(struct(w.columns: _*))).as("ms"))
       .select(explode(expr(
-        """flatten(transform(ms, (x, i) ->
+        s"""flatten(transform(ms, (x, i) ->
           |  transform(slice(ms, i + 2, size(ms)), y ->
           |    struct(x.doc_id AS a_id, y.doc_id AS b_id,
-          |           x.packed AS pa, y.packed AS pb))))""".stripMargin)).as("p"))
+          |           ${sides.mkString(", ")}))))""".stripMargin)).as("p"))
       .select(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"),
-        expr("CAST(bit_count(p.pa ^ p.pb) AS BIGINT)").as("hamming"))
+        expr(s"CAST(${w.distance(c => s"p.${w.side(c, "a")}",
+          c => s"p.${w.side(c, "b")}")} AS BIGINT)").as("hamming"))
       .filter(col("hamming") <= maxDist)
       .distinct() // a pair sharing several bands appears once per band
   }
@@ -1707,21 +1713,6 @@ object Dedup {
         "only for Hamming <= 3 — larger radii would silently lose recall " +
         "(pairs whose differing bits span all four bands share no band)")
 
-  /** The 4×16-bit band rows of a packed-64 signature frame —
-    * `(doc_id, packed, band, bval)`, the shared narrow generator
-    * behind [[hammingNearDup64]]'s bucketing and the persisted-index
-    * forms below. */
-  private[graft] def hammingBands(packedDf: DataFrame): DataFrame =
-    packedDf.select(col("doc_id"), col("packed"),
-      posexplode(expr(BandLanesSql)).as(Seq("band", "bval")))
-
-  /** The per-row 4×16-bit lane array of a `packed` long — ONE spelling
-    * shared by [[hammingBands]] and the stream probes
-    * ([[graft.streaming.Streams]]): stream/batch band parity is a
-    * bit-exact contract, so the expression must not exist twice. */
-  private[graft] val BandLanesSql: String =
-    "transform(sequence(0, 3), i -> shiftright(packed, i * 16) & 65535)"
-
   /** Attach the effective bucket cap as a `_cap` column to a
     * `(band, bval, bsize)` census frame: a literal for an explicit
     * `maxBucket`, or — for `maxBucket = 0` — [[deriveHammingCap]]'s
@@ -1735,7 +1726,7 @@ object Dedup {
     if (maxBucket == 0)
       census.withColumn("_tot", sum(col("bsize")).over())
         .withColumn("_cap",
-          expr("greatest(10L, 10L * ((_tot DIV 4 + 65535) DIV 65536))"))
+          expr(Packed64.capSql("_tot DIV 4")))
         .drop("_tot")
     else census.withColumn("_cap", lit(maxBucket.toLong))
 
@@ -1761,7 +1752,7 @@ object Dedup {
     * band space never saturates and the kept pair volume stays
     * ∝ the true duplicate structure, not n²/bucket-space (the measured
     * ~4M-signature cliff of the 64-bit form — see
-    * [[hammingNearDup64]]'s SCALE BOUNDARY note; ScaleProbe's
+    * [[hammingNearDup]]'s SCALE BOUNDARY note; ScaleProbe's
     * `hamming128` census measures this shape returning the full
     * planted pair set at 20M signatures, where the 64-bit batch row
     * gates off).
@@ -1774,7 +1765,7 @@ object Dedup {
       maxDist: Int = 3, maxBucket: Int = 0, idCol: String = "doc_id",
       textCol: String = "text",
       capMetrics: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
-    // eight 16-bit lanes pack into TWO longs (the hammingNearDup64
+    // eight 16-bit lanes pack into TWO longs (simhashNearDup's
     // packing argument ×2): every shuffled row / collected member
     // carries 3 flat longs, and the Hamming check is two bit_counts
     val packed = simhashLanes128(Par.spreadIfBig(docs), idCol, textCol).select(col("doc_id"),
@@ -1786,156 +1777,129 @@ object Dedup {
       // simhashNearDup's packed frame; three flat longs per row. NOT
       // scale-gated (round-15 probe — see lshCandidatesTracked).
       .localCheckpoint(false)
-    hammingNearDup128(spark, packed, maxDist, maxBucket, capMetrics)
+    hammingNearDup(spark, packed, maxDist, maxBucket, capMetrics)
   }
 
-  /** Hamming near-dup search over ANY 128-bit signature held as two
-    * packed longs `(doc_id, lo, hi)` — [[hammingNearDup64]]'s
-    * machinery on four 32-BIT bands (band b = bits [32b, 32b+32) of
-    * hi·2⁶⁴+lo). Same semantics, caps and observability; exact
-    * verification is `bit_count(lo⊕lo') + bit_count(hi⊕hi') ≤
-    * maxDist`; one row per pair.
+  /** The width of a Hamming signature frame or index, read from its
+    * columns — `packed` is the 64-bit form `(doc_id, packed)`, `lo` +
+    * `hi` the 128-bit form `(doc_id, lo, hi)` ([[HammingWidth.of]]).
+    * Both split into FOUR bands (pigeonhole-complete at Hamming ≤ 3);
+    * a width carries its band SQL, band bits, distance expression and
+    * CENSUS POLICY, and every Hamming entry point (near-dup, the
+    * persisted index lifecycle, the stream probes) is written once
+    * over it.
     *
-    * `maxBucket = 0` (the DEFAULT) derives the cap with the same
-    * 10×-mean rule (10 × n/2³², floor 10 — the floor governs at any
-    * feasible corpus). Unlike the 64-bit path the band census here is
-    * O(n) rows (most 32-bit buckets are singletons), so the derivation
-    * total comes from a ONE-ROW count aggregate over the signature
-    * frame broadcast into the census — never a single-partition window
-    * over an n-scale frame. The count prunes to a narrow scan
-    * (Catalyst drops the signature projection under count), and the
-    * broadcast keeps the whole path lazy — batch only, as with the
-    * 64-bit derivation. */
-  def hammingNearDup128(spark: SparkSession, packedDf: DataFrame,
-      maxDist: Int = 3, maxBucket: Int = 0,
-      capMetrics: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
-    requirePigeonhole(maxDist)
-    require(maxBucket >= 0,
-      s"maxBucket=$maxBucket must be >= 1, or 0 to derive from the census")
-    val packed = packedDf.select(col("doc_id"), col("lo"), col("hi"))
-    val buckets = hammingBands128(packed)
-    val census = buckets.groupBy(col("band"), col("bval"))
-      .agg(count(lit(1)).as("bsize"))
-    val sized0 =
-      if (maxBucket == 0)
-        census.crossJoin(broadcast(packed.groupBy().agg(
-          expr("greatest(10L, 10L * ((count(1) + 4294967295) DIV 4294967296))")
-            .as("_cap"))))
-      else census.withColumn("_cap", lit(maxBucket.toLong))
-    val sized = capMetrics.fold(sized0)(o => sized0.observe(o,
-      sum(when(col("bsize") > col("_cap"), lit(1L)).otherwise(lit(0L)))
-        .as("dropped_buckets"),
-      sum(when(col("bsize") > col("_cap"), col("bsize")).otherwise(lit(0L)))
-        .as("dropped_doc_slots")))
-    val small = sized
-      .filter(col("bsize").between(lit(2), col("_cap")))
-      .select(col("band"), col("bval"))
-    buckets.join(small, Seq("band", "bval")) // mega-buckets die pre-collect
-      .groupBy(col("band"), col("bval"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("lo"), col("hi"))))
-        .as("ms"))
-      .select(explode(expr(
-        """flatten(transform(ms, (x, i) ->
-          |  transform(slice(ms, i + 2, size(ms)), y ->
-          |    struct(x.doc_id AS a_id, y.doc_id AS b_id,
-          |           x.lo AS la, y.lo AS lb,
-          |           x.hi AS ha, y.hi AS hb))))""".stripMargin)).as("p"))
-      .select(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"),
-        expr("CAST(bit_count(p.la ^ p.lb) + bit_count(p.ha ^ p.hb) AS BIGINT)")
-          .as("hamming"))
-      .filter(col("hamming") <= maxDist)
-      .distinct() // a pair sharing several bands appears once per band
+    * THE CENSUS POLICY follows from the band width. `path/bsize` rows
+    * are `(band, bval, n)` PARTIAL counts whose sum per (band, bval)
+    * is the true bucket size (the aggregate-on-read contract); a
+    * folded census — one row per bucket — is its special case, so
+    * readers that aggregate (the stream probe, compaction's fold)
+    * serve both widths.
+    *  - 64-bit: 2¹⁶ buckets per band, so the census is METADATA-scale
+    *    (≤ 4·2¹⁶ rows at any corpus size) and stays folded in ONE
+    *    file: an append merges it by collect + overwrite (both tables
+    *    metadata-scale — the [[mergeWinnowIndexes]] df-sum
+    *    discipline), the intake guard broadcasts the WHOLE census, and
+    *    in-plan cap derivation is a global window over it.
+    *  - 128-bit: 2³² buckets per band, so almost every bucket is a
+    *    singleton and the census is O(n) ROWS — collect-merge and
+    *    read-whole are both wrong at scale. The build writes it
+    *    aggregated at the aggregate's own shuffle width; an append
+    *    appends only the increment's own counts (increment-bounded);
+    *    the intake guard semi-joins the partials against the
+    *    broadcast, ≤ 4·|increment|-row set of buckets the arrivals
+    *    TOUCH, so its shuffle is increment-bounded and the census
+    *    costs one narrow O(n) scan (the asymptotic of the intake's
+    *    signature scan); in-plan cap derivation is a one-row count
+    *    aggregate broadcast into the census, never a single-partition
+    *    window over an n-scale frame.
+    * PlanSpec's exchange budgets (q166/q169/q171–q174) pin both
+    * policies. Under the contract every crash point leaves a valid
+    * index: sigs rows are bit-preserved, partials sum the same before
+    * and after folding, and a sigs append that died before its census
+    * update is repaired by [[rebuildHammingCensus]]. */
+  private[graft] sealed abstract class HammingWidth(val name: String,
+      val sigCols: Seq[String], val bandBits: Int, val bandSql: String) {
+
+    /** `doc_id` + the signature columns, in index order. */
+    def columns: Seq[org.apache.spark.sql.Column] =
+      ("doc_id" +: sigCols).map(col)
+
+    /** Every signature column is non-NULL (nothing to compare else). */
+    def notNull: org.apache.spark.sql.Column =
+      sigCols.map(col(_).isNotNull).reduce(_ && _)
+
+    /** The 4 band rows per signature — `(doc_id, sig…, band, bval)`. */
+    def bands(sigs: DataFrame): DataFrame =
+      sigs.select(
+        columns :+ posexplode(expr(bandSql)).as(Seq("band", "bval")): _*)
+
+    /** A signature column's name on one side of a pair: `packed` →
+      * `pa`/`pb`, `lo` → `la`/`lb`, `hi` → `ha`/`hb`. */
+    def side(c: String, s: String): String = s"${c.head}$s"
+
+    /** Hamming distance between two signatures, given how each side
+      * names a signature column. */
+    def distance(a: String => String, b: String => String): String =
+      sigCols.map(c => s"bit_count(${a(c)} ^ ${b(c)})").mkString(" + ")
+
+    /** [[deriveHammingCap]]'s rule over a total signature count: 10 ×
+      * the mean per-band bucket occupancy (total / 2^bandBits), floor
+      * 10 — as a SQL expression and on the driver. */
+    def capSql(total: String): String = {
+      val space = 1L << bandBits
+      s"greatest(10L, 10L * (($total + ${space - 1}) DIV $space))"
+    }
+    def capOf(total: Long): Int =
+      math.max(10L, 10L * ((total + (1L << bandBits) - 1) >> bandBits)).toInt
+
+    /** Attach the derived cap as `_cap` to a `(band, bval, bsize)`
+      * census of `sigs`, inside the plan. */
+    def withDerivedCap(census: DataFrame, sigs: DataFrame): DataFrame
+
+    /** The file layout a full census is written with. */
+    def layoutCensus(counts: DataFrame): DataFrame
+
+    /** Fold an increment's `(band, bval, n)` counts into `path/bsize`. */
+    def appendCensus(spark: SparkSession, counts: DataFrame, path: String): Unit
+
+    /** Keep the arrival band rows whose INDEXED bucket holds ≤ `cap`
+      * signatures — the intake's mega-bucket guard. */
+    def guard(spark: SparkSession, path: String, cap: Int,
+        arrivals: DataFrame): DataFrame
+
+    /** Throw unless an increment of this width may meet `index`. */
+    def requireSame(index: HammingWidth, path: String): Unit =
+      require(this == index, s"signature width mismatch: the increment " +
+        s"is $name but the index at $path is ${index.name}")
   }
 
-  /** The 4×32-bit band rows of a two-long 128-bit signature frame —
-    * `(doc_id, lo, hi, band, bval)`, [[hammingBands]]' wider cousin
-    * behind [[hammingNearDup128]]. The 32-bit extraction masks the
-    * arithmetic shift back to an unsigned band value. */
-  private[graft] def hammingBands128(packedDf: DataFrame): DataFrame =
-    packedDf.select(col("doc_id"), col("lo"), col("hi"),
-      posexplode(expr(BandLanes128Sql)).as(Seq("band", "bval")))
-
-  /** The per-row 4×32-bit lane array of a `(lo, hi)` signature — ONE
-    * spelling shared by [[hammingBands128]] and the stream probes
-    * ([[BandLanesSql]]'s argument at 128 bits). */
-  private[graft] val BandLanes128Sql: String =
-    """transform(sequence(0, 3), b ->
-      |  IF(b < 2, shiftright(lo, b * 32),
-      |            shiftright(hi, (b - 2) * 32)) & 4294967295)"""
-      .stripMargin
-
-  /** Persist a packed-64 Hamming signature index — the
-    * build-once/intake-many layout for CONTENT near-dup at crawl
-    * intake (perceptual image hashes via [[graft.multimodal.Multimodal
-    * .imageHashes]], SimHash, any 64-bit sketch): `path/sigs`
-    * (doc_id, packed) and `path/bsize` (band, bval, n) — the
-    * band-bucket census is METADATA-scale (≤ 4·65536 rows regardless
-    * of corpus size), so intakes read bucket sizes without ever
-    * re-counting the signature table, exactly as [[writeWinnowIndex]]
-    * persists fingerprint document frequencies.
-    *
-    * SCALE BOUNDARY (~O(100M) indexed signatures): the 16-bit band
-    * census mean (~n/2¹⁶) makes every arrival's candidate set grow
-    * linearly in n/2¹⁶ even though the intake stays increment-bounded
-    * — an index that will grow past that belongs on the 128-bit
-    * lifecycle ([[writeHammingIndex128]] and family), whose 2³² band
-    * space keeps per-arrival candidates duplicate-structure-bounded at
-    * any feasible corpus. */
-  def writeHammingIndex(spark: SparkSession, packedDf: DataFrame,
-      path: String): Unit = {
-    // routed write at the CONFIGURED shuffle width: bounded file count
-    // at any corpus size (a 100 TB-scan input would otherwise mirror
-    // its 10k+ scan splits into 10k+ small files) while keeping the
-    // intake's seen-side scan parallel — AQE byte-sizing here would
-    // coalesce a mid-size corpus (2M sigs ≈ 32 MB) into ONE file = one
-    // scan task, the compactIvfIndex filesPerCell=1 pathology. Big
-    // per-file sizes stay scannable: parquet splits by row group.
-    packedDf.select(col("doc_id"), col("packed"))
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("doc_id"))
-      .write.mode("overwrite").parquet(s"$path/sigs")
-    rebuildHammingCensus(spark, path)
+  private[graft] object HammingWidth {
+    /** The width named by a frame's columns; any other column set
+      * throws, naming the columns. */
+    def of(df: DataFrame): HammingWidth =
+      Seq("packed", "lo", "hi").filter(df.columns.contains) match {
+        case Seq("packed") => Packed64
+        case Seq("lo", "hi") => LoHi128
+        case _ => throw new IllegalArgumentException(
+          "a Hamming signature frame needs `packed` (64-bit) or `lo` and " +
+            "`hi` (128-bit), not both; got columns " +
+            df.columns.mkString("[", ", ", "]"))
+      }
   }
 
-  /** Recount `path/bsize` from `path/sigs` — the census recovery/
-    * repair pass: one scan of the signature table + a metadata-scale
-    * aggregate (4·2¹⁶ buckets max). Run it after a failed
-    * [[appendHammingIndex]] (sigs appended, census not yet updated)
-    * — an UNDERCOUNTED census quietly weakens the mega-bucket guard
-    * [[hammingIntake]] relies on, so repair beats limping on. */
-  def rebuildHammingCensus(spark: SparkSession, path: String): Unit =
-    hammingBands(spark.read.parquet(s"$path/sigs"))
-      .groupBy(col("band"), col("bval")).agg(count(lit(1)).as("n"))
-      .coalesce(1) // ≤ 4·2¹⁶ rows — every intake reads this whole
-      .write.mode("overwrite").parquet(s"$path/bsize")
-
-  /** Append new signatures to a [[writeHammingIndex]] directory: the
-    * signature rows append, and the band census updates by METADATA
-    * ARITHMETIC — old census + increment counts summed per bucket
-    * (both tables ≤ 4·65536 rows) — never a recount of the seen
-    * signatures (the [[mergeWinnowIndexes]] df-sum discipline).
-    *
-    * The increment materializes ONCE (tracked localCheckpoint,
-    * released on exit) before either write — evaluating the caller's
-    * frame twice would let a non-deterministic input desynchronize
-    * sigs and bsize silently. A failure BETWEEN the sigs append and
-    * the census overwrite still leaves the two inconsistent: recover
-    * with [[rebuildHammingCensus]] before the next intake. */
-  def appendHammingIndex(spark: SparkSession, packedDf: DataFrame,
-      path: String): Unit = {
-    val (inc, blocks) = checkpointTracked(
-      packedDf.select(col("doc_id"), col("packed")))
-    try {
-      // routed append (writeHammingIndex's discipline): the increment
-      // re-shuffles on doc_id with AQE-sized output, so a small crawl
-      // increment lands as ~ONE file instead of one file per upstream
-      // partition — sigs decays by one file per crawl, not
-      // tasks-per-crawl, and [[compactHammingIndex]] undoes even that
-      inc.repartition(col("doc_id"))
-        .write.mode("append").parquet(s"$path/sigs")
-      val merged = spark.read.parquet(s"$path/bsize")
-        .unionByName(hammingBands(inc)
-          .groupBy(col("band"), col("bval")).agg(count(lit(1)).as("n")))
+  private[graft] case object Packed64 extends HammingWidth(
+      "64-bit (doc_id, packed)", Seq("packed"), 16,
+      // bitwise shift + mask, so bval == lane[band] exactly (no ANSI
+      // overflow on the top lane's sign bit)
+      "transform(sequence(0, 3), i -> shiftright(packed, i * 16) & 65535)") {
+    def withDerivedCap(census: DataFrame, sigs: DataFrame): DataFrame =
+      withHammingCap(census, 0)
+    def layoutCensus(counts: DataFrame): DataFrame =
+      counts.coalesce(1) // ≤ 4·2¹⁶ rows — every intake reads this whole
+    def appendCensus(spark: SparkSession, counts: DataFrame,
+        path: String): Unit = {
+      val merged = spark.read.parquet(s"$path/bsize").unionByName(counts)
         .groupBy(col("band"), col("bval")).agg(sum(col("n")).as("n"))
         .collect() // metadata-scale: ≤ 4·65536 rows by construction
       import spark.implicits._
@@ -1943,65 +1907,185 @@ object Dedup {
         .toDF("band", "bval", "n")
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$path/bsize")
+    }
+    def guard(spark: SparkSession, path: String, cap: Int,
+        arrivals: DataFrame): DataFrame =
+      arrivals.join(broadcast(spark.read.parquet(s"$path/bsize")
+        .filter(col("n") <= cap).select(col("band"), col("bval"))),
+        Seq("band", "bval"))
+  }
+
+  private[graft] case object LoHi128 extends HammingWidth(
+      "128-bit (doc_id, lo, hi)", Seq("lo", "hi"), 32,
+      // the arithmetic shift is masked back to an unsigned band value
+      """transform(sequence(0, 3), b ->
+        |  IF(b < 2, shiftright(lo, b * 32),
+        |            shiftright(hi, (b - 2) * 32)) & 4294967295)"""
+        .stripMargin) {
+    def withDerivedCap(census: DataFrame, sigs: DataFrame): DataFrame =
+      census.crossJoin(broadcast(
+        sigs.groupBy().agg(expr(capSql("count(1)")).as("_cap"))))
+    def layoutCensus(counts: DataFrame): DataFrame =
+      counts // O(n) rows: the aggregate's own width, never coalesce(1)
+    def appendCensus(spark: SparkSession, counts: DataFrame,
+        path: String): Unit =
+      counts.repartition(col("band"), col("bval")) // AQE-sized: ~one file
+        .write.mode("append").parquet(s"$path/bsize")
+    def guard(spark: SparkSession, path: String, cap: Int,
+        arrivals: DataFrame): DataFrame = {
+      val touched = arrivals.select(col("band"), col("bval")).distinct()
+      val ok = spark.read.parquet(s"$path/bsize")
+        .join(broadcast(touched), Seq("band", "bval"))
+        .groupBy(col("band"), col("bval")).agg(sum(col("n")).as("n"))
+        .filter(col("n") <= cap) // n >= 1 by construction: indexed + under cap
+        .select(col("band"), col("bval"))
+      arrivals.join(broadcast(ok), Seq("band", "bval"))
+    }
+  }
+
+  /** Persist a Hamming signature index — the build-once/intake-many
+    * layout for CONTENT near-dup at crawl intake (perceptual image
+    * hashes via [[graft.multimodal.Multimodal.imageHashes]], SimHash,
+    * any 64- or 128-bit sketch): `path/sigs` holds the signature frame
+    * and `path/bsize` the `(band, bval, n)` band census in the width's
+    * layout ([[HammingWidth]]), so intakes read bucket sizes without
+    * re-counting the signature table, as [[writeWinnowIndex]] persists
+    * fingerprint document frequencies.
+    *
+    * The signature rows are routed at the CONFIGURED shuffle width:
+    * bounded file count at any corpus size (a 100 TB-scan input would
+    * otherwise mirror its 10k+ scan splits into 10k+ small files) while
+    * keeping the intake's seen-side scan parallel — AQE byte-sizing
+    * here would coalesce a mid-size corpus (2M sigs ≈ 32 MB) into ONE
+    * file = one scan task. Big files stay scannable: parquet splits by
+    * row group.
+    *
+    * SCALE BOUNDARY of the 64-bit index (~O(100M) signatures): the
+    * 16-bit band census mean (~n/2¹⁶) makes every arrival's candidate
+    * set grow linearly in n even though the intake stays
+    * increment-bounded; an index that will grow past that belongs on a
+    * 128-bit signature, whose 2³² band space keeps per-arrival
+    * candidates duplicate-structure-bounded at any feasible corpus. */
+  def writeHammingIndex(spark: SparkSession, sigDf: DataFrame,
+      path: String): Unit = {
+    sigDf.select(HammingWidth.of(sigDf).columns: _*)
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("doc_id"))
+      .write.mode("overwrite").parquet(s"$path/sigs")
+    rebuildHammingCensus(spark, path)
+  }
+
+  /** Recount `path/bsize` from `path/sigs` (width from the `sigs`
+    * schema) — the census recovery/repair pass: one scan of the
+    * signature table + one aggregate, written fully aggregated in the
+    * width's layout. Run it after a failed [[appendHammingIndex]]
+    * (sigs appended, census not yet updated): an UNDERCOUNTED census
+    * quietly weakens the mega-bucket guard [[hammingIntake]] relies
+    * on, so repair beats limping on. */
+  def rebuildHammingCensus(spark: SparkSession, path: String): Unit = {
+    val sigs = spark.read.parquet(s"$path/sigs")
+    val w = HammingWidth.of(sigs)
+    w.layoutCensus(bandCounts(w, sigs))
+      .write.mode("overwrite").parquet(s"$path/bsize")
+  }
+
+  private def bandCounts(w: HammingWidth, sigs: DataFrame): DataFrame =
+    w.bands(sigs).groupBy(col("band"), col("bval"))
+      .agg(count(lit(1)).as("n"))
+
+  /** Append new signatures to a [[writeHammingIndex]] directory. The
+    * increment's width must be the index's (read from the `sigs`
+    * schema) — a mismatch throws `IllegalArgumentException` naming
+    * both widths before anything is written. The signature rows append
+    * through a doc_id shuffle with AQE-sized output, so a small crawl
+    * increment lands as ~ONE file (sigs decays by one file per crawl,
+    * and [[compactHammingIndex]] undoes even that); the increment's
+    * band counts fold into the census by the width's policy —
+    * collect-merge of the metadata-scale 64-bit census, appended
+    * partials at 128 bits — never a recount of the seen signatures.
+    *
+    * The increment materializes ONCE (tracked localCheckpoint,
+    * released on exit) before either write — evaluating the caller's
+    * frame twice would let a non-deterministic input desynchronize
+    * sigs and bsize silently. A failure BETWEEN the two writes leaves
+    * the census undercounted: recover with [[rebuildHammingCensus]]
+    * before the next intake. */
+  def appendHammingIndex(spark: SparkSession, sigDf: DataFrame,
+      path: String): Unit = {
+    val w = HammingWidth.of(sigDf)
+    w.requireSame(HammingWidth.of(spark.read.parquet(s"$path/sigs")), path)
+    val (inc, blocks) = checkpointTracked(sigDf.select(w.columns: _*))
+    try {
+      inc.repartition(col("doc_id"))
+        .write.mode("append").parquet(s"$path/sigs")
+      w.appendCensus(spark, bandCounts(w, inc), path)
     } finally blocks.foreach(_.unpersist(blocking = false))
   }
 
-  /** Compact a [[writeHammingIndex]] directory's signature files:
-    * [[appendHammingIndex]] adds ~one file per crawl increment, and
-    * after N crawls every intake's seen-side scan pays N file
-    * open/footer costs — the flat-table cousin of the IVF index's
-    * per-cell decay ([[graft.ext.Similarity.compactIvfIndex]]). When
-    * the file LISTING (metadata-scale, no data read) exceeds
-    * `maxFiles`, the signature table rewrites once through the same
-    * AQE-sized doc_id shuffle the build uses; below the threshold this
-    * is a listing and nothing else, so calling it after every append
-    * is safe. Rows are bit-preserved and the band census counts only
-    * rows, so `bsize` needs no rebuild and intake results are
-    * bit-equal before/after (Ext5Spec pins both, and idempotence:
-    * a second call compacts nothing). Not safe concurrently with
-    * readers (the swap replaces the whole table); run between crawl
-    * increments, where appends already serialize. Returns the file
-    * count compacted away, 0 if under the threshold.
+  /** Compact a [[writeHammingIndex]] directory — both decay axes: the
+    * signature table's one-file-per-append growth (rewritten through
+    * the build's doc_id routing) and the census's one-partial-per-
+    * append growth at 128 bits (folded to one row per bucket; content
+    * is identical under the aggregate-on-read contract). Each table is
+    * rewritten only when its file LISTING (metadata-scale, no data
+    * read) exceeds `maxFiles`, so calling this after every append is
+    * safe; the folded 64-bit census is one file and never rewrites.
+    * Rewrites land at ≤ `maxFiles` files, so a second call compacts
+    * nothing. Rows are bit-preserved and the census counts only rows,
+    * so intake results are bit-equal before and after (Ext5Spec pins
+    * both widths). Not safe concurrently with readers (the swap
+    * replaces whole dirs); run between crawl increments, where appends
+    * already serialize. Returns the file count compacted away, 0 if
+    * both tables are under the threshold.
     *
-    * CRASH SAFETY: the rewrite lands in `path/sigs.compact.tmp` while
-    * `path/sigs` — the only durable copy — stays untouched, then swaps
-    * in by rename (sigs → sigs.compact.old, tmp → sigs, delete old).
-    * A crash anywhere before the first rename loses nothing (the
-    * orphaned tmp dir is deleted on the next call); a crash BETWEEN
-    * the two renames leaves no `sigs` but a complete
-    * `sigs.compact.old` — the next call detects exactly that state
-    * and renames it back BEFORE doing anything else (self-healing; no
-    * manual step). The only non-recoverable window of the previous
-    * in-place overwrite (checkpoint blocks as the sole copy of the
-    * table) is gone. */
+    * CRASH SAFETY ([[swapRewrite]]): the live table is never the
+    * write target, and a crash between the two renames of either table
+    * self-heals on the next call (until that call, readers of the
+    * missing dir DO fail — run compaction and its recovery from the
+    * same maintenance slot). */
   def compactHammingIndex(spark: SparkSession, path: String,
       maxFiles: Int = 64): Long = {
     require(maxFiles >= 1, s"maxFiles=$maxFiles must be >= 1")
-    val sigs = new org.apache.hadoop.fs.Path(s"$path/sigs")
-    val fs = sigs.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/sigs.compact.tmp")
-    val old = new org.apache.hadoop.fs.Path(s"$path/sigs.compact.old")
-    // self-heal the between-renames crash window of a PREVIOUS call:
-    // no live table + a complete .old means the old table IS the data
-    if (!fs.exists(sigs) && fs.exists(old))
-      require(fs.rename(old, sigs),
-        s"compactHammingIndex: crash recovery rename $old → $sigs failed")
-    val nFiles = fs.listStatus(sigs)
-      .count(_.getPath.getName.endsWith(".parquet"))
-    if (nFiles <= maxFiles) return 0L
-    // Rewrite width = the build's configured-width routing, clamped to
-    // maxFiles so the rewrite itself can never re-trip the threshold
-    // (idempotence — a second call always lists and returns 0). The
-    // write streams source → tmp (different paths, so no
-    // materialization is needed and the durable table is never the
-    // write target).
+    // the build's configured-width routing, clamped to maxFiles so the
+    // rewrite itself can never re-trip the threshold (idempotence)
     val width = math.min(maxFiles,
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    swapRewrite(spark, s"$path/sigs", maxFiles)(
+        _.repartition(width, col("doc_id"))) +
+      swapRewrite(spark, s"$path/bsize", maxFiles)(
+        _.groupBy(col("band"), col("bval")).agg(sum(col("n")).as("n"))
+          // coalesce merges the aggregate's output partitions without
+          // another shuffle
+          .coalesce(width))
+  }
+
+  /** Rewrite the parquet table at `dir` through `rewrite` when its
+    * file listing exceeds `maxFiles`, swapping it in by rename;
+    * returns the file count replaced, 0 when under the threshold.
+    * The rewrite lands in `dir.compact.tmp` while `dir` — the only
+    * durable copy — stays untouched, then swaps in (dir →
+    * dir.compact.old, tmp → dir, delete old). A crash before the
+    * first rename loses nothing (the orphaned tmp is deleted by the
+    * next call); a crash BETWEEN the renames leaves no `dir` but a
+    * complete `dir.compact.old`, which the next call detects and
+    * renames back BEFORE listing (self-healing, no manual step). */
+  private def swapRewrite(spark: SparkSession, dir: String, maxFiles: Int)(
+      rewrite: DataFrame => DataFrame): Long = {
+    val live = new org.apache.hadoop.fs.Path(dir)
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new org.apache.hadoop.fs.Path(s"$dir.compact.tmp")
+    val old = new org.apache.hadoop.fs.Path(s"$dir.compact.old")
+    if (!fs.exists(live) && fs.exists(old))
+      require(fs.rename(old, live),
+        s"compactHammingIndex: crash recovery rename $old → $live failed")
+    val nFiles = fs.listStatus(live)
+      .count(_.getPath.getName.endsWith(".parquet"))
+    if (nFiles <= maxFiles) return 0L
     fs.delete(tmp, true); fs.delete(old, true) // orphans of a past crash
-    spark.read.parquet(s"$path/sigs").repartition(width, col("doc_id"))
+    rewrite(spark.read.parquet(dir))
       .write.mode("overwrite").parquet(tmp.toString)
-    require(fs.rename(sigs, old), s"compactHammingIndex: rename $sigs → $old failed")
-    require(fs.rename(tmp, sigs), s"compactHammingIndex: rename $tmp → $sigs failed")
+    require(fs.rename(live, old), s"compactHammingIndex: rename $live → $old failed")
+    require(fs.rename(tmp, live), s"compactHammingIndex: rename $tmp → $live failed")
     fs.delete(old, true)
     nFiles.toLong
   }
@@ -2011,56 +2095,73 @@ object Dedup {
     * ever shuffling or re-counting the seen side — the q103/q160
     * crawl-increment discipline applied to content signatures:
     *
-    *  - bucket sizes come from the PERSISTED census (`path/bsize`,
-    *    metadata-scale), so the mega-bucket guard costs one broadcast
-    *    of a ≤262k-row table: buckets whose INDEXED size exceeds
-    *    `maxBucket` contribute no candidates (a solid-color/boilerplate
-    *    bucket at crawl scale would otherwise pair every arrival
-    *    against millions of members — same deterministic whole-bucket
-    *    drop as [[hammingNearDup64]], observable by reading bsize);
+    *  - the increment's width must be the index's (its columns against
+    *    the `sigs` schema); a mismatch throws `IllegalArgumentException`
+    *    naming both widths before anything is planned;
+    *  - bucket sizes come from the PERSISTED census, so buckets whose
+    *    INDEXED size exceeds the cap contribute no candidates (a
+    *    solid-color/boilerplate bucket at crawl scale would otherwise
+    *    pair every arrival against millions of members — the
+    *    deterministic whole-bucket drop of [[hammingNearDup]]); the
+    *    guard is the width's census policy ([[HammingWidth]]): one
+    *    broadcast of the ≤262k-row 64-bit census, or the arrivals'
+    *    touched buckets broadcast into the 128-bit partials;
     *  - the increment's band rows (4 per arrival, increment-bounded)
     *    BROADCAST into ONE scan of the signature table — the seen side
     *    is scanned, never shuffled;
-    *  - verification is the exact packed `bit_count`, and a pair
+    *  - verification is the exact `bit_count` distance, and a pair
     *    sharing several bands emits once.
     *
     * Output: (a_id = new, b_id = seen, hamming). Pinned ≡ the
-    * brute-force new×seen pair filter on under-cap fixtures
-    * (Ext5Spec), and oracle-checked end to end by q169.
+    * brute-force new×seen pair filter on under-cap fixtures (Ext5Spec)
+    * and oracle-checked end to end by q169 (64-bit) and q173 (128-bit).
     *
-    * SIZE `maxBucket` TO THE CORPUS: the 16-bit band space holds 4·2¹⁶
-    * buckets, so at n signatures the MEAN bucket carries ~n/2¹⁶
-    * members per band — a cap below that drops most LEGITIMATE
-    * buckets, not just degenerate ones (band-space saturation;
-    * ScaleProbe's `hamming-intake` census measures it at 2M sigs:
-    * cap 10 keeps 4% of the true pairs, cap ≈ 10× the mean keeps them
-    * all while still dropping the 100k-copy degenerate bucket).
-    * `maxBucket = 0` (the DEFAULT) DERIVES the cap from the persisted
-    * census ([[deriveHammingCap]]: 10 × the mean bucket size, floor
-    * 10 — free, the census is already on disk); read `path/bsize` —
-    * it IS the distribution — to pick explicitly. */
-  def hammingIntake(spark: SparkSession, newPacked: DataFrame,
+    * SIZE `maxBucket` TO THE CORPUS: at n 64-bit signatures the MEAN
+    * bucket carries ~n/2¹⁶ members per band, so a cap below that drops
+    * most LEGITIMATE buckets, not just degenerate ones (ScaleProbe's
+    * `hamming-intake` census at 2M sigs: cap 10 keeps 4% of the true
+    * pairs, cap ≈ 10× the mean keeps them all while still dropping the
+    * 100k-copy degenerate bucket). `maxBucket = 0` (the DEFAULT)
+    * DERIVES the cap from the persisted census ([[deriveHammingCap]]);
+    * read `path/bsize` — it IS the distribution — to pick explicitly. */
+  def hammingIntake(spark: SparkSession, newSigs: DataFrame,
       path: String, maxDist: Int = 3, maxBucket: Int = 0): DataFrame = {
+    val w = HammingWidth.of(newSigs)
+    intakePairs(spark, w, newSigs, indexSigs(spark, w, path), path,
+      maxDist, maxBucket)
+  }
+
+  /** The index's signature table, after checking the increment's width
+    * against its schema — the frame the intake scans, so the check
+    * adds no read. */
+  private[graft] def indexSigs(spark: SparkSession, w: HammingWidth,
+      path: String): DataFrame = {
+    val seen = spark.read.parquet(s"$path/sigs")
+    w.requireSame(HammingWidth.of(seen), path)
+    seen
+  }
+
+  private def intakePairs(spark: SparkSession, w: HammingWidth,
+      newSigs: DataFrame, seen: DataFrame, path: String, maxDist: Int,
+      maxBucket: Int): DataFrame = {
     requirePigeonhole(maxDist)
     require(maxBucket >= 0,
       s"maxBucket=$maxBucket must be >= 1, or 0 to derive from the census")
-    val cap = if (maxBucket == 0) deriveHammingCap(spark, path) else maxBucket
-    val small = spark.read.parquet(s"$path/bsize")
-      .filter(col("n") <= cap).select(col("band"), col("bval"))
-    val nb = hammingBands(newPacked
-        .select(col("doc_id"), col("packed")))
-      .select(col("doc_id").as("a_id"), col("packed").as("pa"),
-        col("band"), col("bval"))
-      .join(broadcast(small), Seq("band", "bval")) // guard pre-scan
-    hammingBands(spark.read.parquet(s"$path/sigs"))
-      .select(col("doc_id").as("b_id"), col("packed").as("pb"),
-        col("band"), col("bval"))
+    val cap = if (maxBucket == 0) deriveCap(spark, w, path) else maxBucket
+    def sideBands(sigs: DataFrame, id: String, s: String) =
+      w.bands(sigs).select((col("doc_id").as(id) +:
+        w.sigCols.map(c => col(c).as(w.side(c, s)))) ++
+        Seq(col("band"), col("bval")): _*)
+    val nb = w.guard(spark, path, cap, sideBands(newSigs, "a_id", "a"))
+    sideBands(seen, "b_id", "b")
       .join(broadcast(nb), Seq("band", "bval"))
       .filter(col("a_id") =!= col("b_id"))
-      .select(col("a_id"), col("b_id"), col("pa"), col("pb"))
+      .select((Seq("a_id", "b_id") ++
+        w.sigCols.flatMap(c => Seq(w.side(c, "a"), w.side(c, "b")))).map(col): _*)
       .distinct() // several shared bands → one pair
       .select(col("a_id"), col("b_id"),
-        expr("CAST(bit_count(pa ^ pb) AS BIGINT)").as("hamming"))
+        expr(s"CAST(${w.distance(w.side(_, "a"), w.side(_, "b"))} AS BIGINT)")
+          .as("hamming"))
       .filter(col("hamming") <= maxDist)
   }
 
@@ -2072,29 +2173,32 @@ object Dedup {
     *
     *  1. EXACT dedup WITHIN the increment — first (smallest) doc_id
     *     per identical signature wins, the media twin of crawlIntake's
-    *     content-hash stage (identical bytes hash to the identical
-    *     signature; the window routes on the signature, one
+    *     content-hash stage (the window routes on the signature, one
     *     increment-bounded exchange);
-    *  2. survivors pair against the INDEX ([[hammingIntake]] — seen
-    *     side scanned never shuffled, persisted-census bucket cap) and
-    *     any arrival within `maxDist` of an indexed signature drops.
+    *  2. survivors pair against the INDEX ([[hammingIntake]], width
+    *     checked against the `sigs` schema) and any arrival within
+    *     `maxDist` of an indexed signature drops (the dup side is
+    *     increment-bounded and broadcast into the anti-join).
     *
-    * Output: the admitted `(doc_id, packed)` rows. NULL signatures
-    * drop (an undecodable payload upstream has nothing to compare —
-    * admit/reject it on its own metadata, not here). Intra-increment
-    * NEAR-dups both survive (matching the text intake's contract:
-    * arrivals are judged against the SEEN corpus; increment-internal
-    * near-dups are the next index append's business). Oracle-checked
-    * end to end by q172 on the q166/q169 fixture signatures. */
-  def hammingIntakeAdmit(spark: SparkSession, packedDf: DataFrame,
+    * Output: the admitted signature rows, ready for
+    * [[appendHammingIndex]] so the next increment sees this one. Rows
+    * with a NULL signature column drop (an undecodable payload
+    * upstream has nothing to compare). Intra-increment NEAR-dups both
+    * survive (arrivals are judged against the SEEN corpus;
+    * increment-internal near-dups are the next append's business).
+    * Oracle-checked end to end by q172 (64-bit) and q174 (128-bit). */
+  def hammingIntakeAdmit(spark: SparkSession, sigDf: DataFrame,
       path: String, maxDist: Int = 3, maxBucket: Int = 0): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("packed"))
-    val s1 = packedDf.select(col("doc_id"), col("packed"))
-      .filter(col("packed").isNotNull)
-      .withColumn("_kmin", min(col("doc_id")).over(w))
+    val w = HammingWidth.of(sigDf)
+    val seen = indexSigs(spark, w, path)
+    val bySig = org.apache.spark.sql.expressions.Window
+      .partitionBy(w.sigCols.map(col): _*)
+    val s1 = sigDf.select(w.columns: _*)
+      .filter(w.notNull)
+      .withColumn("_kmin", min(col("doc_id")).over(bySig))
       .filter(col("doc_id") === col("_kmin"))
       .drop("_kmin")
-    val dup = hammingIntake(spark, s1, path, maxDist, maxBucket)
+    val dup = intakePairs(spark, w, s1, seen, path, maxDist, maxBucket)
       .select(col("a_id").as("doc_id")).distinct()
     // the dup-id side is increment-bounded (≤ the arrivals) — never
     // let the anti-join sort-merge the increment against it
@@ -2102,256 +2206,22 @@ object Dedup {
   }
 
   /** The census-derived bucket cap for a [[writeHammingIndex]]
-    * directory: 10 × the mean per-band bucket occupancy
-    * (nSigs / 2¹⁶), floor 10 — the sizing rule ScaleProbe's
-    * `hamming-intake` census measured (mean-relative caps keep the
-    * planted pair set while a 100k-copy degenerate bucket stays ~3
-    * orders of magnitude above the cap). One aggregate over the
-    * metadata-scale census table; opt in with `maxBucket = 0`. */
-  def deriveHammingCap(spark: SparkSession, path: String): Int = {
+    * directory: 10 × the mean per-band bucket occupancy (nSigs /
+    * 2¹⁶ at 64 bits, nSigs / 2³² at 128 — width from the `sigs`
+    * schema), floor 10 — the sizing rule ScaleProbe's `hamming-intake`
+    * census measured (mean-relative caps keep the planted pair set
+    * while a 100k-copy degenerate bucket stays ~3 orders of magnitude
+    * above the cap; at 128 bits the floor governs at any feasible
+    * corpus). Total signatures = Σ census counts / 4: one aggregate
+    * over the census — metadata-scale at 64 bits, one narrow
+    * map-side-combined O(n) scan of the partials at 128. */
+  def deriveHammingCap(spark: SparkSession, path: String): Int =
+    deriveCap(spark, HammingWidth.of(spark.read.parquet(s"$path/sigs")), path)
+
+  private[graft] def deriveCap(spark: SparkSession, w: HammingWidth,
+      path: String): Int = {
     val row = spark.read.parquet(s"$path/bsize").agg(sum(col("n"))).head()
-    val total = (if (row.isNullAt(0)) 0L else row.getLong(0)) / 4
-    math.max(10L, 10L * ((total + 65535) / 65536)).toInt
-  }
-
-  // ------------------------------------------------------------------
-  // 128-bit persisted Hamming index lifecycle — [[writeHammingIndex]]'s
-  // build-once/intake-many machinery carried to the (doc_id, lo, hi)
-  // two-long signature ([[hammingNearDup128]]'s input), so crawl
-  // admission rides the NON-SATURATING 4×32-bit band family past the
-  // 64-bit index's ~O(100M)-signature boundary (where the 16-bit band
-  // census mean ~n/2¹⁶ makes every arrival's candidate set grow in n).
-  //
-  // THE CENSUS DESIGN DECISION (explicit, because the 64-bit discipline
-  // does not carry): with 2³² buckets per band the census is O(n) ROWS
-  // (almost every bucket is a singleton), not the 64-bit index's
-  // ≤ 4·2¹⁶-row metadata table, so "collect + overwrite on append" and
-  // "read whole at intake" are both wrong at scale. This index persists
-  // the census as APPEND-ONLY PARTIAL COUNTS with an aggregate-on-read
-  // contract — `path/bsize` rows are (band, bval, n) PARTIALS whose sum
-  // per (band, bval) is the true bucket size:
-  //  - the BUILD writes the fully-aggregated census (one row/bucket);
-  //  - each APPEND appends only the increment's own census
-  //    (increment-bounded work — strictly cheaper than the 64-bit
-  //    append's collect-merge, which this corpus size could not afford);
-  //  - the INTAKE never aggregates the whole census: it semi-joins the
-  //    partials against the (broadcast, ≤ 4·|increment|-row) set of
-  //    buckets the arrivals actually touch, so the guard's shuffle is
-  //    increment-bounded and the census costs one NARROW O(n) scan —
-  //    the same asymptotic the intake's signature scan already pays;
-  //  - COMPACTION folds partials back to one row per bucket.
-  // Under this contract every crash point leaves a VALID index: sigs
-  // rows are bit-preserved, census content is representation-
-  // independent (partials sum the same before and after folding), and
-  // a sigs-append that died before its census-append is repaired by
-  // [[rebuildHammingCensus128]] exactly as in the 64-bit lifecycle.
-  // ------------------------------------------------------------------
-
-  /** Persist a 128-bit Hamming signature index — `path/sigs`
-    * (doc_id, lo, hi) routed at the configured shuffle width (bounded
-    * file count at any corpus size, [[writeHammingIndex]]'s argument
-    * verbatim) and `path/bsize`, the 4×32-bit band census in the
-    * partial-count layout documented above (the build emits it fully
-    * aggregated — one row per bucket, O(n) rows by design). */
-  def writeHammingIndex128(spark: SparkSession, packedDf: DataFrame,
-      path: String): Unit = {
-    packedDf.select(col("doc_id"), col("lo"), col("hi"))
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("doc_id"))
-      .write.mode("overwrite").parquet(s"$path/sigs")
-    rebuildHammingCensus128(spark, path)
-  }
-
-  /** Recount `path/bsize` from `path/sigs` — the census recovery/
-    * repair pass ([[rebuildHammingCensus]]'s 128-bit twin): one scan of
-    * the signature table + one groupBy, emitting the fully-aggregated
-    * census (which is also how compaction folds partials — fold =
-    * rebuild-shaped aggregate over the partials instead of the sigs).
-    * Run after a failed [[appendHammingIndex128]] (sigs appended,
-    * census increment not yet appended) — an undercounted census
-    * quietly weakens the mega-bucket guard. O(n) rows out — written at
-    * the aggregate's own shuffle width, never coalesce(1). */
-  def rebuildHammingCensus128(spark: SparkSession, path: String): Unit =
-    hammingBands128(spark.read.parquet(s"$path/sigs"))
-      .groupBy(col("band"), col("bval")).agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$path/bsize")
-
-  /** Append new signatures to a [[writeHammingIndex128]] directory:
-    * the signature rows append (AQE-sized — a small crawl increment
-    * lands as ~one file), and the census appends the INCREMENT'S OWN
-    * band counts as new partial rows — increment-bounded, never a
-    * read-modify-write of the O(n) persisted census (the design
-    * decision above; the 64-bit append's collect-merge is correct only
-    * because ITS census is metadata-scale). The increment materializes
-    * once (tracked localCheckpoint, released on exit) so a
-    * non-deterministic input cannot desynchronize sigs and bsize. A
-    * failure BETWEEN the two appends leaves the census undercounted:
-    * recover with [[rebuildHammingCensus128]] before the next intake. */
-  def appendHammingIndex128(spark: SparkSession, packedDf: DataFrame,
-      path: String): Unit = {
-    val (inc, blocks) = checkpointTracked(
-      packedDf.select(col("doc_id"), col("lo"), col("hi")))
-    try {
-      inc.repartition(col("doc_id"))
-        .write.mode("append").parquet(s"$path/sigs")
-      hammingBands128(inc)
-        .groupBy(col("band"), col("bval")).agg(count(lit(1)).as("n"))
-        .repartition(col("band"), col("bval")) // AQE-sized: ~one file
-        .write.mode("append").parquet(s"$path/bsize")
-    } finally blocks.foreach(_.unpersist(blocking = false))
-  }
-
-  /** Compact a [[writeHammingIndex128]] directory — BOTH decay axes at
-    * once: the signature table's one-file-per-append growth
-    * ([[compactHammingIndex]]'s listing-gated rename-swap rewrite,
-    * verbatim) and the census's one-PARTIAL-per-append growth (folded
-    * by the rebuild-shaped aggregate over the partials — content is
-    * identical under the aggregate-on-read contract, so readers before
-    * and after see the same bucket sizes; Ext5Spec pins bit-equal
-    * intakes). Triggered when either table's file LISTING exceeds
-    * `maxFiles`; below the threshold this is two listings and nothing
-    * else. Returns the total file count compacted away.
-    *
-    * CRASH SAFETY: sigs swaps through `sigs.compact.tmp`/`.old` exactly
-    * as the 64-bit form, INCLUDING its self-heal — a crash between the
-    * two renames of either table leaves no live dir but a complete
-    * `.old`, and the next call renames it back before listing (no
-    * manual step; until that next call, readers of the missing dir DO
-    * fail — run compaction and its recovery from the same maintenance
-    * slot). The census fold additionally benefits from representation-
-    * independence: partials and folded rows read identically, so every
-    * OTHER crash point leaves a census that is not just recoverable
-    * but already readable. Not safe concurrently with readers (the
-    * swap replaces whole dirs); run between crawl increments, where
-    * appends already serialize. */
-  def compactHammingIndex128(spark: SparkSession, path: String,
-      maxFiles: Int = 64): Long = {
-    require(maxFiles >= 1, s"maxFiles=$maxFiles must be >= 1")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val width = math.min(maxFiles,
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    def swapRewrite(sub: String, rewrite: DataFrame => DataFrame): Long = {
-      val live = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      val fs = live.getFileSystem(hconf)
-      val tmp = new org.apache.hadoop.fs.Path(s"$path/$sub.compact.tmp")
-      val old = new org.apache.hadoop.fs.Path(s"$path/$sub.compact.old")
-      // self-heal the between-renames crash window of a PREVIOUS call
-      // (compactHammingIndex's rule): no live dir + a complete .old
-      // means the old dir IS the table — rename it back first
-      if (!fs.exists(live) && fs.exists(old))
-        require(fs.rename(old, live),
-          s"compactHammingIndex128: crash recovery rename $old → $live failed")
-      val nFiles = fs.listStatus(live)
-        .count(_.getPath.getName.endsWith(".parquet"))
-      if (nFiles <= maxFiles) return 0L
-      fs.delete(tmp, true); fs.delete(old, true) // orphans of a past crash
-      rewrite(spark.read.parquet(live.toString))
-        .write.mode("overwrite").parquet(tmp.toString)
-      require(fs.rename(live, old),
-        s"compactHammingIndex128: rename $live -> $old failed")
-      require(fs.rename(tmp, live),
-        s"compactHammingIndex128: rename $tmp -> $live failed")
-      fs.delete(old, true)
-      nFiles.toLong
-    }
-    swapRewrite("sigs", _.repartition(width, col("doc_id"))) +
-      swapRewrite("bsize", _.groupBy(col("band"), col("bval"))
-        .agg(sum(col("n")).as("n"))
-        // the fold must land UNDER the threshold or the next call
-        // re-rewrites the whole O(n) census forever (the sigs arm's
-        // idempotence argument); coalesce merges the aggregate's
-        // output partitions without another shuffle
-        .coalesce(width))
-  }
-
-  /** The census-derived bucket cap for a [[writeHammingIndex128]]
-    * directory: 10 × the mean per-band bucket occupancy (nSigs / 2³²),
-    * floor 10 — [[deriveHammingCap]]'s rule at the 32-bit band space,
-    * where the FLOOR governs at any feasible corpus (the mean bucket
-    * stays below one until ~4B signatures). Total signatures =
-    * Σ partial counts / 4: one narrow map-side-combined scan of the
-    * census — O(n) rows by design (see the lifecycle note), the same
-    * asymptotic as the intake's own signature scan. */
-  def deriveHammingCap128(spark: SparkSession, path: String): Int = {
-    val row = spark.read.parquet(s"$path/bsize").agg(sum(col("n"))).head()
-    val total = (if (row.isNullAt(0)) 0L else row.getLong(0)) / 4
-    math.max(10L, 10L * ((total + 4294967295L) / 4294967296L)).toInt
-  }
-
-  /** Incremental 128-bit Hamming near-dup intake — [[hammingIntake]]'s
-    * crawl-increment discipline on the non-saturating signature: pairs
-    * each NEW (doc_id, lo, hi) with the INDEXED signatures within
-    * Hamming ≤ `maxDist` (summed over both longs), seen side scanned
-    * never shuffled. The guard differs from the 64-bit form EXACTLY
-    * where the census design does: instead of broadcasting the whole
-    * (there metadata-scale) census, the arrivals' ≤ 4·|increment|
-    * distinct touched buckets broadcast INTO the census partials, and
-    * only those buckets aggregate — so the guard's shuffle is
-    * increment-bounded and the census costs one narrow scan. Buckets
-    * whose indexed size exceeds the cap contribute no candidates (the
-    * deterministic whole-bucket drop); buckets with NO indexed member
-    * drop at the same join (no partner to pair with).
-    *
-    * Output: (a_id = new, b_id = seen, hamming). `maxBucket = 0` (the
-    * DEFAULT) derives the cap via [[deriveHammingCap128]]. Pinned ≡
-    * the brute-force new×seen pair filter on under-cap fixtures
-    * (Ext5Spec) and oracle-checked end to end by q173. */
-  def hammingIntake128(spark: SparkSession, newPacked: DataFrame,
-      path: String, maxDist: Int = 3, maxBucket: Int = 0): DataFrame = {
-    requirePigeonhole(maxDist)
-    require(maxBucket >= 0,
-      s"maxBucket=$maxBucket must be >= 1, or 0 to derive from the census")
-    val cap = if (maxBucket == 0) deriveHammingCap128(spark, path) else maxBucket
-    val nb0 = hammingBands128(newPacked
-        .select(col("doc_id"), col("lo"), col("hi")))
-      .select(col("doc_id").as("a_id"), col("lo").as("la"),
-        col("hi").as("ha"), col("band"), col("bval"))
-    // exact sizes for TOUCHED buckets only: partials ⋉ broadcast(touched)
-    // → aggregate — increment-bounded shuffle over an O(n) narrow scan
-    val touched = nb0.select(col("band"), col("bval")).distinct()
-    val okBuckets = spark.read.parquet(s"$path/bsize")
-      .join(broadcast(touched), Seq("band", "bval"))
-      .groupBy(col("band"), col("bval")).agg(sum(col("n")).as("n"))
-      .filter(col("n") <= cap) // n >= 1 by construction: indexed + under cap
-      .select(col("band"), col("bval"))
-    val nb = nb0.join(broadcast(okBuckets), Seq("band", "bval"))
-    hammingBands128(spark.read.parquet(s"$path/sigs"))
-      .select(col("doc_id").as("b_id"), col("lo").as("lb"),
-        col("hi").as("hb"), col("band"), col("bval"))
-      .join(broadcast(nb), Seq("band", "bval"))
-      .filter(col("a_id") =!= col("b_id"))
-      .select(col("a_id"), col("b_id"), col("la"), col("lb"),
-        col("ha"), col("hb"))
-      .distinct() // several shared bands → one pair
-      .select(col("a_id"), col("b_id"),
-        expr("CAST(bit_count(la ^ lb) + bit_count(ha ^ hb) AS BIGINT)")
-          .as("hamming"))
-      .filter(col("hamming") <= maxDist)
-  }
-
-  /** Admission VERDICT of a 128-bit signature increment against a
-    * persisted [[writeHammingIndex128]] directory —
-    * [[hammingIntakeAdmit]]'s two stages on the non-saturating
-    * signature: exact dedup WITHIN the increment (first doc_id per
-    * identical (lo, hi) wins — one increment-bounded exchange), then
-    * survivors with no indexed signature within `maxDist` admit
-    * ([[hammingIntake128]]; the dup side is increment-bounded and
-    * broadcast into the anti-join). Rows where either long is NULL
-    * drop (nothing to compare). Output: the admitted (doc_id, lo, hi)
-    * rows, ready for [[appendHammingIndex128]] so the next increment
-    * sees this one. Oracle-checked end to end by q174. */
-  def hammingIntakeAdmit128(spark: SparkSession, packedDf: DataFrame,
-      path: String, maxDist: Int = 3, maxBucket: Int = 0): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("lo"), col("hi"))
-    val s1 = packedDf.select(col("doc_id"), col("lo"), col("hi"))
-      .filter(col("lo").isNotNull && col("hi").isNotNull)
-      .withColumn("_kmin", min(col("doc_id")).over(w))
-      .filter(col("doc_id") === col("_kmin"))
-      .drop("_kmin")
-    val dup = hammingIntake128(spark, s1, path, maxDist, maxBucket)
-      .select(col("a_id").as("doc_id")).distinct()
-    s1.join(broadcast(dup), Seq("doc_id"), "left_anti")
+    w.capOf((if (row.isNullAt(0)) 0L else row.getLong(0)) / 4)
   }
 
   /** Exact cap diagnostics for [[simhashNearDup]] as a standalone

@@ -23,9 +23,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * bands — still pigeonhole-complete for Hamming ≤ 3, but with a 2³²
   * bucket space whose mean occupancy stays below 1 until the corpus
   * passes four billion documents ([[graft.ext.Dedup
-  * .hammingNearDup128]]). Same single-pass, zero-amplification design
-  * as SimHash64: one md5 per word feeds all eight lanes, the plan
-  * stays fully narrow, and codegen is a static call.
+  * .hammingNearDup]] on `(doc_id, lo, hi)`). Same single-pass,
+  * zero-amplification design as SimHash64: one md5 per word feeds all
+  * eight lanes, the plan stays fully narrow, and codegen is a static
+  * call.
   */
 case class SimHash128(child: Expression) extends UnaryExpression {
 

@@ -477,28 +477,28 @@ object Multimodal {
 
   /** Image-content near-dup pairs: [[imageHashes]] (dHash by default —
     * the more re-encode-robust of the two) feeding [[graft.ext.Dedup
-    * .hammingNearDup64]]'s 4×16 banding + exact Hamming verification
+    * .hammingNearDup]]'s 4×16 banding + exact Hamming verification
     * VERBATIM — the SimHash near-dup machinery, swapped onto pixel
     * signatures. Pigeonhole-complete for Hamming ≤ 3 up to the
     * mega-bucket cap (solid-color corpora collapse into one bucket —
     * cap + observe, the q99 discipline). Undecodable payloads drop.
     * `maxBucket` defaults to 0 = census-derived (the
-    * [[graft.ext.Dedup.hammingNearDup64]] in-plan rule — the fixed
+    * [[graft.ext.Dedup.hammingNearDup]] in-plan rule — the fixed
     * default was measured below the mean bucket size at 2M
     * signatures, silently losing recall). */
   def imageNearDup(spark: SparkSession, media: DataFrame,
       maxDist: Int = 3, maxBucket: Int = 0, useAhash: Boolean = false,
       capMetrics: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
-    graft.ext.Dedup.hammingNearDup64(spark,
+    graft.ext.Dedup.hammingNearDup(spark,
       imagePacked(spark, media, useAhash), maxDist, maxBucket, capMetrics)
   }
 
   /** Image near-dup on the COMBINED 128-bit perceptual signature
     * (lo = dHash, hi = aHash) through [[graft.ext.Dedup
-    * .hammingNearDup128]]'s 4×32-bit banding — the corpus-wide batch
+    * .hammingNearDup]]'s 4×32-bit banding — the corpus-wide batch
     * shape for image dedup past the 64-bit form's ~4M-signature
     * band-saturation boundary (see [[graft.ext.Dedup
-    * .hammingNearDup64]]'s SCALE BOUNDARY note). One decode pass
+    * .hammingNearDup]]'s SCALE BOUNDARY note). One decode pass
     * yields both hashes, so the signature costs nothing extra.
     * Semantics: `maxDist` spans BOTH hashes — a pair must survive the
     * gradient test and the global-brightness test TOGETHER, so at the
@@ -506,7 +506,7 @@ object Multimodal {
     * lower-recall) test than [[imageNearDup]]'s single-hash one. The
     * radius canNOT be widened to compensate: the 4-band LSH is
     * pigeonhole-complete only for Hamming ≤ 3 (enforced by
-    * [[graft.ext.Dedup.hammingNearDup128]]'s `require` — at maxDist
+    * [[graft.ext.Dedup.hammingNearDup]]'s `require` — at maxDist
     * 4+ a pair whose differing bits span all four bands would be
     * silently dropped). Callers who want the 64-bit form's looser
     * tolerance should use [[imageNearDup]]; this form is for
@@ -515,11 +515,7 @@ object Multimodal {
   def imageNearDup128(spark: SparkSession, media: DataFrame,
       maxDist: Int = 3, maxBucket: Int = 0,
       capMetrics: Option[org.apache.spark.sql.Observation] = None): DataFrame =
-    graft.ext.Dedup.hammingNearDup128(spark,
-      imageHashes(spark, media)
-        .filter(col("dhash").isNotNull && col("ahash").isNotNull)
-        .select(col("media_id").as("doc_id"), col("dhash").as("lo"),
-          col("ahash").as("hi")),
+    graft.ext.Dedup.hammingNearDup(spark, imagePacked128(spark, media),
       maxDist, maxBucket, capMetrics)
 
   private def imagePacked(spark: SparkSession, media: DataFrame,
@@ -588,7 +584,7 @@ object Multimodal {
       admitted.select(col("media_id").as("doc_id"), col("packed")), path)
 
   /** Persist the 128-BIT image-content dedup index ([[graft.ext.Dedup
-    * .writeHammingIndex128]] over the combined dHash‖aHash signature —
+    * .writeHammingIndex]] over the combined dHash‖aHash signature —
     * [[imageNearDup128]]'s input): the build-once form whose band
     * space never saturates, for image corpora past the 64-bit index's
     * candidate-growth boundary (~O(100M) indexed signatures). Same
@@ -596,23 +592,23 @@ object Multimodal {
     * fall out of the one pixel pass. */
   def writeImageHashIndex128(spark: SparkSession, media: DataFrame,
       path: String): Unit =
-    graft.ext.Dedup.writeHammingIndex128(spark,
+    graft.ext.Dedup.writeHammingIndex(spark,
       imagePacked128(spark, media), path)
 
   /** 128-bit image near-dup intake at crawl time — [[imageDupIntake]]
     * on the combined signature against a [[writeImageHashIndex128]]
-    * directory ([[graft.ext.Dedup.hammingIntake128]]: touched-bucket
+    * directory ([[graft.ext.Dedup.hammingIntake]]: touched-bucket
     * census guard, indexed side scanned never shuffled or re-decoded).
     * Output (a_id = arrival media_id, b_id = indexed media_id,
     * hamming over both hashes). */
   def imageDupIntake128(spark: SparkSession, media: DataFrame,
       path: String, maxDist: Int = 3, maxBucket: Int = 0): DataFrame =
-    graft.ext.Dedup.hammingIntake128(spark,
+    graft.ext.Dedup.hammingIntake(spark,
       imagePacked128(spark, media), path, maxDist, maxBucket)
 
   /** 128-bit image ADMISSION at crawl time — [[imageIntakeAdmit]] on
     * the combined dHash‖aHash signature ([[graft.ext.Dedup
-    * .hammingIntakeAdmit128]]): exact dedup within the arriving batch
+    * .hammingIntakeAdmit]]): exact dedup within the arriving batch
     * (first media_id per identical signature pair wins), then
     * survivors with no indexed signature within `maxDist` (summed over
     * both hashes — the stricter, higher-precision test) admit.
@@ -641,7 +637,7 @@ object Multimodal {
       : (DataFrame, () => Unit) = {
     val (packed, blocks) = graft.ext.Dedup.checkpointLazyTracked(
       imagePacked128(spark, media))
-    (graft.ext.Dedup.hammingIntakeAdmit128(spark, packed, path, maxDist,
+    (graft.ext.Dedup.hammingIntakeAdmit(spark, packed, path, maxDist,
         maxBucket)
       .select(col("doc_id").as("media_id"), col("lo"), col("hi")),
      () => blocks.foreach(_.unpersist(blocking = false)))
@@ -654,14 +650,14 @@ object Multimodal {
     * admit → append intake loop composes as written). */
   def appendImageHashIndex128(spark: SparkSession, admitted: DataFrame,
       path: String): Unit =
-    graft.ext.Dedup.appendHammingIndex128(spark,
+    graft.ext.Dedup.appendHammingIndex(spark,
       admitted.select(col("media_id").as("doc_id"), col("lo"), col("hi")),
       path)
 
   /** Video-content near-dup via SHARED FRAMES — the multimodal stack
     * composed end to end: [[sampleFrames]] explodes each container
     * into ≤ `maxFrames` strided frames, [[imageHashes]] dHashes every
-    * frame, [[graft.ext.Dedup.hammingNearDup64]] finds near-dup frame
+    * frame, [[graft.ext.Dedup.hammingNearDup]] finds near-dup frame
     * pairs, and the roll-up counts them per VIDEO pair — two videos
     * sharing re-encoded/resized copies of `minFrames`+ frames are
     * near-dups even when their byte streams share nothing. Output
@@ -692,7 +688,7 @@ object Multimodal {
         col("media_id").cast("string"))))
     val frames = sampleFrames(spark, media, stride, maxFrames)
       .select(packedId.as("media_id"), col("frame_png").as("payload"))
-    graft.ext.Dedup.hammingNearDup64(spark,
+    graft.ext.Dedup.hammingNearDup(spark,
         imagePacked(spark, frames, useAhash = false), maxDist, maxBucket)
       .select(expr(s"a_id DIV ${1L << 20}").as("a_id"),
         expr(s"b_id DIV ${1L << 20}").as("b_id"))

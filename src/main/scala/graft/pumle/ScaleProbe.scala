@@ -968,7 +968,7 @@ object ScaleProbe {
     val secsC = (System.nanoTime() - tC) / 1e9
     val compFiles = sigFiles
     val (compS, _) = timeIntake(sizedCap)
-    // the BATCH path at the same n (hammingNearDup64 corpus-wide, not
+    // the BATCH path at the same n (hammingNearDup corpus-wide, not
     // the increment): the DEFAULT (maxBucket = 0 → census-derived
     // in-plan) against the old fixed 10 that round 11 measured losing
     // ~96% of true pairs to band-space saturation. Single shot per
@@ -983,7 +983,7 @@ object ScaleProbe {
       if (n <= 4000000L) {
         def timeBatch(cap: Int): (Double, Long) = {
           val t = System.nanoTime()
-          val pairs = graft.ext.Dedup.hammingNearDup64(spark, sigs(0, n),
+          val pairs = graft.ext.Dedup.hammingNearDup(spark, sigs(0, n),
             maxBucket = cap).count()
           ((System.nanoTime() - t) / 1e9, pairs)
         }
@@ -994,7 +994,8 @@ object ScaleProbe {
         println(s"[probe] hamming BATCH rows SKIPPED at n=$n (> 4M): " +
           s"mean bucket ~${n / 65536} members — corpus-wide 4×16 " +
           "banding no longer prunes at this density (kept pair volume " +
-          "Σc² is tens of billions); use hammingNearDup128 (32-bit " +
+          "Σc² is tens of billions); use hammingNearDup on a 128-bit " +
+          "(doc_id, lo, hi) signature (32-bit " +
           "bands — the `hamming128` probe measures it at this n) or " +
           "the increment intake")
         (Double.NaN, -1L, Double.NaN, -1L)
@@ -1020,13 +1021,14 @@ object ScaleProbe {
   /** Persisted 128-BIT Hamming index scale census (standalone
     * `hamming128-intake` arg) — [[hammingIntakeCensus]]'s protocol on
     * the non-saturating lifecycle ([[graft.ext.Dedup
-    * .writeHammingIndex128]] family): n seen signatures (near-dup
-    * families of 8 on a shared 120-bit md5 base, lo-noise low 2 bits,
-    * 5% collapsed onto one degenerate signature), built as WRITE(half)
+    * .writeHammingIndex]] family on `(doc_id, lo, hi)`): n seen
+    * signatures (near-dup families of 8 on a shared 120-bit md5 base,
+    * lo-noise low 2 bits, 5% collapsed onto one degenerate signature),
+    * built as WRITE(half)
     * + APPEND(half) so the aggregate-on-read census carries two
     * generations of partials at scale, then a 10k crawl increment
-    * through [[graft.ext.Dedup.hammingIntake128]] and the admission
-    * verdict through [[graft.ext.Dedup.hammingIntakeAdmit128]]. What
+    * through [[graft.ext.Dedup.hammingIntake]] and the admission
+    * verdict through [[graft.ext.Dedup.hammingIntakeAdmit]]. What
     * the numbers must show at 20M indexed signatures (the decade where
     * the 64-bit index's candidate growth begins to bite): the intake's
     * returned pair count EQUALS the analytically-planted truth (every
@@ -1059,10 +1061,10 @@ object ScaleProbe {
         .as("hi"))
     val dir = java.nio.file.Files.createTempDirectory("ham128scale").toString
     val tB = System.nanoTime()
-    graft.ext.Dedup.writeHammingIndex128(spark, sigs(0, n / 2), dir)
+    graft.ext.Dedup.writeHammingIndex(spark, sigs(0, n / 2), dir)
     val secsW = (System.nanoTime() - tB) / 1e9
     val tA0 = System.nanoTime()
-    graft.ext.Dedup.appendHammingIndex128(spark, sigs(n / 2, n), dir)
+    graft.ext.Dedup.appendHammingIndex(spark, sigs(n / 2, n), dir)
     val secsA0 = (System.nanoTime() - tA0) / 1e9
     val nB = spark.read.parquet(s"$dir/bsize").count()
     // increment: near-dups of scattered seen families (base ^ 3 in lo —
@@ -1091,29 +1093,29 @@ object ScaleProbe {
         Seq("fam"))
       .agg(sum(col("m"))).head().getLong(0)
     def timeIntake(): (Double, Long) = {
-      graft.ext.Dedup.hammingIntake128(spark, inc, dir).count() // warm
+      graft.ext.Dedup.hammingIntake(spark, inc, dir).count() // warm
       var best = Double.MaxValue
       var pairs = 0L
       for (_ <- 0 until 2) {
         val t = System.nanoTime()
-        pairs = graft.ext.Dedup.hammingIntake128(spark, inc, dir).count()
+        pairs = graft.ext.Dedup.hammingIntake(spark, inc, dir).count()
         best = math.min(best, (System.nanoTime() - t) / 1e9)
       }
       (best, pairs)
     }
     val (intakeS, intakeP) = timeIntake()
-    val degPairs = graft.ext.Dedup.hammingIntake128(spark,
+    val degPairs = graft.ext.Dedup.hammingIntake(spark,
       inc.filter(col("lo") === deg), dir).count()
     val tAd = System.nanoTime()
-    val admitted = graft.ext.Dedup.hammingIntakeAdmit128(spark, inc, dir).count()
+    val admitted = graft.ext.Dedup.hammingIntakeAdmit(spark, inc, dir).count()
     val secsAd = (System.nanoTime() - tAd) / 1e9
     // lifecycle decay + repair at this n: 5 more appends, then compact
     for (a <- 0 until 5)
-      graft.ext.Dedup.appendHammingIndex128(spark,
+      graft.ext.Dedup.appendHammingIndex(spark,
         sigs(n + 20000L + a * 10000L, n + 30000L + a * 10000L), dir)
     val (fragS, _) = timeIntake()
     val tC = System.nanoTime()
-    val nComp = graft.ext.Dedup.compactHammingIndex128(spark, dir, maxFiles = 32)
+    val nComp = graft.ext.Dedup.compactHammingIndex(spark, dir, maxFiles = 32)
     val secsC = (System.nanoTime() - tC) / 1e9
     val (compS, compP) = timeIntake()
     println(f"[probe] hamming128 intake: n=$n%d sigs (write half " +
@@ -1319,7 +1321,7 @@ object ScaleProbe {
     * (shared 120-bit md5 base split across the two packed longs,
     * XOR-noise in lo's low 2 bits → pairwise distance ≤ 2) with the
     * 5% degenerate mega-signature, through
-    * [[graft.ext.Dedup.hammingNearDup128]] at the DEFAULT derived
+    * [[graft.ext.Dedup.hammingNearDup]] at the DEFAULT derived
     * cap. What the numbers must show: the returned pair count EQUALS
     * the analytically-planted truth (Σ C(m,2) over each family's
     * non-degenerate members — the 4×32-band space does not saturate,
@@ -1352,9 +1354,9 @@ object ScaleProbe {
       .agg(sum(expr("m * (m - 1) DIV 2")).as("p"))
       .head().getLong(0)
     val t0 = System.nanoTime()
-    val pairs = graft.ext.Dedup.hammingNearDup128(spark, sigs).count()
+    val pairs = graft.ext.Dedup.hammingNearDup(spark, sigs).count()
     val secs = (System.nanoTime() - t0) / 1e9
-    val degPairs = graft.ext.Dedup.hammingNearDup128(spark,
+    val degPairs = graft.ext.Dedup.hammingNearDup(spark,
       sigs.filter(col("lo") === deg)).count()
     println(f"[probe] hamming128 BATCH: n=$n%d sigs, derived cap, " +
       f"$pairs%d pairs in $secs%.1fs vs planted $truth%d — " +

@@ -344,7 +344,7 @@ object Ext6Queries {
   // --------------------------------------------------------------- q166
   // Packed-64-bit Hamming banding/verify (the machinery behind BOTH
   // q85's SimHash near-dup and Multimodal.imageNearDup's perceptual-
-  // hash image dedup, factored to Dedup.hammingNearDup64) exercised on
+  // hash image dedup, factored to Dedup.hammingNearDup) exercised on
   // FIXED signature fixtures both engines derive identically: a 60-bit
   // md5 hash of each doc's (source, n_chars-band) group, XOR the low 3
   // bits of doc_id — so within-group pairs sit at Hamming ≤ 3 by
@@ -372,7 +372,7 @@ object Ext6Queries {
   private val q166 = Q(
     "q166_phash_banding",
     (s, d) => {
-      graft.ext.Dedup.hammingNearDup64(s, phashFixture(s, d))
+      graft.ext.Dedup.hammingNearDup(s, phashFixture(s, d))
         .orderBy(col("a_id"), col("b_id"))
     },
     Some("""WITH sig AS (
@@ -825,10 +825,11 @@ object Ext6Queries {
       ORDER BY doc_id"""))
 
   // ----------------------------------------------------------- q173/q174
-  // The 128-BIT persisted Hamming index LIFECYCLE (Dedup
-  // .writeHammingIndex128 / appendHammingIndex128 / compactHammingIndex128
-  // / hammingIntake128 / hammingIntakeAdmit128) — the build-once/
-  // intake-many machinery on the non-saturating 4×32-bit band family.
+  // The persisted Hamming index LIFECYCLE at 128 bits (Dedup
+  // .writeHammingIndex / appendHammingIndex / compactHammingIndex /
+  // hammingIntake / hammingIntakeAdmit on `(doc_id, lo, hi)`) — the
+  // build-once/intake-many machinery on the non-saturating 4×32-bit
+  // band family.
   // The shared fixture BUILD exercises the whole lifecycle in the
   // correctness path: the index is WRITTEN from half the seen side,
   // APPENDED with the other half (the aggregate-on-read census contract
@@ -862,7 +863,7 @@ object Ext6Queries {
              doc_id % 4) AS hi
        FROM documents"""
 
-  /** 4×32-bit band rows in DuckDB (Dedup.hammingBands128's extraction:
+  /** 4×32-bit band rows in DuckDB (Dedup.LoHi128's band extraction:
     * bands 0-1 from lo, 2-3 from hi; the fixture's longs are 60-bit
     * non-negative, so // and % are exact unsigned arithmetic). */
   private def bands128Sql(src: String) =
@@ -875,17 +876,17 @@ object Ext6Queries {
   private def hamidx128Dir(s: SparkSession, d: String): String =
     Fixtures.dir("hamidx128", d) { p =>
       val seen = phash128Fixture(s, d).filter(col("doc_id") % 7 =!= 0)
-      graft.ext.Dedup.writeHammingIndex128(s,
+      graft.ext.Dedup.writeHammingIndex(s,
         seen.filter(col("doc_id") % 2 === 0), p)
-      graft.ext.Dedup.appendHammingIndex128(s,
+      graft.ext.Dedup.appendHammingIndex(s,
         seen.filter(col("doc_id") % 2 =!= 0), p)
-      graft.ext.Dedup.compactHammingIndex128(s, p, maxFiles = 4)
+      graft.ext.Dedup.compactHammingIndex(s, p, maxFiles = 4)
     }
 
   private val q173 = Q(
     "q173_phash128_intake",
     (s, d) => {
-      graft.ext.Dedup.hammingIntake128(s,
+      graft.ext.Dedup.hammingIntake(s,
           phash128Fixture(s, d).filter(col("doc_id") % 7 === 0),
           hamidx128Dir(s, d))
         .orderBy(col("a_id"), col("b_id"))
@@ -922,7 +923,7 @@ object Ext6Queries {
   private val q174 = Q(
     "q174_phash128_intake_admit",
     (s, d) => {
-      graft.ext.Dedup.hammingIntakeAdmit128(s,
+      graft.ext.Dedup.hammingIntakeAdmit(s,
           phash128Fixture(s, d).filter(col("doc_id") % 7 === 0),
           hamidx128Dir(s, d))
         .orderBy(col("doc_id"))

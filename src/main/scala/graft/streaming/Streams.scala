@@ -875,48 +875,60 @@ object Streams {
   /** Streaming Hamming near-dup intake against a persisted
     * [[graft.ext.Dedup.writeHammingIndex]] directory — the stream twin
     * of [[graft.ext.Dedup.hammingIntake]] for content signatures
-    * (perceptual image hashes, SimHash): each arriving (doc_id,
-    * packed) row checks its four 16-bit bands against the index's
-    * band buckets and emits (a_id = arrival, b_id = indexed, hamming)
-    * for every indexed signature within `maxDist`.
+    * (perceptual image hashes, SimHash) at either width: each arriving
+    * `(doc_id, packed)` or `(doc_id, lo, hi)` row checks its four bands
+    * against the index's band buckets and emits (a_id = arrival,
+    * b_id = indexed, hamming) for every indexed signature within
+    * `maxDist`.
     *
     * Stateless stream-static ([[annEnrich]]'s discipline): the
     * signature table reshapes ONCE per index into one row per
     * under-cap (band, bval) bucket (over-cap buckets — the
-    * solid-color/boilerplate case, sized by the PERSISTED
-    * metadata-scale census — are dropped statically, the batch form's
-    * guard), the stream side takes four unique-key left joins (one
-    * per band), and one expression concatenates the probed buckets,
-    * DEDUPES pairs that share several bands (`array_distinct` — a
-    * streaming `distinct` would need a state store; this needs none),
-    * drops self-ids and verifies the exact packed `bit_count`.
-    * Ext6Spec pins stream ≡ the batch intake. */
-  def hammingIntake(spark: SparkSession, packedStream: DataFrame,
-      indexPath: String, maxDist: Int = 3, maxBucket: Int = 0): DataFrame =
-    hammingProbed(spark, packedStream.select(col("doc_id"), col("packed")),
-        indexPath, maxDist, maxBucket)
-      .select(col("doc_id").as("a_id"), col("packed").as("_pa"),
-        explode(col("_hits")).as("m"))
+    * solid-color/boilerplate case, sized by the PERSISTED census — are
+    * dropped statically, the batch form's guard), the stream side
+    * takes four unique-key left joins (one per band), and one
+    * expression concatenates the probed buckets, DEDUPES pairs that
+    * share several bands (`array_distinct` — a streaming `distinct`
+    * would need a state store; this needs none), drops self-ids and
+    * verifies the exact `bit_count` distance. Ext5Spec and StreamsSpec
+    * pin stream ≡ the batch intake at 64 and 128 bits. */
+  def hammingIntake(spark: SparkSession, sigStream: DataFrame,
+      indexPath: String, maxDist: Int = 3, maxBucket: Int = 0): DataFrame = {
+    val w = graft.ext.Dedup.HammingWidth.of(sigStream)
+    hammingProbed(spark, w, sigStream.select(w.columns: _*), indexPath,
+        maxDist, maxBucket)
+      .select((col("doc_id").as("a_id") +: w.sigCols.map(col)) :+
+        explode(col("_hits")).as("m"): _*)
       .select(col("a_id"), col("m.doc_id").as("b_id"),
-        expr("CAST(bit_count(_pa ^ m.packed) AS BIGINT)").as("hamming"))
+        expr(s"CAST(${w.distance(identity, c => s"m.$c")} AS BIGINT)")
+          .as("hamming"))
+  }
 
   /** The shared stream-static probe behind [[hammingIntake]] (pair
     * emission) and [[hammingIntakeAdmit]] (admission verdict): input
     * columns pass through untouched plus a `_hits` array of the
     * indexed signatures within `maxDist` (empty = no near-dup seen).
-    * Extra input columns (event time for the admit form's watermarked
-    * dedup) ride along — every added column is a plain projection or
-    * unique-key left join, all stateless. */
-  private def hammingProbed(spark: SparkSession, packedStream: DataFrame,
+    * The stream's width must be the index's (checked against the
+    * `sigs` schema before anything is planned). Extra input columns
+    * (event time for the admit form's watermarked dedup) ride along —
+    * every added column is a plain projection or unique-key left
+    * join, all stateless. The census is read by aggregating its
+    * partials (a folded 64-bit census is the one-partial case): one
+    * batch aggregate at stream setup, amortized over every
+    * micro-batch. */
+  private def hammingProbed(spark: SparkSession,
+      w: graft.ext.Dedup.HammingWidth, sigStream: DataFrame,
       indexPath: String, maxDist: Int, maxBucket: Int): DataFrame = {
     graft.ext.Dedup.requirePigeonhole(maxDist)
     require(maxBucket >= 0,
       s"maxBucket=$maxBucket must be >= 1, or 0 to derive from the census")
+    val seen = graft.ext.Dedup.indexSigs(spark, w, indexPath)
     // maxBucket = 0 → the batch form's census-derived cap (free: the
     // census is persisted; the static side is built once per stream)
     val cap = if (maxBucket == 0)
-      graft.ext.Dedup.deriveHammingCap(spark, indexPath) else maxBucket
+      graft.ext.Dedup.deriveCap(spark, w, indexPath) else maxBucket
     val small = spark.read.parquet(s"$indexPath/bsize")
+      .groupBy(col("band"), col("bval")).agg(sum(col("n")).as("n"))
       .filter(col("n") <= cap).select(col("band"), col("bval"))
     // staticSide: a stream-static join re-evaluates the static plan on
     // EVERY micro-batch — without the persist, each trigger would
@@ -932,16 +944,15 @@ object Streams {
     // propagate through the per-band filter and the alias projection,
     // so each trigger's sort-merge joins exchange only the micro-batch
     // side; the cached side contributes a columnar scan and nothing
-    // else.
-    val buckets = staticSide(graft.ext.Dedup.hammingBands(
-        spark.read.parquet(s"$indexPath/sigs"))
+    // else. The census aggregate above is part of this static plan, so
+    // it too runs once per stream.
+    val buckets = staticSide(w.bands(seen)
       .join(small, Seq("band", "bval"))
       .groupBy(col("band"), col("bval"))
-      .agg(collect_list(struct(col("doc_id"), col("packed"))).as("ms"))
+      .agg(collect_list(struct(w.columns: _*)).as("ms"))
       .repartition(col("bval"))
       .sortWithinPartitions(col("bval")))
-    val base = packedStream
-      .withColumn("_b", expr(graft.ext.Dedup.BandLanesSql))
+    val base = sigStream.withColumn("_b", expr(w.bandSql))
     val joined = (0 until 4).foldLeft(base) { (df, b) =>
       df.withColumn(s"_bv_$b", expr(s"_b[$b]"))
         .join(buckets.filter(col("band") === b)
@@ -954,29 +965,32 @@ object Streams {
         s"""filter(array_distinct(
            |         flatten(filter(array($lists), a -> a IS NOT NULL))),
            |  m -> m.doc_id != doc_id
-           |    AND bit_count(packed ^ m.packed) <= $maxDist)""".stripMargin))
+           |    AND ${w.distance(identity, c => s"m.$c")} <= $maxDist)"""
+          .stripMargin))
       .drop("_b" +: (0 until 4).flatMap(b => Seq(s"_bv_$b", s"_ms_$b")): _*)
   }
 
   /** Streaming ADMISSION against a persisted Hamming index — the
     * stream twin of [[graft.ext.Dedup.hammingIntakeAdmit]] and the
     * media arm of [[crawlIntakeMixed]]: arrivals `(doc_id, ts,
-    * packed)` dedup exactly within the stream (first arrival per
-    * identical signature wins — `dropDuplicatesWithinWatermark`, the
+    * packed)` or `(doc_id, ts, lo, hi)` dedup exactly within the
+    * stream (first arrival per identical signature wins —
+    * `dropDuplicatesWithinWatermark` over the signature columns, the
     * [[crawlIntake]] URL-stage discipline; ONE watermark-bounded
     * state), then survivors with an empty indexed-hit list admit
-    * (stateless stream-static probe). Output: the admitted
-    * `(doc_id, ts, packed)` rows. StreamsSpec pins stream ≡ batch
-    * admits on ordered micro-batches. */
-  def hammingIntakeAdmit(spark: SparkSession, packedStream: DataFrame,
+    * (stateless stream-static probe). Rows with a NULL signature
+    * column drop. Output: the admitted rows, same columns. StreamsSpec
+    * pins stream ≡ batch admits on ordered micro-batches. */
+  def hammingIntakeAdmit(spark: SparkSession, sigStream: DataFrame,
       indexPath: String, watermark: String = "10 minutes",
       maxDist: Int = 3, maxBucket: Int = 0): DataFrame = {
-    val deduped = packedStream
-      .select(col("doc_id"), col("ts"), col("packed"))
-      .filter(col("packed").isNotNull)
+    val w = graft.ext.Dedup.HammingWidth.of(sigStream)
+    val deduped = sigStream
+      .select((Seq("doc_id", "ts") ++ w.sigCols).map(col): _*)
+      .filter(w.notNull)
       .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("packed")
-    hammingProbed(spark, deduped, indexPath, maxDist, maxBucket)
+      .dropDuplicatesWithinWatermark(w.sigCols)
+    hammingProbed(spark, w, deduped, indexPath, maxDist, maxBucket)
       .filter(size(col("_hits")) === 0)
       .drop("_hits")
   }
@@ -1008,83 +1022,7 @@ object Streams {
       .select(col("doc_id").as("media_id"), col("ts"), col("packed"))
   }
 
-  /** The 128-bit stream-static probe — [[hammingProbed]]'s discipline
-    * on the (doc_id, lo, hi) two-long signature against a persisted
-    * [[graft.ext.Dedup.writeHammingIndex128]] directory: input columns
-    * pass through plus a `_hits` array of indexed signatures within
-    * `maxDist` (summed over both longs). The static side builds ONCE
-    * per stream: the census PARTIALS aggregate to true bucket sizes
-    * (one O(n) batch aggregate at stream setup — the stream twin is
-    * exactly where that cost amortizes over every micro-batch), the
-    * under-cap whitelist joins into one row per (band, bval) bucket of
-    * the signature table, and the stream side takes four stateless
-    * unique-key left joins on the 32-bit band values. */
-  private def hammingProbed128(spark: SparkSession, packedStream: DataFrame,
-      indexPath: String, maxDist: Int, maxBucket: Int): DataFrame = {
-    graft.ext.Dedup.requirePigeonhole(maxDist)
-    require(maxBucket >= 0,
-      s"maxBucket=$maxBucket must be >= 1, or 0 to derive from the census")
-    val cap = if (maxBucket == 0)
-      graft.ext.Dedup.deriveHammingCap128(spark, indexPath) else maxBucket
-    val small = spark.read.parquet(s"$indexPath/bsize")
-      .groupBy(col("band"), col("bval")).agg(sum(col("n")).as("n"))
-      .filter(col("n") <= cap).select(col("band"), col("bval"))
-    // staticSide (hammingProbed's argument, and more load-bearing here:
-    // the O(n) census partial aggregate is part of this static plan,
-    // so an unpersisted probe side would re-aggregate the census AND
-    // re-scan the signature table on every micro-batch). Partitioned +
-    // sorted on the join key before persisting — see hammingProbed's
-    // note: the per-trigger static-side shuffle is the dominant cost
-    // an unpartitioned cache fails to remove.
-    val buckets = staticSide(graft.ext.Dedup.hammingBands128(
-        spark.read.parquet(s"$indexPath/sigs"))
-      .join(small, Seq("band", "bval"))
-      .groupBy(col("band"), col("bval"))
-      .agg(collect_list(struct(col("doc_id"), col("lo"), col("hi"))).as("ms"))
-      .repartition(col("bval"))
-      .sortWithinPartitions(col("bval")))
-    val base = packedStream
-      .withColumn("_b", expr(graft.ext.Dedup.BandLanes128Sql))
-    val joined = (0 until 4).foldLeft(base) { (df, b) =>
-      df.withColumn(s"_bv_$b", expr(s"_b[$b]"))
-        .join(buckets.filter(col("band") === b)
-            .select(col("bval").as(s"_bv_$b"), col("ms").as(s"_ms_$b")),
-          Seq(s"_bv_$b"), "left_outer")
-    }
-    val lists = (0 until 4).map(b => s"_ms_$b").mkString(", ")
-    joined
-      .withColumn("_hits", expr(
-        s"""filter(array_distinct(
-           |         flatten(filter(array($lists), a -> a IS NOT NULL))),
-           |  m -> m.doc_id != doc_id
-           |    AND bit_count(lo ^ m.lo) + bit_count(hi ^ m.hi)
-           |          <= $maxDist)""".stripMargin))
-      .drop("_b" +: (0 until 4).flatMap(b => Seq(s"_bv_$b", s"_ms_$b")): _*)
-  }
-
-  /** Streaming ADMISSION against a persisted 128-BIT Hamming index —
-    * [[hammingIntakeAdmit]]'s two stages on the non-saturating
-    * signature (the stream twin of [[graft.ext.Dedup
-    * .hammingIntakeAdmit128]]): arrivals `(doc_id, ts, lo, hi)` dedup
-    * exactly within the stream (first arrival per identical signature
-    * pair — ONE watermark-bounded state over the two columns), then
-    * survivors with an empty indexed-hit list admit (stateless
-    * stream-static probe). Rows where either long is NULL drop.
-    * StreamsSpec pins stream ≡ batch admits. */
-  def hammingIntakeAdmit128(spark: SparkSession, packedStream: DataFrame,
-      indexPath: String, watermark: String = "10 minutes",
-      maxDist: Int = 3, maxBucket: Int = 0): DataFrame = {
-    val deduped = packedStream
-      .select(col("doc_id"), col("ts"), col("lo"), col("hi"))
-      .filter(col("lo").isNotNull && col("hi").isNotNull)
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("lo", "hi")
-    hammingProbed128(spark, deduped, indexPath, maxDist, maxBucket)
-      .filter(size(col("_hits")) === 0)
-      .drop("_hits")
-  }
-
-  /** Streaming 128-bit image admission — [[hammingIntakeAdmit128]] fed
+  /** Streaming 128-bit image admission — [[hammingIntakeAdmit]] fed
     * by per-micro-batch decode + BOTH perceptual hashes (`(media_id,
     * ts, payload)` in, admitted `(media_id, ts, lo, hi)` out;
     * lo = dHash, hi = aHash — [[graft.multimodal.Multimodal
@@ -1108,7 +1046,7 @@ object Streams {
           (id, ts, dh, ah)
         }
       }.toDF("doc_id", "ts", "lo", "hi")
-    hammingIntakeAdmit128(spark, hashed, indexPath, watermark, maxDist,
+    hammingIntakeAdmit(spark, hashed, indexPath, watermark, maxDist,
         maxBucket)
       .select(col("doc_id").as("media_id"), col("ts"), col("lo"), col("hi"))
   }

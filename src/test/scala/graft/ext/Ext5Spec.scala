@@ -335,6 +335,9 @@ class Ext5Spec extends SparkSpec {
     val capDir = java.nio.file.Files.createTempDirectory("hamcap").toString
     Seq((0, 0L, 8000000L)).toDF("band", "bval", "n")
       .write.parquet(s"$capDir/bsize")
+    // the width is the sigs schema's: an empty 64-bit signature table
+    Seq.empty[(Long, Long)].toDF("doc_id", "packed")
+      .write.parquet(s"$capDir/sigs")
     assert(Dedup.deriveHammingCap(spark, capDir) == 310) // 10·ceil(2M/65536)
     // streaming twin ≡ batch on the same index
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -398,7 +401,7 @@ class Ext5Spec extends SparkSpec {
       .getLong(0) == (16 + 40) * 4)
   }
 
-  test("hammingNearDup64 default cap: census-derived, recovers pairs the fixed cap lost") {
+  test("hammingNearDup default cap at 64 bits: census-derived, recovers pairs the fixed cap lost") {
     // 70,000 signatures → deriveHammingCap's rule lands at
     // 10·ceil(70000/65536) = 20; a planted 15-member family (base ^
     // low-2-bit noise) fills its band-1..3 buckets with exactly 15
@@ -412,9 +415,9 @@ class Ext5Spec extends SparkSpec {
     val fam = spark.range(0, 15).select((col("id") + 900000L).as("doc_id"),
       expr(s"${0x3C3C5A5A77881122L}L ^ (id % 4)").as("packed"))
     val packedDf = bg.unionByName(fam)
-    def run(cap: Int) = Dedup.hammingNearDup64(spark, packedDf, maxBucket = cap)
+    def run(cap: Int) = Dedup.hammingNearDup(spark, packedDf, maxBucket = cap)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val derived = Dedup.hammingNearDup64(spark, packedDf) // DEFAULT = derive
+    val derived = Dedup.hammingNearDup(spark, packedDf) // DEFAULT = derive
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // derived ≡ the well-chosen manual cap the formula prescribes
     assert(derived == run(20))
@@ -426,7 +429,7 @@ class Ext5Spec extends SparkSpec {
     assert(planted(fixed10) == 21)  // within-subgroup only: 3·C(4,2) + C(3,2)
   }
 
-  test("hammingNearDup128: brute-force-equal at dist ≤ 3, derived cap, lanes extend simhash64") {
+  test("hammingNearDup at 128 bits: brute-force-equal at dist ≤ 3, derived cap, lanes extend simhash64") {
     import spark.implicits._
     graft.functions.Functions.registerAll(spark)
     // lane identity: simhash128's lanes 0–3 are simhash64's exactly
@@ -457,7 +460,7 @@ class Ext5Spec extends SparkSpec {
       lit(0x4242L).as("lo"), lit(0x4242L).as("hi"))
     val packed = bg.unionByName(fam).unionByName(deg)
 
-    val got = Dedup.hammingNearDup128(spark, packed) // DEFAULT derived cap
+    val got = Dedup.hammingNearDup(spark, packed) // DEFAULT derived cap
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
     // brute-force truth on the driver (2046 rows), minus the capped
@@ -480,18 +483,18 @@ class Ext5Spec extends SparkSpec {
     assert(got.count(_._1 >= 90000L) == 15) // all C(6,2) planted pairs
     // derived default ≡ the explicit cap its rule prescribes
     // (n = 2046 → greatest(10, 10·ceil(n/2³²)) = 10)
-    val explicit = Dedup.hammingNearDup128(spark, packed, maxBucket = 10)
+    val explicit = Dedup.hammingNearDup(spark, packed, maxBucket = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(explicit == got)
     // cap drop observable, same contract as the 64-bit form
     val obs = new org.apache.spark.sql.Observation()
-    Dedup.hammingNearDup128(spark, packed, capMetrics = Some(obs)).count()
+    Dedup.hammingNearDup(spark, packed, capMetrics = Some(obs)).count()
     assert(obs.get("dropped_buckets").asInstanceOf[Long] == 4L) // deg × 4 bands
   }
 
   test("hamming128 index lifecycle: partial census sums true, compaction folds, intake ≡ brute force, admit verdicts") {
     import spark.implicits._
-    // the hammingNearDup128 fixture shapes: md5-random background (120
+    // the 128-bit hammingNearDup fixture shapes: md5-random background (120
     // effective bits), a 6-member family at pairwise lo-distance ≤ 2,
     // and a 40-copy degenerate signature (over the derived cap 10 in
     // all four bands)
@@ -518,14 +521,14 @@ class Ext5Spec extends SparkSpec {
     // build on the union
     val dir = java.nio.file.Files.createTempDirectory("ham128").toString
     val dirAll = java.nio.file.Files.createTempDirectory("ham128all").toString
-    Dedup.writeHammingIndex128(spark, seen.filter(col("doc_id") % 2 === 0), dir)
-    Dedup.appendHammingIndex128(spark, seen.filter(col("doc_id") % 2 =!= 0), dir)
-    Dedup.writeHammingIndex128(spark, seen, dirAll)
+    Dedup.writeHammingIndex(spark, seen.filter(col("doc_id") % 2 === 0), dir)
+    Dedup.appendHammingIndex(spark, seen.filter(col("doc_id") % 2 =!= 0), dir)
+    Dedup.writeHammingIndex(spark, seen, dirAll)
     def census(p: String) = spark.read.parquet(s"$p/bsize")
       .groupBy(col("band"), col("bval")).agg(sum(col("n")).as("n"))
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(census(dir) == census(dirAll))
-    def intake(p: String) = Dedup.hammingIntake128(spark, fresh, p)
+    def intake(p: String) = Dedup.hammingIntake(spark, fresh, p)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sorted.toSeq
     val got = intake(dir)
@@ -545,7 +548,7 @@ class Ext5Spec extends SparkSpec {
     } yield (a, b, d.toLong)).sorted.toSeq
     assert(got == want && got.nonEmpty)
     assert(got.forall(_._1 == 900L)) // only the family probe pairs
-    assert(Dedup.deriveHammingCap128(spark, dir) == 10) // floor governs
+    assert(Dedup.deriveHammingCap(spark, dir) == 10) // floor governs
 
     // crash recovery: a sigs-append that died before its census append
     // leaves bsize undercounted — rebuild recounts from sigs
@@ -555,7 +558,7 @@ class Ext5Spec extends SparkSpec {
     spark.read.parquet(s"$dir/bsize.stale").write.mode("overwrite")
       .parquet(s"$dir/bsize")
     assert(census(dir) != census(dirAll)) // desynchronized
-    Dedup.rebuildHammingCensus128(spark, dir)
+    Dedup.rebuildHammingCensus(spark, dir)
     assert(census(dir) == census(dirAll)) // repaired
 
     // compaction folds BOTH tables once file listings exceed maxFiles:
@@ -563,7 +566,7 @@ class Ext5Spec extends SparkSpec {
     // row per bucket — content identical under the read contract,
     // intake bit-equal, second call a no-op
     for (a <- 0 until 6)
-      Dedup.appendHammingIndex128(spark,
+      Dedup.appendHammingIndex(spark,
         Seq((5000L + a, 0x1000L + a * 16, 0x2000L)).toDF("doc_id", "lo", "hi"),
         dir)
     def files(sub: String) = new java.io.File(s"$dir/$sub").listFiles()
@@ -571,12 +574,12 @@ class Ext5Spec extends SparkSpec {
     assert(files("sigs") > 4 && files("bsize") > 4)
     val preCensus = census(dir)
     val preIntake = intake(dir)
-    assert(Dedup.compactHammingIndex128(spark, dir, maxFiles = 4) > 0L)
+    assert(Dedup.compactHammingIndex(spark, dir, maxFiles = 4) > 0L)
     assert(files("sigs") <= 4 && files("bsize") <= 4,
       s"compaction left ${files("sigs")}/${files("bsize")} files")
     assert(census(dir) == preCensus)
     assert(intake(dir) == preIntake)
-    assert(Dedup.compactHammingIndex128(spark, dir, maxFiles = 4) == 0L)
+    assert(Dedup.compactHammingIndex(spark, dir, maxFiles = 4) == 0L)
 
     // admission verdicts: intra-increment exact dup keeps the min id,
     // near-dup of the index rejects, fresh (and capped-bucket-only)
@@ -587,7 +590,7 @@ class Ext5Spec extends SparkSpec {
       (903L, Some(0x5a5a5a5a5a5a5a5aL), Some(0x5a5a5a5a5a5a5a5aL)), // intra-dup → drop (902 wins)
       (904L, Some(0x9999L), Option.empty[Long]))                    // null → drop
       .toDF("doc_id", "lo", "hi")
-    val admitted = Dedup.hammingIntakeAdmit128(spark, arrivals, dir)
+    val admitted = Dedup.hammingIntakeAdmit(spark, arrivals, dir)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(admitted == Set(902L), s"admitted $admitted")
 
@@ -595,12 +598,12 @@ class Ext5Spec extends SparkSpec {
     // 4-band entry point, never a silent recall hole
     for (bad <- Seq(4, 7)) {
       intercept[IllegalArgumentException](
-        Dedup.hammingNearDup64(spark, fresh.select(col("doc_id"),
+        Dedup.hammingNearDup(spark, fresh.select(col("doc_id"),
           col("lo").as("packed")), maxDist = bad))
       intercept[IllegalArgumentException](
-        Dedup.hammingNearDup128(spark, fresh, maxDist = bad))
+        Dedup.hammingNearDup(spark, fresh, maxDist = bad))
       intercept[IllegalArgumentException](
-        Dedup.hammingIntake128(spark, fresh, dir, maxDist = bad))
+        Dedup.hammingIntake(spark, fresh, dir, maxDist = bad))
     }
   }
 
@@ -701,30 +704,88 @@ class Ext5Spec extends SparkSpec {
       val fs = live.getFileSystem(hconf)
       assert(fs.rename(live, old))
     }
-    // 64-bit: sigs arm
-    val d64 = java.nio.file.Files.createTempDirectory("hamheal").toString
-    graft.ext.Dedup.writeHammingIndex(spark,
-      Seq((1L, 0x1111L), (2L, 0x2222L)).toDF("doc_id", "packed"), d64)
+    // one compaction serves both tables at both widths, so each input
+    // crashes its arms between the renames and must heal on the next
+    // call with bit-equal intake results
+    val sigs64 = Seq((1L, 0x1111L), (2L, 0x2222L)).toDF("doc_id", "packed")
     val probe64 = Seq((9L, 0x1111L)).toDF("doc_id", "packed")
-    val before64 = graft.ext.Dedup.hammingIntake(spark, probe64, d64)
-      .collect().map(_.getLong(1)).toSeq
-    crash(d64, "sigs")
-    assert(graft.ext.Dedup.compactHammingIndex(spark, d64, maxFiles = 64) == 0L)
-    assert(graft.ext.Dedup.hammingIntake(spark, probe64, d64)
-      .collect().map(_.getLong(1)).toSeq == before64)
-    // 128-bit: BOTH arms (sigs and the partial-count census)
-    val d128 = java.nio.file.Files.createTempDirectory("hamheal128").toString
-    graft.ext.Dedup.writeHammingIndex128(spark,
-      Seq((1L, 0x11L, 0x22L), (2L, 0x33L, 0x44L)).toDF("doc_id", "lo", "hi"),
-      d128)
+    val sigs128 = Seq((1L, 0x11L, 0x22L), (2L, 0x33L, 0x44L))
+      .toDF("doc_id", "lo", "hi")
     val probe128 = Seq((9L, 0x11L, 0x22L)).toDF("doc_id", "lo", "hi")
-    val before128 = graft.ext.Dedup.hammingIntake128(spark, probe128, d128)
-      .collect().map(_.getLong(1)).toSeq
-    crash(d128, "sigs"); crash(d128, "bsize")
-    assert(graft.ext.Dedup.compactHammingIndex128(spark, d128,
-      maxFiles = 64) == 0L)
-    assert(graft.ext.Dedup.hammingIntake128(spark, probe128, d128)
-      .collect().map(_.getLong(1)).toSeq == before128)
+    for ((name, sigs, probe, arms) <- Seq(
+        ("hamheal", sigs64, probe64, Seq("sigs")),
+        ("hamheal64census", sigs64, probe64, Seq("bsize")),
+        ("hamheal128", sigs128, probe128, Seq("sigs", "bsize")))) {
+      val dir = java.nio.file.Files.createTempDirectory(name).toString
+      graft.ext.Dedup.writeHammingIndex(spark, sigs, dir)
+      def intake = graft.ext.Dedup.hammingIntake(spark, probe, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      val before = intake
+      assert(before.map(_._2) == Seq(1L), name)
+      arms.foreach(crash(dir, _))
+      assert(graft.ext.Dedup.compactHammingIndex(spark, dir,
+        maxFiles = 64) == 0L, name)
+      for (sub <- arms) {
+        assert(new java.io.File(s"$dir/$sub").isDirectory, s"$name/$sub")
+        assert(!new java.io.File(s"$dir/$sub.compact.old").exists, s"$name/$sub")
+      }
+      assert(intake == before, name)
+    }
+  }
+
+  test("hamming width from the schema: mismatched increments and ambiguous frames throw before any write") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val d64 = java.nio.file.Files.createTempDirectory("hamwidth64").toString
+    Dedup.writeHammingIndex(spark,
+      Seq((1L, 0x1111L), (2L, 0x2222L)).toDF("doc_id", "packed"), d64)
+    val d128 = java.nio.file.Files.createTempDirectory("hamwidth128").toString
+    Dedup.writeHammingIndex(spark,
+      Seq((1L, 0x11L, 0x22L)).toDF("doc_id", "lo", "hi"), d128)
+    def listing(dir: String) = Seq("sigs", "bsize").map(sub =>
+      new java.io.File(s"$dir/$sub").listFiles()
+        .map(f => (f.getName, f.length)).sorted.toSeq)
+    val inc64 = Seq((9L, 0x1111L)).toDF("doc_id", "packed")
+    val inc128 = Seq((9L, 0x11L, 0x22L)).toDF("doc_id", "lo", "hi")
+    def bothWidths(e: IllegalArgumentException) =
+      assert(e.getMessage.contains("64-bit") && e.getMessage.contains("128-bit"),
+        e.getMessage)
+    // 64-bit index + 128-bit append: throws naming both widths, and
+    // neither table's listing changes
+    val before64 = listing(d64)
+    bothWidths(intercept[IllegalArgumentException](
+      Dedup.appendHammingIndex(spark, inc128, d64)))
+    assert(listing(d64) == before64)
+    // 128-bit index + 64-bit increment: every intake form throws
+    val before128 = listing(d128)
+    val mem = MemoryStream[(Long, java.sql.Timestamp, Long)]
+    val stream64 = mem.toDF().toDF("doc_id", "ts", "packed")
+    for (call <- Seq[() => Any](
+        () => Dedup.hammingIntake(spark, inc64, d128),
+        () => Dedup.hammingIntakeAdmit(spark, inc64, d128),
+        () => Dedup.appendHammingIndex(spark, inc64, d128),
+        () => graft.streaming.Streams.hammingIntake(spark,
+          stream64.select("doc_id", "packed"), d128),
+        () => graft.streaming.Streams.hammingIntakeAdmit(spark, stream64, d128)))
+      bothWidths(intercept[IllegalArgumentException](call()))
+    assert(listing(d128) == before128)
+    // a frame with neither column set, half of one, or both throws
+    // naming its columns — on the near-dup, build and intake forms
+    val empty = java.nio.file.Files.createTempDirectory("hamwidthbad").toString
+    for (bad <- Seq(Seq((1L, 2L)).toDF("doc_id", "sig"),
+        Seq((1L, 2L)).toDF("doc_id", "lo"),
+        Seq((1L, 2L, 3L, 4L)).toDF("doc_id", "packed", "lo", "hi"))) {
+      val cols = bad.columns.mkString("[", ", ", "]")
+      for (call <- Seq[() => Any](
+          () => Dedup.hammingNearDup(spark, bad),
+          () => Dedup.writeHammingIndex(spark, bad, empty),
+          () => Dedup.hammingIntake(spark, bad, d64))) {
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains(cols), e.getMessage)
+      }
+    }
+    assert(new java.io.File(empty).list().isEmpty)
   }
 
   test("dedupCorpusWinnowTracked ≡ untracked; release frees the survivor cache") {

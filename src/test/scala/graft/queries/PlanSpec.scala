@@ -330,7 +330,7 @@ class PlanSpec extends SparkSpec {
       // the in-cell self-join is 2 exchanges on the derived centroid
       // key + the final orderBy
       "q165_near_dup_ann" -> 3,
-      // q166 = q85's banding/verify machinery (hammingNearDup64) on
+      // q166 = q85's banding/verify machinery (hammingNearDup) on
       // fixture signatures: same 4-shuffle shape (bucket size agg,
       // bucket member agg, pair distinct, orderBy) minus the simhash
       "q166_phash_banding" -> 5,
@@ -347,7 +347,7 @@ class PlanSpec extends SparkSpec {
       // once, in the checkpoint job), so the returned plan is q103's
       // increment shape — verify joins + final anti join + orderBy
       "q170_crawl_intake" -> 9,
-      // q171 = hammingNearDup128: census groupBy + bucket-join/
+      // q171 = hammingNearDup at 128 bits: census groupBy + bucket-join/
       // collect + pair distinct + orderBy; the derived cap rides a
       // ONE-ROW broadcast (count aggregate → BroadcastNestedLoopJoin),
       // never a shuffle — one exchange FEWER than q85, whose 64-bit
@@ -358,13 +358,13 @@ class PlanSpec extends SparkSpec {
       // orderBy; the anti-join BROADCASTS its increment-bounded dup
       // side (plan-pinned below: no SortMergeJoin anywhere in it)
       "q172_phash_intake_admit" -> 4,
-      // q173 = hammingIntake128 against the persisted 128-bit index:
+      // q173 = hammingIntake against the persisted 128-bit index:
       // touched-bucket distinct (1) + the touched-census aggregate (1)
       // + pair distinct (1) + orderBy; the census partials and the
       // signature table are only ever on the PROBE side of broadcast
       // joins — the seen side is scanned, never shuffled
       "q173_phash128_intake" -> 4,
-      // q174 = hammingIntakeAdmit128: q173's intake shuffles (3) +
+      // q174 = hammingIntakeAdmit at 128 bits: q173's intake shuffles (3) +
       // dup-id distinct (1) + orderBy (1) + the within-increment
       // (lo, hi) window dedup, whose exchange appears TWICE (the
       // deduped increment feeds the intake AND the final anti-join;

@@ -694,7 +694,42 @@ class StreamsSpec extends SparkSpec {
     assert(admitted == Set(11L), s"image stream admitted $admitted")
   }
 
-  test("stream 128-bit media admission ≡ batch hammingIntakeAdmit128; real PNG arm") {
+  test("stream pair intake at 128 bits ≡ batch hammingIntake") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // the 128-bit admission test's fixture: an 8-member two-long
+    // family indexed; arrivals = a near-dup of all eight (combined
+    // distance ≤ 3), a fresh pair, its exact dup, a half-NULL signature
+    val seen = Seq.tabulate(8)(i => (i.toLong,
+        0x1234567812345678L ^ (i % 4).toLong, 0x0F0F00FF11223344L))
+      .toDF("doc_id", "lo", "hi")
+    val dir = java.nio.file.Files.createTempDirectory("ham128pairs").toString
+    graft.ext.Dedup.writeHammingIndex(spark, seen, dir)
+    val arrivals = Seq(
+      (900L, Some(0x1234567812345679L), Some(0x0F0F00FF11223345L)),
+      (901L, Some(0x7777777777777777L), Some(0x1111111111111111L)),
+      (902L, Some(0x7777777777777777L), Some(0x1111111111111111L)),
+      (903L, Some(0x9999L), Option.empty[Long]))
+    val mem = MemoryStream[(Long, Option[Long], Option[Long])]
+    val q = Streams.hammingIntake(spark,
+        mem.toDF().toDF("doc_id", "lo", "hi"), dir)
+      .writeStream.outputMode("append").format("memory")
+      .queryName("ham128pairs").start()
+    arrivals.foreach { a => mem.addData(a); q.processAllAvailable() }
+    val streamed = spark.sql("SELECT * FROM ham128pairs")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .sorted.toSeq
+    q.stop()
+    val batch = graft.ext.Dedup.hammingIntake(spark,
+        arrivals.toDF("doc_id", "lo", "hi"), dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .sorted.toSeq
+    assert(streamed == batch, s"stream $streamed != batch $batch")
+    assert(batch.map(_._2) == (0L until 8L) && batch.forall(_._1 == 900L),
+      s"batch $batch")
+  }
+
+  test("stream 128-bit media admission ≡ batch hammingIntakeAdmit on (lo, hi); real PNG arm") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     // signature level: index = an 8-member two-long family; arrivals =
@@ -705,7 +740,7 @@ class StreamsSpec extends SparkSpec {
         0x1234567812345678L ^ (i % 4).toLong, 0x0F0F00FF11223344L))
       .toDF("doc_id", "lo", "hi")
     val dir = java.nio.file.Files.createTempDirectory("ham128adm").toString
-    graft.ext.Dedup.writeHammingIndex128(spark, seen, dir)
+    graft.ext.Dedup.writeHammingIndex(spark, seen, dir)
     val t0 = java.sql.Timestamp.valueOf("2026-01-01 10:00:00")
     val arrivals = Seq(
       (900L, t0, Some(0x1234567812345679L), Some(0x0F0F00FF11223345L)),
@@ -713,7 +748,7 @@ class StreamsSpec extends SparkSpec {
       (902L, t0, Some(0x7777777777777777L), Some(0x1111111111111111L)),
       (903L, t0, Some(0x9999L), Option.empty[Long]))
     val mem = MemoryStream[(Long, java.sql.Timestamp, Option[Long], Option[Long])]
-    val q = Streams.hammingIntakeAdmit128(spark,
+    val q = Streams.hammingIntakeAdmit(spark,
         mem.toDF().toDF("doc_id", "ts", "lo", "hi"), dir)
       .writeStream.outputMode("append").format("memory")
       .queryName("ham128admit").start()
@@ -725,7 +760,7 @@ class StreamsSpec extends SparkSpec {
     assert(q.lastProgress.stateOperators.length == 1)
     q.stop()
     assert(streamed == Set(901L), s"stream admitted $streamed")
-    val batch = graft.ext.Dedup.hammingIntakeAdmit128(spark,
+    val batch = graft.ext.Dedup.hammingIntakeAdmit(spark,
         arrivals.map(a => (a._1, a._3, a._4)).toDF("doc_id", "lo", "hi"), dir)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(batch == streamed, s"stream $streamed != batch $batch")
