@@ -3,29 +3,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Engine-recommended conf (set in every engine-owned session):
-      // the TypedImperativeAggregates (topk_min, vec_sum6, sketches)
-      // keep SMALL bounded buffers, but Spark's ObjectHashAggregate
-      // falls back to SORT-BASED aggregation once a task sees more
-      // than this many groups (default 128 — sized for big buffers).
-      // The rerank shapes group by query/source id, so the default
-      // silently SORTED the entire pair stream: raising it measured
-      // q127 48.0→32.1s and q132 66.3→52.7s at the 200k-vector
-      // decade. 131072 keys × ≤~300 B topk buffer ≈ ≤40 MB per task
-      // worst case.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 131072)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Engine.cpus
+    val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
-    // Register custom functions ONCE — per-query re-registration emitted
-    // a WARN per call in round 1, polluting the driver's stdout parse.
-    graft.functions.Functions.registerAll(spark)
     // Warm up the JVM/codegen/parquet-footer paths so the first measured
     // query doesn't absorb session start-up cost.
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -178,7 +158,7 @@ object Bench {
               if (node != null && !node.isNull) node.path("cpus").asText("")
               else "").filter(_.nonEmpty)
             if (node != null && !node.isNull &&
-                (fileCpus.isEmpty || fileCpus.contains(cpus)) &&
+                (fileCpus.isEmpty || fileCpus.contains(cpus.toString)) &&
                 node.path("sf").asText("") == sfDir &&
                 node.path("queries").isObject) {
               val qn = node.get("queries")
@@ -226,11 +206,9 @@ object Bench {
     val overJson = stillOver.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).filter(_ >= 0).sum
     // core count rides in the artifact so future trailing-floor reads
-    // can match on it (emitted as a number when the env var is one)
-    val cpusJson = scala.util.Try(cpus.trim.toInt.toString)
-      .getOrElse("\"" + cpus + "\"")
+    // can match on it
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$runs,"sf":"$sfDir","cpus":$cpusJson,"calibration":$calibJson,"noise":${f"$noise%.3f"},"attempt_noise":$allNoise,"spreads":$spreads,"respread":$respreadJson,"respread_over":$overJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$runs,"sf":"$sfDir","cpus":$cpus,"calibration":$calibJson,"noise":${f"$noise%.3f"},"attempt_noise":$allNoise,"spreads":$spreads,"respread":$respreadJson,"respread_over":$overJson}"""
     // Full per-query map goes to a known FILE: sbt wraps stdout in [info]
     // prefixes (broke round 1) and at 80 queries the full line overflows
     // the driver's stdout tail-capture window (broke round 4:
@@ -245,7 +223,7 @@ object Bench {
       .map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     println(
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$top,"runs":$runs,"sf":"$sfDir","cpus":$cpusJson,"calibration":$calibJson,"noise":${f"$noise%.3f"},"attempt_noise":$allNoise,"full":"${outPath.toString}"}""")
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$top,"runs":$runs,"sf":"$sfDir","cpus":$cpus,"calibration":$calibJson,"noise":${f"$noise%.3f"},"attempt_noise":$allNoise,"full":"${outPath.toString}"}""")
     spark.stop()
   }
 }

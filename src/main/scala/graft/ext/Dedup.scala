@@ -776,14 +776,14 @@ object Dedup {
     * [[graft.ext.Corpus.crawlIntakeTracked]] contract. One-shot jobs
     * that consume exactly once should prefer this; the untracked form
     * remains right when the result is consumed lazily/repeatedly far
-    * from the call site. ScaleProbe's `winnow-tracked` arg measures
-    * the delta; Ext5Spec pins result equality and the release. */
+    * from the call site. BENCH_sf3.md's round-14 analysis records the
+    * delta at 5M docs; Ext5Spec pins result equality and the release. */
   def dedupCorpusWinnowTracked(spark: SparkSession, docs: DataFrame,
       k: Int = 3, w: Int = 4, maxDf: Int = 10, minShared: Int = 2,
       idCol: String = "doc_id", textCol: String = "text",
       verifyThreshold: Double = 0.7,
       deepGraphs: Boolean = false): (DataFrame, () => Unit) = {
-    val (afterExact, _, confirmed, release) = winnowCorpusStages(spark,
+    val (afterExact, confirmed, release) = winnowCorpusStages(spark,
       docs, k, w, maxDf, minShared, idCol, textCol, verifyThreshold)
     val dropNearDup = Par.labeled(docs, "winnowCorpus: verify + components") {
       (if (deepGraphs) clustersAltStar(spark, confirmed)
@@ -794,17 +794,14 @@ object Dedup {
     (afterExact.join(dropNearDup, Seq(idCol), "left_anti"), release)
   }
 
-  /** [[dedupCorpusWinnow]]'s exact → candidate → verify stages, shared
-    * with the pair-volume census ([[winnowCorpusPairCensus]]) so the
-    * census measures the CHAIN'S OWN frames, never a replica that
-    * could drift: returns (exact survivors, candidate pairs
-    * [checkpointed], verified pairs, release). Callers consume the
-    * frames, then `release()` (checkpoint blocks + the survivor
-    * cache). */
+  /** [[dedupCorpusWinnow]]'s exact → candidate → verify stages:
+    * returns (exact survivors, verified pairs, release). Callers
+    * consume the frames, then `release()` (checkpoint blocks + the
+    * survivor cache). */
   private def winnowCorpusStages(spark: SparkSession, docs: DataFrame,
       k: Int, w: Int, maxDf: Int, minShared: Int, idCol: String,
       textCol: String, verifyThreshold: Double)
-      : (DataFrame, DataFrame, DataFrame, () => Unit) = {
+      : (DataFrame, DataFrame, () => Unit) = {
     import org.apache.spark.sql.expressions.Window
     val win = Window.partitionBy(col("content_hash")).orderBy(col(idCol))
     // NO spread before the window — probed round 15, measured worse
@@ -828,33 +825,11 @@ object Dedup {
       if (verifyThreshold > 0.0)
         verifyCheckpointedTracked(spark, pairs, afterExact, verifyThreshold, idCol, textCol)
       else (pairs, Seq.empty[org.apache.spark.rdd.RDD[_]])
-    (afterExact, pairs, confirmed, () => {
+    (afterExact, confirmed, () => {
       pairsRdds.foreach(_.unpersist(blocking = false))
       verifyRdds.foreach(_.unpersist(blocking = false))
       afterExact.unpersist(blocking = false)
     })
-  }
-
-  /** Pair-volume census for the [[dedupCorpusWinnow]] chain — the
-    * measurement that DECOMPOSES a scale-up reading into (pair growth
-    * × per-pair cost): one row `(n_docs, n_exact_survivors,
-    * n_candidates, n_verified)` counted off the chain's own stage
-    * frames (shared construction, so the census cannot drift from the
-    * operator). A capped chain whose wall grows faster than rows
-    * should show the growth HERE (fixture pair density), with per-pair
-    * cost flat — if candidates hold flat and the wall still grows, the
-    * plan regressed. Used by bench_sf3's census table. */
-  def winnowCorpusPairCensus(spark: SparkSession, docs: DataFrame,
-      k: Int = 3, w: Int = 4, maxDf: Int = 10, minShared: Int = 2,
-      idCol: String = "doc_id", textCol: String = "text",
-      verifyThreshold: Double = 0.7): DataFrame = {
-    import spark.implicits._
-    val (afterExact, pairs, confirmed, release) = winnowCorpusStages(spark,
-      docs, k, w, maxDf, minShared, idCol, textCol, verifyThreshold)
-    val out = (docs.count(), afterExact.count(), pairs.count(),
-      confirmed.count())
-    release()
-    Seq(out).toDF("n_docs", "n_exact_survivors", "n_candidates", "n_verified")
   }
 
   /** Chunk-level corpus dedup (the CCNet/Gopher "line dedup" shape,
@@ -1132,22 +1107,20 @@ object Dedup {
       snapshot: DataFrame, maxDf: Int = 10, minShared: Int = 2,
       threshold: Double = 0.7, idCol: String = "doc_id",
       textCol: String = "text", k: Int = 3, w: Int = 4): DataFrame = {
-    val (notExact, _, scored) = incrementalWinnowStages(spark, newDocs,
+    val (notExact, scored) = incrementalWinnowStages(spark, newDocs,
       snapshot, maxDf, minShared, idCol, textCol, k, w)
     val nearDup = scored.filter(col("jaccard") >= threshold)
       .select(col("new_id").as(idCol)).distinct()
     notExact.join(nearDup, Seq(idCol), "left_anti")
   }
 
-  /** [[dedupIncrementalWinnow]]'s exact → candidate → verify stages,
-    * shared with [[winnowIncrementalPairCensus]] (same construction →
-    * the census cannot drift from the operator): returns (exact
-    * survivors, candidate pairs [checkpointed, candidate-bounded],
-    * scored pairs with their exact `jaccard`). */
+  /** [[dedupIncrementalWinnow]]'s exact → candidate → verify stages:
+    * returns (exact survivors, scored pairs with their exact
+    * `jaccard`). */
   private def incrementalWinnowStages(spark: SparkSession,
       newDocs: DataFrame, snapshot: DataFrame, maxDf: Int, minShared: Int,
       idCol: String, textCol: String, k: Int, w: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame) = {
     // (k, w) must match what the snapshot was fingerprinted with
     // (winnowSnapshot's arguments) — the persisted-directory form
     // reads them from the index itself (readWinnowIndexParams)
@@ -1187,23 +1160,7 @@ object Dedup {
     val scored = cand.join(setsN, Seq("new_id")).join(setsS, Seq("seen_id"))
       .withColumn("jaccard",
         when(union === 0, lit(1.0)).otherwise(inter.cast("double") / union.cast("double")))
-    (notExact, cand, scored)
-  }
-
-  /** Pair-volume census for the [[dedupIncrementalWinnow]] chain —
-    * [[winnowCorpusPairCensus]]'s decomposition for the increment
-    * shape: one row `(n_new, n_exact_survivors, n_candidates,
-    * n_verified)` counted off the chain's own stage frames. */
-  def winnowIncrementalPairCensus(spark: SparkSession, newDocs: DataFrame,
-      snapshot: DataFrame, maxDf: Int = 10, minShared: Int = 2,
-      threshold: Double = 0.7, idCol: String = "doc_id",
-      textCol: String = "text", k: Int = 3, w: Int = 4): DataFrame = {
-    import spark.implicits._
-    val (notExact, cand, scored) = incrementalWinnowStages(spark, newDocs,
-      snapshot, maxDf, minShared, idCol, textCol, k, w)
-    Seq((newDocs.count(), notExact.count(), cand.count(),
-      scored.filter(col("jaccard") >= threshold).count()))
-      .toDF("n_new", "n_exact_survivors", "n_candidates", "n_verified")
+    (notExact, scored)
   }
 
   /** The DIRECTORY form of the winnow index: `path/docs` =
@@ -1213,7 +1170,8 @@ object Dedup {
     * the boilerplate cap without re-aggregating the posting table per
     * increment ([[dedupIncrementalWinnowIndexed]]) — at a 10M-doc
     * index the per-increment df recount was the dominant O(seen)
-    * shuffle (ScaleProbe: 70s/increment, near-linear in index size). */
+    * shuffle (70s/increment, near-linear in index size, measured by a
+    * since-retired scale probe). */
   def writeWinnowIndex(spark: SparkSession, docs: DataFrame,
       path: String, k: Int = 3, w: Int = 4,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
@@ -1583,7 +1541,8 @@ object Dedup {
     * subtree when every bucket is capped).
     *
     * `maxBucket` DEFAULTS TO 0 = census-derived ([[hammingNearDup]]'s
-    * in-plan derivation — ScaleProbe measured the old fixed default
+    * in-plan derivation — the intake census in BENCH_sfe.md
+    * ("Hamming-index intake census") measured the old fixed default
     * sitting below the MEAN bucket size at 2M signatures, silently
     * keeping ~4% of true pairs); pass an explicit cap to pin it.
     * Past ~4M documents the 4×16-bit band space saturates (see
@@ -1643,7 +1602,7 @@ object Dedup {
     * census, a one-row count broadcast at 128 bits. The fixed default
     * it replaces was a measured recall scale-killer: at 2M 64-bit
     * signatures the MEAN band bucket holds ~30 members, so cap 10 kept
-    * ~4% of true pairs (ScaleProbe's `hamming-intake` census). An
+    * ~4% of true pairs (BENCH_sfe.md, "Hamming-index intake census"). An
     * explicit cap still applies verbatim (floor 1); the drop stats
     * always report against the cap in effect.
     *
@@ -1651,8 +1610,8 @@ object Dedup {
     * cap tracks the mean bucket (10 × n/2¹⁶) and is deliberately
     * UNBOUNDED, and past ~4M signatures the 16-bit band space
     * saturates: kept pair volume grows as Σc² ≈ n²/2¹⁶ per band (at
-    * 20M the mean bucket holds ~305 members; ScaleProbe gates its
-    * corpus-wide 64-bit row off there). The 128-bit form's 2³² buckets
+    * 20M the mean bucket holds ~305 members; the 20M run in BENCH_sfe.md
+    * gated its corpus-wide 64-bit row off there). The 128-bit form's 2³² buckets
     * per band keep the mean below one member until ~4B signatures, so
     * kept pair volume stays ∝ the true duplicate structure — corpus-
     * wide dedup past the boundary belongs there ([[simhashNearDup128]])
@@ -1752,10 +1711,10 @@ object Dedup {
     * band space never saturates and the kept pair volume stays
     * ∝ the true duplicate structure, not n²/bucket-space (the measured
     * ~4M-signature cliff of the 64-bit form — see
-    * [[hammingNearDup]]'s SCALE BOUNDARY note; ScaleProbe's
-    * `hamming128` census measures this shape returning the full
-    * planted pair set at 20M signatures, where the 64-bit batch row
-    * gates off).
+    * [[hammingNearDup]]'s SCALE BOUNDARY note; BENCH_sfe.md's "128-bit
+    * batch near-dup at the fourth decade" records this shape returning
+    * the full planted pair set at 20M signatures, where the 64-bit
+    * batch row gates off).
     *
     * Distance semantics: `maxDist` applies to the 128-bit signature —
     * a strictly FINER similarity test than the same distance on 64
@@ -2118,8 +2077,8 @@ object Dedup {
     *
     * SIZE `maxBucket` TO THE CORPUS: at n 64-bit signatures the MEAN
     * bucket carries ~n/2¹⁶ members per band, so a cap below that drops
-    * most LEGITIMATE buckets, not just degenerate ones (ScaleProbe's
-    * `hamming-intake` census at 2M sigs: cap 10 keeps 4% of the true
+    * most LEGITIMATE buckets, not just degenerate ones (BENCH_sfe.md's
+    * "Hamming-index intake census" at 2M sigs: cap 10 keeps 4% of the true
     * pairs, cap ≈ 10× the mean keeps them all while still dropping the
     * 100k-copy degenerate bucket). `maxBucket = 0` (the DEFAULT)
     * DERIVES the cap from the persisted census ([[deriveHammingCap]]);
@@ -2208,8 +2167,8 @@ object Dedup {
   /** The census-derived bucket cap for a [[writeHammingIndex]]
     * directory: 10 × the mean per-band bucket occupancy (nSigs /
     * 2¹⁶ at 64 bits, nSigs / 2³² at 128 — width from the `sigs`
-    * schema), floor 10 — the sizing rule ScaleProbe's `hamming-intake`
-    * census measured (mean-relative caps keep the planted pair set
+    * schema), floor 10 — the sizing rule BENCH_sfe.md's "Hamming-index
+    * intake census" measured (mean-relative caps keep the planted pair set
     * while a 100k-copy degenerate bucket stays ~3 orders of magnitude
     * above the cap; at 128 bits the floor governs at any feasible
     * corpus). Total signatures = Σ census counts / 4: one aggregate

@@ -467,7 +467,8 @@ object Similarity {
     * shape that trips Spark 4.1's InferFiltersFromConstraints into
     * pushing an f(v) <=> centroid condition into a branch where v no
     * longer exists (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND at bind —
-    * reproduced at 256 centroids by SaltedKnnProbe); the fresh
+    * reproduced at 256 centroids by a since-retired salted-kNN
+    * probe); the fresh
     * LogicalRDD attributes also dodge the constraint-propagation bugs
     * on deduplicated lineage (UnionBase.rewriteConstraints /
     * BroadcastNestedLoopJoin condition binding).

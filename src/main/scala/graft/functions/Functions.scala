@@ -3,8 +3,8 @@ package graft.functions
 import org.apache.spark.sql.SparkSession
 
 /** Single registration entry point for every custom Catalyst function
-  * the engine ships. Tools (Bench, QBench, Verify, ScaleProbe) and
-  * specs call THIS, never a hand-picked subset — round 5's QBench
+  * the engine ships. Every engine-owned session gets it through
+  * [[graft.Engine.session]], never a hand-picked subset — round 5's QBench
   * registered only 4 of the then-8 functions, so a SQL query using
   * `shingles8` would fail there while passing in Bench. Operators keep
   * registering their own dependencies (each `register` is idempotent),

@@ -18,8 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why 128 bits: the 64-bit/4×16-band near-dup machinery stops pruning
   * once the corpus saturates the 2¹⁶-per-band bucket space (mean
   * bucket ≈ n/2¹⁶ — at 20M signatures ~305 members, kept pair volume
-  * Σc² in the tens of billions; ScaleProbe gates the corpus-wide row
-  * off there). A 128-bit signature carries enough bits for FOUR 32-BIT
+  * Σc² in the tens of billions; the 20M run in BENCH_sfe.md gated the
+  * corpus-wide row off there). A 128-bit signature carries enough bits for FOUR 32-BIT
   * bands — still pigeonhole-complete for Hamming ≤ 3, but with a 2³²
   * bucket space whose mean occupancy stays below 1 until the corpus
   * passes four billion documents ([[graft.ext.Dedup

@@ -2,7 +2,6 @@ package graft.pumle
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end pipeline drive (SURVEY §3 entry points A+B+C) on a
@@ -15,11 +14,7 @@ import org.apache.spark.sql.functions._
 object PumleDemo {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse("/tmp/pumle_demo")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session()
     spark.sparkContext.setLogLevel("WARN")
 
     // --- Entry point A: config → sweep → catalog → staging ---

@@ -307,13 +307,14 @@ object Ext2Queries {
   // return the identical ranking the inline ivfTopK computes — the
   // driver proves the build-once/query-many path ≡ the one-shot path
   // (the q103/q105 pattern, applied to ANN). The index is built into a
-  // temp dir per invocation; at production scale it is built once and
-  // probed many times with partition-pruned cell reads.
+  // temp dir per invocation (deleted at JVM exit); at production scale
+  // it is built once and probed many times with partition-pruned cell
+  // reads.
   private val q116 = Q(
     "q116_ivf_indexed",
     (s, d) => {
       val emb = Tables.embeddings(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("ivfidx").toString
+      val dir = graft.core.TempDir("graft-ivfidx").toString
       graft.ext.Similarity.writeIvfIndex(s, emb,
         centroidPred = col("vec_id") % 50 === 0, dir,
         trainIters = 0) // q66's SQL-replayable seed assignment

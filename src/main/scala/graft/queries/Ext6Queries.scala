@@ -24,12 +24,13 @@ object Ext6Queries {
     * concurrent callers. Bench's per-shot `isolate()` only clears
     * cached relations / persistent RDDs — on-disk fixtures survive, so
     * min-of-N reports the pure query-time cost (the steady state a
-    * build-once/query-many deployment runs in). */
+    * build-once/query-many deployment runs in). The dirs are deleted
+    * at JVM exit. */
   private[queries] object Fixtures {
     private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
     def dir(kind: String, sfDir: String)(build: String => Unit): String =
       built.computeIfAbsent(s"$kind|$sfDir", { _ =>
-        val p = java.nio.file.Files.createTempDirectory(s"graft-$kind-").toString
+        val p = graft.core.TempDir(s"graft-$kind-").toString
         build(p)
         p
       })
@@ -701,7 +702,8 @@ object Ext6Queries {
   // 128-bit SimHash near-dup over 4×32-bit bands (Dedup
   // .simhashNearDup128) — the corpus-wide batch shape that survives
   // the 64-bit form's ~4M-signature band-saturation boundary (q85's
-  // machinery with a 2³² bucket space per band; ScaleProbe measures it
+  // machinery with a 2³² bucket space per band; BENCH_sfe.md's "128-bit
+  // batch near-dup at the fourth decade" records it
   // returning the full planted set at 20M signatures where the 64-bit
   // row gates off). The oracle recomputes all EIGHT 16-bit lanes
   // relationally (q85's vote formulation ×8 — lanes 0–3 are q85's

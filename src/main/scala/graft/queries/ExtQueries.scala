@@ -1796,8 +1796,8 @@ object ExtQueries {
   // --------------------------------------------------------------- q104
   // The one-call corpus dedup pipeline (exact → LSH → Jaccard verify →
   // connected components → anti join), oracle-checked END TO END —
-  // previously `dedupCorpus` was pinned only by specs and the 1M-doc
-  // ScaleProbe. Exact survivors are min-doc_id per content hash; LSH
+  // previously `dedupCorpus` was pinned only by specs and a 1M-doc
+  // scale run (README). Exact survivors are min-doc_id per content hash; LSH
   // buckets and sizes are computed AMONG SURVIVORS (the pipeline
   // re-bands after the exact stage); candidates verify at true Jaccard
   // ≥ 0.7; each verified component keeps only its min-id member.

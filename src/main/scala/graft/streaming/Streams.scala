@@ -258,8 +258,8 @@ object Streams {
     // cache-discipline note at the top of this object). Both caches
     // are REPARTITIONED + SORTED ON THEIR JOIN KEY first — exchange
     // reuse does not span micro-batches, so an unpartitioned cache is
-    // still shuffled and sorted per trigger, which ScaleProbe's
-    // `stream-static` A/B measured DOMINANT over the reshape it saves
+    // still shuffled and sorted per trigger, which the stream-static
+    // A/B in BENCH_sfe.md measured DOMINANT over the reshape it saves
     // (the hammingProbed finding, applied to every probe side here).
     val bucketed = staticSide(snapshot
       .selectExpr("shingles", s"stack($bands, $stack) AS (band, bucket)")
@@ -940,7 +940,7 @@ object Streams {
     // persists: exchange reuse does not span micro-batches, so an
     // unpartitioned cache would still be shuffled and sorted per band
     // per trigger — measured DOMINANT over the regroup it saves
-    // (ScaleProbe `stream-static`). Cached partitioning/ordering
+    // (BENCH_sfe.md, "Stream-static probe-cache A/B"). Cached partitioning/ordering
     // propagate through the per-band filter and the alias projection,
     // so each trigger's sort-merge joins exchange only the micro-batch
     // side; the cached side contributes a columnar scan and nothing

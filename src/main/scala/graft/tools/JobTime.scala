@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB timeline of a registry query — the empirical side of guide
   * §1.1 for queries whose cost is in EAGER internal stages (index
@@ -15,17 +14,8 @@ object JobTime {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: JobTime <query name>...")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 131072)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.Functions.registerAll(spark)
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
     val rows = java.util.Collections.synchronizedList(
       new java.util.ArrayList[(Int, Double, Int, String)]())

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan census over every registered query: counts of
   * exchanges (shuffles), join strategies, generators, and scans per
   * query — the ".explain and iterate" discipline as a tool. Run at
@@ -12,12 +10,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
     println(f"${"query"}%-28s shf bex bhj smj bnlj gen agg")
     graft.queries.Registry.all.sortBy(_.name).foreach { q =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Focused single-query timer — Bench's protocol (noop sink, cache
   * isolation, min-of-N) applied to just the queries named on the
   * command line, for micro-iterating on one plan without paying the
@@ -12,19 +10,9 @@ object QBench {
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q93_quality_gate", "q96_quality_gate_narrow")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "131072"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.Functions.registerAll(spark)
     spark.range(1000).selectExpr("sum(id)").collect()
     names.foreach { name =>
       val fn = graft.queries.Registry.queries.getOrElse(name,

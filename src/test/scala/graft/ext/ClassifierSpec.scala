@@ -63,7 +63,7 @@ class ClassifierSpec extends SparkSpec {
     val d = docs(20)
     val m = Classifier.trainQcModel(spark, d, col("is_good"),
       buckets = 32, iters = 3)
-    val dir = java.nio.file.Files.createTempDirectory("qc-model").toString
+    val dir = graft.core.TempDir("qc-model").toString
     Classifier.writeQcModel(spark, m, dir)
     val m2 = Classifier.loadQcModel(spark, dir)
     assert(m2 == m)

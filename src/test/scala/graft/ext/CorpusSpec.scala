@@ -91,7 +91,7 @@ class CorpusSpec extends SparkSpec {
   }
 
   test("snapshot publish + verify: intact ⇒ all ok; changed source flagged; added source flagged") {
-    val dir = java.nio.file.Files.createTempDirectory("snap").toString
+    val dir = graft.core.TempDir("snap").toString
     Corpus.writeSnapshot(spark, docs, dir)
     val ok = Corpus.verifySnapshot(spark, dir).collect()
     assert(ok.length == 3 && ok.forall(_.getAs[Boolean]("ok")))
@@ -197,7 +197,7 @@ class CorpusSpec extends SparkSpec {
   test("writeEpoch publishes shard dirs with rank-interleaved full rows") {
     import spark.implicits._
     val big = (0L until 200L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("epoch").toString
+    val dir = graft.core.TempDir("epoch").toString
     Corpus.writeEpoch(big, seed = 7L, nShards = 4, dir)
     val dirs = new java.io.File(dir).listFiles()
       .filter(_.getName.startsWith("shard=")).map(_.getName).sorted
@@ -345,7 +345,7 @@ class CorpusSpec extends SparkSpec {
     val p0 = pattern(1.0, 0.0, 0.0)
     val p1 = pattern(2.0, 1.0, 1.1)
     val p2 = pattern(1.0, 2.0, 2.2)
-    val idxDir = java.nio.file.Files.createTempDirectory("miximg").toString
+    val idxDir = graft.core.TempDir("miximg").toString
     graft.multimodal.Multimodal.writeImageHashIndex(spark,
       Seq((100L, enc(p0)), (101L, enc(p1))).toDF("media_id", "payload"), idxDir)
     val media = Seq(

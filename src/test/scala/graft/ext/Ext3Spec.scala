@@ -208,7 +208,7 @@ class Ext3Spec extends SparkSpec {
       (i.toLong, s"some shared words plus token$i extra$i", i < 4))
       .toDF("doc_id", "text", "is_t")
     val model = TextStats.trainDsirModel(docs, col("is_t"), buckets = 64)
-    val dir = java.nio.file.Files.createTempDirectory("dsir").toString
+    val dir = graft.core.TempDir("dsir").toString
     TextStats.writeDsirModel(spark, model, dir)
     val back = TextStats.loadDsirModel(spark, dir)
     assert(back.buckets == model.buckets)
@@ -277,7 +277,7 @@ class Ext3Spec extends SparkSpec {
 
   test("ivfPqSearch: nProbe >= cell count degrades to exhaustive ADC (pqSearchIndexed)") {
     val e = emb(32, dims = 8)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq").toString
+    val dir = graft.core.TempDir("ivfpq").toString
     Similarity.writeIvfPqIndex(spark, e,
       centroidPred = col("vec_id") % 8 === 0, seedPred = col("vec_id") < 6,
       dir, m = 2, k = 4, iters = 2, dims = 8)
@@ -303,7 +303,7 @@ class Ext3Spec extends SparkSpec {
 
   test("writeIvfPqIndex: codes are partitioned by centroid_id on disk") {
     val e = emb(24, dims = 8)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq2").toString
+    val dir = graft.core.TempDir("ivfpq2").toString
     Similarity.writeIvfPqIndex(spark, e,
       centroidPred = col("vec_id") % 12 === 0, seedPred = col("vec_id") < 6,
       dir, m = 2, k = 4, iters = 1, dims = 8)
@@ -453,7 +453,7 @@ class Ext3Spec extends SparkSpec {
 
   test("persisted SQ index: search from disk is bit-equal to in-memory sqSearch") {
     val e = emb(24, dims = 8)
-    val dir = java.nio.file.Files.createTempDirectory("sq-index").toString
+    val dir = graft.core.TempDir("sq-index").toString
     Similarity.writeSqIndex(spark, e, dir, dims = 8)
     val queries = e.filter(col("vec_id") % 6 === 0)
     val fromDisk = Similarity.sqSearchIndexed(spark, dir, queries,

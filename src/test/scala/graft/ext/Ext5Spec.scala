@@ -284,7 +284,7 @@ class Ext5Spec extends SparkSpec {
       (903L, 0x5A5A5A5A5A5A5A5AL)) // far from everything → no pairs
     val seenDf = seen.toDF("doc_id", "packed")
     val freshDf = fresh.toDF("doc_id", "packed")
-    val dir = java.nio.file.Files.createTempDirectory("hamidx").toString
+    val dir = graft.core.TempDir("hamidx").toString
     Dedup.writeHammingIndex(spark, seenDf, dir)
     val got = Dedup.hammingIntake(spark, freshDf, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -303,8 +303,8 @@ class Ext5Spec extends SparkSpec {
     assert(got == want && got.nonEmpty)
     assert(!got.exists(_._1 == 902L) && !got.exists(_._1 == 903L))
     // append ≡ rebuild: same census, same intake verdicts
-    val dirApp = java.nio.file.Files.createTempDirectory("hamapp").toString
-    val dirAll = java.nio.file.Files.createTempDirectory("hamall").toString
+    val dirApp = graft.core.TempDir("hamapp").toString
+    val dirAll = graft.core.TempDir("hamall").toString
     val extra = fam(0x1234567812345678L, 5, 500).toDF("doc_id", "packed")
     Dedup.writeHammingIndex(spark, seenDf, dirApp)
     Dedup.appendHammingIndex(spark, extra, dirApp)
@@ -332,7 +332,7 @@ class Ext5Spec extends SparkSpec {
     assert(Dedup.hammingIntake(spark, freshDf, dir, maxBucket = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sorted.toSeq == got)
-    val capDir = java.nio.file.Files.createTempDirectory("hamcap").toString
+    val capDir = graft.core.TempDir("hamcap").toString
     Seq((0, 0L, 8000000L)).toDF("band", "bval", "n")
       .write.parquet(s"$capDir/bsize")
     // the width is the sigs schema's: an empty 64-bit signature table
@@ -364,7 +364,7 @@ class Ext5Spec extends SparkSpec {
       fam(0x0F0F00FF11223344L, 8, 100)).toDF("doc_id", "packed")
     val fresh = Seq((900L, 0x1234567812345679L),
       (901L, 0x0F0F00FF11223347L)).toDF("doc_id", "packed")
-    val dir = java.nio.file.Files.createTempDirectory("hamlife").toString
+    val dir = graft.core.TempDir("hamlife").toString
     def sigFiles = new java.io.File(s"$dir/sigs").listFiles()
       .count(_.getName.endsWith(".parquet"))
     // fresh build routes to the configured shuffle width (4 here) —
@@ -519,8 +519,8 @@ class Ext5Spec extends SparkSpec {
     // generations must SUM to the true bucket sizes (the
     // aggregate-on-read contract), and verdicts must equal a one-shot
     // build on the union
-    val dir = java.nio.file.Files.createTempDirectory("ham128").toString
-    val dirAll = java.nio.file.Files.createTempDirectory("ham128all").toString
+    val dir = graft.core.TempDir("ham128").toString
+    val dirAll = graft.core.TempDir("ham128all").toString
     Dedup.writeHammingIndex(spark, seen.filter(col("doc_id") % 2 === 0), dir)
     Dedup.appendHammingIndex(spark, seen.filter(col("doc_id") % 2 =!= 0), dir)
     Dedup.writeHammingIndex(spark, seen, dirAll)
@@ -645,7 +645,7 @@ class Ext5Spec extends SparkSpec {
     val corpus = shapes.zipWithIndex.map { case ((fx, fy, ph), i) =>
       (i.toLong, enc(pat(64, 64, fx, fy, ph)))
     }.toDF("media_id", "payload")
-    val dir = java.nio.file.Files.createTempDirectory("imgidx").toString
+    val dir = graft.core.TempDir("imgidx").toString
     graft.multimodal.Multimodal.writeImageHashIndex(spark, corpus, dir)
     val arrivals = Seq(
       (100L, enc(resize(pat(64, 64, 2.0, 1.0, 1.1), 48, 48))),
@@ -716,7 +716,7 @@ class Ext5Spec extends SparkSpec {
         ("hamheal", sigs64, probe64, Seq("sigs")),
         ("hamheal64census", sigs64, probe64, Seq("bsize")),
         ("hamheal128", sigs128, probe128, Seq("sigs", "bsize")))) {
-      val dir = java.nio.file.Files.createTempDirectory(name).toString
+      val dir = graft.core.TempDir(name).toString
       graft.ext.Dedup.writeHammingIndex(spark, sigs, dir)
       def intake = graft.ext.Dedup.hammingIntake(spark, probe, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
@@ -737,10 +737,10 @@ class Ext5Spec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val d64 = java.nio.file.Files.createTempDirectory("hamwidth64").toString
+    val d64 = graft.core.TempDir("hamwidth64").toString
     Dedup.writeHammingIndex(spark,
       Seq((1L, 0x1111L), (2L, 0x2222L)).toDF("doc_id", "packed"), d64)
-    val d128 = java.nio.file.Files.createTempDirectory("hamwidth128").toString
+    val d128 = graft.core.TempDir("hamwidth128").toString
     Dedup.writeHammingIndex(spark,
       Seq((1L, 0x11L, 0x22L)).toDF("doc_id", "lo", "hi"), d128)
     def listing(dir: String) = Seq("sigs", "bsize").map(sub =>
@@ -772,7 +772,7 @@ class Ext5Spec extends SparkSpec {
     assert(listing(d128) == before128)
     // a frame with neither column set, half of one, or both throws
     // naming its columns — on the near-dup, build and intake forms
-    val empty = java.nio.file.Files.createTempDirectory("hamwidthbad").toString
+    val empty = graft.core.TempDir("hamwidthbad").toString
     for (bad <- Seq(Seq((1L, 2L)).toDF("doc_id", "sig"),
         Seq((1L, 2L)).toDF("doc_id", "lo"),
         Seq((1L, 2L, 3L, 4L)).toDF("doc_id", "packed", "lo", "hi"))) {
@@ -850,7 +850,7 @@ class Ext5Spec extends SparkSpec {
     val want = Dedup.dedupIncrementalWinnow(spark, fresh,
         Dedup.winnowSnapshot(spark, seen).localCheckpoint(true))
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val dir = java.nio.file.Files.createTempDirectory("winidx").toString
+    val dir = graft.core.TempDir("winidx").toString
     Dedup.writeWinnowIndex(spark, seen, dir)
     val got = Dedup.dedupIncrementalWinnowIndexed(spark, fresh, dir)
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -865,8 +865,8 @@ class Ext5Spec extends SparkSpec {
     // verify joins) — textual per-key asserts can't separate those from
     // seen-side shuffles because the unchecked-pointed increment
     // subtree replicates across branches; the decisive evidence is
-    // ScaleProbe's 10M-index decade (recount form 70.1s/increment →
-    // indexed form measured there).
+    // the 10M-index decade measured by a since-retired scale probe
+    // (recount form 70.1s/increment; see Dedup.writeWinnowIndex).
     val plan = Dedup.dedupIncrementalWinnowIndexed(spark, fresh, dir)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan)
@@ -885,7 +885,7 @@ class Ext5Spec extends SparkSpec {
     // build at (k=2, w=3): the increment must fingerprint the new side
     // at the INDEX's params (read from path/meta), not the historical
     // (3, 4) default — a mismatch silently keeps near-duplicates
-    val dir = java.nio.file.Files.createTempDirectory("winidxkw").toString
+    val dir = graft.core.TempDir("winidxkw").toString
     Dedup.writeWinnowIndex(spark, seen, dir, k = 2, w = 3)
     assert(Dedup.readWinnowIndexParams(spark, dir) == ((2, 3)))
     val want = Dedup.dedupIncrementalWinnow(spark, fresh,
@@ -896,7 +896,7 @@ class Ext5Spec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(got == want, s"indexed $got != recount-at-(2,3) $want")
     // a missing meta table (pre-meta index) falls back to (3, 4)
-    val bare = java.nio.file.Files.createTempDirectory("winidxbare").toString
+    val bare = graft.core.TempDir("winidxbare").toString
     assert(Dedup.readWinnowIndexParams(spark, bare) == ((3, 4)))
   }
 
@@ -910,7 +910,7 @@ class Ext5Spec extends SparkSpec {
       Seq((200L, mkText(3) + " tail"), (201L, "totally novel content here " +
         "one two three four five six seven eight nine ten eleven")))
       .toDF("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("winmerge").toString
+    val root = graft.core.TempDir("winmerge").toString
     // disjoint shards (odd/even), then the metadata-scale merge
     Dedup.writeWinnowIndex(spark, seen.filter(col("doc_id") % 2 === 0), s"$root/a")
     Dedup.writeWinnowIndex(spark, seen.filter(col("doc_id") % 2 =!= 0), s"$root/b")
@@ -945,7 +945,7 @@ class Ext5Spec extends SparkSpec {
       Seq((200L, mkText(3) + " tail"), (201L, "totally novel content here " +
         "one two three four five six seven eight nine ten eleven")))
       .toDF("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("winprune").toString
+    val root = graft.core.TempDir("winprune").toString
     val maxDf = 10
     Dedup.writeWinnowIndex(spark, seen.filter(col("doc_id") % 2 === 0), s"$root/a")
     Dedup.writeWinnowIndex(spark, seen.filter(col("doc_id") % 2 =!= 0), s"$root/b")

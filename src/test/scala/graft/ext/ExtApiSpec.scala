@@ -620,49 +620,38 @@ class ExtApiSpec extends SparkSpec {
     // arriving already at full parallelism must take the no-op path;
     // both must produce the identical snapshot row set. Distinct
     // tokens keep parquet from dictionary-compressing under the gate.
-    val dir = java.nio.file.Files.createTempDirectory("snap-spread").toString
-    try {
-      (0L until 3000L)
-        .map(i => (i, ("doc " + i + " ") +
-          (0 until 300).map(j => "w" + (i * 1000 + j)).mkString(" ")))
-        .toDF("doc_id", "text")
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-      val one = spark.read.parquet(dir)
-      assert(one.rdd.getNumPartitions == 1, "fixture must arrive one-split")
-      val par = spark.sparkContext.defaultParallelism
-      // on a single-core runner the gate-fired assertion below is
-      // vacuously true (1 partition == par) — surface the degenerate
-      // runner instead of silently passing (ADVICE r14)
-      assert(par > 1, s"defaultParallelism=$par cannot exercise the spread path")
-      val preSpread = one.repartition(par)
-      for ((name, build) <- Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
-          "incrementalSnapshot" -> (d => Dedup.incrementalSnapshot(spark, d)),
-          "winnowSnapshot" -> (d => Dedup.winnowSnapshot(spark, d)))) {
-        val spread = build(one)
-        assert(spread.rdd.getNumPartitions == par,
-          s"$name: gate did not fire on a >2MB one-split input")
-        val noop = build(preSpread)
-        assert(noop.rdd.getNumPartitions == par, name)
-        assert(spread.collect().map(_.toString).sorted.toSeq ==
-          noop.collect().map(_.toString).sorted.toSeq,
-          s"$name: spread changed the snapshot row set")
-      }
-    } finally {
-      // temp fixture cleanup, also when an assertion fails; the walk
-      // stream holds directory handles until closed
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(java.nio.file.Files.walk(
-          java.nio.file.Paths.get(dir))) { paths =>
-        paths.iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
+    val dir = graft.core.TempDir("snap-spread").toString
+    (0L until 3000L)
+      .map(i => (i, ("doc " + i + " ") +
+        (0 until 300).map(j => "w" + (i * 1000 + j)).mkString(" ")))
+      .toDF("doc_id", "text")
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    val one = spark.read.parquet(dir)
+    assert(one.rdd.getNumPartitions == 1, "fixture must arrive one-split")
+    val par = spark.sparkContext.defaultParallelism
+    // on a single-core runner the gate-fired assertion below is
+    // vacuously true (1 partition == par) — surface the degenerate
+    // runner instead of silently passing (ADVICE r14)
+    assert(par > 1, s"defaultParallelism=$par cannot exercise the spread path")
+    val preSpread = one.repartition(par)
+    for ((name, build) <- Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+        "incrementalSnapshot" -> (d => Dedup.incrementalSnapshot(spark, d)),
+        "winnowSnapshot" -> (d => Dedup.winnowSnapshot(spark, d)))) {
+      val spread = build(one)
+      assert(spread.rdd.getNumPartitions == par,
+        s"$name: gate did not fire on a >2MB one-split input")
+      val noop = build(preSpread)
+      assert(noop.rdd.getNumPartitions == par, name)
+      assert(spread.collect().map(_.toString).sorted.toSeq ==
+        noop.collect().map(_.toString).sorted.toSeq,
+        s"$name: spread changed the snapshot row set")
     }
   }
 
   test("dedupIncrementalPersisted never scans the seen corpus — only the pruned snapshot") {
     import spark.implicits._
-    val seenDir = java.nio.file.Files.createTempDirectory("seen-corpus").toString
-    val snapDir = java.nio.file.Files.createTempDirectory("dedup-snap").toString
+    val seenDir = graft.core.TempDir("seen-corpus").toString
+    val snapDir = graft.core.TempDir("dedup-snap").toString
     val seen = (0L until 20L).map(i => (i, s"seen document number $i with words"))
       .toDF("doc_id", "text")
     seen.write.mode("overwrite").parquet(seenDir)
@@ -794,7 +783,7 @@ class ExtApiSpec extends SparkSpec {
     val emb = Seq.tabulate(24) { i =>
       (i.toLong, Array.tabulate(8)(d => ((i * 31 + d * 7) % 13).toFloat))
     }.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("pqidx").toString
+    val dir = graft.core.TempDir("pqidx").toString
     Similarity.writePqIndex(spark, emb, seedPred = col("vec_id") < 4,
       dir, m = 2, k = 4, iters = 2, dims = 8)
     // codebooks round-trip parquet exactly (doubles are lossless there)

@@ -20,7 +20,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("ivfTopKIndexed returns exactly what inline ivfTopK returns") {
-    val dir = java.nio.file.Files.createTempDirectory("ivfspec").toString
+    val dir = graft.core.TempDir("ivfspec").toString
     val centroids = col("vec_id") < 3 // one seed per cluster
     Similarity.writeIvfIndex(spark, emb, centroids, dir, trainIters = 0)
     val indexed = Similarity.ivfTopKIndexed(spark, dir,
@@ -36,8 +36,8 @@ class IvfIndexSpec extends SparkSpec {
 
   test("writeIvfIndexWith(seed vectors) ≡ writeIvfIndex; trainIvfCentroids recenters to cell means") {
     import spark.implicits._
-    val dirSeed = java.nio.file.Files.createTempDirectory("ivfw1").toString
-    val dirWith = java.nio.file.Files.createTempDirectory("ivfw2").toString
+    val dirSeed = graft.core.TempDir("ivfw1").toString
+    val dirWith = graft.core.TempDir("ivfw2").toString
     val centroids = col("vec_id") < 3
     Similarity.writeIvfIndex(spark, emb, centroids, dirSeed, trainIters = 0)
     // explicit centers = the same three seed vectors → the written
@@ -70,13 +70,13 @@ class IvfIndexSpec extends SparkSpec {
       }
     }
     // a trained index is a normal index: search runs and returns k rows
-    val dirTr = java.nio.file.Files.createTempDirectory("ivfw3").toString
+    val dirTr = graft.core.TempDir("ivfw3").toString
     Similarity.writeIvfIndexWith(spark, emb, one, dirTr)
     assert(search(dirTr).nonEmpty)
   }
 
   test("probe reads are partition-pruned to the probed cells") {
-    val dir = java.nio.file.Files.createTempDirectory("ivfspec2").toString
+    val dir = graft.core.TempDir("ivfspec2").toString
     Similarity.writeIvfIndex(spark, emb, col("vec_id") < 3, dir, trainIters = 0)
     // a single query vector probing 1 cell: the assigned scan must carry
     // a centroid_id partition filter (pruned at file-listing time)
@@ -93,8 +93,8 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("appendIvfIndex: append == full rebuild (assigned rows and search results)") {
-    val dirInc = java.nio.file.Files.createTempDirectory("ivfappA").toString
-    val dirFull = java.nio.file.Files.createTempDirectory("ivfappB").toString
+    val dirInc = graft.core.TempDir("ivfappA").toString
+    val dirFull = graft.core.TempDir("ivfappB").toString
     val centroids = col("vec_id") < 3
     // incremental: build on the first crawl (centroid seeds + ids < 16),
     // then append the rest in TWO increments (appends must compose)
@@ -124,7 +124,7 @@ class IvfIndexSpec extends SparkSpec {
 
   test("compactIvfIndex: fragmented cells → filesPerCell, untouched cells untouched, search bit-equal") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ivfcomp").toString
+    val dir = graft.core.TempDir("ivfcomp").toString
     Similarity.writeIvfIndex(spark, emb, col("vec_id") < 3, dir, trainIters = 0)
     def files(cell: Long) = new java.io.File(s"$dir/assigned/centroid_id=$cell")
       .listFiles().map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq
@@ -163,7 +163,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("appendIvfIndex assignment is fully narrow (no shuffle, no join)") {
-    val dir = java.nio.file.Files.createTempDirectory("ivfappN").toString
+    val dir = graft.core.TempDir("ivfappN").toString
     Similarity.writeIvfIndex(spark, emb.filter(col("vec_id") < 16),
       col("vec_id") < 3, dir, trainIters = 0)
     // replicate the append's assignment plan (the write itself hides the
@@ -189,7 +189,7 @@ class IvfIndexSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("ivfstream").toString
+    val dir = graft.core.TempDir("ivfstream").toString
     Similarity.writeIvfIndex(spark, emb, col("vec_id") < 3, dir, trainIters = 0)
     val mem = MemoryStream[(Long, Array[Float])]
     val out = graft.streaming.Streams.annEnrich(spark,
@@ -214,7 +214,7 @@ class IvfIndexSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("ivfndi").toString
+    val dir = graft.core.TempDir("ivfndi").toString
     Similarity.writeIvfIndex(spark, emb, col("vec_id") < 3, dir, trainIters = 0)
     // arrivals: near-copies of indexed vectors (must pair), an
     // orthogonal-ish vector (must not), and an id colliding with an
@@ -290,7 +290,7 @@ class IvfIndexSpec extends SparkSpec {
       val b = Array(0.05f, 0.05f, 0.05f, 0.05f); b(c) = 1.0f + (i / 2 + 1) * 0.005f
       ((20 + i).toLong, b)
     }).toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivfndcap").toString
+    val dir = graft.core.TempDir("ivfndcap").toString
     Similarity.writeIvfIndex(spark, skew, col("vec_id") < 3, dir, trainIters = 0)
     val arrivals = Seq(
       (100L, Array(1.02f, 0.05f, 0.05f, 0.05f)),  // lands in the hot cell
@@ -328,8 +328,8 @@ class IvfIndexSpec extends SparkSpec {
     import spark.implicits._
     // default ≡ writeIvfIndexWith(trainIvfCentroidsBalanced(..., 2)):
     // the trained path is what a bare writeIvfIndex call gets
-    val dirDef = java.nio.file.Files.createTempDirectory("ivfdef1").toString
-    val dirWith = java.nio.file.Files.createTempDirectory("ivfdef2").toString
+    val dirDef = graft.core.TempDir("ivfdef1").toString
+    val dirWith = graft.core.TempDir("ivfdef2").toString
     val centroids = col("vec_id") < 3
     Similarity.writeIvfIndex(spark, emb, centroids, dirDef)
     Similarity.writeIvfIndexWith(spark, emb,
@@ -347,7 +347,7 @@ class IvfIndexSpec extends SparkSpec {
       == Similarity.trainIvfCentroids(spark, emb, centroids, 2))
     // and the default differs from the seed build (the training moved
     // centroids off the seed rows — the r12 audit's whole point)
-    val dirSeed = java.nio.file.Files.createTempDirectory("ivfdef3").toString
+    val dirSeed = graft.core.TempDir("ivfdef3").toString
     Similarity.writeIvfIndex(spark, emb, centroids, dirSeed, trainIters = 0)
     val seedCents = spark.read.parquet(s"$dirSeed/centroids")
       .select("cv").collect().map(_.getSeq[Double](0)).toSet
@@ -372,7 +372,7 @@ class IvfIndexSpec extends SparkSpec {
     }).toDF("vec_id", "embedding")
     val seeds = col("vec_id") === 0 || col("vec_id") === 40
     def maxCell(cents: Seq[(Long, Seq[Double])]) = {
-      val dir = java.nio.file.Files.createTempDirectory("ivfsplit").toString
+      val dir = graft.core.TempDir("ivfsplit").toString
       Similarity.writeIvfIndexWith(spark, skew, cents, dir)
       val sizes = spark.read.parquet(s"$dir/assigned")
         .groupBy("centroid_id").count().collect().map(_.getLong(1))
@@ -403,7 +403,7 @@ class IvfIndexSpec extends SparkSpec {
     assert(asg.count() == 24) // the 24 real vectors, nulls dropped
     // persisted index + append: no __HIVE_DEFAULT_PARTITION__ directory
     // (a NULL partition is invisible to every probe's cell filter)
-    val dir = java.nio.file.Files.createTempDirectory("ivfnull").toString
+    val dir = graft.core.TempDir("ivfnull").toString
     Similarity.writeIvfIndex(spark, withNulls, col("vec_id") < 3, dir, trainIters = 0)
     Similarity.appendIvfIndex(spark,
       Seq((102L, null.asInstanceOf[Array[Float]], 2))

@@ -108,7 +108,7 @@ class NbClassifierSpec extends SparkSpec {
     val nar = Classifier.nbClassifyNarrow(spark, docs, model)
       .orderBy("doc_id").collect().toSeq
     assert(rel == nar)
-    val dir = java.nio.file.Files.createTempDirectory("nbmodel").toString
+    val dir = graft.core.TempDir("nbmodel").toString
     Classifier.writeNbModel(spark, model, dir)
     val loaded = Classifier.loadNbModel(spark, dir)
     assert(loaded.labels.sameElements(model.labels))

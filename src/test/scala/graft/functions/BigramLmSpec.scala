@@ -38,7 +38,7 @@ class BigramLmSpec extends SparkSpec {
   }
 
   test("model parquet round-trip scores identically; plan stays narrow") {
-    val dir = java.nio.file.Files.createTempDirectory("lmmodel").toString
+    val dir = graft.core.TempDir("lmmodel").toString
     val model = TextStats.trainLmModel(docs)
     TextStats.writeLmModel(spark, model, dir)
     val reloaded = TextStats.loadLmModel(spark, dir)
@@ -50,7 +50,7 @@ class BigramLmSpec extends SparkSpec {
     // scoring is one compiled pass: no shuffle, no join, no generator.
     // Score a parquet-backed frame — a local Seq collapses to
     // LocalTableScan under ConvertToLocalRelation and hides the plan.
-    val docDir = java.nio.file.Files.createTempDirectory("lmdocs").toString
+    val docDir = graft.core.TempDir("lmdocs").toString
     docs.write.mode("overwrite").parquet(docDir)
     val p = TextStats.lmScoreNarrow(spark, spark.read.parquet(docDir),
       reloaded).queryExecution.executedPlan.toString

@@ -392,7 +392,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("metadata-only query prunes the binary column from the parquet scan") {
-    val dir = java.nio.file.Files.createTempDirectory("mm").toString
+    val dir = graft.core.TempDir("mm").toString
     Multimodal.asMedia(docs, "doc_id", "text", "image")
       .write.mode("overwrite").parquet(dir)
     val meta = Multimodal.metaOnly(spark.read.parquet(dir))

@@ -58,17 +58,26 @@ class GraftExtensionsSpec extends AnyFunSuite {
     }
   }
 
-  test("DotProductRewrite: HOF dot-product idiom compiles to dot64, semantics intact") {
+  // Each input builds a fresh session on the shared SparkContext: the
+  // injector alone, and the engine's session factory. Functions
+  // .registerAll adds no optimizer rule, so a rewrite that fires in the
+  // factory's session proves the factory installed the extensions.
+  private val rewriteInputs: Seq[(String, () => SparkSession)] = Seq(
+    "" -> (() => SparkSession.builder()
+      .master("local[2]")
+      .appName("graft-rewrite-test")
+      .withExtensions(new GraftExtensions())
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()),
+    " (Engine.session)" -> (() => graft.Engine.session()))
+
+  for ((suffix, fresh) <- rewriteInputs)
+  test(s"DotProductRewrite: HOF dot-product idiom compiles to dot64, semantics intact$suffix") {
     val prior = SparkSession.getDefaultSession
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val spark = SparkSession.builder()
-        .master("local[2]")
-        .appName("graft-rewrite-test")
-        .withExtensions(new GraftExtensions())
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val spark = fresh()
       val hof = "aggregate(zip_with(a, b, (x, y) -> x * y), 0D, (acc, z) -> acc + z)"
       def q(sql: String) = spark.sql(sql)
       // RUNTIME arrays (derived from the range attribute) — literal

@@ -60,7 +60,7 @@ class CatalogMetaSpec extends SparkSpec {
   }
 
   test("catalog commit swaps through .old, and read recovers from .old alone") {
-    val dir = java.nio.file.Files.createTempDirectory("catalog-commit")
+    val dir = graft.core.TempDir("catalog-commit")
     val path = dir.resolve("catalog").toString
     def hashes(df: org.apache.spark.sql.DataFrame) = df.select("sim_hash").collect().map(_.getString(0)).toSet
     Catalog.write(Catalog.upsert(Catalog.empty(spark), Catalog.rowsFor(spark, variants)), path)

@@ -83,7 +83,7 @@ class ExportSpec extends SparkSpec {
   }
 
   test("MAT-5 staging layout: <Section>_<hash>.mat with sanitized names (OP-X6)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-mat").toString
+    val dir = graft.core.TempDir("graft-mat").toString
     val files = Mat5.writeStaging(dir, "abc12345",
       Seq("Pre-Processing" -> Seq("case_name" -> "unisim"),
         "Fluid" -> Seq("pe" -> 5.0)))
@@ -97,7 +97,7 @@ class ExportSpec extends SparkSpec {
     // NaN at every 5th index (inactive/missing cells)
     val dense = Array.tabulate(ncells * nt)(i =>
       if (i % 5 == 0) Double.NaN else i.toDouble)
-    val p = java.nio.file.Files.createTempDirectory("npy-scan")
+    val p = graft.core.TempDir("npy-scan")
       .resolve("pressure.npy").toString
     Npy.write(p, dense, Seq(3, 2, 2, nt))
     val (df, shape, fortran) = Npy.scan(spark, p)
@@ -117,7 +117,7 @@ class ExportSpec extends SparkSpec {
     // 1000 values, 4 range-splits, 64-element blocks → every range spans
     // several blocks and block boundaries never align with range bounds
     val data = Array.tabulate(1000)(_.toDouble * 1.5)
-    val p = java.nio.file.Files.createTempDirectory("npy-blocks")
+    val p = graft.core.TempDir("npy-blocks")
       .resolve("b.npy").toString
     Npy.write(p, data, Seq(1000))
     val (df, shape, _) = Npy.scan(spark, p, splits = 4, blockElems = 64)
@@ -130,7 +130,7 @@ class ExportSpec extends SparkSpec {
   test("zarr distributed scan reads back what writeByTimestep wrote") {
     import spark.implicits._
     val rows = Seq((0, 0, 1.5), (0, 3, 2.5), (1, 1, 7.0)).toDF("t", "cell_idx", "value")
-    val dir = java.nio.file.Files.createTempDirectory("graft-zarr-scan").toString
+    val dir = graft.core.TempDir("graft-zarr-scan").toString
     Zarr.writeByTimestep(rows, (2, 2, 1), 2, dir)
     val back = Zarr.scan(spark, dir)
     assert(back.count() == 8) // 2 chunks × 4 cells, NaN fill kept
@@ -140,7 +140,7 @@ class ExportSpec extends SparkSpec {
   }
 
   test("S3 publish layout goes through the Hadoop FileSystem API (OP-S9)") {
-    val tmp = java.nio.file.Files.createTempDirectory("s3pub")
+    val tmp = graft.core.TempDir("s3pub")
     val src = tmp.resolve("pressure_cfg.npy")
     java.nio.file.Files.write(src, Array[Byte](1, 2, 3))
     // file:// stands in for s3a:// — same FileSystem resolution path
@@ -166,7 +166,7 @@ class ExportSpec extends SparkSpec {
       (0, 0, 1.5), (0, 3, 2.5), // t=0
       (1, 1, 7.0)               // t=1
     ).toDF("t", "cell_idx", "value")
-    val dir = java.nio.file.Files.createTempDirectory("graft-zarr").toString
+    val dir = graft.core.TempDir("graft-zarr").toString
     Zarr.writeByTimestep(rows, (2, 2, 1), 2, dir)
     val meta = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(dir, ".zarray")), "UTF-8")

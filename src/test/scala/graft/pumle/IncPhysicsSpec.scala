@@ -2,12 +2,10 @@ package graft.pumle
 
 import org.apache.spark.sql.functions._
 
-/** OP-S10 INC RLE reader against the REAL reference decks (read-only at
-  * /root/reference/benchmark/unisim-1-d) plus OP-X13/X14/X15 physics. */
+/** OP-S10 INC RLE reader against a synthetic UNISIM-shape deck and,
+  * where present, the REAL reference decks (read-only at
+  * /root/reference/benchmark/unisim-1-d); plus OP-X13/X14/X15 physics. */
 class IncPhysicsSpec extends SparkSpec {
-
-  private val deckDir = "/root/reference/benchmark/unisim-1-d"
-  private def deckAvailable = new java.io.File(s"$deckDir/PETRO_0.INC").canRead
 
   test("RLE token expansion") {
     assert(IncReader.expandToken("53*0.00") == ((53, 0.0)))
@@ -28,8 +26,10 @@ class IncPhysicsSpec extends SparkSpec {
     assert(m("PERMX") == Vector.fill(4)(100.0))
   }
 
-  test("UNISIM-I-D decks expand to 93,960 values per keyword (81×58×20)") {
-    assume(deckAvailable, "reference decks not present")
+  for (deck <- TestDeck.all)
+  test(s"UNISIM-I-D decks expand to 93,960 values per keyword (81×58×20)${deck.suffix}") {
+    assume(deck.available(), "reference decks not present")
+    val deckDir = deck.dir()
     val petro = IncReader.parseText(
       scala.io.Source.fromFile(s"$deckDir/PETRO_0.INC").mkString)
     for (kw <- Seq("PORO", "NTG", "PERMX", "PERMY", "PERMZ")) {
@@ -41,17 +41,30 @@ class IncPhysicsSpec extends SparkSpec {
       scala.io.Source.fromFile(s"$deckDir/SO.INC").mkString)
     assert(so("SO").length == 93960)
     assert(so("SO")(53) == 0.83) // SO.INC:2 starts 53*0 0.83
+    deck.values.foreach { exp =>
+      for (kw <- Seq("PORO", "NTG", "PERMX", "PERMY", "PERMZ")) assert(petro(kw) == exp(kw), kw)
+      assert(so("SO") == exp("SO"))
+    }
   }
 
-  test("distributed INC scan yields (keyword, cell_idx, value) rows") {
-    assume(deckAvailable, "reference decks not present")
+  for (deck <- TestDeck.all)
+  test(s"distributed INC scan yields (keyword, cell_idx, value) rows${deck.suffix}") {
+    assume(deck.available(), "reference decks not present")
+    val deckDir = deck.dir()
     val df = IncReader.read(spark, s"$deckDir/SO.INC", "SO")
     assert(df.count() == 93960)
     assert(df.filter(col("cell_idx") === 53).head().getAs[Double]("value") == 0.83)
+    deck.values.foreach { exp =>
+      val got = df.orderBy("cell_idx").collect()
+      assert(got.map(_.getAs[Int]("cell_idx")).toSeq == (0 until 93960))
+      assert(got.map(_.getAs[Double]("value")).toVector == exp("SO"))
+    }
   }
 
-  test("deck-driven active mask feeds the gather join (OP-S10 → F1 → J3)") {
-    assume(deckAvailable, "reference decks not present")
+  for (deck <- TestDeck.all)
+  test(s"deck-driven active mask feeds the gather join (OP-S10 → F1 → J3)${deck.suffix}") {
+    assume(deck.available(), "reference decks not present")
+    val deckDir = deck.dir()
     import spark.implicits._
     val poro = IncReader.read(spark, s"$deckDir/PETRO_0.INC", "PORO")
     val actnum = poro.select(col("cell_idx"), (col("value") > 0).as("active"))
@@ -63,6 +76,7 @@ class IncPhysicsSpec extends SparkSpec {
     val gathered = states.join(
       broadcast(actnum.filter(col("active")).select("cell_idx")), Seq("cell_idx"))
     assert(gathered.count() == nActive)
+    deck.values.foreach(exp => assert(nActive == exp("PORO").count(_ > 0)))
   }
 
   test("S3 key layout matches the reference scheme (OP-S9, arrays.py:288)") {

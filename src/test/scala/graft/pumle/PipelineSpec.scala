@@ -30,7 +30,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-fix").toString
+    val d = graft.core.TempDir("graft-fix").toString
     Files.writeString(Paths.get(d, s"states_unisim_$hash.json"), statesJson)
     Files.writeString(Paths.get(d, s"grdecl_unisim_$hash.json"),
       s"""{"actnum": [${actnum.mkString(",")}]}""")
@@ -41,7 +41,7 @@ class PipelineSpec extends SparkSpec {
   test("bronze readers accept the solver's BARE jsonencode arrays (OP-S2)") {
     // the real solver writes bare top-level arrays (jsonencode(states),
     // co2lab3DPUMLE.m:517-559) and case_name may contain underscores
-    val d = Files.createTempDirectory("graft-bare").toString
+    val d = graft.core.TempDir("graft-bare").toString
     val bareStates = (0 until 2).map { t =>
       val p = (0 until 12).map(c => 10.0 * t + c).mkString("[", ",", "]")
       val s = (0 until 12).map(c => s"[1.0,${0.01 * c}]").mkString("[", ",", "]")
@@ -134,7 +134,7 @@ class PipelineSpec extends SparkSpec {
     Pipeline.requireNonEmptyStates(st) // ok
     // truncated state arrays (length 9 < max active index 10): active
     // cells 9 and 10 positions beyond array drop out of the gather
-    val emptyDir = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    val emptyDir = graft.core.TempDir("graft-empty").toString
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(emptyDir, "states_unisim_ffff0000.json"),
       """{"states": []}""")
@@ -150,7 +150,7 @@ class PipelineSpec extends SparkSpec {
     val st = Pipeline.readBronzeStates(spark, s"$dir/states_unisim_$hash.json")
     val an = Pipeline.readActnum(spark, s"$dir/grdecl_unisim_$hash.json")
     val g = Pipeline.golden(Pipeline.silver(st, an), (I, J, K))
-    val out = Files.createTempDirectory("graft-golden").toString
+    val out = graft.core.TempDir("graft-golden").toString
     Pipeline.writeGolden(g, out)
     assert(new java.io.File(s"$out/sim_hash=$hash").isDirectory)
     val back = spark.read.parquet(out).filter(col("sim_hash") === hash)
@@ -193,7 +193,7 @@ class PipelineSpec extends SparkSpec {
     val an = Pipeline.readActnum(spark, s"$dir/grdecl_unisim_$hash.json")
     val (df, obs) = Pipeline.silverObserved(st, an)
     df.write.mode("overwrite")
-      .parquet(Files.createTempDirectory("graft-obs").toString + "/out")
+      .parquet(graft.core.TempDir("graft-obs").toString + "/out")
     val m = obs.get
     assert(m("rows_gathered") == 30L)
     assert(m("distinct_sims") == 1L)

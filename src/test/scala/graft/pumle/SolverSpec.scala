@@ -30,7 +30,7 @@ class SolverSpec extends SparkSpec {
   }
 
   test("distributed staging write produces the reference layout") {
-    val root = Files.createTempDirectory("solver-stage").toString
+    val root = graft.core.TempDir("solver-stage").toString
     val dirs = Solver.writeStaging(spark, variants, root)
     assert(dirs.toSet.map((d: String) => new java.io.File(d).getName) ==
       Set("staging_aaaa0001", "staging_bbbb0002", "staging_cccc0003"))
@@ -42,7 +42,7 @@ class SolverSpec extends SparkSpec {
   }
 
   test("full-config staging writes one .mat per schema section (solver contract)") {
-    val root = Files.createTempDirectory("solver-fullcfg").toString
+    val root = graft.core.TempDir("solver-fullcfg").toString
     val base = Config.parseIni(
       """[Paths]
         |pumle_root = /tmp/x
@@ -102,7 +102,7 @@ class SolverSpec extends SparkSpec {
   }
 
   test("dispatch runs one process per dir, writes completed.flag, skips on rerun") {
-    val root = Files.createTempDirectory("solver-run").toString
+    val root = graft.core.TempDir("solver-run").toString
     val dirs = Solver.writeStaging(spark, variants, root)
     val cmd = Seq("/bin/sh", mockSolver(root, None))
     val r1 = Solver.dispatch(spark, dirs, cmd)
@@ -116,7 +116,7 @@ class SolverSpec extends SparkSpec {
   }
 
   test("runSimulations drives catalog CREATED→RUNNING→COMPLETED/FAILED, and retries FAILED sims") {
-    val root = Files.createTempDirectory("solver-full").toString
+    val root = graft.core.TempDir("solver-full").toString
     val cmd = Seq("/bin/sh", mockSolver(root, failHash = Some("bbbb0002")))
     val (cat, results) = Solver.runSimulations(
       spark, Catalog.empty(spark), variants, root, cmd)
@@ -163,7 +163,7 @@ class SolverSpec extends SparkSpec {
   }
 
   test("a solver that cannot start fails each sim, not the job") {
-    val root = Files.createTempDirectory("solver-missing").toString
+    val root = graft.core.TempDir("solver-missing").toString
     val cmd = Seq(Paths.get(root, "no-such-solver").toString)
     val dirs = Solver.writeStaging(spark, variants, root)
     val results = Solver.dispatch(spark, dirs, cmd)
@@ -175,7 +175,7 @@ class SolverSpec extends SparkSpec {
   }
 
   test("runSimulations moves statuses in one read and one projection") {
-    val root = Files.createTempDirectory("solver-jobs").toString
+    val root = graft.core.TempDir("solver-jobs").toString
     val cmd = Seq("/bin/sh", mockSolver(root, failHash = Some("bbbb0002")))
     Catalog.write(Catalog.upsert(Catalog.empty(spark), Catalog.rowsFor(spark, variants)), s"$root/catalog")
     val committed = Catalog.read(spark, s"$root/catalog")
@@ -187,7 +187,7 @@ class SolverSpec extends SparkSpec {
   }
 
   test("runSimulations rejects an illegal walk: a fresh run of a RUNNING sim") {
-    val root = Files.createTempDirectory("solver-running").toString
+    val root = graft.core.TempDir("solver-running").toString
     val cmd = Seq("/bin/sh", mockSolver(root, failHash = None))
     val cat = Catalog.setStatus(
       Catalog.upsert(Catalog.empty(spark), Catalog.rowsFor(spark, variants)),

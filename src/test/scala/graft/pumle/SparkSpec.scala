@@ -20,15 +20,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  // No GraftExtensions and no Functions.registerAll here: an operator
+  // that forgets to register the functions it uses must fail its spec.
+  lazy val session: SparkSession = graft.Engine.builder(4)
     .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 131072)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
-    .config("spark.ui.enabled", "false")
+    .config("spark.sql.warehouse.dir", graft.core.TempDir("graft-wh").toString)
     .getOrCreate()
 }

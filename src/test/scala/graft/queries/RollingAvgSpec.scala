@@ -21,7 +21,7 @@ class RollingAvgSpec extends SparkSpec {
       var tUs = 0L
       evs.sortBy(_._1).map { e => tUs += e._4; (e._1, e._2, e._3, tUs) }
     }.toSeq
-    val dir = java.nio.file.Files.createTempDirectory("debounce").toString
+    val dir = graft.core.TempDir("debounce").toString
     byKey.toDF("event_id", "user_id", "event_type", "ts_us")
       .withColumn("ts", col("ts_us") * 1000) // ns column; engine DIVs by 1000
       .drop("ts_us")
@@ -48,7 +48,7 @@ class RollingAvgSpec extends SparkSpec {
     val rows = (0 until 300).map { i =>
       (i.toLong, (i % 7).toLong, rnd.nextLong(1000000L), rnd.nextDouble() * 100)
     } // (event_id, user_id, ts, value)
-    val dir = java.nio.file.Files.createTempDirectory("rolling").toString
+    val dir = graft.core.TempDir("rolling").toString
     rows.toDF("event_id", "user_id", "ts", "value")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
 

@@ -2,19 +2,19 @@ package graft.sources
 
 import org.apache.spark.sql.functions._
 
-import graft.pumle.{IncReader, SparkSpec}
+import graft.pumle.{IncReader, SparkSpec, TestDeck}
 
-/** The `grdecl` DataSource V2 format against the REAL reference decks
-  * (read-only at /root/reference/benchmark/unisim-1-d): equality with
-  * the IncReader RDD path, keyword filtering, and pushed column
-  * pruning. */
+/** The `grdecl` DataSource V2 format against a synthetic UNISIM-shape
+  * deck and, where present, the REAL reference decks (read-only at
+  * /root/reference/benchmark/unisim-1-d): equality with the IncReader
+  * RDD path and with the synthetic deck's own values, keyword
+  * filtering, and pushed column pruning. */
 class GrdeclSourceSpec extends SparkSpec {
 
-  private val deckDir = "/root/reference/benchmark/unisim-1-d"
-  private def deckAvailable = new java.io.File(s"$deckDir/PETRO_0.INC").canRead
-
-  test("format(grdecl) matches IncReader.read value-for-value") {
-    assume(deckAvailable)
+  for (deck <- TestDeck.all)
+  test(s"format(grdecl) matches IncReader.read value-for-value${deck.suffix}") {
+    assume(deck.available())
+    val deckDir = deck.dir()
     val v2 = spark.read.format("grdecl")
       .option("keyword", "SO")
       .load(s"$deckDir/SO.INC")
@@ -25,10 +25,13 @@ class GrdeclSourceSpec extends SparkSpec {
       .orderBy("cell_idx").collect()
     assert(v2.length == rdd.length && v2.length == 93960)
     assert(v2.map(_.getDouble(2)).toSeq == rdd.map(_.getDouble(2)).toSeq)
+    deck.values.foreach(exp => assert(v2.map(_.getDouble(2)).toVector == exp("SO")))
   }
 
-  test("multi-keyword file: all keywords scanned, option(keyword) filters") {
-    assume(deckAvailable)
+  for (deck <- TestDeck.all)
+  test(s"multi-keyword file: all keywords scanned, option(keyword) filters${deck.suffix}") {
+    assume(deck.available())
+    val deckDir = deck.dir()
     val all = spark.read.format("grdecl").load(s"$deckDir/PETRO_0.INC")
     val kws = all.select("keyword").distinct()
       .collect().map(_.getString(0)).sorted.toSeq
@@ -40,10 +43,17 @@ class GrdeclSourceSpec extends SparkSpec {
     // cell_idx is dense 0..n-1 per keyword
     assert(poro.agg(min("cell_idx"), max("cell_idx")).head() ==
       org.apache.spark.sql.Row(0L, 93959L))
+    deck.values.foreach { exp =>
+      assert(kws == Seq("NTG", "PERMX", "PERMY", "PERMZ", "PORO"))
+      assert(poro.orderBy("cell_idx").select("value").collect().map(_.getDouble(0))
+        .toVector == exp("PORO"))
+    }
   }
 
-  test("directory load: one partition per file; column pruning reaches the scan") {
-    assume(deckAvailable)
+  for (deck <- TestDeck.all)
+  test(s"directory load: one partition per file; column pruning reaches the scan${deck.suffix}") {
+    assume(deck.available())
+    val deckDir = deck.dir()
     val df = spark.read.format("grdecl").option("keyword", "PORO").load(deckDir)
     // the dir holds several .INC files; partitions = files
     assert(df.rdd.getNumPartitions == GrdeclSource.listFiles(deckDir).size)
@@ -60,5 +70,9 @@ class GrdeclSourceSpec extends SparkSpec {
     val exp = IncReader.parseText(
       scala.io.Source.fromFile(s"$deckDir/PETRO_0.INC").mkString)("PORO").sum
     assert(math.abs(sum2 - exp) < 1e-3)
+    deck.values.foreach { v =>
+      assert(df.rdd.getNumPartitions == 2)
+      assert(math.abs(sum2 - v("PORO").sum) < 1e-3)
+    }
   }
 }

@@ -25,9 +25,9 @@ class StreamsSpec extends SparkSpec {
 
   test("bronze file-stream ingests each sim exactly once (completed.flag analog)") {
     import spark.implicits._
-    val bronze = Files.createTempDirectory("stream-bronze").toString
-    val golden = Files.createTempDirectory("stream-golden").toString
-    val ckpt = Files.createTempDirectory("stream-ckpt").toString
+    val bronze = graft.core.TempDir("stream-bronze").toString
+    val golden = graft.core.TempDir("stream-golden").toString
+    val ckpt = graft.core.TempDir("stream-ckpt").toString
     val actnum = actnumSeq.zipWithIndex
       .map { case (f, i) => (i, f == 1) }.toDF("cell_idx", "active")
 
@@ -219,7 +219,7 @@ class StreamsSpec extends SparkSpec {
       base(c) = 1.0f + (i / 3) * 0.01f
       (i.toLong, base)
     }.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("pqstream").toString
+    val dir = graft.core.TempDir("pqstream").toString
     graft.ext.Similarity.writeIvfPqIndexWith(spark, emb, col("vec_id") < 3,
       graft.ext.Similarity.fixedCodebooks(m = 4, k = 8, subDim = 1), dir)
     val mem = MemoryStream[(Long, Array[Float])]
@@ -254,11 +254,11 @@ class StreamsSpec extends SparkSpec {
       base(c) = 1.0f + (i / 3) * 0.01f
       (i.toLong, base)
     }.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivfstream2").toString
+    val dir = graft.core.TempDir("ivfstream2").toString
     graft.ext.Similarity.writeIvfIndex(spark, emb.filter(col("vec_id") < 12),
       col("vec_id") < 3, dir, trainIters = 0) // seed contract under test
     val mem = MemoryStream[(Long, Array[Float])]
-    val sinkDir = java.nio.file.Files.createTempDirectory("ivfsink").toString
+    val sinkDir = graft.core.TempDir("ivfsink").toString
     val q = Streams.ivfIntake(spark,
         mem.toDF().toDF("vec_id", "embedding"), dir)
       .writeStream.outputMode("append").format("parquet")
@@ -295,7 +295,7 @@ class StreamsSpec extends SparkSpec {
       s"w${i} x${i * 7 % 13} y${i * 11 % 17} z${i * 3 % 5} " +
       s"kilo lima mike november oscar papa quebec"
     val seen = Seq.tabulate(60)(i => (i.toLong, mkText(i))).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("winstream").toString
+    val dir = graft.core.TempDir("winstream").toString
     graft.ext.Dedup.writeWinnowIndex(spark, seen, dir)
     val t0 = java.sql.Timestamp.valueOf("2026-01-01 10:00:00")
     val arrivals = Seq.tabulate(10)(i => ((100 + i).toLong, mkText(i * 2), t0)) ++
@@ -617,7 +617,7 @@ class StreamsSpec extends SparkSpec {
     // and a NULL (nothing to compare — drops)
     val seen = Seq.tabulate(8)(i => (i.toLong, 0x1234567812345678L ^ (i % 4).toLong))
       .toDF("doc_id", "packed")
-    val dir = java.nio.file.Files.createTempDirectory("hamadm").toString
+    val dir = graft.core.TempDir("hamadm").toString
     graft.ext.Dedup.writeHammingIndex(spark, seen, dir)
     val t0 = java.sql.Timestamp.valueOf("2026-01-01 10:00:00")
     val arrivals = Seq(
@@ -675,7 +675,7 @@ class StreamsSpec extends SparkSpec {
       baos.toByteArray
     }
     val p0 = pat(1.0, 0.0, 0.0)
-    val imgDir = java.nio.file.Files.createTempDirectory("imgadm").toString
+    val imgDir = graft.core.TempDir("imgadm").toString
     graft.multimodal.Multimodal.writeImageHashIndex(spark,
       Seq((100L, enc(p0))).toDF("media_id", "payload"), imgDir)
     val memI = MemoryStream[(Long, java.sql.Timestamp, Array[Byte])]
@@ -703,7 +703,7 @@ class StreamsSpec extends SparkSpec {
     val seen = Seq.tabulate(8)(i => (i.toLong,
         0x1234567812345678L ^ (i % 4).toLong, 0x0F0F00FF11223344L))
       .toDF("doc_id", "lo", "hi")
-    val dir = java.nio.file.Files.createTempDirectory("ham128pairs").toString
+    val dir = graft.core.TempDir("ham128pairs").toString
     graft.ext.Dedup.writeHammingIndex(spark, seen, dir)
     val arrivals = Seq(
       (900L, Some(0x1234567812345679L), Some(0x0F0F00FF11223345L)),
@@ -739,7 +739,7 @@ class StreamsSpec extends SparkSpec {
     val seen = Seq.tabulate(8)(i => (i.toLong,
         0x1234567812345678L ^ (i % 4).toLong, 0x0F0F00FF11223344L))
       .toDF("doc_id", "lo", "hi")
-    val dir = java.nio.file.Files.createTempDirectory("ham128adm").toString
+    val dir = graft.core.TempDir("ham128adm").toString
     graft.ext.Dedup.writeHammingIndex(spark, seen, dir)
     val t0 = java.sql.Timestamp.valueOf("2026-01-01 10:00:00")
     val arrivals = Seq(
@@ -797,7 +797,7 @@ class StreamsSpec extends SparkSpec {
       baos.toByteArray
     }
     val p0 = pat(1.0, 0.0, 0.0)
-    val imgDir = java.nio.file.Files.createTempDirectory("img128adm").toString
+    val imgDir = graft.core.TempDir("img128adm").toString
     graft.multimodal.Multimodal.writeImageHashIndex128(spark,
       Seq((100L, enc(p0))).toDF("media_id", "payload"), imgDir)
     val memI = MemoryStream[(Long, java.sql.Timestamp, Array[Byte])]
@@ -861,7 +861,7 @@ class StreamsSpec extends SparkSpec {
   test("static-side caches register per stream build and release on demand") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("ssidx").toString
+    val dir = graft.core.TempDir("ssidx").toString
     graft.ext.Dedup.writeHammingIndex(spark,
       Seq((1L, 0x1234L), (2L, 0xff00L)).toDF("doc_id", "packed"), dir)
     val before = Streams.staticSideCount
@@ -997,7 +997,7 @@ class StreamsSpec extends SparkSpec {
     // in-order equivalence vs the batch operator (q35 shape): same
     // events through the lag-window form — identical keeps. The batch
     // query reads ts in ns (DIV 1000), so scale µs → ns.
-    val batchDir = java.nio.file.Files.createTempDirectory("deb-batch").toString
+    val batchDir = graft.core.TempDir("deb-batch").toString
     Seq((1L, "click", B, 1L), (1L, "click", B + 10L * M, 2L),
       (1L, "click", B + 80L * M, 3L), (1L, "view", B + 5L * M, 4L),
       (1L, "click", B + 110L * M, 5L), (1L, "click", B + 310L * M, 6L))

@@ -94,7 +94,7 @@ QUERIES = ["q52_lsh_candidates", "q65_dedup_clusters", "q72_verify_candidates",
            # scales documents only, so their sf1/sf0.1 ratios sit ≈1×;
            # the rows exist so the production ANN layout appears in
            # every stress table (their real scale evidence is
-           # BENCH_sfe's 200k decade + the Decade3Probe 2M section)
+           # BENCH_sfe's 200k decade + its 2M-vector third decade)
            "q164_ivf_pq_indexed", "q165_near_dup_ann",
            # round-11 document-axis additions: repeated spans (now on
            # hashed gram keys, like q88), the packed-Hamming banding

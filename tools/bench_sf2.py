@@ -8,7 +8,7 @@ token. Every sf0.1 base doc therefore has ~100 near-duplicate clones,
 so PAIR DENSITY rises ~10x along with the x10 row count - exactly the
 axis the suite's top wall rows (winnow/dedup/components/calibration,
 all text-axis) were never measured on. The embeddings axis has three
-decades of evidence (BENCH_sfe + Decade3Probe); this is the text
+decades of evidence (BENCH_sfe.md); this is the text
 axis's third decade.
 
 DuckDB replays run in a SUBPROCESS per shot with a hard timeout and a

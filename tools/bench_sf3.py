@@ -21,7 +21,7 @@ Usage: python3 tools/bench_sf3.py [--runs N] [--skip-build]
 Needs /tmp/sf2 (tools/bench_sf2.py --skip-build builds it too).
 RUN ON A QUIET MACHINE (see bench_sf1.py's warning).
 """
-import argparse, json, os, re, subprocess, sys, time
+import argparse, os, re, subprocess, sys
 
 import duckdb
 
@@ -104,27 +104,6 @@ def time_spark(sfdir, runs, queries=None):
     return out, spread
 
 
-def pair_census(sfdir):
-    """Candidate/verified pair counts for the q137/q152 chains
-    (graft.tools.PairCensus — counted off the operators' own stage
-    frames): the decomposition that turns a scale-up reading into
-    (pair growth x per-pair cost). Returns {chain: row-dict}."""
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sfdir, SPARK_GRAFT_CPUS="32",
-               SPARK_DRIVER_MEM=os.environ.get("SPARK_DRIVER_MEM", "48g"))
-    p = subprocess.run(
-        ["sbt", "-batch", "runMain graft.tools.PairCensus"],
-        cwd=REPO, env=env, capture_output=True, text=True, timeout=14400)
-    out = {}
-    for m in re.finditer(r"\[paircensus\] (\{.*\})", p.stdout):
-        row = json.loads(m.group(1))
-        out[row.pop("chain")] = row
-        print(f"[census {os.path.basename(sfdir)}] {m.group(1)}")
-    if len(out) < 2:
-        sys.stderr.write(p.stdout[-3000:] + p.stderr[-2000:])
-        raise SystemExit(f"pair census incomplete at {sfdir}: {list(out)}")
-    return out
-
-
 def respread(kind, timer, runs, out, spread):
     for attempt in range(MAX_REMEASURE):
         bad = sorted(q for q in out
@@ -168,10 +147,6 @@ def main():
              args.runs, s3, s3s)
     cal.append(calibration.probe())
     legs = calibration.report(cal, ["spark-sf2", "spark-sf3"])
-    # pair-volume census: decompose the winnow rows' scale-up into
-    # (pair growth x per-pair cost) — measured, not argued
-    c2 = pair_census(SF2)
-    c3 = pair_census(SF3)
     lines = [
         "# BENCH_sf3 — 1000× documents (5,000,000 docs), capped family only",
         "",
@@ -198,32 +173,16 @@ def main():
               f"**Spark sf3 total over the {len(QUERIES)}-row capped family: "
               f"{sum(s3[q] for q in QUERIES):.1f}s "
               f"(sf2: {sum(s2[q] for q in QUERIES):.1f}s).**", ""]
-    # pair-volume census table: the q137/q152 scale-up decomposed into
-    # (pair growth x per-pair cost). per-pair cost uses the BENCH wall
-    # (the chain end to end) over verified pairs; flat-or-falling
-    # microseconds/pair across the decade = pair-bounded as designed.
-    lines += [
-        "## Pair-volume census (chain stage counts, graft.tools.PairCensus)",
-        "",
-        "| chain | decade | candidates | verified | bench wall (s) | µs / verified pair |",
-        "|---|---|---|---|---|---|",
-    ]
-    for chain, bq in [("q137_corpus", "q137_dedup_corpus_winnow"),
-                      ("q152_incremental", "q152_incremental_winnow")]:
-        for label, cen, wall in [("sf2", c2[chain], s2[bq]),
-                                 ("sf3", c3[chain], s3[bq])]:
-            v = cen["n_verified"]
-            us = wall * 1e6 / v if v else float("nan")
-            lines.append(
-                f"| {chain} | {label} | {cen['n_candidates']} | {v} "
-                f"| {wall:.2f} | {us:.1f} |")
-    lines.append("")
     md = os.path.join(REPO, "BENCH_sf3.md")
     tail = ""
     if os.path.exists(md):
+        # the recorded sections carry over: the round-14 pair-volume
+        # census table and the analyses
         prev = open(md).read()
-        if "## Analysis" in prev:
-            tail = "\n" + prev[prev.index("## Analysis"):]
+        for marker in ("## Pair-volume census", "## Analysis"):
+            if marker in prev:
+                tail = "\n" + prev[prev.index(marker):]
+                break
     with open(md, "w") as f:
         f.write("\n".join(lines) + tail + "\n")
     print(f"\nwrote BENCH_sf3.md; sf3 total "

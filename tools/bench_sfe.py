@@ -32,8 +32,8 @@ and q153's DNF'd at 20k; at 200k no replay finishes). The
 quadratic-pair family (q142/q153) and the brute-force recall baseline
 (q111) are excluded from the decade table — their pair work is
 Σ cᵢ² / |q|·n BY CONTRACT and grows ×100 per decade on a fixed-k
-quantizer; the 200k evidence for the SALTED pair mechanism lives in
-ScaleProbe's `salted knn` section instead (256-cell config, task-time
+quantizer; the 200k evidence for the SALTED pair mechanism came from
+a separate, since-retired scale probe instead (256-cell config, task-time
 distribution — the production knob is centroid count, not ratio
 heroics on a 16-cell toy grid).
 
@@ -198,7 +198,7 @@ def run_decade(runs):
         f"(min-of-{runs}). No DuckDB column: the 20k replay already DNF'd /",
         "took 506s on the pair family; q142/q153/q111 excluded here for the",
         "same Σ cᵢ² / |q|·n contract reason (see module docstring — the",
-        "200k salted-pair evidence is ScaleProbe's `salted knn` section).",
+        "200k salted-pair evidence came from a separate 256-cell probe).",
         "A scale-up ≤ 10× on a ×10 corpus means the row's plan is at worst",
         "linear in the data at this decade — EXCEPT the ×100-work rows",
         "called out under the table, whose bar is 100×.",
