@@ -151,7 +151,7 @@ object Clustering {
     * k); this one localCheckpoints `(vec_id, v, vv, md)` each round and
     * folds ONLY the newest center in (`least(md, d2_new)` — one dot/row
     * per round, flat in k), releasing superseded blocks like
-    * [[graft.ext.Dedup.clustersAltStar]].
+    * the star rounds of [[graft.ext.Dedup.clusters]].
     *
     * Bit-equal to [[kCenter]] (ClusteringSpec pins it): the literal
     * form's `array_min` and this chained `least` fold the SAME IEEE

@@ -219,119 +219,122 @@ object Dedup {
         max(col("bsize")).as("max_bucket_size"))
   }
 
+  /** Edge count at or below which [[clusters]] runs on the driver:
+    * Par.isBig's 2 MB bar over 16 bytes per `(a_id, b_id)` edge. */
+  private[graft] val LocalComponentsMaxEdges = 131072L
+
+  /** Safety cap on alternating-star rounds. The round count grows with
+    * the log of the component size (a 200k-node chain took ~18), so
+    * hitting the cap means the rounds stopped converging, and
+    * [[starComponents]] throws rather than return labels that are not
+    * a fixpoint. */
+  private val MaxStarRounds = 100
+
   /** Connected components over candidate pairs → dedup clusters:
     * every doc labeled with the smallest doc_id reachable through the
-    * near-dup graph (the canonical survivor). Iterative min-label
-    * propagation — each hop is one shuffle join on the (sparse, capped)
-    * candidate graph, and TWO hops run inside each materialized round
-    * (one plan, one checkpoint, one fixpoint-check job) — distance 2
-    * per round, halving the per-round job overhead that dominates on
-    * the tiny diameters LSH candidate graphs produce. Converges by
-    * fixpoint check, capped at `maxIter` rounds (= 2·maxIter hops). */
-  def clusters(spark: SparkSession, pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    // localCheckpoint truncates lineage each round — without it the
-    // plan tree grows exponentially across iterations (OOM at planning
-    // time, the classic iterative-DataFrame trap). Each checkpoint
-    // PERSISTS its RDD for the life of the session, so superseded
-    // rounds must be unpersisted explicitly: on a long-lived session
-    // the leaked blocks occupy storage memory and starve every later
-    // stage (observed as GC thrash in queries run after clusters()).
-    // Tracking reads the backing RDD off the checkpointed plan itself
-    // (Dedup.checkpointTracked) — robust to concurrent jobs.
-    // the input subtree materializes ONCE before the symmetric union
-    // references it twice: for expensive upstreams (LSH) the double
-    // reference would otherwise re-evaluate the whole subtree per side
-    // (exchange reuse is plan-dependent, not a guarantee)
-    val (cp, cpRdds) = Par.labeled(pairs, "components: edge input") {
-      checkpointTracked(pairs.select(col("a_id"), col("b_id")))
-    }
-    // (probed round 14: a localCheckpoint does NOT carry its input's
-    // hash partitioning under AQE — LogicalRDD reports
-    // UnknownPartitioning — so pre-partitioning edges by the hop join
-    // key here would buy nothing; the hop joins broadcast the label
-    // side or re-exchange as AQE decides)
-    val (edges, edgeRdds) = Par.labeled(pairs, "components: symmetric edges") {
-      checkpointTracked(
-        cp.unionAll(cp.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-          .distinct())
-    }
-    cpRdds.foreach(_.unpersist(blocking = false)) // dead once edges exist
-    var (labels, labelRdds) = Par.labeled(pairs, "components: label init") {
-      checkpointTracked(
-        edges.select(col("a_id").as("node"))
-          .distinct()
-          .withColumn("cluster_id", col("node")))
-    }
-    // each hop can CARRY columns alongside the propagated minimum: self
-    // rows keep them, neighbor rows contribute null (max ignores
-    // nulls), so values survive the aggregate. The round carries the
-    // first hop's label into the second, and the fixpoint check becomes
-    // a column compare INSIDE the checkpoint job (read via Observation,
-    // which completes at the eager localCheckpoint) instead of a
-    // separate join+count action per round. Min-label propagation is
-    // MONOTONE, so "second hop changed nothing vs the first" already
-    // proves a fixpoint — no confirming round: a diameter-2 candidate
-    // graph (the usual LSH shape) finishes in ONE materialized round.
-    def hop(l: DataFrame, carry: Seq[String]): DataFrame = {
-      val viaNeighbors = edges
-        .join(l, edges("b_id") === l("node"))
-        .select(col("a_id").as("node") +: col("cluster_id") +:
-          carry.map(c => lit(null).cast("long").as(c)): _*)
-      l.select(col("node") +: col("cluster_id") +: carry.map(col): _*)
-        .unionAll(viaNeighbors)
-        .groupBy(col("node"))
-        .agg(min(col("cluster_id")).as("cluster_id"),
-          carry.map(c => max(col(c)).as(c)): _*)
-    }
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val obs = org.apache.spark.sql.Observation()
-      val (next, nextRdds) = Par.labeled(pairs, s"components: hop round ${i + 1}") {
-        checkpointTracked(
-          hop(hop(labels, Nil).withColumn("mid", col("cluster_id")), Seq("mid"))
-            .observe(obs, sum(when(col("cluster_id") =!= col("mid"), lit(1L))
-              .otherwise(lit(0L))).as("inner_changed"))
-            .select(col("node"), col("cluster_id")))
-      }
-      // sum over zero rows is NULL (empty edge graph) — treat as converged
-      val innerChanged = Option(obs.get.getOrElse("inner_changed", null))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      // previous round's blocks are dead once `next` is materialized
-      labelRdds.foreach(_.unpersist(blocking = false))
-      labels = next
-      labelRdds = nextRdds
-      converged = innerChanged == 0
-      i += 1
-    }
-    // the result's lineage is truncated at its own checkpoint — the edge
-    // blocks are no longer reachable and can be freed now. The final
-    // labels blocks stay cached (they back the returned DataFrame) and
-    // are released by the ContextCleaner when the caller drops it.
-    edgeRdds.foreach(_.unpersist(blocking = false))
-    labels
+    * near-dup graph (the canonical survivor); a node whose only edge is
+    * a self-loop is its own cluster. Output: (node, cluster_id), ids
+    * BIGINT.
+    *
+    * The edge input materializes once, and an Observation on that job
+    * reports the edge count. At or below [[LocalComponentsMaxEdges]]
+    * the edges are collected and union-find with path compression runs
+    * on the driver — two jobs whatever the graph's diameter — and the
+    * labels return as a local relation. Above it the edges need not fit
+    * the driver, so the alternating-star rounds of [[starComponents]]
+    * run on the cluster instead. Both paths return the same labels
+    * (ExtApiSpec). */
+  def clusters(spark: SparkSession, pairs: DataFrame): DataFrame = {
+    val in = edgeInput(pairs)
+    if (in.n > LocalComponentsMaxEdges) starRounds(pairs, in)
+    else driverComponents(spark, pairs, in)
   }
+
+  /** [[clusters]]' small-graph path: collect, release the checkpoint,
+    * union-find on the driver, labels as a local relation. */
+  private def driverComponents(spark: SparkSession, pairs: DataFrame,
+      in: EdgeSet): DataFrame = {
+    val edges = Par.labeled(pairs, "components: collect edges") {
+      in.edges.collect()
+    }
+    in.release()
+    val ids = edges.flatMap(r => Array(r.getLong(0), r.getLong(1))).distinct.sorted
+    // ids ascend, so linking the larger root under the smaller keeps
+    // every root at its component's minimum
+    val parent = Array.range(0, ids.length)
+    def find(x: Int): Int = {
+      var root = x
+      while (parent(root) != root) root = parent(root)
+      var c = x
+      while (parent(c) != root) { val next = parent(c); parent(c) = root; c = next }
+      root
+    }
+    def idx(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    edges.foreach { r =>
+      val a = find(idx(r.getLong(0)))
+      val b = find(idx(r.getLong(1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    spark.createDataFrame(ids.indices.map(i => (ids(i), ids(find(i)))))
+      .toDF("node", "cluster_id")
+  }
+
+  /** An edge set materialized by an eager checkpoint, with its count and
+    * an order-independent checksum read through an Observation on the
+    * checkpoint's own job (no extra job). */
+  private final case class EdgeSet(edges: DataFrame,
+      rdds: Seq[org.apache.spark.rdd.RDD[_]], n: Long, sum: Long) {
+    def release(): Unit = rdds.foreach(_.unpersist(blocking = false))
+  }
+
+  // localCheckpoint truncates lineage each round — without it the plan
+  // tree grows exponentially across iterations (OOM at planning time,
+  // the classic iterative-DataFrame trap). Each checkpoint PERSISTS its
+  // RDD for the life of the session, so every superseded edge set is
+  // released explicitly: on a long-lived session leaked blocks occupy
+  // storage memory and starve every later stage.
+  private def checksummed(e: DataFrame): EdgeSet = {
+    val obs = org.apache.spark.sql.Observation()
+    // bit_xor: order-independent and overflow-free (round outputs are
+    // distinct, so xor-cancellation of repeated rows cannot occur)
+    val (cp, rdds) = checkpointTracked(e.observe(obs,
+      expr("bit_xor(xxhash64(u, v))").as("h"), count(lit(1)).as("n")))
+    val m = obs.get
+    // bit_xor over zero rows is NULL (empty edge graph)
+    val h = Option(m.getOrElse("h", null)).map(_.asInstanceOf[Long]).getOrElse(0L)
+    val n = m("n").asInstanceOf[Long]
+    EdgeSet(cp, rdds, n, h ^ java.lang.Long.rotateLeft(n, 32))
+  }
+
+  /** The pairs as `(u, v)` edges, materialized ONCE: the star rounds
+    * reference their input several times, and for an expensive upstream
+    * (LSH) each reference would otherwise re-evaluate the whole subtree
+    * (exchange reuse is plan-dependent, not a guarantee). */
+  private def edgeInput(pairs: DataFrame): EdgeSet =
+    Par.labeled(pairs, "components: edge input") {
+      checksummed(pairs.select(col("a_id").as("u"), col("b_id").as("v")))
+    }
+
+  /** [[clusters]]' large-graph path, whatever the edge count: q102 runs
+    * it at sf0.01 so the oracle checks it against q65's labels. */
+  private[graft] def starComponents(pairs: DataFrame): DataFrame =
+    starRounds(pairs, edgeInput(pairs))
 
   /** Connected components via alternating large-star / small-star
     * rounds (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond") — the O(log n)-round alternative to `clusters`' min-label
-    * propagation, whose round count is the graph DIAMETER. LSH
-    * candidate graphs are shallow (label propagation wins there — it
-    * stays the default), but chunk/link graphs can chain thousands
-    * deep; this variant converges in logarithmic rounds regardless.
+    * Beyond", SoCC 2014): O(log n) rounds on any diameter, where
+    * min-label propagation needs diameter-many.
     *
     * Join-based formulation: per-node minima come from a groupBy +
     * join-back, never a `collect_list` of neighbors — a celebrity hub's
     * adjacency never materializes in one aggregation buffer.
-    *  - large-star: every neighbor v > u re-hangs onto min(Γ(u) ∪ {u})
+    *  - large-star: every neighbor v ≥ u re-hangs onto min(Γ(u) ∪ {u})
     *  - small-star: over larger→smaller directed edges, u and its
     *    smaller neighbors re-hang onto their minimum
-    * Same lineage discipline as `clusters`: every round is
-    * localCheckpointed (truncated plans) and superseded blocks are
-    * freed; convergence = order-independent edge-set checksum stable
-    * across a full round. Output schema matches `clusters`:
-    * (node, cluster_id = component minimum). */
-  def clustersAltStar(spark: SparkSession, pairs: DataFrame, maxIter: Int = 30): DataFrame = {
+    * Every round is localCheckpointed (truncated plans) and superseded
+    * blocks are freed; convergence = order-independent edge-set
+    * checksum stable across a full round. */
+  private def starRounds(pairs: DataFrame, input: EdgeSet): DataFrame = {
     // Both star steps repartition BY u up front: hash(u) clusters (u, v)
     // too, so the distinct, the per-u min aggregate AND the join-back
     // all run on that ONE exchange within the star's plan (previously
@@ -346,13 +349,16 @@ object Dedup {
       val mins = sym.groupBy(col("u"))
         .agg(min(col("v")).as("mv"))
         .select(col("u"), least(col("mv"), col("u")).as("m"))
+      // ≥, not >: a self-loop (u, u) re-hangs u onto its minimum, so a
+      // node whose only edge is a self-loop survives as its own root
+      // (without other edges ≥ and > emit the same set)
       sym.join(mins, Seq("u"))
-        .filter(col("v") > col("u"))
+        .filter(col("v") >= col("u"))
         .select(col("v").as("u"), col("m").as("v"))
         .repartition(col("u")).distinct()
     }
     // smallStar's input is ALWAYS a largeStar output (see the loop):
-    // every edge already oriented u > v (v ≤ old-u < new-u by the
+    // every edge already oriented u ≥ v (v ≤ old-u ≤ new-u by the
     // large-star re-hang) and already distinct — the general form's
     // re-orientation pass (filter u≠v + greatest/least + a distinct
     // exchange of the full edge set) is a no-op here and is dropped.
@@ -369,67 +375,48 @@ object Dedup {
       val hangSelf = mins.select(col("u"), col("m").as("v"))
       hangNbrs.unionAll(hangSelf).repartition(col("u")).distinct()
     }
-    val rddsByFrame = new java.util.IdentityHashMap[DataFrame, Seq[org.apache.spark.rdd.RDD[_]]]()
-    // order-independent edge-set fingerprint: read via Observation at the
-    // eager checkpoint (no extra job per round)
-    def checksum(e: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      // bit_xor: order-independent and overflow-free (edges are distinct,
-      // so xor-cancellation of repeated rows cannot occur)
-      val observed = e.observe(obs,
-        expr("bit_xor(xxhash64(u, v))").as("h"), count(lit(1)).as("n"))
-      val (cp, rdds) = checkpointTracked(observed)
-      val m = obs.get
-      val h = Option(m.getOrElse("h", null)).map(_.asInstanceOf[Long]).getOrElse(0L)
-      val n = Option(m.getOrElse("n", null)).map(_.asInstanceOf[Long]).getOrElse(0L)
-      // returned frame keeps its tracked blocks; caller unpersists
-      rddsByFrame.put(cp, rdds)
-      (cp, h ^ java.lang.Long.rotateLeft(n, 32))
-    }
-    def release(df: DataFrame): Unit =
-      Option(rddsByFrame.remove(df)).foreach(_.foreach(_.unpersist(blocking = false)))
-    var (edges, sum0) = Par.labeled(pairs, "altstar: edge input") {
-      checksum(pairs.select(col("a_id").as("u"), col("b_id").as("v")))
-    }
-    var prevSum = sum0
+    var cur = input
     var converged = false
     var i = 0
-    while (!converged && i < maxIter) {
+    while (!converged) {
+      if (i == MaxStarRounds) {
+        cur.release()
+        throw new IllegalStateException(
+          s"connected components did not converge in $MaxStarRounds star rounds")
+      }
       // ONE materialization per round: small-star over large-star is a
       // single fused plan (large-star's output exchange is shared by
       // small-star's two references, so no intermediate checkpoint is
       // needed to avoid re-evaluation — round 14; previously each round
       // paid two checkpoint jobs and ~7 exchanges, now one job and 3).
       // Probed round 15 and REVERTED: TWO rounds per materialization
-      // (clusters()' double-hop trick; the fixpoint test stays sound —
-      // a checksum-stable double round that is not a single-round
-      // fixpoint would be a 2-cycle of the deterministic round map,
-      // which the alternating-star convergence theorem rules out)
-      // measured ~2x WORSE at sf0.1 (q102 3.65→6.03 s, q142
-      // 3.05→6.45 s min-of-5, interleaved): each star references its
-      // input 2-3 times, so stacking four passes in one plan squares
+      // (the fixpoint test stays sound — a checksum-stable double round
+      // that is not a single-round fixpoint would be a 2-cycle of the
+      // deterministic round map, which the alternating-star convergence
+      // theorem rules out) measured ~2x WORSE at sf0.1 (q102 3.65→6.03
+      // s, q142 3.05→6.45 s min-of-5, interleaved): each star references
+      // its input 2-3 times, so stacking four passes in one plan squares
       // the subtree copies (~36 leaf references) — ReuseExchange does
       // not dedupe them all under AQE, and the plan explodes where the
       // per-round checkpoint keeps every reference a flat scan.
-      val (next, nextSum) = Par.labeled(pairs, s"altstar: round ${i + 1}") {
-        checksum(smallStar(largeStar(edges)))
+      val next = Par.labeled(pairs, s"components: star round ${i + 1}") {
+        checksummed(smallStar(largeStar(cur.edges)))
       }
-      release(edges)
-      edges = next
-      converged = nextSum == prevSum
-      prevSum = nextSum
+      cur.release()
+      converged = next.sum == cur.sum
+      cur = next
       i += 1
     }
     // fixpoint edge set is a forest of stars (child → component min);
     // roots label themselves
-    val labels = edges.select(col("u").as("node"), col("v").as("cluster_id"))
-      .unionAll(edges.select(col("v").as("node"), col("v").as("cluster_id")))
-      .groupBy(col("node")).agg(min(col("cluster_id")).as("cluster_id"))
-    val (out, _) = checkpointTracked(labels)
-    release(edges)
+    val e = cur.edges
+    val (out, _) = checkpointTracked(
+      e.select(col("u").as("node"), col("v").as("cluster_id"))
+        .unionAll(e.select(col("v").as("node"), col("v").as("cluster_id")))
+        .groupBy(col("node")).agg(min(col("cluster_id")).as("cluster_id")))
+    cur.release()
     // out's blocks back the returned frame; ContextCleaner frees them
     // when the caller drops it
-    rddsByFrame.clear()
     out
   }
 
@@ -646,17 +633,15 @@ object Dedup {
     * constant fraction of the corpus and a forced broadcast would OOM
     * exactly where dedup matters most.
     *
-    * `deepGraphs = true` runs the component stage with
-    * `clustersAltStar` (log-round convergence on any diameter) instead
-    * of label propagation — for corpora whose verified near-dup graph
-    * still chains deeply (template families). Identical labels either
-    * way (spec-pinned); only round counts differ. */
+    * The component stage is [[clusters]], which converges on any
+    * diameter: verified graphs that still chain deeply (template
+    * families) cost no more rounds than shallow LSH graphs on its
+    * driver path, and log-many rounds above its edge gate. */
   def dedupCorpus(spark: SparkSession, docs: DataFrame,
       bands: Int = 4, maxBucket: Int = 10,
       idCol: String = "doc_id", textCol: String = "text",
       capMetrics: Option[org.apache.spark.sql.Observation] = None,
-      verifyThreshold: Double = 0.7,
-      deepGraphs: Boolean = false): DataFrame = {
+      verifyThreshold: Double = 0.7): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // exact stage as a hash-partitioned window (survivor = smallest id
     // per content hash): one shuffle, NO broadcast — the survivor set
@@ -685,8 +670,8 @@ object Dedup {
       .filter(col("rk") === 1)
       .drop("content_hash", "rk")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // candidate pairs materialize ONCE: both the verify stage and
-    // clusters() reference their input repeatedly, which would
+    // candidate pairs materialize ONCE: the verify stage references its
+    // input three times and clusters() reads it again, which would
     // re-evaluate the LSH subtree per reference and fire the cap
     // observation more than once — the checkpoint anchors everything to
     // a single execution, and the pair set is candidate-bounded (the
@@ -711,13 +696,8 @@ object Dedup {
     // corpus — NOT broadcastable by fiat. Left unhinted: AQE broadcasts
     // at runtime when the set actually is small and degrades gracefully
     // to a shuffle join when it is not.
-    // deepGraphs switches the component stage to alternating stars —
-    // O(log n) rounds regardless of diameter, for corpora whose near-dup
-    // graph CHAINS (template families, chunk graphs). Verified LSH
-    // graphs are shallow, so label propagation stays the default.
     val dropNearDup = Par.labeled(docs, "dedupCorpus: verify + components") {
-      (if (deepGraphs) clustersAltStar(spark, confirmed)
-      else clusters(spark, confirmed))
+      clusters(spark, confirmed)
     }
       .filter(col("node") =!= col("cluster_id"))
       .select(col("node").as(idCol))
@@ -750,14 +730,13 @@ object Dedup {
   def dedupCorpusWinnow(spark: SparkSession, docs: DataFrame,
       k: Int = 3, w: Int = 4, maxDf: Int = 10, minShared: Int = 2,
       idCol: String = "doc_id", textCol: String = "text",
-      verifyThreshold: Double = 0.7,
-      deepGraphs: Boolean = false): DataFrame = {
+      verifyThreshold: Double = 0.7): DataFrame = {
     // release BEFORE returning: a lazy consumer must not pin the
     // corpus-scale survivor cache (the consumer pays one window replay
     // instead — [[dedupCorpusWinnowTracked]] is the consume-once form
     // that keeps the cache and hands the caller the release)
     val (out, release) = dedupCorpusWinnowTracked(spark, docs, k, w,
-      maxDf, minShared, idCol, textCol, verifyThreshold, deepGraphs)
+      maxDf, minShared, idCol, textCol, verifyThreshold)
     release()
     out
   }
@@ -781,13 +760,11 @@ object Dedup {
   def dedupCorpusWinnowTracked(spark: SparkSession, docs: DataFrame,
       k: Int = 3, w: Int = 4, maxDf: Int = 10, minShared: Int = 2,
       idCol: String = "doc_id", textCol: String = "text",
-      verifyThreshold: Double = 0.7,
-      deepGraphs: Boolean = false): (DataFrame, () => Unit) = {
+      verifyThreshold: Double = 0.7): (DataFrame, () => Unit) = {
     val (afterExact, confirmed, release) = winnowCorpusStages(spark,
       docs, k, w, maxDf, minShared, idCol, textCol, verifyThreshold)
     val dropNearDup = Par.labeled(docs, "winnowCorpus: verify + components") {
-      (if (deepGraphs) clustersAltStar(spark, confirmed)
-      else clusters(spark, confirmed))
+      clusters(spark, confirmed)
     }
       .filter(col("node") =!= col("cluster_id"))
       .select(col("node").as(idCol))

@@ -60,12 +60,13 @@ private[graft] object Par {
     * pipeline fires during CONSTRUCTION (checkpoints, component rounds,
     * broadcast builds — which capture thread-locals) are attributable
     * in the UI / JobTime instead of surfacing as anonymous futures.
-    * Restores the caller's description: labels nest correctly and a
-    * harness's own label survives the call. */
+    * A caller's description is kept as a prefix (`"outer / inner"`), so
+    * a pipeline stage's label reaches the jobs its inner operators
+    * fire, and it is restored on exit. */
   def labeled[T](df: DataFrame, desc: String)(body: => T): T = {
     val sc = df.sparkSession.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(desc)
+    sc.setJobDescription(if (prev == null) desc else s"$prev / $desc")
     try body finally sc.setJobDescription(prev)
   }
 }

@@ -282,10 +282,7 @@ object Similarity {
       .withColumn("cosine", round(expr("dot64(va, vb)") / (col("na") * col("nb")), 4))
       .filter(col("cosine") >= threshold)
       .select(col("a_id"), col("b_id"))
-    // alternating stars, matching semanticDedupFixed: semantic dup
-    // families chain, so the pair graph's diameter is data-bounded and
-    // label propagation's round count with it (see there)
-    val drop = Dedup.clustersAltStar(spark, pairs)
+    val drop = Dedup.clusters(spark, pairs)
       .filter(col("node") =!= col("cluster_id"))
       .select(col("node").as("vec_id"))
     emb.withColumnRenamed(idCol, "vec_id").join(drop, Seq("vec_id"), "left_anti")
@@ -581,21 +578,17 @@ object Similarity {
       .withColumn("_rc", expr("dot64(va, vb)") / (col("na") * col("nb")))
       .filter(expr(s"round_ge(_rc, CAST($threshold AS DOUBLE), 4)"))
       .select(col("a_id"), col("b_id"))
-    // components via ALTERNATING STARS, not label propagation (round
-    // 15, guide §1.2/§2.4): semantic near-dup families CHAIN — a
-    // boilerplate template connects A–B, B–C, … — so the verified pair
-    // graph's diameter grows with the family length, and label
-    // propagation pays diameter/2 materialized rounds (JobTime at
-    // sf0.1: NINE rounds ≈ 56 of q142's 78 jobs; at any scale the
-    // round count is data-, not plan-, bounded). The alternating-star
-    // form converges in O(log n) rounds on any diameter with identical
-    // labels (spec-pinned equivalence — see dedupCorpus.deepGraphs).
-    val drop = Dedup.clustersAltStar(spark, pairs)
+    // semantic near-dup families CHAIN — a boilerplate template
+    // connects A–B, B–C, … — so the verified pair graph's diameter
+    // grows with the family length; clusters() costs no more rounds for
+    // that (union-find on the driver below its edge gate, log-many star
+    // rounds above it)
+    val drop = Dedup.clusters(spark, pairs)
       .filter(col("node") =!= col("cluster_id"))
       .select(col("node").as("vec_id"))
-    // clusters() is eager and its labels are checkpointed with
-    // truncated lineage — the assignment blocks are unreachable from
-    // `drop`, so free them now rather than leak them for the session
+    // clusters() is eager and its labels carry no lineage back to the
+    // pairs — the assignment blocks are unreachable from `drop`, so
+    // free them now rather than leak them for the session
     releaseAssign()
     // survivor set over ALL members (capped clusters included): a
     // fresh lazy assignment plan, as before — the materialized

@@ -147,9 +147,14 @@ object UrlNorm {
       UTF8String.fromString(host), UTF8String.fromString(rd))
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "url_norm",
-      (children: Seq[Expression]) => UrlNorm(children.head),
-      "built-in")
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("url_norm")
+    if (!reg.functionExists(id)) {
+      reg.createOrReplaceTempFunction(
+        "url_norm",
+        (children: Seq[Expression]) => UrlNorm(children.head),
+        "built-in")
+    }
+  }
 }

@@ -517,9 +517,10 @@ object ExtQueries {
   // ---------------------------------------------------------------- q65
   // Dedup clusters: connected components over the LSH candidate pairs,
   // each doc labeled with the smallest reachable doc_id (the canonical
-  // survivor). Spark side: iterative min-label propagation (diameter-
-  // bounded rounds); oracle: recursive transitive closure — any correct
-  // algorithm agrees on components, so the results are comparable.
+  // survivor). Spark side: Dedup.clusters, which at this size takes its
+  // driver union-find path; oracle: recursive transitive closure — any
+  // correct algorithm agrees on components, so the results are
+  // comparable.
   private val q65 = Q(
     "q65_dedup_clusters",
     (s, d) => {
@@ -1699,19 +1700,19 @@ object ExtQueries {
     q100.oracle) // q100's oracle VERBATIM
 
   // --------------------------------------------------------------- q102
-  // The SAME component labeling as q65 through the alternating-star
-  // algorithm (Kiveris et al., "Connected Components in MapReduce and
-  // Beyond" — O(log n) rounds regardless of graph DIAMETER, the
-  // deep-chain complement to q65's label propagation, which needs
-  // O(diameter) rounds). Shares q65's oracle verbatim: both algorithms
-  // must produce the identical min-id-per-component labeling, and this
-  // query makes the driver prove it (the q96/q93, q101/q100 pattern) —
-  // previously the star variant was spec-only.
+  // The SAME component labeling as q65 through Dedup.clusters' large-
+  // graph path, the alternating-star rounds (Kiveris et al., "Connected
+  // Components in MapReduce and Beyond" — O(log n) rounds regardless of
+  // graph DIAMETER), called directly: below clusters' edge gate the
+  // star path would never run at an oracle-checked scale. Shares q65's
+  // oracle verbatim: both paths must produce the identical
+  // min-id-per-component labeling, and this query makes the driver
+  // prove it (the q96/q93, q101/q100 pattern).
   private val q102 = Q(
     "q102_star_components",
     (s, d) => {
       val pairs = graft.ext.Dedup.lshCandidates(s, Tables.documents(s, d))
-      graft.ext.Dedup.clustersAltStar(s, pairs)
+      graft.ext.Dedup.starComponents(pairs)
         .select(col("node").as("doc_id"), col("cluster_id"))
         .orderBy(col("doc_id"))
     },

@@ -173,9 +173,9 @@ class ExtApiSpec extends SparkSpec {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     Dedup.clusters(spark, pairs).count()
     val added = spark.sparkContext.getPersistentRDDs.keySet -- before
-    // only the checkpoint backing the RETURNED labels frame may remain;
-    // edges and every superseded round must have been unpersisted
-    assert(added.size <= 1, s"leaked persistent RDDs: $added")
+    // a small graph takes the driver path: its labels are a local
+    // relation, so the edge checkpoint is released and nothing remains
+    assert(added.isEmpty, s"leaked persistent RDDs: $added")
   }
 
   test("verifyCandidates (set-based) matches the per-pair jaccard8 expression") {
@@ -844,51 +844,122 @@ class ExtApiSpec extends SparkSpec {
     assert(plan.contains("bloom_might_contain"), plan)
   }
 
-  test("clustersAltStar matches label-propagation clusters, incl. a deep chain") {
-    import spark.implicits._
-    def labelsOf(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("cluster_id")).toMap
-    // deep chain (diameter 63 — the shape where label propagation needs
-    // ~diameter hops and alternating stars need ~log rounds)
-    val chain = spark.range(63).selectExpr("id AS a_id", "id + 1 AS b_id")
-    val viaStar = labelsOf(Dedup.clustersAltStar(spark, chain))
-    // label propagation needs diameter-many hops (2/round): default
-    // maxIter=20 → 40 hops < 63 returns UNCONVERGED labels here — the
-    // exact failure mode the log-round star variant removes
-    val viaProp = labelsOf(Dedup.clusters(spark, chain, maxIter = 40))
-    assert(viaStar == viaProp)
-    assert(viaStar.values.toSet == Set(0L) && viaStar.size == 64)
-    // two cliques + pseudo-random edges
-    val rand = spark.range(120).selectExpr(
-      "(id * 17) % 40 AS a_id", "(id * 29) % 40 + CASE WHEN id % 2 = 0 THEN 0 ELSE 40 END AS b_id")
-      .filter("a_id <> b_id")
-    assert(labelsOf(Dedup.clustersAltStar(spark, rand)) ==
-      labelsOf(Dedup.clusters(spark, rand)))
+  private def labelsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("cluster_id")).toMap
+
+  /** Reference labels: min-label relaxation over the collected edges
+    * until nothing changes — slow, obvious, independent of both paths. */
+  private def referenceLabels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    var l = edges.flatMap { case (a, b) => Seq(a -> a, b -> b) }.toMap
+    var changed = true
+    while (changed) {
+      val next = edges.foldLeft(l) { case (m, (a, b)) =>
+        val lo = math.min(m(a), m(b)); m.updated(a, lo).updated(b, lo)
+      }
+      changed = next != l
+      l = next
+    }
+    l
   }
 
-  test("dedupCorpus deepGraphs=true keeps exactly the same survivors") {
+  /** The descriptions of every job `body` submits. */
+  private def jobDescriptions(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerAccess.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    scala.jdk.CollectionConverters.IterableHasAsScala(seen).asScala.toSeq
+  }
+
+  test("clusters: driver and star paths return the expected labels on every input") {
+    import spark.implicits._
+    val chain = (0L until 63L).map(i => (i, i + 1))
+    // two cliques + pseudo-random edges
+    val rand = (0L until 120L).map(i => ((i * 17) % 40, (i * 29) % 40 + (if (i % 2 == 0) 0 else 40)))
+      .filter { case (a, b) => a != b }
+    val cases = Seq(
+      ("63-link chain", chain, (0L to 63L).map(_ -> 0L).toMap),
+      ("random graph", rand, referenceLabels(rand)),
+      ("duplicate edges", Seq((1L, 2L), (1L, 2L), (2L, 3L), (2L, 3L)),
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L)),
+      ("both orientations of one edge", Seq((5L, 7L), (7L, 5L)), Map(5L -> 5L, 7L -> 5L)),
+      // a node whose only edge is a self-loop is its own cluster; a
+      // self-loop inside a component changes nothing
+      ("self-loops", Seq((4L, 4L), (8L, 9L), (9L, 9L)), Map(4L -> 4L, 8L -> 8L, 9L -> 8L)),
+      ("empty input", Seq.empty[(Long, Long)], Map.empty[Long, Long]))
+    assert(rand.nonEmpty && referenceLabels(rand).values.toSet.size > 1)
+    for ((name, edges, expected) <- cases) {
+      val pairs = edges.toDF("a_id", "b_id")
+      val viaDriver = Dedup.clusters(spark, pairs)
+      val viaStar = Dedup.starComponents(pairs)
+      assert(viaDriver.schema.map(f => f.name -> f.dataType) ==
+        viaStar.schema.map(f => f.name -> f.dataType), name)
+      assert(viaDriver.collect().sortBy(_.getLong(0)).toSeq ==
+        viaStar.collect().sortBy(_.getLong(0)).toSeq, name)
+      assert(labelsOf(viaDriver) == expected, name)
+    }
+  }
+
+  test("clusters converges on deep chains with its defaults (63 and 100 links)") {
+    for (links <- Seq(63, 100)) {
+      val chain = spark.range(links).selectExpr("id AS a_id", "id + 1 AS b_id")
+      val got = labelsOf(Dedup.clusters(spark, chain))
+      assert(got.size == links + 1 && got.values.toSet == Set(0L), s"$links links")
+    }
+  }
+
+  test("clusters above the driver gate runs the star rounds and labels every pair") {
+    val n = Dedup.LocalComponentsMaxEdges + 1
+    val pairs = spark.range(n).selectExpr("2 * id AS a_id", "2 * id + 1 AS b_id")
+    var out: org.apache.spark.sql.DataFrame = null
+    val descs = jobDescriptions {
+      out = Dedup.clusters(spark, pairs)
+    }
+    assert(descs.exists(_.contains("components: star round")), descs)
+    assert(!descs.exists(_.contains("components: collect edges")), descs)
+    assert(out.count() == 2 * n)
+    assert(out.filter(col("cluster_id") =!= col("node") - col("node") % 2).count() == 0)
+    // and a small input stays on the driver path: no star round
+    val small = jobDescriptions {
+      Dedup.clusters(spark, spark.range(10).selectExpr("2 * id AS a_id", "2 * id + 1 AS b_id"))
+    }
+    assert(small.exists(_.contains("components: collect edges")), small)
+    assert(!small.exists(_.contains("components: star round")), small)
+  }
+
+  test("dedupCorpus labels its component jobs with the stage and the operator") {
     import spark.implicits._
     // 10 groups × (4 exact copies of variant x + 4 of variant y); the
     // variants share a long body → exact stage keeps x,y per group, the
-    // near stage merges them → ~10 survivors
+    // near stage merges them
     val d = (0 until 80).map { i =>
       val g = i / 8
       val tail = if (i % 2 == 0) "x" else "y"
       (i.toLong, s"group $g carries a long shared sentence body used by every variant $tail")
     }.toDF("doc_id", "text")
-    val a = Dedup.dedupCorpus(spark, d, maxBucket = 8)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val b = Dedup.dedupCorpus(spark, d, maxBucket = 8, deepGraphs = true)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(a == b)
-    assert(a.nonEmpty && a.size < 80)
+    var kept = Set.empty[Long]
+    val descs = jobDescriptions {
+      kept = Dedup.dedupCorpus(spark, d, maxBucket = 8)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+    }
+    assert(kept.nonEmpty && kept.size < 80)
+    assert(descs.exists(s => s.contains("dedupCorpus: verify + components") &&
+      s.contains("components:")), descs)
   }
 
-  test("clustersAltStar frees its intermediate checkpoint blocks") {
+  test("clusters' star path frees its intermediate checkpoint blocks") {
     import spark.implicits._
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a_id", "b_id")
-    val out = Dedup.clustersAltStar(spark, pairs)
+    val out = Dedup.starComponents(pairs)
     out.count()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     // only the blocks backing the returned frame may remain

@@ -40,8 +40,10 @@ QUERIES = ["q52_lsh_candidates", "q65_dedup_clusters", "q72_verify_candidates",
            "q85_simhash_neardup", "q88_dup_span_frac", "q93_quality_gate",
            "q94_minhash_calibration", "q96_quality_gate_narrow",
            "q97_source_leakage", "q100_bpe_encode", "q101_bpe_encode_fast",
-           # round-6 document-axis additions: star CC (shares q65's
-           # recursive oracle), persisted-incremental dedup, chunking,
+           # round-6 document-axis additions: star CC (q102 calls
+           # Dedup.clusters' alternating-star path directly, so the
+           # oracle checks that path against q65's recursive CTE at
+           # every scale), persisted-incremental dedup, chunking,
            # dup profile, top terms. q104_dedup_corpus (one-call dedup)
            # is deliberately ABSENT: its single-query DuckDB replay
            # (shingles + banding + verify + recursive CC in one plan)
