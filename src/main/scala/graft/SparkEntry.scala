@@ -12,4 +12,20 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     graft.queries.Registry.oracleSql
+  /** The queries both mains run, sorted by name: those whose name starts
+    * with one of the comma-separated prefixes in `only`
+    * (`SPARK_GRAFT_ONLY=q93_,q96_`), or all of them when it is unset or
+    * blank. A prefix that selects nothing throws, naming every such
+    * prefix, so a typo fails the run instead of silently timing or
+    * dumping fewer queries. */
+  def selected(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY"))
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries.toSeq.sortBy(_._1)
+    val prefixes = only.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    val unmatched = prefixes.filterNot(p => all.exists(_._1.startsWith(p)))
+    require(unmatched.isEmpty,
+      s"SPARK_GRAFT_ONLY: no query name starts with ${unmatched.mkString(", ")}")
+    if (prefixes.isEmpty) all
+    else all.filter { case (n, _) => prefixes.exists(n.startsWith) }
+  }
 }

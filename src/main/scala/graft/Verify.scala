@@ -5,16 +5,12 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // SPARK_GRAFT_ONLY=q146,q147 dumps only the queries with those name
+    // prefixes; unset (the driver) → all.
+    val selected = SparkEntry.selected()
     val spark = Engine.session()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Builder-side iteration aid: SPARK_GRAFT_ONLY=q146,q147 dumps only
-    // matching queries (prefix match). Unset (the driver) → all.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected = only.fold(SparkEntry.queries) { prefixes =>
-      SparkEntry.queries.filter { case (n, _) => prefixes.exists(n.startsWith) }
-    }
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

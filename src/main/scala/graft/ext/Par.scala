@@ -59,7 +59,8 @@ private[graft] object Par {
   /** Run `body` with a job description (guide §1.5) so the eager jobs a
     * pipeline fires during CONSTRUCTION (checkpoints, component rounds,
     * broadcast builds — which capture thread-locals) are attributable
-    * in the UI / JobTime instead of surfacing as anonymous futures.
+    * in the UI and in Bench's per-job records instead of surfacing as
+    * anonymous futures.
     * A caller's description is kept as a prefix (`"outer / inner"`), so
     * a pipeline stage's label reaches the jobs its inner operators
     * fire, and it is restored on exit. */

@@ -686,7 +686,7 @@ object TextStats {
     * the interpreted sorted-run `aggregate`/`array_sort` SQL form
     * (round 5) — higher-order lambdas are interpreted, paying a boxed
     * call per word plus two `array_sort`s per row; the compiled pass
-    * measured 3.9× faster at sf0.1 (QBench q96 1.53s → 0.39s, now
+    * measured 3.9× faster at sf0.1 (q96 1.53s → 0.39s min-of-N, now
     * ~3× faster than the relational q93 instead of slower) and keeps
     * the whole gate inside one codegen stage. Oracle parity is
     * preserved by construction: `gopher_stats` returns raw INTEGERS
@@ -772,7 +772,7 @@ object TextStats {
       topBigrams: Int = 4096, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     // scale-gated spread before the corpus explodes (round 15): the
-    // sf1 JobTime probe read the scoring pass at 4.1 s on TWO tasks —
+    // sf1 per-job timeline read the scoring pass at 4.1 s on TWO tasks —
     // the one-row-group corpus arrives as 1-2 splits and every
     // explode + partial-aggregate (word histogram, bigram histogram,
     // the scoring join) serializes there, growing linearly with the
@@ -1065,7 +1065,7 @@ object TextStats {
     // still read ~1 s — the stage's wall is the (n,g) shuffle write),
     // and the repartition itself cost +0.4 s net (1.77 → 2.16 s) since
     // BOTH gram references pay the exchange. Same-window stash A/B,
-    // QBench min-of-4.
+    // min-of-4.
     val grams = docs
       .select(col(idCol), evalPred.as("is_eval"),
         explode(expr(s"gram_keys($textCol)")).as("t"))

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Single registration entry point for every custom Catalyst function
   * the engine ships. Every engine-owned session gets it through
-  * [[graft.Engine.session]], never a hand-picked subset — round 5's QBench
-  * registered only 4 of the then-8 functions, so a SQL query using
+  * [[graft.Engine.session]], never a hand-picked subset — round 5's one-query
+  * timer registered only 4 of the then-8 functions, so a SQL query using
   * `shingles8` would fail there while passing in Bench. Operators keep
   * registering their own dependencies (each `register` is idempotent),
   * so library users never need this unless they write raw

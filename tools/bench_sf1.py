@@ -16,8 +16,11 @@ doc an exact copy, which collapses the dedup stack into its
 degenerate-equality fast path and under-reports verify cost.
 
 Usage: python3 tools/bench_sf1.py [--skip-build] [--runs N]
-Writes /tmp/sf1/*.parquet (other tables symlinked from sf0.1),
-expects `sbt` on PATH, emits BENCH_sf1.md in the repo root.
+Writes /tmp/sf1/*.parquet (other tables symlinked from sf0.1), needs
+/tmp/verify_out/oracle_sql.json (graft.Verify) and `sbt` on PATH, emits
+BENCH_sf1.md in the repo root. Both engines are timed by tools/timing.py:
+Spark by graft.Bench's protocol (min-of-N, no per-query warm shot), on
+SPARK_GRAFT_CPUS or this host's core count.
 
 RUN ON A QUIET MACHINE. The first round-6 run recorded q72 at 489s
 (clean: ~12s) because a concurrent `sbt test` shared the 32 cores —
@@ -25,15 +28,15 @@ min-of-N does not save you when every shot is contended. Each engine's
 per-query min/max spread is printed and written to the artifact so a
 contaminated run is at least self-evident.
 """
-import argparse, json, os, re, subprocess, sys, time
+import argparse, json, os
 
 import duckdb
 
 import calibration
+from timing import CORES, REPO, TABLES, respread, time_duckdb, time_spark
 
 SF01 = "/root/testdata/sf0.1"
 SF1 = "/tmp/sf1"
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # the heaviest text/dedup queries at sf0.1 (bench.json order) + the
 # two BPE encode forms (the chain-vs-compiled scale story)
 QUERIES = ["q52_lsh_candidates", "q65_dedup_clusters", "q72_verify_candidates",
@@ -104,8 +107,6 @@ QUERIES = ["q52_lsh_candidates", "q65_dedup_clusters", "q72_verify_candidates",
            # canonicalization + the per-domain dup profile
            "q87_repeated_spans", "q166_phash_banding",
            "q167_url_normalize", "q168_host_dup_profile"]
-TABLES = ["region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings"]
 
 # Slow-by-adjudicated-design rows: deliberately relational
 # oracle-replayable twins whose PRODUCTION form is also in the table.
@@ -146,112 +147,6 @@ def build():
     print(f"[build] {SF1}/documents.parquet: {n} docs")
 
 
-# a row whose max/min shot ratio exceeds this shipped CONTAMINATED in
-# round 11 (q166 at sf2, spread 2.70x - a background blip landed inside
-# one shot): rows over the bar are auto re-measured so adjudication
-# notes stay about floors, never about measurement noise
-SPREAD_BAR = 1.5
-MAX_REMEASURE = 2
-
-
-def respread(kind, timer, runs, out, spread):
-    """Re-measure rows whose spread exceeds SPREAD_BAR (up to
-    MAX_REMEASURE attempts), keeping the min across attempts and the
-    LAST attempt's spread. DNF rows (NaN spread) are left alone."""
-    for attempt in range(MAX_REMEASURE):
-        bad = sorted(q for q in out
-                     if spread[q] == spread[q] and spread[q] > SPREAD_BAR)
-        if not bad:
-            return
-        print(f"[respread] {kind} attempt {attempt + 1}: re-measuring "
-              f"{len(bad)} row(s) over {SPREAD_BAR}x: {', '.join(bad)}")
-        # a failed RE-measure must never discard the completed primary
-        # pass: keep the measured floors and report, don't raise
-        # (time_spark raises SystemExit on a missing line; subprocess
-        # can raise TimeoutExpired)
-        try:
-            res = timer(runs, bad)
-        except BaseException as e:
-            print(f"[respread] {kind} re-measure failed ({e}); "
-                  f"keeping primary measurements")
-            return
-        nout, nspread = res[0], res[1]
-        for q in bad:
-            if q in nout and nout[q] == nout[q]:
-                out[q] = min(out[q], nout[q])
-                spread[q] = nspread[q]
-    bad = sorted(q for q in out
-                 if spread[q] == spread[q] and spread[q] > SPREAD_BAR)
-    if bad:
-        print(f"[respread] {kind}: still over the bar after "
-              f"{MAX_REMEASURE} re-measures: {', '.join(bad)}")
-
-
-def time_duckdb(runs, queries=None):
-    oracle = json.load(open("/tmp/verify_out/oracle_sql.json"))
-    out, spread = {}, {}
-    for q in (queries or QUERIES):
-        sql = oracle[q]
-        shots = []
-        failed = None
-        for _ in range(runs):
-            # fresh connection per shot: no buffer-cache carryover between
-            # queries, matching Bench's clearCache isolation
-            con = duckdb.connect()
-            con.execute("SET threads TO 32")
-            # fail fast instead of filling the disk: q104's replay hit
-            # "No space left on device" after >78 GB of .tmp spill
-            con.execute("SET max_temp_directory_size='40GB'")
-            for t in TABLES:
-                con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                            f"read_parquet('{SF1}/{t}.parquet')")
-            t0 = time.time()
-            try:
-                con.execute(sql).fetchall()
-            except Exception as e:
-                # a replay that exhausts the spill cap (q104 shape) is a
-                # FINDING, not a crash: record DNF and move on
-                failed = f"{type(e).__name__}: {e}"[:200]
-                con.close()
-                break
-            shots.append(time.time() - t0)
-            con.close()
-        if failed:
-            # ANY failed shot marks the row DNF — a query that survives
-            # shot 1 but dies on shot 2 (spill-cap nondeterminism) must
-            # not report min(partial shots) as if all runs succeeded
-            out[q], spread[q] = float("nan"), float("nan")
-            done = f" after {len(shots)} clean shot(s)" if shots else ""
-            print(f"[duckdb] {q:30s} DNF{done} ({failed})")
-        else:
-            out[q], spread[q] = min(shots), max(shots) / min(shots)
-            print(f"[duckdb] {q:30s} {out[q]:.2f}s (spread {spread[q]:.2f}x)")
-    return out, spread
-
-
-def time_spark(runs, queries=None):
-    queries = queries or QUERIES
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=SF1, SPARK_GRAFT_CPUS="32",
-               SPARK_GRAFT_BENCH_RUNS=str(runs))
-    p = subprocess.run(
-        ["sbt", "-batch", "runMain graft.tools.QBench " + " ".join(queries)],
-        cwd=REPO, env=env, capture_output=True, text=True, timeout=3600)
-    out, spread = {}, {}
-    for m in re.finditer(
-            r"\[qbench\] (\S+)\s+min=([0-9.]+)s runs=Vector\(([0-9., ]+)\)",
-            p.stdout):
-        shots = [float(x) for x in m.group(3).split(",")]
-        out[m.group(1)] = float(m.group(2))
-        spread[m.group(1)] = max(shots) / min(shots)
-        print(f"[spark]  {m.group(1):30s} {float(m.group(2)):.2f}s "
-              f"(spread {spread[m.group(1)]:.2f}x)")
-    missing = [q for q in queries if q not in out]
-    if missing:
-        sys.stderr.write(p.stdout[-3000:] + p.stderr[-2000:])
-        raise SystemExit(f"spark timings missing for {missing}")
-    return out, spread
-
-
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--skip-build", action="store_true")
@@ -264,11 +159,11 @@ def main():
     # under host contention is flagged AT MEASUREMENT TIME instead of
     # being caught (or missed) later against committed floors
     cal = [calibration.probe()]
-    sp, sps = time_spark(args.runs)
-    respread("spark", time_spark, args.runs, sp, sps)
+    sp, sps = time_spark(SF1, args.runs, QUERIES)
+    respread("spark", lambda qs: time_spark(SF1, args.runs, qs), sp, sps)
     cal.append(calibration.probe())
-    dk, dks = time_duckdb(args.runs)
-    respread("duckdb", time_duckdb, args.runs, dk, dks)
+    dk, dks, dnote = time_duckdb(SF1, args.runs, QUERIES)
+    respread("duckdb", lambda qs: time_duckdb(SF1, args.runs, qs), dk, dks)
     cal.append(calibration.probe())
     legs = calibration.report(cal, ["spark", "duckdb"])
     # sf0.1 comparison column from the committed full-suite bench.json
@@ -277,7 +172,7 @@ def main():
         "# BENCH_sf1 — 10× documents (50,000 docs), Spark vs DuckDB",
         "",
         "Built by `tools/bench_sf1.py` (near-duplicate replication; see its",
-        "docstring). min-of-%d per engine, 32 threads both, same parquet." % args.runs,
+        f"docstring). min-of-{args.runs} per engine, {CORES} threads both, same parquet.",
         "Spread = max/min across shots; >1.5× means that row was measured",
         "under contention and shouldn't be trusted.",
         "",
@@ -298,8 +193,8 @@ def main():
         return f"oracle-form twin; production = {t}"
 
     for q in QUERIES:
-        if dk[q] != dk[q]:  # NaN → oracle replay DNF'd (spill cap)
-            lines.append(f"| {q} | {sp[q]:.2f} | DNF (spill cap) | — "
+        if dk[q] != dk[q]:  # NaN → oracle replay DNF'd (spill cap, timeout)
+            lines.append(f"| {q} | {sp[q]:.2f} | DNF ({dnote[q]}) | — "
                          f"| {b01.get(q, float('nan')):.2f} | "
                          f"{sp[q] / b01[q] if b01.get(q, 0) > 0 else float('nan'):.1f}× "
                          f"| {sps[q]:.2f}×/— | {adjudication(q)} |")

@@ -11,25 +11,28 @@ all text-axis) were never measured on. The embeddings axis has three
 decades of evidence (BENCH_sfe.md); this is the text
 axis's third decade.
 
-DuckDB replays run in a SUBPROCESS per shot with a hard timeout and a
-20 GB spill cap (35 GB free on this host): at this scale several
+Both engines are timed by tools/timing.py: Spark by graft.Bench's
+protocol (min-of-N, no per-query warm shot), DuckDB in a subprocess per
+shot with a hard timeout and a spill cap. At this scale several
 replays are expected to DNF - that is a finding, recorded per row,
 not a crash.
 
 Usage: python3 tools/bench_sf2.py [--skip-build] [--runs N]
-Needs /tmp/sf1 built (tools/bench_sf1.py) or builds both layers here.
+Builds both corpus layers here; needs /tmp/verify_out/oracle_sql.json
+(graft.Verify) and `sbt` on PATH. Runs on SPARK_GRAFT_CPUS or this
+host's core count, with the Spark heap from SPARK_DRIVER_MEM.
 RUN ON A QUIET MACHINE (see bench_sf1.py's warning).
 """
-import argparse, json, multiprocessing, os, re, subprocess, sys, time
+import argparse, os, re
 
 import duckdb
 
 import calibration
+from timing import (CORES, DUCK_TIMEOUT_S, REPO, SPILL_CAP, TABLES, respread,
+                    time_duckdb, time_spark)
 
 SF01 = "/root/testdata/sf0.1"
 SF2 = "/tmp/sf2"
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-DUCK_TIMEOUT_S = 600
 
 # the winnow/dedup/components/calibration family - the suite's top
 # sf0.1 wall rows, all text-axis - plus the span/banding rows that
@@ -44,8 +47,6 @@ QUERIES = ["q52_lsh_candidates", "q65_dedup_clusters",
            "q151_dedup_savings", "q152_incremental_winnow",
            "q160_incremental_winnow_indexed", "q163_winnow_index_merged",
            "q166_phash_banding"]
-TABLES = ["region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings"]
 
 
 def build():
@@ -79,125 +80,6 @@ def build():
     print(f"[build] {SF2}/documents.parquet: {n} docs")
 
 
-def _duck_shot(sql, q):
-    con = duckdb.connect()
-    con.execute("SET threads TO 32")
-    con.execute("SET max_temp_directory_size='20GB'")
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"read_parquet('{SF2}/{t}.parquet')")
-    t0 = time.time()
-    con.execute(sql).fetchall()
-    return time.time() - t0
-
-
-def _duck_worker(sql, q, ret):
-    try:
-        ret["t"] = _duck_shot(sql, q)
-    except Exception as e:
-        # first line only: multi-line DuckDB messages would break the
-        # generated markdown table row
-        ret["err"] = f"{type(e).__name__}: {e}".splitlines()[0][:120]
-
-
-# round-11's q166 sf2 row shipped contaminated (spread 2.70x - a
-# background blip inside one shot): rows over this bar are auto
-# re-measured so adjudication notes are about floors, not noise
-SPREAD_BAR = 1.5
-MAX_REMEASURE = 2
-
-
-def respread(kind, timer, runs, out, spread):
-    """Re-measure rows whose max/min shot spread exceeds SPREAD_BAR (up
-    to MAX_REMEASURE attempts): min across attempts, the LAST attempt's
-    spread. DNF rows (NaN) are a finding, not noise - left alone."""
-    for attempt in range(MAX_REMEASURE):
-        bad = sorted(q for q in out
-                     if spread[q] == spread[q] and spread[q] > SPREAD_BAR)
-        if not bad:
-            return
-        print(f"[respread] {kind} attempt {attempt + 1}: re-measuring "
-              f"{len(bad)} row(s) over {SPREAD_BAR}x: {', '.join(bad)}")
-        # a failed RE-measure must never discard the completed primary
-        # pass: keep the measured floors and report, don't raise
-        # (time_spark raises SystemExit on a missing line; subprocess
-        # can raise TimeoutExpired)
-        try:
-            res = timer(runs, bad)
-        except BaseException as e:
-            print(f"[respread] {kind} re-measure failed ({e}); "
-                  f"keeping primary measurements")
-            return
-        nout, nspread = res[0], res[1]
-        for q in bad:
-            if q in nout and nout[q] == nout[q]:
-                out[q] = min(out[q], nout[q])
-                spread[q] = nspread[q]
-    bad = sorted(q for q in out
-                 if spread[q] == spread[q] and spread[q] > SPREAD_BAR)
-    if bad:
-        print(f"[respread] {kind}: still over the bar after "
-              f"{MAX_REMEASURE} re-measures: {', '.join(bad)}")
-
-
-def time_duckdb(runs, queries=None):
-    oracle = json.load(open("/tmp/verify_out/oracle_sql.json"))
-    out, spread, note = {}, {}, {}
-    for q in (queries or QUERIES):
-        sql = oracle[q]
-        shots, failed = [], None
-        for _ in range(runs):
-            # subprocess per shot: a replay that hangs past the timeout
-            # (recursive CC / composed winnow at 500k docs) is killed and
-            # recorded as DNF instead of wedging the whole artifact
-            mgr = multiprocessing.Manager()
-            ret = mgr.dict()
-            p = multiprocessing.Process(target=_duck_worker, args=(sql, q, ret))
-            p.start()
-            p.join(DUCK_TIMEOUT_S)
-            if p.is_alive():
-                p.terminate()
-                p.join()
-                failed = f"timeout >{DUCK_TIMEOUT_S}s"
-                break
-            if "err" in ret:
-                failed = ret["err"]
-                break
-            shots.append(ret["t"])
-        if failed:
-            out[q], spread[q], note[q] = float("nan"), float("nan"), failed
-            done = f" after {len(shots)} clean shot(s)" if shots else ""
-            print(f"[duckdb] {q:34s} DNF{done} ({failed})")
-        else:
-            out[q], spread[q], note[q] = min(shots), max(shots) / min(shots), ""
-            print(f"[duckdb] {q:34s} {out[q]:.2f}s (spread {spread[q]:.2f}x)")
-    return out, spread, note
-
-
-def time_spark(runs, queries=None):
-    queries = queries or QUERIES
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=SF2, SPARK_GRAFT_CPUS="32",
-               SPARK_GRAFT_BENCH_RUNS=str(runs),
-               SPARK_DRIVER_MEM=os.environ.get("SPARK_DRIVER_MEM", "48g"))
-    p = subprocess.run(
-        ["sbt", "-batch", "runMain graft.tools.QBench " + " ".join(queries)],
-        cwd=REPO, env=env, capture_output=True, text=True, timeout=7200)
-    out, spread = {}, {}
-    for m in re.finditer(
-            r"\[qbench\] (\S+)\s+min=([0-9.]+)s runs=Vector\(([0-9., ]+)\)",
-            p.stdout):
-        shots = [float(x) for x in m.group(3).split(",")]
-        out[m.group(1)] = float(m.group(2))
-        spread[m.group(1)] = max(shots) / min(shots)
-        print(f"[spark]  {m.group(1):34s} {float(m.group(2)):.2f}s "
-              f"(spread {spread[m.group(1)]:.2f}x)")
-    missing = [q for q in queries if q not in out]
-    if missing:
-        sys.stderr.write(p.stdout[-3000:] + p.stderr[-2000:])
-        raise SystemExit(f"spark timings missing for {missing}")
-    return out, spread
-
-
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--skip-build", action="store_true")
@@ -209,11 +91,11 @@ def main():
     # bracket each engine leg with a fixed pure-CPU probe so a
     # contaminated leg is flagged at measurement time
     cal = [calibration.probe()]
-    sp, sps = time_spark(args.runs)
-    respread("spark", time_spark, args.runs, sp, sps)
+    sp, sps = time_spark(SF2, args.runs, QUERIES)
+    respread("spark", lambda qs: time_spark(SF2, args.runs, qs), sp, sps)
     cal.append(calibration.probe())
-    dk, dks, dnote = time_duckdb(args.runs)
-    respread("duckdb", time_duckdb, args.runs, dk, dks)
+    dk, dks, dnote = time_duckdb(SF2, args.runs, QUERIES)
+    respread("duckdb", lambda qs: time_duckdb(SF2, args.runs, qs), dk, dks)
     cal.append(calibration.probe())
     legs = calibration.report(cal, ["spark", "duckdb"])
     # sf1 comparison column from the committed BENCH_sf1.md table
@@ -228,8 +110,8 @@ def main():
         "Built by `tools/bench_sf2.py`: the sf1 corpus (50k docs, 10 near-dup",
         "replicas of sf0.1) replicated ×10 again with a second marker token —",
         "~100 near-dup clones per base doc, so pair density scales with the",
-        "row count. min-of-%d per engine, 32 threads both, same parquet;" % args.runs,
-        f"DuckDB shots subprocess-isolated (timeout {DUCK_TIMEOUT_S}s, 20 GB spill cap).",
+        f"row count. min-of-{args.runs} per engine, {CORES} threads both, same parquet;",
+        f"DuckDB shots subprocess-isolated (timeout {DUCK_TIMEOUT_S}s, {SPILL_CAP} spill cap).",
         "",
         calibration.md_line(cal, legs),
         "",

@@ -18,19 +18,22 @@ artifact answers ONE question: does each capped chain's wall scale
 <= its work contract when rows x10 AND pair density x10?
 
 Usage: python3 tools/bench_sf3.py [--runs N] [--skip-build]
-Needs /tmp/sf2 (tools/bench_sf2.py --skip-build builds it too).
+Builds /tmp/sf2 (bench_sf2's corpus) too when it is missing; needs `sbt`
+on PATH. Spark is timed by tools/timing.py with graft.Bench's protocol
+(min-of-N, no per-query warm shot), on SPARK_GRAFT_CPUS or this host's
+core count, with the heap from SPARK_DRIVER_MEM.
 RUN ON A QUIET MACHINE (see bench_sf1.py's warning).
 """
-import argparse, os, re, subprocess, sys
+import argparse, os, sys
 
 import duckdb
 
 import calibration
+from timing import CORES, REPO, TABLES, respread, time_spark
 
 SF01 = "/root/testdata/sf0.1"
 SF2 = "/tmp/sf2"
 SF3 = "/tmp/sf3"
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # the capped family: winnow chains bounded by the fingerprint df cap +
 # the composed intake (increment-bounded stages + snapshot discipline)
@@ -46,10 +49,6 @@ SKIPPED = ["q52_lsh_candidates", "q65_dedup_clusters",
            "q94_minhash_calibration", "q102_star_components",
            "q133_winnowing", "q136_winnow_candidates",
            "q151_dedup_savings", "q166_phash_banding"]
-TABLES = ["region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings"]
-SPREAD_BAR = 1.5
-MAX_REMEASURE = 2
 
 
 def build():
@@ -80,51 +79,6 @@ def build():
     print(f"[build] {SF3}/documents.parquet: {n} docs")
 
 
-def time_spark(sfdir, runs, queries=None):
-    queries = queries or QUERIES
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sfdir, SPARK_GRAFT_CPUS="32",
-               SPARK_GRAFT_BENCH_RUNS=str(runs),
-               SPARK_DRIVER_MEM=os.environ.get("SPARK_DRIVER_MEM", "48g"))
-    p = subprocess.run(
-        ["sbt", "-batch", "runMain graft.tools.QBench " + " ".join(queries)],
-        cwd=REPO, env=env, capture_output=True, text=True, timeout=14400)
-    out, spread = {}, {}
-    for m in re.finditer(
-            r"\[qbench\] (\S+)\s+min=([0-9.]+)s runs=Vector\(([0-9., ]+)\)",
-            p.stdout):
-        shots = [float(x) for x in m.group(3).split(",")]
-        out[m.group(1)] = float(m.group(2))
-        spread[m.group(1)] = max(shots) / min(shots)
-        print(f"[spark {os.path.basename(sfdir)}] {m.group(1):34s} "
-              f"{float(m.group(2)):.2f}s (spread {spread[m.group(1)]:.2f}x)")
-    missing = [q for q in queries if q not in out]
-    if missing:
-        sys.stderr.write(p.stdout[-3000:] + p.stderr[-2000:])
-        raise SystemExit(f"spark timings missing for {missing}")
-    return out, spread
-
-
-def respread(kind, timer, runs, out, spread):
-    for attempt in range(MAX_REMEASURE):
-        bad = sorted(q for q in out
-                     if spread[q] == spread[q] and spread[q] > SPREAD_BAR)
-        if not bad:
-            return
-        print(f"[respread] {kind} attempt {attempt + 1}: re-measuring "
-              f"{len(bad)} row(s) over {SPREAD_BAR}x: {', '.join(bad)}")
-        try:
-            res = timer(runs, bad)
-        except BaseException as e:
-            print(f"[respread] {kind} re-measure failed ({e}); "
-                  f"keeping primary measurements")
-            return
-        nout, nspread = res[0], res[1]
-        for q in bad:
-            if q in nout and nout[q] == nout[q]:
-                out[q] = min(out[q], nout[q])
-                spread[q] = nspread[q]
-
-
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--skip-build", action="store_true")
@@ -138,13 +92,11 @@ def main():
     # own prescription — this harness's primary sf2 leg shipped
     # contaminated once): bracket each leg with a fixed pure-CPU probe
     cal = [calibration.probe()]
-    s2, s2s = time_spark(SF2, args.runs)
-    respread("spark-sf2", lambda r, q=None: time_spark(SF2, r, q),
-             args.runs, s2, s2s)
+    s2, s2s = time_spark(SF2, args.runs, QUERIES)
+    respread("spark-sf2", lambda qs: time_spark(SF2, args.runs, qs), s2, s2s)
     cal.append(calibration.probe())
-    s3, s3s = time_spark(SF3, args.runs)
-    respread("spark-sf3", lambda r, q=None: time_spark(SF3, r, q),
-             args.runs, s3, s3s)
+    s3, s3s = time_spark(SF3, args.runs, QUERIES)
+    respread("spark-sf3", lambda qs: time_spark(SF3, args.runs, qs), s3, s3s)
     cal.append(calibration.probe())
     legs = calibration.report(cal, ["spark-sf2", "spark-sf3"])
     lines = [
@@ -152,7 +104,7 @@ def main():
         "",
         "Built by `tools/bench_sf3.py`: the sf2 corpus replicated ×10 with a",
         "third marker token (~1000 near-dup clones per sf0.1 base doc). Both",
-        "columns measured back-to-back in this run (min-of-%d, 32 threads)," % args.runs,
+        f"columns measured back-to-back in this run (min-of-{args.runs}, {CORES} threads),",
         "so the ×10 factor is same-session. No DuckDB column: the oracle",
         "replays of this family already DNF at sf2; correctness is pinned at",
         "the sf0.01 driver gate.",

@@ -38,18 +38,22 @@ distribution — the production knob is centroid count, not ratio
 heroics on a 16-cell toy grid).
 
 Writes /tmp/sfe/embeddings.parquet (other tables symlinked from sf0.1),
-expects `sbt` on PATH, emits BENCH_sfe.md in the repo root.
+needs /tmp/verify_out/oracle_sql.json (graft.Verify) and `sbt` on PATH,
+emits BENCH_sfe.md in the repo root. Both engines are timed by
+tools/timing.py: Spark by graft.Bench's protocol (min-of-N, no per-query
+warm shot), on SPARK_GRAFT_CPUS or this host's core count.
 
 RUN ON A QUIET MACHINE (see bench_sf1.py's cautionary tale).
 """
-import argparse, json, os, re, subprocess, sys, time
+import argparse, json, os
 
 import duckdb
+
+from timing import CORES, REPO, TABLES, time_duckdb, time_spark
 
 SF01 = "/root/testdata/sf0.1"
 SFE = "/tmp/sfe"
 SFE10 = "/tmp/sfe10"
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # excluded from the 200k decade (see docstring): quadratic-pair
 # contracts on the fixed toy quantizer + the brute-force baseline
 DECADE_SKIP = {"q142_semantic_dedup", "q153_knn_graph", "q111_ann_recall"}
@@ -71,8 +75,6 @@ QUERIES = [
     "q159_kcenter_incremental", "q149_cluster_cap", "q153_knn_graph",
     "q155_dist_quantiles",
 ]
-TABLES = ["region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings"]
 
 
 def build():
@@ -127,75 +129,20 @@ def build_decade():
     print(f"[build] {SFE10}/embeddings.parquet: {n} vectors")
 
 
-def time_duckdb(runs):
-    sqls = json.load(open("/tmp/verify_out/oracle_sql.json"))
-    out, spread = {}, {}
-    for q in QUERIES:
-        sql = sqls[q]
-        shots = []
-        failed = None
-        for _ in range(runs):
-            con = duckdb.connect()
-            con.execute("SET threads TO 32")
-            con.execute("SET max_temp_directory_size='40GB'")
-            for t in TABLES:
-                con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                            f"read_parquet('{SFE}/{t}.parquet')")
-            t0 = time.time()
-            try:
-                con.execute(sql).fetchall()
-            except Exception as e:
-                failed = f"{type(e).__name__}: {e}"[:200]
-                con.close()
-                break
-            shots.append(time.time() - t0)
-            con.close()
-        if failed:
-            out[q], spread[q] = float("nan"), float("nan")
-            done = f" after {len(shots)} clean shot(s)" if shots else ""
-            print(f"[duckdb] {q:30s} DNF{done} ({failed})")
-        else:
-            out[q], spread[q] = min(shots), max(shots) / min(shots)
-            print(f"[duckdb] {q:30s} {out[q]:.2f}s (spread {spread[q]:.2f}x)")
-    return out, spread
-
-
-def time_spark(runs, sf_dir=SFE, queries=QUERIES):
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS="32",
-               SPARK_GRAFT_BENCH_RUNS=str(runs))
-    p = subprocess.run(
-        ["sbt", "-batch", "runMain graft.tools.QBench " + " ".join(queries)],
-        cwd=REPO, env=env, capture_output=True, text=True, timeout=7200)
-    out, spread = {}, {}
-    for m in re.finditer(
-            r"\[qbench\] (\S+)\s+min=([0-9.]+)s runs=Vector\(([0-9., ]+)\)",
-            p.stdout):
-        shots = [float(x) for x in m.group(3).split(",")]
-        out[m.group(1)] = float(m.group(2))
-        spread[m.group(1)] = max(shots) / min(shots)
-        print(f"[spark]  {m.group(1):30s} {float(m.group(2)):.2f}s "
-              f"(spread {spread[m.group(1)]:.2f}x)")
-    missing = [q for q in queries if q not in out]
-    if missing:
-        sys.stderr.write(p.stdout[-3000:] + p.stderr[-2000:])
-        raise SystemExit(f"spark timings missing for {missing}")
-    return out, spread
-
-
 def run_decade(runs):
     """Spark-only 200k decade: fresh 20k + 200k runs in one session,
     appended to BENCH_sfe.md as its own section."""
     build_decade()
     qs = [q for q in QUERIES if q not in DECADE_SKIP]
     print("[decade] 20k reference run")
-    s20, sp20 = time_spark(runs, SFE, qs)
+    s20, sp20 = time_spark(SFE, runs, qs)
     print("[decade] 200k run")
-    s200, sp200 = time_spark(runs, SFE10, qs)
+    s200, sp200 = time_spark(SFE10, runs, qs)
     lines = [
         "", "## 200k-vector decade (Spark-only)", "",
         "Another ×10 on the vector axis (200,000 × 64-dim, 100 near-dup",
         "replicas), both runs measured back-to-back in this session",
-        f"(min-of-{runs}). No DuckDB column: the 20k replay already DNF'd /",
+        f"(min-of-{runs}, {CORES} threads). No DuckDB column: the 20k replay already DNF'd /",
         "took 506s on the pair family; q142/q153/q111 excluded here for the",
         "same Σ cᵢ² / |q|·n contract reason (see module docstring — the",
         "200k salted-pair evidence came from a separate 256-cell probe).",
@@ -254,15 +201,14 @@ def main():
     if args.decade:
         run_decade(args.runs)
         return
-    sp, sps = time_spark(args.runs)
-    dk, dks = time_duckdb(args.runs)
+    sp, sps = time_spark(SFE, args.runs, QUERIES)
+    dk, dks, dnote = time_duckdb(SFE, args.runs, QUERIES)
     b01 = json.load(open(os.path.join(REPO, "bench.json")))["queries"]
     lines = [
         "# BENCH_sfe — 10× embeddings (20,000 × 64-dim), Spark vs DuckDB",
         "",
         "Built by `tools/bench_sfe.py` (near-duplicate vector replication;",
-        "see its docstring). min-of-%d per engine, 32 threads both, same"
-        % args.runs,
+        f"see its docstring). min-of-{args.runs} per engine, {CORES} threads both, same",
         "parquet. Spread = max/min across shots; >1.5× means that row was",
         "measured under contention and shouldn't be trusted.",
         "",
@@ -272,7 +218,7 @@ def main():
     worsening = []
     for q in QUERIES:
         if dk[q] != dk[q]:  # NaN -> oracle replay DNF'd
-            lines.append(f"| {q} | {sp[q]:.2f} | DNF (spill cap) | — "
+            lines.append(f"| {q} | {sp[q]:.2f} | DNF ({dnote[q]}) | — "
                          f"| {b01.get(q, float('nan')):.2f} | "
                          f"{sp[q] / b01[q] if b01.get(q, 0) > 0 else float('nan'):.1f}× "
                          f"| {sps[q]:.2f}×/— |")

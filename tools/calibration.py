@@ -12,7 +12,7 @@ see MEMORY-BANDWIDTH contention, and the spread guard is equally blind
 when every shot in a window is uniformly slow. Each probe reading is
 therefore a pair:
 
-  cpu — a CPU-bound DuckDB aggregate over a generated range (32
+  cpu — a CPU-bound DuckDB aggregate over a generated range (CORES
         threads; catches steal/scheduler contention);
   mem — a full-scan aggregate over an 800 MB in-memory table built
         once per harness run (catches memory-bandwidth/page-cache
@@ -40,6 +40,8 @@ import time
 
 import duckdb
 
+from timing import CORES
+
 CPU_SQL = "SELECT sum(hash(range) % 1000000) FROM range(200000000)"
 MEM_ROWS = 50000000  # x 16 B = ~800 MB resident scan per shot
 BAR = 1.3
@@ -49,7 +51,7 @@ _mem_con = None
 
 def _cpu_shot():
     con = duckdb.connect()
-    con.execute("SET threads TO 32")
+    con.execute(f"SET threads TO {CORES}")
     con.execute("SET enable_progress_bar = false")
     t0 = time.time()
     con.execute(CPU_SQL).fetchall()
@@ -61,7 +63,7 @@ def _mem_shot():
     global _mem_con
     if _mem_con is None:
         _mem_con = duckdb.connect()
-        _mem_con.execute("SET threads TO 32")
+        _mem_con.execute(f"SET threads TO {CORES}")
         _mem_con.execute("SET enable_progress_bar = false")
         _mem_con.execute(
             f"CREATE TABLE probe_mem AS "

@@ -5,17 +5,15 @@ README's suite ratio, reproducible.
 Usage: python3 tools/duck_suite.py [sfDir] [oracle_sql.json] [--runs N]
 Defaults: /root/testdata/sf0.1, /tmp/verify_out/oracle_sql.json, 2.
 
-Per query: fresh connection (no buffer-cache carryover), 32 threads,
-40 GB spill cap, min-of-N. Prints per-query timings and the total;
-failures are DNF rows (never silently dropped — bench_sf1's rule).
+Per query: min-of-N with tools/timing.py's DuckDB timer (a subprocess
+per shot, fresh connection, SPARK_GRAFT_CPUS or this host's core count
+as threads, spill cap and timeout). Prints per-query timings and the
+total; failures are DNF rows (never silently dropped).
 RUN ON A QUIET MACHINE.
 """
-import json, sys, time
+import json, sys
 
-import duckdb
-
-TABLES = ["region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings"]
+from timing import time_duckdb
 
 
 def main():
@@ -27,31 +25,9 @@ def main():
         if a.startswith("--runs"):
             runs = int(a.split("=")[1]) if "=" in a else 2
     sqls = json.load(open(path))
-    total, dnf = 0.0, []
-    for q in sorted(sqls):
-        shots, failed = [], None
-        for _ in range(runs):
-            con = duckdb.connect()
-            con.execute("SET threads TO 32")
-            con.execute("SET max_temp_directory_size='40GB'")
-            for t in TABLES:
-                con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                            f"read_parquet('{sf}/{t}.parquet')")
-            t0 = time.time()
-            try:
-                con.execute(sqls[q]).fetchall()
-            except Exception as e:
-                failed = f"{type(e).__name__}: {e}"[:160]
-                con.close()
-                break
-            shots.append(time.time() - t0)
-            con.close()
-        if failed:
-            dnf.append(q)
-            print(f"{q:34s} DNF ({failed})")
-        else:
-            total += min(shots)
-            print(f"{q:34s} {min(shots):6.2f}s")
+    out, _, _ = time_duckdb(sf, runs, sorted(sqls), sqls)
+    dnf = [q for q in out if out[q] != out[q]]
+    total = sum(v for v in out.values() if v == v)
     print(f"\nTOTAL {total:.1f}s over {len(sqls) - len(dnf)} queries"
           + (f" ({len(dnf)} DNF: {dnf})" if dnf else ""))
 
