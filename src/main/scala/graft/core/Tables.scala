@@ -1,6 +1,13 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided parquet test tables (TESTDATA.md).
   *
@@ -8,6 +15,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * read one parquet file per table. Filters/projections applied on top of
   * these reads are pushed into the parquet scan by Catalyst (verified via
   * `.explain("formatted")` — `PushedFilters` / `ReadSchema`).
+  *
+  * A load starts no Spark job. `spark.read.parquet(path)` infers the
+  * schema with a one-task job that reads a single footer, one job per
+  * load of every query built on these tables (168 jobs of a full sf0.1
+  * `graft.Bench` run). [[load]] reads the same footer on the driver and
+  * hands the schema to `spark.read.schema(...)`. The conversion is
+  * Spark's own (`ParquetFileFormat.readSchemaFromFooter` with the
+  * session's converter settings: the stored Spark schema when present,
+  * else `nanosAsLong`, binary-as-string, int96 and NTZ inference exactly
+  * as inference applies them), so schema and plans are those of
+  * `spark.read.parquet`. The footer is read on every load, never
+  * cached, so a file rewritten in place is read with its new schema.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -16,8 +35,40 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val df = spark.read.parquet(path)
-    if (name == "events") normalizeEventTs(df, path) else df
+    val (file, schema) = footerSchema(spark, path)
+    val df = spark.read.schema(schema).parquet(path)
+    if (name == "events") normalizeEventTs(df, file) else df
+  }
+
+  /** The file whose footer Spark's (non-merging) inference reads, and
+    * its Spark schema. A directory table (a Spark-written
+    * `events.parquet/`) uses its first data file in name order,
+    * skipping `_`- and `.`-prefixed names (`_SUCCESS`, `.crc`), the
+    * file inference picks. No table is partitioned, so a directory
+    * holding directories is refused rather than half-read. */
+  private[core] def footerSchema(spark: SparkSession, path: String): (FileStatus, StructType) = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val top = fs.getFileStatus(p)
+    val file =
+      if (top.isFile) top
+      else {
+        val entries = fs.listStatus(p).filterNot { s =>
+          val n = s.getPath.getName
+          n.startsWith("_") || n.startsWith(".")
+        }
+        val nested = entries.filter(_.isDirectory)
+        require(nested.isEmpty,
+          s"table $path is a nested layout (${nested.map(_.getPath.getName).sorted.mkString(", ")}); " +
+            "Tables reads a parquet file or a flat directory of parquet files")
+        entries.minByOption(_.getPath.toString).getOrElse(
+          throw new IllegalArgumentException(s"table $path holds no data file"))
+      }
+    val footer = new Footer(file.getPath, ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+    file -> ParquetFileFormat.readSchemaFromFooter(
+      footer, new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   /** The engine's `events.ts` contract is EPOCH NANOS AS LONG (every
@@ -28,10 +79,10 @@ object Tables {
     * an NTZ wall-clock is interpreted in the session timezone (pinned
     * UTC by Bench/Verify/specs), so `unix_micros(CAST(ts AS TIMESTAMP))
     * * 1000` is the same instant the legacy nanos column encoded. */
-  private def normalizeEventTs(df: DataFrame, path: String): DataFrame =
+  private def normalizeEventTs(df: DataFrame, file: FileStatus): DataFrame =
     df.schema.fields.find(_.name == "ts").map(_.dataType) match {
       case Some(org.apache.spark.sql.types.LongType) =>
-        longTsScale(df, path) match {
+        longTsScale(df, file) match {
           case 1L => df
           case k => df.withColumn("ts",
             org.apache.spark.sql.functions.col("ts") *
@@ -55,13 +106,15 @@ object Tables {
     * Only that unambiguous micros band rescales — millis/seconds
     * magnitudes are NOT auto-scaled, because hours-scale synthetic
     * nanos are numerically indistinguishable from epoch millis.
-    * Cached per file path — one tiny first-row job per JVM, not per
-    * query. */
+    * Cached per footer file, keyed by its path, length and modification
+    * time — one tiny first-row job per file version, not per query; a
+    * file rewritten in place in the other unit is checked again. */
   private val tsScaleCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), java.lang.Long]()
 
-  private def longTsScale(df: DataFrame, path: String): Long =
-    tsScaleCache.computeIfAbsent(path, _ => {
+  private def longTsScale(df: DataFrame, file: FileStatus): Long =
+    tsScaleCache.computeIfAbsent(
+      (file.getPath.toString, file.getLen, file.getModificationTime), _ => {
       import org.apache.spark.sql.functions.col
       val first = df.select(col("ts")).filter(col("ts").isNotNull).head(1)
       val micros = first.nonEmpty && {
@@ -70,7 +123,7 @@ object Tables {
       }
       if (micros) {
         System.err.println(
-          s"[graft] $path: LongType ts magnitude is epoch MICROS, not " +
+          s"[graft] ${file.getPath}: LongType ts magnitude is epoch MICROS, not " +
             "nanos — scaling to nanos (x1000)")
         1000L
       } else 1L

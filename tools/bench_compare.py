@@ -6,6 +6,10 @@ q61 "regression" (0.45s -> 1.75s in the driver file) vanished on judge
 re-run - shared-VM noise that a structured diff would have flagged as
 suspicious-but-unconfirmed rather than leaving to eyeball archaeology.
 
+When both files carry Bench's per-query "job_counts", it also prints
+the total jobs old -> new and each query whose job count changed. Job
+counts are informational: they never change the exit status.
+
 Usage: tools/bench_compare.py OLD.json NEW.json [--ratio 1.5]
 Exit status: 0 (no flags), 1 (flags found), 2 (bad input).
 """
@@ -47,6 +51,19 @@ def load(path):
     if d:
         return d
     raise ValueError(f"no bench JSON object with 'queries' found in {path}")
+
+
+def job_lines(old, new):
+    """Total jobs old -> new and one line per query whose job count
+    changed; nothing unless both files carry "job_counts"."""
+    oj, nj = old.get("job_counts"), new.get("job_counts")
+    if not isinstance(oj, dict) or not isinstance(nj, dict):
+        return []
+    lines = [f"jobs: {sum(oj.values())} -> {sum(nj.values())}"]
+    for name in sorted(set(oj) & set(nj)):
+        if oj[name] != nj[name]:
+            lines.append(f"JOBS {name:28s} {oj[name]:>8} -> {nj[name]:>8}")
+    return lines
 
 
 def main():
@@ -107,6 +124,8 @@ def main():
         print(f"calibration dispersion: "
               f"{' -> '.join(f'{n:.2f}x' for n in noises)}"
               f"{' — NOISY run, timing deltas downgraded' if noisy else ''}")
+    for line in job_lines(old, new):
+        print(line)
     for name, a, b, why in soft:
         fa, fb = f"{a:.2f}s", f"{b:.2f}s"
         print(f"NOISY {name:28s} {fa:>8} -> {fb:>8}  {why} "
