@@ -34,10 +34,22 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val (file, schema) = footerSchema(spark, path)
-    val df = spark.read.schema(schema).parquet(path)
+    val (file, df) = open(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeEventTs(df, file) else df
+  }
+
+  /** The parquet file or flat directory at `path`, read like [[load]]:
+    * no Spark job. A partitioned table is refused. */
+  def read(spark: SparkSession, path: String): DataFrame = open(spark, path)._2
+
+  /** [[read]] of the committed copy of the table at `path`
+    * ([[Commit.committed]]), or None when there is none. */
+  def readIfPresent(spark: SparkSession, path: String): Option[DataFrame] =
+    Commit.committed(spark, path).map(read(spark, _))
+
+  private def open(spark: SparkSession, path: String): (FileStatus, DataFrame) = {
+    val (file, schema) = footerSchema(spark, path)
+    file -> spark.read.schema(schema).parquet(path)
   }
 
   /** The file whose footer Spark's (non-merging) inference reads, and
@@ -124,7 +136,7 @@ object Tables {
       if (micros) {
         System.err.println(
           s"[graft] ${file.getPath}: LongType ts magnitude is epoch MICROS, not " +
-            "nanos — scaling to nanos (x1000)")
+            "nanos - scaling to nanos (x1000)")
         1000L
       } else 1L
     })

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.{Commit, Tables}
 import graft.functions.MinHash48
 
 /** Deduplication operators over a document table (id + text) — the
@@ -1171,14 +1172,9 @@ object Dedup {
   /** The (k, w) a [[writeWinnowIndex]] directory was built with —
     * read from `path/meta`. Indexes written before the meta table
     * existed default to (3, 4), the historical fixed binding. */
-  def readWinnowIndexParams(spark: SparkSession, path: String): (Int, Int) = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val r = spark.read.parquet(s"$path/meta").head()
-      (r.getAs[Int]("k"), r.getAs[Int]("w"))
-    } else (3, 4)
-  }
+  def readWinnowIndexParams(spark: SparkSession, path: String): (Int, Int) =
+    Tables.readIfPresent(spark, s"$path/meta").map(_.head())
+      .fold((3, 4))(r => (r.getAs[Int]("k"), r.getAs[Int]("w")))
 
   /** Combine two [[writeWinnowIndex]] directories built over DISJOINT
     * document shards into one index over their union, WITHOUT
@@ -1251,27 +1247,18 @@ object Dedup {
     * `path/meta`) — Int.MaxValue (no pruning) for indexes written
     * before the column existed or never pruned. Consumers must use
     * `maxDf ≤ prune_df`: a looser cap would need the pruned rows. */
-  def readWinnowPruneDf(spark: SparkSession, path: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Int.MaxValue
-    val df = spark.read.parquet(s"$path/meta")
-    if (!df.columns.contains("prune_df")) Int.MaxValue
-    else df.head().getAs[Int]("prune_df")
-  }
+  def readWinnowPruneDf(spark: SparkSession, path: String): Int =
+    Tables.readIfPresent(spark, s"$path/meta").filter(_.columns.contains("prune_df"))
+      .fold(Int.MaxValue)(_.head().getAs[Int]("prune_df"))
 
   /** Tombstoned (pruned-over-cap) fingerprints of a merged index —
     * empty for unpruned indexes. Bounded: an fp tombstones only when
     * df > prune_df, so |tombstones| ≤ postings / prune_df. */
   private def readWinnowTombstones(spark: SparkSession,
       path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/pruned")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(s"$path/pruned").select(col("fp"))
-    else {
-      import spark.implicits._
-      Seq.empty[Long].toDF("fp")
-    }
+    import spark.implicits._
+    Tables.readIfPresent(spark, s"$path/pruned")
+      .fold(Seq.empty[Long].toDF("fp"))(_.select(col("fp")))
   }
 
   /** [[dedupIncrementalWinnow]] against a persisted [[writeWinnowIndex]]
@@ -1839,10 +1826,9 @@ object Dedup {
         .groupBy(col("band"), col("bval")).agg(sum(col("n")).as("n"))
         .collect() // metadata-scale: ≤ 4·65536 rows by construction
       import spark.implicits._
-      merged.map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-        .toDF("band", "bval", "n")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/bsize")
+      val census = merged.map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
+        .toDF("band", "bval", "n").coalesce(1)
+      Commit.replace(spark, s"$path/bsize")(census.write.parquet(_))
     }
     def guard(spark: SparkSession, path: String, cap: Int,
         arrivals: DataFrame): DataFrame =
@@ -1974,11 +1960,8 @@ object Dedup {
     * already serialize. Returns the file count compacted away, 0 if
     * both tables are under the threshold.
     *
-    * CRASH SAFETY ([[swapRewrite]]): the live table is never the
-    * write target, and a crash between the two renames of either table
-    * self-heals on the next call (until that call, readers of the
-    * missing dir DO fail — run compaction and its recovery from the
-    * same maintenance slot). */
+    * Each rewrite commits through [[graft.core.Commit]], which heals a
+    * crash of the last call before the listing. */
   def compactHammingIndex(spark: SparkSession, path: String,
       maxFiles: Int = 64): Long = {
     require(maxFiles >= 1, s"maxFiles=$maxFiles must be >= 1")
@@ -1986,44 +1969,23 @@ object Dedup {
     // rewrite itself can never re-trip the threshold (idempotence)
     val width = math.min(maxFiles,
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    swapRewrite(spark, s"$path/sigs", maxFiles)(
-        _.repartition(width, col("doc_id"))) +
-      swapRewrite(spark, s"$path/bsize", maxFiles)(
+    // rewrites `sub` when its file listing exceeds maxFiles; returns
+    // the file count replaced
+    def compact(sub: String)(rewrite: DataFrame => DataFrame): Long = {
+      val dir = s"$path/$sub"
+      val nFiles = Commit.heal(spark, dir).count(_.getPath.getName.endsWith(".parquet"))
+      if (nFiles <= maxFiles) 0L
+      else {
+        Commit.replace(spark, dir)(rewrite(spark.read.parquet(dir)).write.parquet(_))
+        nFiles.toLong
+      }
+    }
+    compact("sigs")(_.repartition(width, col("doc_id"))) +
+      compact("bsize")(
         _.groupBy(col("band"), col("bval")).agg(sum(col("n")).as("n"))
           // coalesce merges the aggregate's output partitions without
           // another shuffle
           .coalesce(width))
-  }
-
-  /** Rewrite the parquet table at `dir` through `rewrite` when its
-    * file listing exceeds `maxFiles`, swapping it in by rename;
-    * returns the file count replaced, 0 when under the threshold.
-    * The rewrite lands in `dir.compact.tmp` while `dir` — the only
-    * durable copy — stays untouched, then swaps in (dir →
-    * dir.compact.old, tmp → dir, delete old). A crash before the
-    * first rename loses nothing (the orphaned tmp is deleted by the
-    * next call); a crash BETWEEN the renames leaves no `dir` but a
-    * complete `dir.compact.old`, which the next call detects and
-    * renames back BEFORE listing (self-healing, no manual step). */
-  private def swapRewrite(spark: SparkSession, dir: String, maxFiles: Int)(
-      rewrite: DataFrame => DataFrame): Long = {
-    val live = new org.apache.hadoop.fs.Path(dir)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir.compact.tmp")
-    val old = new org.apache.hadoop.fs.Path(s"$dir.compact.old")
-    if (!fs.exists(live) && fs.exists(old))
-      require(fs.rename(old, live),
-        s"compactHammingIndex: crash recovery rename $old → $live failed")
-    val nFiles = fs.listStatus(live)
-      .count(_.getPath.getName.endsWith(".parquet"))
-    if (nFiles <= maxFiles) return 0L
-    fs.delete(tmp, true); fs.delete(old, true) // orphans of a past crash
-    rewrite(spark.read.parquet(dir))
-      .write.mode("overwrite").parquet(tmp.toString)
-    require(fs.rename(live, old), s"compactHammingIndex: rename $live → $old failed")
-    require(fs.rename(tmp, live), s"compactHammingIndex: rename $tmp → $live failed")
-    fs.delete(old, true)
-    nFiles.toLong
   }
 
   /** Incremental Hamming near-dup intake: pairs each NEW signature

@@ -1202,13 +1202,13 @@ object Similarity {
     * `filesPerCell` files down to `filesPerCell`, and ONLY those cells:
     *  - fragmented cells are found from a file LISTING (metadata-scale,
     *    no data read);
-    *  - their rows are read with a partition-pruned scan, materialized
-    *    (localCheckpoint — Spark refuses to overwrite a path it is
-    *    reading), hash-spread so each cell lands in ≤ `filesPerCell`
-    *    write tasks, and written back through DYNAMIC partition
-    *    overwrite — untouched cells' files are never rewritten, so
-    *    compaction cost is proportional to the fragmentation, not the
-    *    index.
+    *  - their rows are read with a partition-pruned scan, hash-spread
+    *    so each cell lands in ≤ `filesPerCell` write tasks, written to
+    *    a staged table, and swapped in cell by cell through
+    *    [[graft.core.Commit]], which also heals a crash of the last
+    *    call before the listing — untouched cells' files are never
+    *    rewritten, so compaction cost is proportional to the
+    *    fragmentation, not the index.
     * Contents are bit-preserved (same rows, parquet doubles are
     * lossless), so post-compaction search is bit-equal
     * (IvfIndexSpec pins it; q158's oracle is unchanged). Row order
@@ -1224,60 +1224,28 @@ object Similarity {
     * cell bytes / 128 MB, floor 1 — with a healthy quantizer (cells ≪
     * corpus, many cells probed per query batch) 1 is right.
     * Not safe concurrently with readers of the same cells (swap is
-    * per-partition, not transactional); run it between crawl
-    * increments, where appendIvfIndex already serializes.
-    *
-    * CRASH SAFETY: the fragmented cells' rows are materialized as
-    * localCheckpoint blocks (NOT durable) before the dynamic-overwrite
-    * commit replaces those cells' directories — a JVM crash inside the
-    * commit window can lose the cells being rewritten (untouched cells
-    * are never at risk). Recovery is a rebuild of the lost cells from
-    * the source embeddings (`writeIvfIndexWith` against the persisted
-    * `path/centroids` restores the exact assignment — the centroid
-    * table is never touched by compaction); where the source corpus is
-    * gone, snapshot `path/assigned` before compacting. The
-    * flat-table cousin [[graft.ext.Dedup.compactHammingIndex]] swaps
-    * by rename and has no such window; per-cell dynamic overwrite
-    * keeps compaction cost ∝ fragmentation, which at index scale is
-    * worth the documented (bounded, commit-phase-only) hazard. */
+    * per-cell, not transactional); run it between crawl
+    * increments, where appendIvfIndex already serializes. */
   def compactIvfIndex(spark: SparkSession, path: String,
       filesPerCell: Int = 1): Long = {
     require(filesPerCell >= 1, s"filesPerCell=$filesPerCell must be >= 1")
-    val assigned = new org.apache.hadoop.fs.Path(s"$path/assigned")
-    val fs = assigned.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fragIds = fs.listStatus(assigned)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("centroid_id="))
-      .filter(d => fs.listStatus(d.getPath)
-        .count(f => f.getPath.getName.endsWith(".parquet")) > filesPerCell)
-      .map(_.getPath.getName.stripPrefix("centroid_id=").toLong)
-      .toSeq
-    if (fragIds.isEmpty) return 0L
-    val frag = spark.read.parquet(s"$path/assigned")
-      .filter(col("centroid_id").isin(fragIds: _*))
+    val assigned = s"$path/assigned"
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fragCells = graft.core.Commit.heal(spark, assigned).map(_.getPath)
+      .filter(d => d.getName.startsWith("centroid_id=") && d.getFileSystem(conf).listStatus(d)
+        .count(_.getPath.getName.endsWith(".parquet")) > filesPerCell)
+      .map(_.getName).toSeq
+    if (fragCells.isEmpty) return 0L
+    val frag = spark.read.parquet(assigned).filter(col("centroid_id")
+      .isin(fragCells.map(_.stripPrefix("centroid_id=").toLong): _*))
     val spreadCells =
       if (filesPerCell == 1) frag.repartition(col("centroid_id"))
       else frag
         .withColumn("_fs", pmod(hash(col("n_id")), lit(filesPerCell)))
         .repartition(col("centroid_id"), col("_fs")).drop("_fs")
-    // materialize BEFORE the overwrite: the write target is the scan's
-    // own source path, which Spark (rightly) refuses without a barrier.
-    // Release via the backing RDD: Dataset.unpersist routes through the
-    // CacheManager and is a no-op for localCheckpoint's direct RDD
-    // persist, which would pin every compacted cell for the session.
-    val (cp, blocks) = Dedup.checkpointTracked(spreadCells)
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try cp.write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$path/assigned")
-    finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-      blocks.foreach(_.unpersist(blocking = false))
-    }
-    fragIds.length.toLong
+    graft.core.Commit.replace(spark, assigned, fragCells)(
+      spreadCells.write.partitionBy("centroid_id").parquet(_))
+    fragCells.length.toLong
   }
 
   /** IVF search against a persisted index ([[writeIvfIndex]]): queries

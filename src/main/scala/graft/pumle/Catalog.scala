@@ -1,7 +1,9 @@
 package graft.pumle
 
-import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.core.{Commit, Tables}
 
 /** Simulation catalog (OP-S8/J2/V6) — the reference's SQLite
   * `simulations` table (/root/reference/src/pumle/db.py:15-23) as a
@@ -39,15 +41,10 @@ object Catalog {
       .toDF("sim_hash", "sim_id", "fluid_params", "status", "created_at")
   }
 
-  /** The committed catalog at `path`; `<path>.old` when `path` is
-    * missing, which is what a crash between [[write]]'s two renames
-    * leaves behind. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val old = s"$path.old"
-    if (new java.io.File(path).exists) spark.read.parquet(path)
-    else if (new java.io.File(old).exists) spark.read.parquet(old)
-    else empty(spark)
-  }
+  /** The committed catalog at `path` ([[graft.core.Tables.readIfPresent]]);
+    * [[empty]] when none is there. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    Tables.readIfPresent(spark, path).getOrElse(empty(spark))
 
   /** Rows for a set of sweep variants, fluid_params serialized with the
     * reference's canonical JSON (db.py stores `str(dict)`; we store the
@@ -110,32 +107,10 @@ object Catalog {
         catalog.withColumn("status", status.otherwise(col("status")))
     }
 
-  /** Write-to-temp-then-swap: the updated catalog plan usually READS the
-    * current `path` (upsert/setStatus are lazy), so a direct overwrite
-    * would delete its own input mid-job. The swap renames the live copy
-    * to `<path>.old` before moving the temp copy in, and deletes `.old`
-    * last, so some complete catalog is always on disk: [[read]] falls
-    * back to `.old` when a crash lands between the two renames. */
-  def write(catalog: DataFrame, path: String): Unit = {
-    val tmp = new java.io.File(s"$path.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    catalog.write.mode(SaveMode.Overwrite).parquet(tmp.getPath)
-    val dst = new java.io.File(path)
-    val old = new java.io.File(s"$path.old")
-    if (dst.exists) {
-      if (old.exists) delete(old) // left by a crash after the last swap's renames
-      rename(dst, old)
-    }
-    rename(tmp, dst)
-    if (old.exists) delete(old)
-  }
-
-  private def rename(from: java.io.File, to: java.io.File): Unit =
-    if (!from.renameTo(to)) throw new java.io.IOException(s"cannot rename $from to $to")
-
-  private def delete(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(delete))
-    f.delete()
-  }
+  /** Commits `catalog` at `path` through [[graft.core.Commit.replace]],
+    * whose staged write may read the current catalog (upsert is lazy). */
+  def write(catalog: DataFrame, path: String): Unit =
+    Commit.replace(catalog.sparkSession, path)(catalog.write.parquet(_))
 
   /** Register for verbatim SQL (`SELECT sim_hash, sim_id, fluid_params,
     * status FROM simulations` — main.py:129). */

@@ -700,7 +700,7 @@ class Ext5Spec extends SparkSpec {
     def crash(dir: String, sub: String): Unit = {
       // simulate dying after rename 1 of 2: live → .old, no tmp swap
       val live = new org.apache.hadoop.fs.Path(s"$dir/$sub")
-      val old = new org.apache.hadoop.fs.Path(s"$dir/$sub.compact.old")
+      val old = new org.apache.hadoop.fs.Path(graft.core.Commit.old(s"$dir/$sub"))
       val fs = live.getFileSystem(hconf)
       assert(fs.rename(live, old))
     }
@@ -727,7 +727,7 @@ class Ext5Spec extends SparkSpec {
         maxFiles = 64) == 0L, name)
       for (sub <- arms) {
         assert(new java.io.File(s"$dir/$sub").isDirectory, s"$name/$sub")
-        assert(!new java.io.File(s"$dir/$sub.compact.old").exists, s"$name/$sub")
+        assert(!new java.io.File(graft.core.Commit.old(s"$dir/$sub")).exists, s"$name/$sub")
       }
       assert(intake == before, name)
     }

@@ -67,7 +67,7 @@ class CatalogMetaSpec extends SparkSpec {
     Catalog.write(Catalog.setStatus(Catalog.read(spark, path), Seq("aaaa1111"), Catalog.Status.Running), path)
     assert(dir.toFile.list().toSet == Set("catalog"))
     // a crash between the two renames leaves only <path>.old
-    assert(new java.io.File(path).renameTo(new java.io.File(s"$path.old")))
+    assert(new java.io.File(path).renameTo(new java.io.File(graft.core.Commit.old(path))))
     val recovered = Catalog.read(spark, path)
     assert(hashes(recovered) == Set("aaaa1111", "bbbb2222"))
     assert(recovered.filter(col("status") === "RUNNING").count() == 1)
