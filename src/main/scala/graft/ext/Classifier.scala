@@ -251,7 +251,7 @@ object Classifier {
     val blocks = collection.mutable.ArrayBuffer
       .empty[org.apache.spark.rdd.RDD[_]]
     def tracked(df: DataFrame): DataFrame = {
-      val (out, b) = Dedup.checkpointTracked(df)
+      val (out, b) = Dedup.checkpointTracked(df, eager = true)
       blocks ++= b
       out
     }

@@ -172,7 +172,7 @@ object Clustering {
     val seed = base.orderBy(col("vec_id")).limit(1)
       .select(col("vec_id"), col("v"), col("vv")).collect()(0)
     // per-round checkpoints are LAZY and tracked via the backing
-    // LogicalRDD (Dedup.checkpointLazyTracked — robust to concurrent
+    // LogicalRDD (Dedup.checkpointTracked — robust to concurrent
     // jobs persisting their own blocks): each round's argmax collect
     // MATERIALIZES the pending fold in the same job, so a round costs
     // ONE blocking driver round-trip instead of two (round 15, guide
@@ -181,11 +181,11 @@ object Clustering {
     // truncates lineage, so early-freed blocks would be unrecoverable.
     // Same IEEE arithmetic as the literal form: (vv − 2·dot) + cc with
     // the newest center riding as the literal array column cN.
-    var (cur, blocks) = Dedup.checkpointLazyTracked(
+    var (cur, blocks) = Dedup.checkpointTracked(
       base.withColumn("cN", typedLit(seed.getSeq[Double](1)))
         .withColumn("md",
           col("vv") - lit(2.0) * expr("dot64(v, cN)") + lit(seed.getDouble(2)))
-        .select(col("vec_id"), col("v"), col("vv"), col("md")))
+        .select(col("vec_id"), col("v"), col("vv"), col("md")), eager = false)
     var prevBlocks: Seq[org.apache.spark.rdd.RDD[_]] = Seq.empty
     val sels = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)](
       (1L, seed.getLong(0), 0.0))
@@ -196,11 +196,11 @@ object Clustering {
       // cur is materialized now — the round before it can be freed
       prevBlocks.foreach(_.unpersist(blocking = false))
       sels += ((r.toLong, cand.getLong(0), cand.getDouble(3)))
-      val (next, nextBlocks) = Dedup.checkpointLazyTracked(
+      val (next, nextBlocks) = Dedup.checkpointTracked(
         cur.withColumn("cN", typedLit(cand.getSeq[Double](1)))
           .withColumn("md", least(col("md"),
             col("vv") - lit(2.0) * expr("dot64(v, cN)") + lit(cand.getDouble(2))))
-          .select(col("vec_id"), col("v"), col("vv"), col("md")))
+          .select(col("vec_id"), col("v"), col("vv"), col("md")), eager = false)
       prevBlocks = blocks
       cur = next
       blocks = nextBlocks

@@ -589,7 +589,7 @@ object Corpus {
     // return them — instead of replaying the window dedups + gate per
     // reference (q103's snapshot-side discipline applied to the
     // increment side)
-    val (s3cp, blocks) = graft.ext.Dedup.checkpointTracked(s3)
+    val (s3cp, blocks) = graft.ext.Dedup.checkpointTracked(s3, eager = true)
     (graft.ext.Dedup.dedupIncrementalPersisted(spark, s3cp, snapshot,
        idCol = idCol, textCol = textCol),
      () => blocks.foreach(_.unpersist(blocking = false)))

@@ -20,26 +20,18 @@ object Dedup {
     * (a checkpointed Dataset IS a LogicalRDD) — never a before/after
     * `getPersistentRDDs` diff, which would capture blocks persisted by
     * ANY concurrent job in the session during the window and later
-    * unpersist someone else's cache. */
-  private[ext] def checkpointTracked(
-      df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-    val out = df.localCheckpoint(true)
-    val backing = out.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
-    (out, backing)
-  }
-
-  /** [[checkpointTracked]]'s LAZY twin: the checkpoint materializes on
-    * the FIRST action over the returned frame (not at call time), so a
-    * plan with several consumers of the same expensive subtree — e.g.
-    * a decode-once media frame feeding both stages of an admit —
-    * evaluates it once without going eager. Same release contract:
-    * consume fully, then unpersist the blocks (the lineage is
-    * truncated — the frame is NOT re-computable after release). */
-  private[graft] def checkpointLazyTracked(
-      df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-    val out = df.localCheckpoint(false)
+    * unpersist someone else's cache.
+    *
+    * `eager = false` materializes the checkpoint on the FIRST action
+    * over the returned frame (not at call time), so a plan with several
+    * consumers of the same expensive subtree — e.g. a decode-once media
+    * frame feeding both stages of an admit — evaluates it once without
+    * going eager. Either way: consume fully, then unpersist the blocks
+    * (the lineage is truncated — the frame is NOT re-computable after
+    * release). */
+  private[graft] def checkpointTracked(df: DataFrame, eager: Boolean)
+      : (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
+    val out = df.localCheckpoint(eager)
     val backing = out.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }
@@ -169,10 +161,8 @@ object Dedup {
       : (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
     // spread BEFORE the signature expression: a one-split corpus scan
     // would serialize the whole minhash pass on one task (Par.spread)
-    val sig = minhashSignatures(spark, Par.spreadIfBig(docs), idCol, textCol)
-    val stack = (0 until bands).map(b => s"$b, sig[$b]").mkString(", ")
-    val (buckets, bucketRdds) = checkpointLazyTracked(
-      sig.selectExpr("doc_id", s"stack($bands, $stack) AS (band, bucket)"))
+    val (buckets, bucketRdds) = checkpointTracked(
+      bandBuckets(spark, Par.spreadIfBig(docs), bands, idCol, textCol), eager = false)
     val sized0 = buckets.groupBy(col("band"), col("bucket"))
       .agg(count(lit(1)).as("bsize"))
     val sized = capMetrics.fold(sized0)(o => sized0.observe(o,
@@ -205,9 +195,7 @@ object Dedup {
     * shuffles, no join — same cost shape as the signature stage. */
   def lshCapStats(spark: SparkSession, docs: DataFrame, bands: Int = 4,
       maxBucket: Int = 10, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val sig = minhashSignatures(spark, Par.spreadIfBig(docs), idCol, textCol)
-    val stack = (0 until bands).map(b => s"$b, sig[$b]").mkString(", ")
-    sig.selectExpr("doc_id", s"stack($bands, $stack) AS (band, bucket)")
+    bandBuckets(spark, Par.spreadIfBig(docs), bands, idCol, textCol)
       .groupBy(col("band"), col("bucket"))
       .agg(count(lit(1)).as("bsize"))
       .agg(
@@ -299,7 +287,7 @@ object Dedup {
     // bit_xor: order-independent and overflow-free (round outputs are
     // distinct, so xor-cancellation of repeated rows cannot occur)
     val (cp, rdds) = checkpointTracked(e.observe(obs,
-      expr("bit_xor(xxhash64(u, v))").as("h"), count(lit(1)).as("n")))
+      expr("bit_xor(xxhash64(u, v))").as("h"), count(lit(1)).as("n")), eager = true)
     val m = obs.get
     // bit_xor over zero rows is NULL (empty edge graph)
     val h = Option(m.getOrElse("h", null)).map(_.asInstanceOf[Long]).getOrElse(0L)
@@ -414,7 +402,7 @@ object Dedup {
     val (out, _) = checkpointTracked(
       e.select(col("u").as("node"), col("v").as("cluster_id"))
         .unionAll(e.select(col("v").as("node"), col("v").as("cluster_id")))
-        .groupBy(col("node")).agg(min(col("cluster_id")).as("cluster_id")))
+        .groupBy(col("node")).agg(min(col("cluster_id")).as("cluster_id")), eager = true)
     cur.release()
     // out's blocks back the returned frame; ContextCleaner frees them
     // when the caller drops it
@@ -444,45 +432,54 @@ object Dedup {
       threshold: Double, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     val cp = pairs.select(col("a_id"), col("b_id")).localCheckpoint(true)
-    verifyCheckpointed(spark, cp, docs, threshold, idCol, textCol)
+    verifyPairs(spark, cp, docs, threshold, idCol, textCol)._1
   }
 
-  /** Core of `verifyCandidates` for a pair frame that is ALREADY
-    * materialized (checkpointed/cached): referenced three times below,
-    * so an unmaterialized input would re-evaluate its subtree per
-    * reference. `dedupCorpus` calls this directly with its own tracked
-    * checkpoint so the blocks can be released once components exist. */
-  private def verifyCheckpointed(spark: SparkSession, cp: DataFrame, docs: DataFrame,
-      threshold: Double, idCol: String, textCol: String): DataFrame =
-    verifyCheckpointedTracked(spark, cp, docs, threshold, idCol, textCol)._1
-
-  /** [[verifyCheckpointed]] handing back the RDDs behind its shingle-set
-    * checkpoint so corpus pipelines (dedupCorpus, the winnow chain) can
-    * free them once components are materialized. The shingle side is
-    * SPREAD + materialized ONCE: unmaterialized, the a/b join branches
-    * each re-ran the shingles8 pass, and a one-split corpus scan
-    * serialized each run on a single task (two ~0.8 s single-task jobs
-    * inside every verify at the sf0.1 bench — half the stage's wall).
-    * The set is candidate-bounded (semi-joined to pair ids), so the
-    * checkpoint pins O(candidates) rows, same class as the pair
-    * checkpoint it sits beside. */
-  private def verifyCheckpointedTracked(spark: SparkSession, cp: DataFrame,
+  /** The verify stage of within-corpus pairs for a pair frame `cp`
+    * that is ALREADY materialized (checkpointed): [[pairSides]]
+    * references it three times, so an unmaterialized input would
+    * re-evaluate its subtree per reference. Keeps the pairs whose true
+    * shingle Jaccard, rounded by [[ratio6]], is ≥ `threshold`, and
+    * hands back the RDDs behind the shingle-set checkpoint so corpus
+    * pipelines ([[corpusChain]]) can free them once components are
+    * materialized. */
+  private def verifyPairs(spark: SparkSession, cp: DataFrame,
       docs: DataFrame, threshold: Double, idCol: String, textCol: String)
       : (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
     graft.functions.Shingles8.register(spark)
-    val ids = cp.select(explode(array(col("a_id"), col("b_id"))).as(idCol)).distinct()
-    val (sets, setsRdds) = checkpointLazyTracked(
-      Par.spread(docs.filter(col(textCol).isNotNull)
-          .join(ids, Seq(idCol), "left_semi"))
-        .select(col(idCol), expr(s"shingles8($textCol)").as("sh")))
-    val a = sets.select(col(idCol).as("a_id"), col("sh").as("sh_a"))
-    val b = sets.select(col(idCol).as("b_id"), col("sh").as("sh_b"))
+    val (sides, setsRdds) = pairSides(cp, docs, idCol, textCol,
+      "sh" -> expr(s"shingles8($textCol)"))
     val inter = size(array_intersect(col("sh_a"), col("sh_b")))
     val union = size(col("sh_a")) + size(col("sh_b")) - inter
-    (cp.join(a, Seq("a_id")).join(b, Seq("b_id"))
+    (sides
       .withColumn("jaccard", ratio6(inter, union)) // exact 6-dp, engine-proof
       .filter(col("jaccard") >= threshold)
       .select(col("a_id"), col("b_id"), col("jaccard")), setsRdds)
+  }
+
+  /** Each materialized pair of `cp` `(a_id, b_id)` joined to both of
+    * its docs' `payload` columns, named `<name>_a` and `<name>_b` — the
+    * side every within-corpus pair verdict scores. The side is
+    * candidate-bounded (the docs semi-joined to the pair ids), SPREAD,
+    * and materialized ONCE behind a lazy checkpoint, whose RDDs are
+    * handed back: unmaterialized, the a/b join branches each re-ran the
+    * payload pass, and a one-split corpus scan serialized each run on a
+    * single task (two ~0.8 s single-task jobs inside every verify at
+    * the sf0.1 bench — half the stage's wall). The checkpoint pins
+    * O(candidates) rows, same class as the pair checkpoint it sits
+    * beside. */
+  private def pairSides(cp: DataFrame, docs: DataFrame, idCol: String,
+      textCol: String, payload: (String, org.apache.spark.sql.Column)*)
+      : (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
+    val ids = cp.select(explode(array(col("a_id"), col("b_id"))).as(idCol)).distinct()
+    val (side, rdds) = checkpointTracked(
+      Par.spread(docs.filter(col(textCol).isNotNull)
+          .join(ids, Seq(idCol), "left_semi"))
+        .select(col(idCol) +: payload.map { case (n, c) => c.as(n) }: _*),
+      eager = false)
+    def end(e: String) = side.select(col(idCol).as(s"${e}_id") +:
+      payload.map { case (n, _) => col(n).as(s"${n}_$e") }: _*)
+    (cp.join(end("a"), Seq("a_id")).join(end("b"), Seq("b_id")), rdds)
   }
 
   /** Asymmetric CONTAINMENT verification over candidate pairs: where
@@ -507,17 +504,9 @@ object Dedup {
       textCol: String = "text"): DataFrame = {
     graft.functions.Shingles8.register(spark)
     val cp = pairs.select(col("a_id"), col("b_id")).localCheckpoint(true)
-    val ids = cp.select(explode(array(col("a_id"), col("b_id"))).as(idCol)).distinct()
-    // spread + materialize once: both ratio directions read the same
-    // candidate-bounded shingle sets (see verifyCheckpointedTracked)
-    val sets = Par.spread(docs.filter(col(textCol).isNotNull)
-        .join(ids, Seq(idCol), "left_semi"))
-      .select(col(idCol), expr(s"shingles8($textCol)").as("sh"))
-      .localCheckpoint(false) // lazy: materializes once, on the first action
-    val a = sets.select(col(idCol).as("a_id"), col("sh").as("sh_a"))
-    val b = sets.select(col(idCol).as("b_id"), col("sh").as("sh_b"))
+    // both ratio directions read the same candidate-bounded shingle sets
     val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("long")
-    cp.join(a, Seq("a_id")).join(b, Seq("b_id"))
+    pairSides(cp, docs, idCol, textCol, "sh" -> expr(s"shingles8($textCol)"))._1
       .withColumn("n_a", size(col("sh_a")).cast("long"))
       .withColumn("n_b", size(col("sh_b")).cast("long"))
       .withColumn("n_inter", inter)
@@ -549,20 +538,11 @@ object Dedup {
       spark, docs, bands, maxBucket, idCol, textCol)
     val cp = cand0.select(col("a_id"), col("b_id")).localCheckpoint(true)
     bucketRdds.foreach(_.unpersist(blocking = false)) // cp materialized
-    val ids = cp.select(explode(array(col("a_id"), col("b_id"))).as(idCol)).distinct()
-    // spread + materialize once: the a/b join branches would otherwise
-    // each re-run the signature + shingle pass, serialized on a
-    // one-split scan (two ~1.2 s single-task jobs at the sf0.1 bench)
-    val side = Par.spread(docs.filter(col(textCol).isNotNull)
-        .join(ids, Seq(idCol), "left_semi"))
-      .select(col(idCol),
-        expr(s"minhash48($textCol)").as("sig"),
-        expr(s"shingles8($textCol)").as("sh"))
-      .localCheckpoint(false) // lazy: materializes once, on the first action
-    val a = side.select(col(idCol).as("a_id"),
-      col("sig").as("sig_a"), col("sh").as("sh_a"))
-    val b = side.select(col(idCol).as("b_id"),
-      col("sig").as("sig_b"), col("sh").as("sh_b"))
+    // the a/b sides carry signature + shingle set: unmaterialized, each
+    // branch re-ran both passes, serialized on a one-split scan (two
+    // ~1.2 s single-task jobs at the sf0.1 bench)
+    val (sides, _) = pairSides(cp, docs, idCol, textCol,
+      "sig" -> expr(s"minhash48($textCol)"), "sh" -> expr(s"shingles8($textCol)"))
     val inter = size(array_intersect(col("sh_a"), col("sh_b")))
     val union = size(col("sh_a")) + size(col("sh_b")) - inter
     val eqLanes = expr("size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))")
@@ -570,7 +550,7 @@ object Dedup {
     // ratio6 discipline): est = m·10⁶/lanes is exact (8 | 10⁶), the true
     // jaccard is half-up-rounded in integer space, and abs_err is their
     // integer difference — bit-identical across engines, no double round
-    cp.join(a, Seq("a_id")).join(b, Seq("b_id"))
+    sides
       .withColumn("e6", floor((eqLanes.cast("long") * lit(1000000L)).cast("double")
         / size(col("sig_a")).cast("double")).cast("long"))
       .withColumn("j6", when(union === 0, lit(1000000L)).otherwise(
@@ -643,18 +623,38 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text",
       capMetrics: Option[org.apache.spark.sql.Observation] = None,
       verifyThreshold: Double = 0.7): DataFrame = {
+    val (out, release) = corpusChain(docs, "dedupCorpus", "LSH", idCol,
+      textCol, verifyThreshold)(
+      lshCandidatesTracked(spark, _, bands, maxBucket, idCol, textCol, capMetrics))
+    release()
+    out
+  }
+
+  /** The one-call corpus chain behind [[dedupCorpus]] and
+    * [[dedupCorpusWinnow]]: exact → `candidates` → verify →
+    * components → anti-join. `candidates` maps the exact survivors to
+    * lazy candidate pairs `(a_id, b_id, …)` and the RDDs behind them.
+    * Returns the surviving documents and the release of the survivor
+    * cache and the pair and verify checkpoints: consume the frame, then
+    * release. The job labels read `<label>: exact window + <kind>
+    * candidate pairs` and `<label>: verify + components`. */
+  private def corpusChain(docs: DataFrame, label: String, kind: String,
+      idCol: String, textCol: String, verifyThreshold: Double)(
+      candidates: DataFrame => (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]))
+      : (DataFrame, () => Unit) = {
     import org.apache.spark.sql.expressions.Window
+    val spark = docs.sparkSession
     // exact stage as a hash-partitioned window (survivor = smallest id
     // per content hash): one shuffle, NO broadcast — the survivor set
     // is corpus-sized, so collecting it to the driver cannot scale
     val w = Window.partitionBy(col("content_hash")).orderBy(col(idCol))
-    // the exact-survivor set is consumed THREE times (LSH signatures,
-    // the verify stage's shingle sets, the final anti join). The first
-    // two run eagerly below (inside the pairs checkpoint and clusters'
-    // edge materialization), so the window is persisted across them and
-    // RELEASED before returning — two corpus evaluations total instead
-    // of three, and no cache outlives the call (the returned plan
-    // recomputes the window once on the caller's action).
+    // the exact-survivor set is consumed THREE times (candidates, the
+    // verify stage's shingle sets, the final anti join). The first two
+    // run eagerly below (inside the pairs checkpoint and clusters' edge
+    // materialization), so the window is persisted across them until
+    // the release — two corpus evaluations total instead of three. A
+    // caller that releases before its action (dedupCorpus) has the
+    // returned plan recompute the window once.
     // probed round 15 and REVERTED (guide §1.2): a scale-gated spread
     // before the window — the WindowGroupLimit rewrite does put a local
     // sort of the corpus on the scan's 1-2 splits at the sf1 decade —
@@ -673,44 +673,43 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // candidate pairs materialize ONCE: the verify stage references its
     // input three times and clusters() reads it again, which would
-    // re-evaluate the LSH subtree per reference and fire the cap
+    // re-evaluate the candidate subtree per reference and fire a cap
     // observation more than once — the checkpoint anchors everything to
     // a single execution, and the pair set is candidate-bounded (the
     // cheap side to pin). Its blocks are tracked so they can be freed
-    // the moment components are materialized below.
-    val (cand0, bucketRdds) = lshCandidatesTracked(
-      spark, afterExact, bands, maxBucket, idCol, textCol, capMetrics)
-    val (pairs, pairsRdds) = Par.labeled(docs, "dedupCorpus: exact window + LSH candidate pairs") {
-      checkpointTracked(cand0)
+    // with the rest.
+    val (cand0, candRdds) = candidates(afterExact)
+    val (pairs, pairsRdds) = Par.labeled(docs, s"$label: exact window + $kind candidate pairs") {
+      checkpointTracked(cand0, eager = true)
     }
-    // the pairs checkpoint just materialized — the band-bucket blocks
-    // behind it are dead now
-    bucketRdds.foreach(_.unpersist(blocking = false))
+    // the pairs checkpoint just materialized — the candidate-stage
+    // blocks behind it are dead now
+    candRdds.foreach(_.unpersist(blocking = false))
     // precision gate: score each candidate's TRUE shingle Jaccard and
     // keep only real near-dups before the (chain-merging) components
     val (confirmed, verifyRdds) =
       if (verifyThreshold > 0.0)
-        verifyCheckpointedTracked(spark, pairs, afterExact, verifyThreshold, idCol, textCol)
+        verifyPairs(spark, pairs, afterExact, verifyThreshold, idCol, textCol)
       else (pairs, Seq.empty[org.apache.spark.rdd.RDD[_]])
-    // the near-dup DROP set is bounded by the LSH candidate graph, which
-    // on a heavily-duplicated corpus is a constant fraction of the
-    // corpus — NOT broadcastable by fiat. Left unhinted: AQE broadcasts
-    // at runtime when the set actually is small and degrades gracefully
-    // to a shuffle join when it is not.
-    val dropNearDup = Par.labeled(docs, "dedupCorpus: verify + components") {
+    // the near-dup DROP set is bounded by the candidate graph, which on
+    // a heavily-duplicated corpus is a constant fraction of the corpus —
+    // NOT broadcastable by fiat. Left unhinted: AQE broadcasts at
+    // runtime when the set actually is small and degrades gracefully to
+    // a shuffle join when it is not.
+    val dropNearDup = Par.labeled(docs, s"$label: verify + components") {
       clusters(spark, confirmed)
     }
       .filter(col("node") =!= col("cluster_id"))
       .select(col("node").as(idCol))
     // clusters() materialized its labels with truncated lineage, so the
     // pairs + verify-set checkpoints are unreachable from the returned
-    // plan — free them now instead of leaking them for the session's
-    // lifetime; same for the exact-window cache (its eager consumers
-    // have run)
-    pairsRdds.foreach(_.unpersist(blocking = false))
-    verifyRdds.foreach(_.unpersist(blocking = false))
-    afterExact.unpersist(blocking = false)
-    afterExact.join(dropNearDup, Seq(idCol), "left_anti")
+    // plan; the exact-window cache is not, so a caller that releases
+    // before consuming pays one window replay
+    (afterExact.join(dropNearDup, Seq(idCol), "left_anti"), () => {
+      pairsRdds.foreach(_.unpersist(blocking = false))
+      verifyRdds.foreach(_.unpersist(blocking = false))
+      afterExact.unpersist(blocking = false)
+    })
   }
 
   /** One-call corpus dedup with the WINNOWING candidate generator —
@@ -761,54 +760,13 @@ object Dedup {
   def dedupCorpusWinnowTracked(spark: SparkSession, docs: DataFrame,
       k: Int = 3, w: Int = 4, maxDf: Int = 10, minShared: Int = 2,
       idCol: String = "doc_id", textCol: String = "text",
-      verifyThreshold: Double = 0.7): (DataFrame, () => Unit) = {
-    val (afterExact, confirmed, release) = winnowCorpusStages(spark,
-      docs, k, w, maxDf, minShared, idCol, textCol, verifyThreshold)
-    val dropNearDup = Par.labeled(docs, "winnowCorpus: verify + components") {
-      clusters(spark, confirmed)
+      verifyThreshold: Double = 0.7): (DataFrame, () => Unit) =
+    corpusChain(docs, "winnowCorpus", "winnow", idCol, textCol,
+      verifyThreshold) { afterExact =>
+      val (cand0, fpRdds) = graft.ext.TextStats.winnowCandidatesTracked(
+        afterExact, k, w, maxDf, minShared, idCol, textCol)
+      (cand0.select(col("a_id"), col("b_id")), fpRdds)
     }
-      .filter(col("node") =!= col("cluster_id"))
-      .select(col("node").as(idCol))
-    (afterExact.join(dropNearDup, Seq(idCol), "left_anti"), release)
-  }
-
-  /** [[dedupCorpusWinnow]]'s exact → candidate → verify stages:
-    * returns (exact survivors, verified pairs, release). Callers
-    * consume the frames, then `release()` (checkpoint blocks + the
-    * survivor cache). */
-  private def winnowCorpusStages(spark: SparkSession, docs: DataFrame,
-      k: Int, w: Int, maxDf: Int, minShared: Int, idCol: String,
-      textCol: String, verifyThreshold: Double)
-      : (DataFrame, DataFrame, () => Unit) = {
-    import org.apache.spark.sql.expressions.Window
-    val win = Window.partitionBy(col("content_hash")).orderBy(col(idCol))
-    // NO spread before the window — probed round 15, measured worse
-    // (the exchange outweighs the serialized map-side sort; see
-    // dedupCorpus)
-    val afterExact = docs
-      .withColumn("content_hash", md5(col(textCol)))
-      .withColumn("rk", row_number().over(win))
-      .filter(col("rk") === 1)
-      .drop("content_hash", "rk")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (cand0, fpRdds) = graft.ext.TextStats.winnowCandidatesTracked(
-      afterExact, k, w, maxDf, minShared, idCol, textCol)
-    val (pairs, pairsRdds) = Par.labeled(docs, "winnowCorpus: exact window + winnow candidate pairs") {
-      checkpointTracked(cand0.select(col("a_id"), col("b_id")))
-    }
-    // the pairs checkpoint just materialized — the fingerprint blocks
-    // behind it are dead now
-    fpRdds.foreach(_.unpersist(blocking = false))
-    val (confirmed, verifyRdds) =
-      if (verifyThreshold > 0.0)
-        verifyCheckpointedTracked(spark, pairs, afterExact, verifyThreshold, idCol, textCol)
-      else (pairs, Seq.empty[org.apache.spark.rdd.RDD[_]])
-    (afterExact, confirmed, () => {
-      pairsRdds.foreach(_.unpersist(blocking = false))
-      verifyRdds.foreach(_.unpersist(blocking = false))
-      afterExact.unpersist(blocking = false)
-    })
-  }
 
   /** Chunk-level corpus dedup (the CCNet/Gopher "line dedup" shape,
     * with fixed `chunkWords`-word chunks standing in for lines): every
@@ -887,11 +845,6 @@ object Dedup {
   def dedupIncremental(spark: SparkSession, newDocs: DataFrame, seenDocs: DataFrame,
       bands: Int = 4, maxBucket: Int = 10, threshold: Double = 0.7,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.functions.Shingles8.register(spark)
-    // exact stage: content-hash anti-join (the seen hash set is
-    // corpus-sized — unhinted, AQE picks the strategy; the three
-    // consumers' replays share the seen-side exchange via
-    // ReusedExchange, so the corpus-sized build is shuffled once)
     // the SEEN side is corpus-sized (unlike bandBuckets' increment-sized
     // hot path) and pays THREE per-row passes (md5, minhash, shingles) —
     // spread once, shared by all three sites (identical exchange subtree
@@ -902,39 +855,81 @@ object Dedup {
     // no-shuffle path and fires from the sf1-class decade up, where the
     // corpus-sized pass is seconds and the exchange still ~0.3 s.
     val seen = Par.spreadIfBig(seenDocs)
-    val seenHashes = seen.select(md5(col(textCol)).as("content_hash")).distinct()
-    val notExact = newDocs
-      .withColumn("content_hash", md5(col(textCol)))
-      .join(seenHashes, Seq("content_hash"), "left_anti")
-      .drop("content_hash")
-    // near stage: band buckets new↔seen; degenerate seen-side buckets
-    // are capped exactly like lshCandidates' (no signal, unbounded cost)
-    val bN = bandBuckets(spark, notExact, bands, idCol, textCol)
-      .select(col("doc_id").as("new_id"), col("band"), col("bucket"))
+    val notExact = notSeenExact(newDocs,
+      seen.select(md5(col(textCol)).as("content_hash")), textCol)
     val bS = bandBuckets(spark, seen, bands, idCol, textCol)
       .select(col("doc_id").as("seen_id"), col("band"), col("bucket"))
+    verifyIncrement(spark, notExact,
+      bandCandidates(spark, notExact, bS, bands, maxBucket, idCol, textCol),
+      threshold, idCol, textCol, idCol) { ids =>
+      seen.filter(col(textCol).isNotNull)
+        .join(ids, Seq(idCol), "left_semi")
+        .select(col(idCol).as("seen_id"), expr(s"shingles8($textCol)").as("sh_s"))
+    }
+  }
+
+  /** `newDocs` without the docs whose content hash is in `seenHashes`
+    * (one `content_hash` column): the exact stage of the incremental
+    * forms. The seen hash set is corpus-sized, so the anti-join is
+    * unhinted and AQE picks the strategy. */
+  private def notSeenExact(newDocs: DataFrame, seenHashes: DataFrame,
+      textCol: String): DataFrame =
+    newDocs
+      .withColumn("content_hash", md5(col(textCol)))
+      .join(seenHashes.distinct(), Seq("content_hash"), "left_anti")
+      .drop("content_hash")
+
+  /** New↔seen band-bucket candidate pairs `(new_id, seen_id)`: the
+    * increment's buckets joined to the seen buckets `bS`
+    * `(seen_id, band, bucket)`, degenerate seen-side buckets capped
+    * exactly like lshCandidates' (no signal, unbounded cost). */
+  private def bandCandidates(spark: SparkSession, notExact: DataFrame,
+      bS: DataFrame, bands: Int, maxBucket: Int, idCol: String,
+      textCol: String): DataFrame = {
+    val bN = bandBuckets(spark, notExact, bands, idCol, textCol)
+      .select(col("doc_id").as("new_id"), col("band"), col("bucket"))
     val smallS = bS.groupBy(col("band"), col("bucket"))
       .agg(count(lit(1)).as("bsize"))
       .filter(col("bsize") <= maxBucket)
       .select(col("band"), col("bucket"))
-    val cand = bN.join(bS.join(smallS, Seq("band", "bucket")), Seq("band", "bucket"))
+    bN.join(bS.join(smallS, Seq("band", "bucket")), Seq("band", "bucket"))
       .select(col("new_id"), col("seen_id")).distinct()
-      .localCheckpoint(true) // candidate-bounded; referenced 3× below
+  }
+
+  /** The verify stage of new↔seen pairs, shared by every incremental
+    * form: `notExact` without the docs that have a candidate in `cand`
+    * `(new_id, seen_id)` whose true 8-gram Jaccard is ≥ `threshold`.
+    * The candidates are checkpointed (candidate-bounded, referenced
+    * three times); the new side's shingle sets are semi-joined to the
+    * candidate new ids; `seenSets` maps the distinct candidate seen ids
+    * (one column named `seenKey`) to `(seen_id, sh_s)`, so each form
+    * reads the seen sets its own way. The score is the plain double
+    * ratio, 1.0 when both sets are empty. */
+  private def verifyIncrement(spark: SparkSession, notExact: DataFrame,
+      cand: DataFrame, threshold: Double, idCol: String, textCol: String,
+      seenKey: String)(seenSets: DataFrame => DataFrame): DataFrame = {
+    graft.functions.Shingles8.register(spark)
+    val cp = cand.localCheckpoint(true) // candidate-bounded; referenced 3× below
     val setsN = notExact.filter(col(textCol).isNotNull)
-      .join(cand.select(col("new_id").as(idCol)).distinct(), Seq(idCol), "left_semi")
+      .join(cp.select(col("new_id").as(idCol)).distinct(), Seq(idCol), "left_semi")
       .select(col(idCol).as("new_id"), expr(s"shingles8($textCol)").as("sh_n"))
-    val setsS = seen.filter(col(textCol).isNotNull)
-      .join(cand.select(col("seen_id").as(idCol)).distinct(), Seq(idCol), "left_semi")
-      .select(col(idCol).as("seen_id"), expr(s"shingles8($textCol)").as("sh_s"))
+    val setsS = seenSets(cp.select(col("seen_id").as(seenKey)).distinct())
     val inter = size(array_intersect(col("sh_n"), col("sh_s")))
     val union = size(col("sh_n")) + size(col("sh_s")) - inter
-    val nearDup = cand.join(setsN, Seq("new_id")).join(setsS, Seq("seen_id"))
+    val nearDup = cp.join(setsN, Seq("new_id")).join(setsS, Seq("seen_id"))
       .withColumn("jaccard",
         when(union === 0, lit(1.0)).otherwise(inter.cast("double") / union.cast("double")))
       .filter(col("jaccard") >= threshold)
       .select(col("new_id").as(idCol)).distinct()
     notExact.join(nearDup, Seq(idCol), "left_anti")
   }
+
+  /** A snapshot's persisted shingle sets of the seen ids `ids`
+    * (`doc_id`), as `(seen_id, sh_s)` — the seen side of
+    * [[verifyIncrement]] for the snapshot-reading forms. */
+  private def snapshotSets(snapshot: DataFrame)(ids: DataFrame): DataFrame =
+    snapshot.join(ids, Seq("doc_id"), "left_semi")
+      .select(col("doc_id").as("seen_id"), col("shingles").as("sh_s"))
 
   /** The per-snapshot dedup-index artifact [[dedupIncrementalPersisted]]
     * consumes: one row per (non-null-text) seen doc carrying everything
@@ -993,46 +988,21 @@ object Dedup {
       snapshot: DataFrame, bands: Int = 4, maxBucket: Int = 10,
       threshold: Double = 0.7, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    graft.functions.Shingles8.register(spark)
-    val seenHashes = snapshot.select(col("content_hash")).distinct()
-    val notExact = newDocs
-      .withColumn("content_hash", md5(col(textCol)))
-      .join(seenHashes, Seq("content_hash"), "left_anti")
-      .drop("content_hash")
-    val bN = bandBuckets(spark, notExact, bands, idCol, textCol)
-      .select(col("doc_id").as("new_id"), col("band"), col("bucket"))
+    val notExact = notSeenExact(newDocs, snapshot.select(col("content_hash")), textCol)
     val stack = (0 until bands).map(b => s"$b, sig[$b]").mkString(", ")
     val bS = snapshot
       .selectExpr("doc_id AS seen_id", s"stack($bands, $stack) AS (band, bucket)")
-    val smallS = bS.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("bsize"))
-      .filter(col("bsize") <= maxBucket)
-      .select(col("band"), col("bucket"))
-    val cand = bN.join(bS.join(smallS, Seq("band", "bucket")), Seq("band", "bucket"))
-      .select(col("new_id"), col("seen_id")).distinct()
-      .localCheckpoint(true) // candidate-bounded; referenced 3× below
-    // NOT spread (round-14 measured negative, both decades): the fresh
-    // side's shingle pass does serialize on the one-split scan (4.3 s
-    // one-task job at the 50k decade), but a repartition here loses the
-    // size stats the downstream three-way join uses to broadcast, so
-    // the spread reshaped it into fat shingle-array shuffles that cost
-    // MORE at sf1 (8.4→9.9 s) and regressed sf0.1 (+0.4–0.7 s across
-    // q103/q152/q170). At production split counts the fresh increment
-    // arrives in many splits and the hazard vanishes.
-    val setsN = notExact.filter(col(textCol).isNotNull)
-      .join(cand.select(col("new_id").as(idCol)).distinct(), Seq(idCol), "left_semi")
-      .select(col(idCol).as("new_id"), expr(s"shingles8($textCol)").as("sh_n"))
-    val setsS = snapshot
-      .join(cand.select(col("seen_id").as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-      .select(col("doc_id").as("seen_id"), col("shingles").as("sh_s"))
-    val inter = size(array_intersect(col("sh_n"), col("sh_s")))
-    val union = size(col("sh_n")) + size(col("sh_s")) - inter
-    val nearDup = cand.join(setsN, Seq("new_id")).join(setsS, Seq("seen_id"))
-      .withColumn("jaccard",
-        when(union === 0, lit(1.0)).otherwise(inter.cast("double") / union.cast("double")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("new_id").as(idCol)).distinct()
-    notExact.join(nearDup, Seq(idCol), "left_anti")
+    // the fresh side's shingle pass is NOT spread (round-14 measured
+    // negative, both decades): it does serialize on the one-split scan
+    // (4.3 s one-task job at the 50k decade), but a repartition loses
+    // the size stats the downstream three-way join uses to broadcast,
+    // so the spread reshaped it into fat shingle-array shuffles that
+    // cost MORE at sf1 (8.4→9.9 s) and regressed sf0.1 (+0.4–0.7 s
+    // across q103/q152/q170). At production split counts the fresh
+    // increment arrives in many splits and the hazard vanishes.
+    verifyIncrement(spark, notExact,
+      bandCandidates(spark, notExact, bS, bands, maxBucket, idCol, textCol),
+      threshold, idCol, textCol, "doc_id")(snapshotSets(snapshot))
   }
 
   /** The WINNOWING counterpart of [[incrementalSnapshot]]: per seen
@@ -1046,7 +1016,6 @@ object Dedup {
   def winnowSnapshot(spark: SparkSession, docs: DataFrame,
       k: Int = 3, w: Int = 4,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.functions.WinnowKeys.register(spark, k, w)
     graft.functions.Shingles8.register(spark)
     // scale-gated spread ahead of the heavy per-row pass — see
     // incrementalSnapshot (same measured single-task hazard, same
@@ -1054,8 +1023,7 @@ object Dedup {
     Par.spreadIfBig(docs.filter(col(textCol).isNotNull))
       .select(col(idCol).as("doc_id"),
         md5(col(textCol)).as("content_hash"),
-        expr(s"array_distinct(transform(winnow_keys($textCol), x -> x DIV 8192))")
-          .as("fps"),
+        graft.functions.WinnowKeys.fingerprints(spark, k, w, textCol).as("fps"),
         expr(s"shingles8($textCol)").as("shingles"))
   }
 
@@ -1085,34 +1053,13 @@ object Dedup {
       snapshot: DataFrame, maxDf: Int = 10, minShared: Int = 2,
       threshold: Double = 0.7, idCol: String = "doc_id",
       textCol: String = "text", k: Int = 3, w: Int = 4): DataFrame = {
-    val (notExact, scored) = incrementalWinnowStages(spark, newDocs,
-      snapshot, maxDf, minShared, idCol, textCol, k, w)
-    val nearDup = scored.filter(col("jaccard") >= threshold)
-      .select(col("new_id").as(idCol)).distinct()
-    notExact.join(nearDup, Seq(idCol), "left_anti")
-  }
-
-  /** [[dedupIncrementalWinnow]]'s exact → candidate → verify stages:
-    * returns (exact survivors, scored pairs with their exact
-    * `jaccard`). */
-  private def incrementalWinnowStages(spark: SparkSession,
-      newDocs: DataFrame, snapshot: DataFrame, maxDf: Int, minShared: Int,
-      idCol: String, textCol: String, k: Int, w: Int)
-      : (DataFrame, DataFrame) = {
     // (k, w) must match what the snapshot was fingerprinted with
     // (winnowSnapshot's arguments) — the persisted-directory form
     // reads them from the index itself (readWinnowIndexParams)
-    graft.functions.WinnowKeys.register(spark, k, w)
-    graft.functions.Shingles8.register(spark)
-    val seenHashes = snapshot.select(col("content_hash")).distinct()
-    val notExact = newDocs
-      .withColumn("content_hash", md5(col(textCol)))
-      .join(seenHashes, Seq("content_hash"), "left_anti")
-      .drop("content_hash")
+    val notExact = notSeenExact(newDocs, snapshot.select(col("content_hash")), textCol)
     val fpN = notExact.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("new_id"), explode(expr(
-        s"array_distinct(transform(winnow_keys($textCol), x -> x DIV 8192))"))
-        .as("fp"))
+      .select(col(idCol).as("new_id"),
+        explode(graft.functions.WinnowKeys.fingerprints(spark, k, w, textCol)).as("fp"))
     val fpS = snapshot.select(col("doc_id").as("seen_id"),
       explode(col("fps")).as("fp"))
     val smallS = fpS.groupBy(col("fp")).agg(count(lit(1)).as("df"))
@@ -1123,22 +1070,10 @@ object Dedup {
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
       .select(col("new_id"), col("seen_id"))
-      .localCheckpoint(true) // candidate-bounded; referenced 3× below
-    // NOT spread — same measured negative as dedupIncrementalPersisted
-    // (see there): the repartition's stats loss reshaped the scoring
-    // join into fat shingle shuffles, worse at both decades
-    val setsN = notExact.filter(col(textCol).isNotNull)
-      .join(cand.select(col("new_id").as(idCol)).distinct(), Seq(idCol), "left_semi")
-      .select(col(idCol).as("new_id"), expr(s"shingles8($textCol)").as("sh_n"))
-    val setsS = snapshot
-      .join(cand.select(col("seen_id").as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-      .select(col("doc_id").as("seen_id"), col("shingles").as("sh_s"))
-    val inter = size(array_intersect(col("sh_n"), col("sh_s")))
-    val union = size(col("sh_n")) + size(col("sh_s")) - inter
-    val scored = cand.join(setsN, Seq("new_id")).join(setsS, Seq("seen_id"))
-      .withColumn("jaccard",
-        when(union === 0, lit(1.0)).otherwise(inter.cast("double") / union.cast("double")))
-    (notExact, scored)
+    // the new side is NOT spread — same measured negative as
+    // dedupIncrementalPersisted (see there)
+    verifyIncrement(spark, notExact, cand, threshold, idCol, textCol,
+      "doc_id")(snapshotSets(snapshot))
   }
 
   /** The DIRECTORY form of the winnow index: `path/docs` =
@@ -1155,7 +1090,7 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val snap = winnowSnapshot(spark, docs, k, w, idCol, textCol)
     snap.write.mode("overwrite").parquet(s"$path/docs")
-    spark.read.parquet(s"$path/docs")
+    Tables.read(spark, s"$path/docs")
       .select(explode(col("fps")).as("fp"))
       .groupBy(col("fp")).agg(count(lit(1)).as("df"))
       .write.mode("overwrite").parquet(s"$path/fpdf")
@@ -1206,11 +1141,11 @@ object Dedup {
     // silently promise df fidelity the table no longer has)
     val eff = math.min(pruneDf,
       math.min(readWinnowPruneDf(spark, a), readWinnowPruneDf(spark, b)))
-    spark.read.parquet(s"$a/docs")
-      .unionByName(spark.read.parquet(s"$b/docs"))
+    Tables.read(spark, s"$a/docs")
+      .unionByName(Tables.read(spark, s"$b/docs"))
       .write.mode("overwrite").parquet(s"$out/docs")
-    val summed = spark.read.parquet(s"$a/fpdf")
-      .unionByName(spark.read.parquet(s"$b/fpdf"))
+    val summed = Tables.read(spark, s"$a/fpdf")
+      .unionByName(Tables.read(spark, s"$b/fpdf"))
       .groupBy(col("fp")).agg(sum(col("df")).as("df"))
     if (eff == Int.MaxValue) {
       summed.write.mode("overwrite").parquet(s"$out/fpdf")
@@ -1230,7 +1165,7 @@ object Dedup {
       // consumers finish — Dataset.unpersist is a no-op for
       // localCheckpoint blocks (COVERAGE.md), only the RDD path frees.
       val (cleaned, cleanedRdds) = checkpointTracked(summed
-        .join(broadcast(tombstoned), Seq("fp"), "left_anti"))
+        .join(broadcast(tombstoned), Seq("fp"), "left_anti"), eager = true)
       cleaned.filter(col("df") <= eff)
         .write.mode("overwrite").parquet(s"$out/fpdf")
       cleaned.filter(col("df") > eff).select(col("fp"))
@@ -1292,10 +1227,8 @@ object Dedup {
       s"maxDf=$maxDf exceeds the index's prune cap $pruneDf at $path — " +
         "fps with df in (prune_df, maxDf] were pruned at merge time; " +
         "re-merge with a looser pruneDf to use this maxDf")
-    graft.functions.WinnowKeys.register(spark, k, w)
-    graft.functions.Shingles8.register(spark)
-    val snapshot = spark.read.parquet(s"$path/docs")
-    val fpdf = spark.read.parquet(s"$path/fpdf")
+    val snapshot = Tables.read(spark, s"$path/docs")
+    val fpdf = Tables.read(spark, s"$path/fpdf")
     val newHashed = newDocs.withColumn("content_hash", md5(col(textCol)))
     val newHashes = newHashed.select(col("content_hash")).distinct()
     val seenMatched = snapshot.select(col("content_hash"))
@@ -1308,9 +1241,8 @@ object Dedup {
     // SLOWER — fpN feeds a broadcast build, and a shuffle inside the
     // build's stage chain costs more than the 0.8 s pass it splits)
     val fpN = notExact.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("new_id"), explode(expr(
-        s"array_distinct(transform(winnow_keys($textCol), x -> x DIV 8192))"))
-        .as("fp"))
+      .select(col(idCol).as("new_id"),
+        explode(graft.functions.WinnowKeys.fingerprints(spark, k, w, textCol)).as("fp"))
     // seen-side df rides the persisted table: fps the seen corpus never
     // produced are dropped (they cannot match a posting), over-cap fps
     // are dropped BEFORE any posting expands
@@ -1324,22 +1256,9 @@ object Dedup {
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
       .select(col("new_id"), col("seen_id"))
-      .localCheckpoint(true) // candidate-bounded; referenced 3× below
-    val setsN = notExact.filter(col(textCol).isNotNull)
-      .join(cand.select(col("new_id").as(idCol)).distinct(), Seq(idCol), "left_semi")
-      .select(col(idCol).as("new_id"), expr(s"shingles8($textCol)").as("sh_n"))
-    val setsS = snapshot
-      .join(broadcast(cand.select(col("seen_id").as("doc_id")).distinct()),
-        Seq("doc_id"), "left_semi")
-      .select(col("doc_id").as("seen_id"), col("shingles").as("sh_s"))
-    val inter = size(array_intersect(col("sh_n"), col("sh_s")))
-    val union = size(col("sh_n")) + size(col("sh_s")) - inter
-    val nearDup = cand.join(setsN, Seq("new_id")).join(setsS, Seq("seen_id"))
-      .withColumn("jaccard",
-        when(union === 0, lit(1.0)).otherwise(inter.cast("double") / union.cast("double")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("new_id").as(idCol)).distinct()
-    notExact.join(nearDup, Seq(idCol), "left_anti")
+    // the candidate seen ids broadcast into one scan of the snapshot
+    verifyIncrement(spark, notExact, cand, threshold, idCol, textCol,
+      "doc_id")(ids => snapshotSets(snapshot)(broadcast(ids)))
   }
 
   /** Corpus-level overlap estimate between two document sets (split by
@@ -1936,7 +1855,7 @@ object Dedup {
       path: String): Unit = {
     val w = HammingWidth.of(sigDf)
     w.requireSame(HammingWidth.of(spark.read.parquet(s"$path/sigs")), path)
-    val (inc, blocks) = checkpointTracked(sigDf.select(w.columns: _*))
+    val (inc, blocks) = checkpointTracked(sigDf.select(w.columns: _*), eager = true)
     try {
       inc.repartition(col("doc_id"))
         .write.mode("append").parquet(s"$path/sigs")
@@ -2203,7 +2122,7 @@ object Dedup {
     // slices exactly the ≤ k+ties representative docs (the first-cut
     // rewrite re-ran gram_keys over the whole corpus to find winner
     // strings: 4.9s → 4.2s → this shape).
-    val (cnts, cntBlocks) = checkpointTracked {
+    val (cnts, cntBlocks) = checkpointTracked({
       graft.functions.GramKeys.register(spark, Seq(spanWords),
         graft.functions.MinHash48.MaxShinglePos - 1)
       // scale-gated spread before the gram explode: the corpus-wide
@@ -2229,7 +2148,7 @@ object Dedup {
         .agg(count(lit(1)).as("n_docs"), sum(col("_c")).as("n_occ"),
           min(struct(col("doc_id"), col("_mi").as("i"))).as("rep"))
         .filter(col("n_docs") >= minDocs)
-    }
+    }, eager = true)
     try {
       val top = cnts
         .orderBy(col("n_docs").desc, col("n_occ").desc).limit(k).collect()

@@ -480,7 +480,7 @@ object Similarity {
       samplePred: Option[org.apache.spark.sql.Column], pairSalts: Int)
       : (DataFrame, Int, () => Unit) = {
     val (cp0, cp0Blocks) = Dedup.checkpointTracked(
-      assignFixed(spark, emb, centroids, dims))
+      assignFixed(spark, emb, centroids, dims), eager = true)
     val free = spark.createDataFrame(cp0.rdd, cp0.schema)
     val sized0 = free.groupBy(col("centroid")).agg(
       count(lit(1)).as("csize"),
@@ -524,7 +524,7 @@ object Similarity {
       val capped = free.join(
         broadcast(sized.filter(col("csize") <= maxCluster)
           .select(col("centroid"))), Seq("centroid"))
-      val (cp2, cp2Blocks) = Dedup.checkpointTracked(capped)
+      val (cp2, cp2Blocks) = Dedup.checkpointTracked(capped, eager = true)
       cp0Blocks.foreach(_.unpersist(blocking = false))
       val keptCp = spark.createDataFrame(cp2.rdd, cp2.schema)
       val salts = if (pairSalts > 0) pairSalts else {

@@ -1126,7 +1126,7 @@ object TextStats {
     // the compiled loop needs seconds. Same key arithmetic, same
     // distinct-set output; m < w (including null/short docs) yields an
     // empty array the explode drops.
-    graft.functions.WinnowKeys.register(docs.sparkSession, k, w)
+    val winnowKeys = graft.functions.WinnowKeys.register(docs.sparkSession, k, w)
     // scale-gated spread before the compiled selection: a one-row-group
     // corpus arrives in 1-2 splits and the per-row pass serializes
     // there (q133 at the 50k decade: two ~1 s two-task jobs — the
@@ -1135,7 +1135,7 @@ object TextStats {
     // split counts, and a no-op for winnowCandidates, whose input is
     // already spread
     Par.spreadIfBig(docs.filter(col(textCol).isNotNull))
-      .select(col(idCol), explode(expr(s"winnow_keys($textCol)")).as("key"))
+      .select(col(idCol), explode(expr(s"$winnowKeys($textCol)")).as("key"))
       .select(col(idCol), expr("key % 8192").as("pos"),
         expr("key DIV 8192").as("fp"))
   }
@@ -1171,9 +1171,9 @@ object TextStats {
     // the spread lives inside winnow() (gated there); the checkpoint is
     // NOT scale-gated — the round-15 gating probe measured worse at
     // sf0.1 too (see Dedup.lshCandidatesTracked)
-    val (fps, fpRdds) = graft.ext.Dedup.checkpointLazyTracked(
+    val (fps, fpRdds) = graft.ext.Dedup.checkpointTracked(
       winnow(docs, k, w, idCol, textCol)
-        .select(col(idCol), col("fp")).distinct())
+        .select(col(idCol), col("fp")).distinct(), eager = false)
     val small = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
       .filter(col("df").between(2, maxDf))
       .select(col("fp"))

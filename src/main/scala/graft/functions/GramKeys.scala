@@ -66,9 +66,8 @@ case class GramKeys(child: Expression, sizes: Seq[Int], cap: Int)
 
 object GramKeys {
 
-  /** Bind `gram_keys` at fixed rung sizes + start cap
-    * ([[WinnowKeys.register]]'s pattern — parameter-specific, so
-    * registration replaces any prior binding). */
+  /** Bind `gram_keys` at fixed rung sizes + start cap — parameter-
+    * specific, so registration replaces any prior binding. */
   def register(spark: org.apache.spark.sql.SparkSession, sizes: Seq[Int],
       cap: Int = 4096): Unit = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

@@ -101,13 +101,27 @@ object WinnowKeys {
     new GenericArrayData(out)
   }
 
-  /** Bind `winnow_keys` at fixed (k, w) — parameter-specific, so
-    * registration replaces any prior binding. */
+  /** Bind `winnow_keys` at fixed (k, w) under its own name,
+    * `winnow_keys_<k>_<w>`, once per session, and return that name:
+    * registering the same (k, w) again keeps the binding, and another
+    * (k, w) in the same session gets a binding of its own. */
   def register(spark: org.apache.spark.sql.SparkSession, k: Int,
-      w: Int): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_keys",
-      (children: Seq[Expression]) => WinnowKeys(children.head, k, w),
-      "built-in")
+      w: Int): String = {
+    val name = s"winnow_keys_${k}_$w"
+    val reg = spark.sessionState.functionRegistry
+    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+      reg.createOrReplaceTempFunction(name,
+        (children: Seq[Expression]) => WinnowKeys(children.head, k, w),
+        "built-in")
+    name
   }
+
+  /** The distinct winnow fingerprint set of `textCol` at (k, w):
+    * [[register]]'s `winnow_keys` with the position term dropped
+    * (`key DIV 8192`) — the `fps` column of a winnow index and the new
+    * side of every increment against one. */
+  def fingerprints(spark: org.apache.spark.sql.SparkSession, k: Int, w: Int,
+      textCol: String): org.apache.spark.sql.Column =
+    org.apache.spark.sql.functions.expr(
+      s"array_distinct(transform(${register(spark, k, w)}($textCol), x -> x DIV 8192))")
 }

@@ -635,8 +635,8 @@ object Multimodal {
   def imageIntakeAdmit128Tracked(spark: SparkSession, media: DataFrame,
       path: String, maxDist: Int = 3, maxBucket: Int = 0)
       : (DataFrame, () => Unit) = {
-    val (packed, blocks) = graft.ext.Dedup.checkpointLazyTracked(
-      imagePacked128(spark, media))
+    val (packed, blocks) = graft.ext.Dedup.checkpointTracked(
+      imagePacked128(spark, media), eager = false)
     (graft.ext.Dedup.hammingIntakeAdmit(spark, packed, path, maxDist,
         maxBucket)
       .select(col("doc_id").as("media_id"), col("lo"), col("hi")),

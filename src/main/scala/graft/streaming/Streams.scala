@@ -379,7 +379,6 @@ object Streams {
     require(maxDf <= pruneDf,
       s"maxDf=$maxDf exceeds the index's prune cap $pruneDf at " +
         s"$indexPath — fps in (prune_df, maxDf] were pruned at merge")
-    graft.functions.WinnowKeys.register(spark, k, w)
     graft.functions.Shingles8.register(spark)
     val snapshot = spark.read.parquet(s"$indexPath/docs")
     val fpdf = spark.read.parquet(s"$indexPath/fpdf")
@@ -413,8 +412,8 @@ object Streams {
       .withColumn("sh_n", expr("shingles8(text)"))
       // explode_outer: a doc with NO fingerprints (shorter than the
       // winnow window) still flows through with a null fp and is kept
-      .withColumn("fp", explode_outer(expr(
-        "array_distinct(transform(winnow_keys(text), x -> x DIV 8192))")))
+      .withColumn("fp", explode_outer(
+        graft.functions.WinnowKeys.fingerprints(spark, k, w, "text")))
       .join(postings, Seq("fp"), "left_outer")
       .select(col("doc_id"), col("ts"), col("text"), col("sh_n"), col("cands"))
       .as[WinnowIn]
