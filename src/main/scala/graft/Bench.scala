@@ -42,9 +42,12 @@ object Bench {
         .filter(_.startsWith(Prefix)).foreach { tag =>
           // an unlabeled job names its stages' call sites: the result
           // stage plus the distinct upstream sites tell which operator
-          // the job materializes
+          // the job materializes. Spark lists the stages in no stable
+          // order, so the names are sorted: two runs of one plan record
+          // the same description.
           val desc = props.flatMap(p => Option(p.getProperty("spark.job.description")))
-            .getOrElse(js.stageInfos.map(_.name.takeWhile(_ != '\n')).distinct.mkString(" | "))
+            .getOrElse(js.stageInfos.map(_.name.takeWhile(_ != '\n')).distinct.sorted
+              .mkString(" | "))
           started.put(js.jobId, (tag, js.time, js.stageInfos.map(_.numTasks).sum, desc))
         }
     }

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /** Hashed linear quality classifier — the fastText-style scorer every
   * production data pipeline runs in front of pretraining ("does this
   * document look like the high-quality reference set?"), expressed
@@ -131,9 +133,9 @@ object Classifier {
 
   /** Reload a persisted model — integers round-trip exactly. */
   def loadQcModel(spark: SparkSession, path: String): QcModel = {
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val meta = Tables.read(spark, s"$path/meta").head()
     val buckets = meta.getInt(1)
-    val byB = spark.read.parquet(s"$path/weights")
+    val byB = Tables.read(spark, s"$path/weights")
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     QcModel(IndexedSeq.tabulate(buckets)(byB(_)), meta.getLong(0), buckets)
   }
@@ -453,9 +455,9 @@ object Classifier {
     * cannot diverge between a trained and a reloaded model. */
   def loadNbModel(spark: SparkSession, path: String): graft.functions.NbModel =
     assembleNbModel(
-      spark.read.parquet(s"$path/priors")
+      Tables.read(spark, s"$path/priors")
         .collect().map(r => (r.getString(0), r.getLong(1))),
-      spark.read.parquet(s"$path/likelihood")
+      Tables.read(spark, s"$path/likelihood")
         .collect().map(r => (r.getString(1), r.getString(0), r.getLong(2))))
 
   /** Mean log-loss of a model on a labeled corpus (spec/monitoring

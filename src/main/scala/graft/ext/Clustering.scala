@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Dot64
+import graft.functions.Functions
 
 /** Embedding clustering for corpus curation (topic balancing, cluster
   * sampling): Lloyd k-means with deterministic seeds and a fixed
@@ -42,7 +42,7 @@ object Clustering {
   def kmeansFromCenters(spark: SparkSession, emb: DataFrame,
       seeds: Seq[(Long, Seq[Double])], iters: Int,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    Dot64.register(spark)
+    Functions.registerAll(spark)
     import spark.implicits._
     val base = emb.select(col(idCol).as("vec_id"),
       expr(s"transform($embCol, x -> CAST(x AS DOUBLE))").as("v"))
@@ -114,7 +114,7 @@ object Clustering {
   def kCenter(spark: SparkSession, emb: DataFrame, k: Int,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")
-    Dot64.register(spark)
+    Functions.registerAll(spark)
     import spark.implicits._
     val base = emb.select(col(idCol).cast("long").as("vec_id"),
       expr(s"transform($embCol, x -> CAST(x AS DOUBLE))").as("v"))
@@ -164,7 +164,7 @@ object Clustering {
   def kCenterIncremental(spark: SparkSession, emb: DataFrame, k: Int,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")
-    Dot64.register(spark)
+    Functions.registerAll(spark)
     import spark.implicits._
     val base = emb.select(col(idCol).cast("long").as("vec_id"),
       expr(s"transform($embCol, x -> CAST(x AS DOUBLE))").as("v"))

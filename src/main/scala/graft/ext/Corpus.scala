@@ -554,7 +554,7 @@ object Corpus {
       snapshot: DataFrame, urlCol: String = "url",
       idCol: String = "doc_id", textCol: String = "text")
       : (DataFrame, () => Unit) = {
-    graft.functions.UrlNorm.register(spark)
+    graft.functions.Functions.registerAll(spark)
     val normed = arrivals.withColumn("url_norm",
       expr(s"url_norm($urlCol).url_norm"))
     // min-id-per-key via a window, not an aggregate + self-join: one

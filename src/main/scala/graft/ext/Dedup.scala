@@ -66,7 +66,7 @@ object Dedup {
     * portable across engines (the oracle contract). */
   def minhashSignatures(spark: SparkSession, docs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    MinHash48.register(spark)
+    graft.functions.Functions.registerAll(spark)
     // null text: the relational form (explode of split(NULL) → no rows)
     // and the oracle DROP the document; match that, don't emit NULL sigs
     docs.filter(col(textCol).isNotNull)
@@ -446,7 +446,7 @@ object Dedup {
   private def verifyPairs(spark: SparkSession, cp: DataFrame,
       docs: DataFrame, threshold: Double, idCol: String, textCol: String)
       : (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-    graft.functions.Shingles8.register(spark)
+    graft.functions.Functions.registerAll(spark)
     val (sides, setsRdds) = pairSides(cp, docs, idCol, textCol,
       "sh" -> expr(s"shingles8($textCol)"))
     val inter = size(array_intersect(col("sh_a"), col("sh_b")))
@@ -502,7 +502,7 @@ object Dedup {
   def containment(spark: SparkSession, pairs: DataFrame, docs: DataFrame,
       threshold: Double, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    graft.functions.Shingles8.register(spark)
+    graft.functions.Functions.registerAll(spark)
     val cp = pairs.select(col("a_id"), col("b_id")).localCheckpoint(true)
     // both ratio directions read the same candidate-bounded shingle sets
     val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("long")
@@ -532,8 +532,7 @@ object Dedup {
   def minhashCalibration(spark: SparkSession, docs: DataFrame,
       bands: Int = 4, maxBucket: Int = 10,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.functions.MinHash48.register(spark)
-    graft.functions.Shingles8.register(spark)
+    graft.functions.Functions.registerAll(spark)
     val (cand0, bucketRdds) = lshCandidatesTracked(
       spark, docs, bands, maxBucket, idCol, textCol)
     val cp = cand0.select(col("a_id"), col("b_id")).localCheckpoint(true)
@@ -908,7 +907,7 @@ object Dedup {
   private def verifyIncrement(spark: SparkSession, notExact: DataFrame,
       cand: DataFrame, threshold: Double, idCol: String, textCol: String,
       seenKey: String)(seenSets: DataFrame => DataFrame): DataFrame = {
-    graft.functions.Shingles8.register(spark)
+    graft.functions.Functions.registerAll(spark)
     val cp = cand.localCheckpoint(true) // candidate-bounded; referenced 3× below
     val setsN = notExact.filter(col(textCol).isNotNull)
       .join(cp.select(col("new_id").as(idCol)).distinct(), Seq(idCol), "left_semi")
@@ -944,8 +943,7 @@ object Dedup {
     * the corpus text again. */
   def incrementalSnapshot(spark: SparkSession, docs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    MinHash48.register(spark)
-    graft.functions.Shingles8.register(spark)
+    graft.functions.Functions.registerAll(spark)
     // spread BEFORE the three heavy per-row expressions: a one-row-group
     // corpus arrives as ONE split, and the snapshot build (this chain's
     // only corpus-sized pass) serialized on a single task — measured at
@@ -1016,7 +1014,7 @@ object Dedup {
   def winnowSnapshot(spark: SparkSession, docs: DataFrame,
       k: Int = 3, w: Int = 4,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.functions.Shingles8.register(spark)
+    graft.functions.Functions.registerAll(spark)
     // scale-gated spread ahead of the heavy per-row pass — see
     // incrementalSnapshot (same measured single-task hazard, same
     // sf0.1 no-op guarantee)
@@ -1273,7 +1271,7 @@ object Dedup {
     * more salts through `minhashSignatures` for finer estimates). */
   def corpusOverlap(spark: SparkSession, docs: DataFrame,
       inA: org.apache.spark.sql.Column, textCol: String = "text"): DataFrame = {
-    MinHash48.register(spark)
+    graft.functions.Functions.registerAll(spark)
     val lanes = docs.filter(col(textCol).isNotNull)
       .select(inA.as("in_a"), expr(s"minhash48($textCol)").as("sig"))
       .select(col("in_a"), posexplode(col("sig")).as(Seq("lane", "h")))
@@ -1351,7 +1349,7 @@ object Dedup {
     * Bit-identical to the relational form (kept below for the
     * equivalence spec and as the oracle's shape). */
   def simhash(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.functions.SimHash16.register(docs.sparkSession)
+    graft.functions.Functions.registerAll(docs.sparkSession)
     // null text dropped — parity with the relational form + oracle
     docs.filter(col(textCol).isNotNull)
       .select(col(idCol).as("doc_id"), expr(s"simhash16($textCol)").as("simhash"))
@@ -1384,7 +1382,7 @@ object Dedup {
     * bit-identical to [[simhash]]. */
   def simhashLanes(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    graft.functions.SimHash64.register(docs.sparkSession)
+    graft.functions.Functions.registerAll(docs.sparkSession)
     docs.filter(col(textCol).isNotNull)
       .select(col(idCol).as("doc_id"), expr(s"simhash64($textCol)").as("lanes"))
   }
@@ -1577,7 +1575,7 @@ object Dedup {
     * `simhash64`'s). Null text drops (no signature to compare). */
   def simhashLanes128(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    graft.functions.SimHash128.register(docs.sparkSession)
+    graft.functions.Functions.registerAll(docs.sparkSession)
     docs.filter(col(textCol).isNotNull)
       .select(col(idCol).as("doc_id"), expr(s"simhash128($textCol)").as("lanes"))
   }
@@ -1741,7 +1739,7 @@ object Dedup {
       counts.coalesce(1) // ≤ 4·2¹⁶ rows — every intake reads this whole
     def appendCensus(spark: SparkSession, counts: DataFrame,
         path: String): Unit = {
-      val merged = spark.read.parquet(s"$path/bsize").unionByName(counts)
+      val merged = Tables.read(spark, s"$path/bsize").unionByName(counts)
         .groupBy(col("band"), col("bval")).agg(sum(col("n")).as("n"))
         .collect() // metadata-scale: ≤ 4·65536 rows by construction
       import spark.implicits._
@@ -1751,7 +1749,7 @@ object Dedup {
     }
     def guard(spark: SparkSession, path: String, cap: Int,
         arrivals: DataFrame): DataFrame =
-      arrivals.join(broadcast(spark.read.parquet(s"$path/bsize")
+      arrivals.join(broadcast(Tables.read(spark, s"$path/bsize")
         .filter(col("n") <= cap).select(col("band"), col("bval"))),
         Seq("band", "bval"))
   }
@@ -1775,7 +1773,7 @@ object Dedup {
     def guard(spark: SparkSession, path: String, cap: Int,
         arrivals: DataFrame): DataFrame = {
       val touched = arrivals.select(col("band"), col("bval")).distinct()
-      val ok = spark.read.parquet(s"$path/bsize")
+      val ok = Tables.read(spark, s"$path/bsize")
         .join(broadcast(touched), Seq("band", "bval"))
         .groupBy(col("band"), col("bval")).agg(sum(col("n")).as("n"))
         .filter(col("n") <= cap) // n >= 1 by construction: indexed + under cap
@@ -1824,7 +1822,7 @@ object Dedup {
     * quietly weakens the mega-bucket guard [[hammingIntake]] relies
     * on, so repair beats limping on. */
   def rebuildHammingCensus(spark: SparkSession, path: String): Unit = {
-    val sigs = spark.read.parquet(s"$path/sigs")
+    val sigs = Tables.read(spark, s"$path/sigs")
     val w = HammingWidth.of(sigs)
     w.layoutCensus(bandCounts(w, sigs))
       .write.mode("overwrite").parquet(s"$path/bsize")
@@ -1854,7 +1852,7 @@ object Dedup {
   def appendHammingIndex(spark: SparkSession, sigDf: DataFrame,
       path: String): Unit = {
     val w = HammingWidth.of(sigDf)
-    w.requireSame(HammingWidth.of(spark.read.parquet(s"$path/sigs")), path)
+    w.requireSame(HammingWidth.of(Tables.read(spark, s"$path/sigs")), path)
     val (inc, blocks) = checkpointTracked(sigDf.select(w.columns: _*), eager = true)
     try {
       inc.repartition(col("doc_id"))
@@ -1953,7 +1951,7 @@ object Dedup {
     * adds no read. */
   private[graft] def indexSigs(spark: SparkSession, w: HammingWidth,
       path: String): DataFrame = {
-    val seen = spark.read.parquet(s"$path/sigs")
+    val seen = Tables.read(spark, s"$path/sigs")
     w.requireSame(HammingWidth.of(seen), path)
     seen
   }
@@ -2033,11 +2031,11 @@ object Dedup {
     * over the census — metadata-scale at 64 bits, one narrow
     * map-side-combined O(n) scan of the partials at 128. */
   def deriveHammingCap(spark: SparkSession, path: String): Int =
-    deriveCap(spark, HammingWidth.of(spark.read.parquet(s"$path/sigs")), path)
+    deriveCap(spark, HammingWidth.of(Tables.read(spark, s"$path/sigs")), path)
 
   private[graft] def deriveCap(spark: SparkSession, w: HammingWidth,
       path: String): Int = {
-    val row = spark.read.parquet(s"$path/bsize").agg(sum(col("n"))).head()
+    val row = Tables.read(spark, s"$path/bsize").agg(sum(col("n"))).head()
     w.capOf((if (row.isNullAt(0)) 0L else row.getLong(0)) / 4)
   }
 

@@ -36,7 +36,7 @@ object EmbedStats {
     * than the DuckDB oracle at sf0.1 (7.7s → ~0.3s). */
   def covariance(emb: DataFrame, dims: Int = 64,
       embCol: String = "embedding"): DataFrame = {
-    graft.functions.CovMoments.register(emb.sparkSession)
+    graft.functions.Functions.registerAll(emb.sparkSession)
     val posToI: Seq[Int] =
       (0 until dims).flatMap(i => (i until dims).map(_ => i))
     val posToJ: Seq[Int] = (0 until dims).flatMap(i => i until dims)

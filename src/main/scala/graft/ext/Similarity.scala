@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.Dot64
+import graft.core.Tables
+import graft.functions.Functions
 
 /** Similarity-search operators over an embedding table
   * (vec_id + embedding: array<float>) — brute-force exact baseline and
@@ -18,7 +19,7 @@ object Similarity {
   /** Normalize: (vec_id, v: array<double>, nrm). */
   def withVectors(spark: SparkSession, emb: DataFrame,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    Dot64.register(spark)
+    Functions.registerAll(spark)
     emb.withColumn("v", expr(s"transform($embCol, x -> CAST(x AS DOUBLE))"))
       .withColumn("nrm", expr("sqrt(dot64(v, v))"))
       .withColumnRenamed(idCol, "vec_id")
@@ -33,7 +34,7 @@ object Similarity {
     * over the rounded terms (order-free cross-engine). */
   def normProfile(spark: SparkSession, emb: DataFrame,
       labelCol: String = "label", embCol: String = "embedding"): DataFrame = {
-    Dot64.register(spark)
+    Functions.registerAll(spark)
     emb
       .withColumn("v", expr(s"transform($embCol, x -> CAST(x AS DOUBLE))"))
       .withColumn("nrm", round(expr("sqrt(dot64(v, v))"), 6))
@@ -72,7 +73,7 @@ object Similarity {
     // negated +0.0-normalized scores — oracle unchanged), and the
     // corpus scan spreads to full parallelism (a one-row-group parquet
     // file otherwise serializes the whole dot loop on one task)
-    graft.functions.TopKCosRound.register(spark)
+    Functions.registerAll(spark)
     cand.crossJoin(broadcast(qv)).filter(col("q_id") =!= col("n_id"))
       // a zero-norm vector has no defined cosine: produce NaN via an
       // explicit guard (IEEE 0/0 — what the DuckDB oracle computes;
@@ -111,7 +112,7 @@ object Similarity {
     * buffers. */
   def cosineTopKAgainst(spark: SparkSession, emb: DataFrame,
       queries: DataFrame, k: Int): DataFrame = {
-    graft.functions.TopKCosRound.register(spark)
+    Functions.registerAll(spark)
     val qv = withVectors(spark, queries)
       .select(col("vec_id").as("q_id"), col("v").as("vq"), col("nrm").as("nq"))
     val cand = spread(withVectors(spark, emb)
@@ -138,7 +139,7 @@ object Similarity {
     * numerically interchangeable with the per-dim-sum form. */
   def lshBuckets(spark: SparkSession, emb: DataFrame,
       nPlanes: Int = 16, dims: Int = 64): DataFrame = {
-    Dot64.register(spark)
+    Functions.registerAll(spark)
     val planes = spark.range(nPlanes).select(
       col("id").as("p"),
       expr(s"""transform(sequence(0, ${dims - 1}, 1), d ->
@@ -235,7 +236,7 @@ object Similarity {
     // map-side where the broadcast join generates them; the candidate's
     // cell id rejoins from the materialized assignment afterwards
     // (result side is |queries|·k rows, broadcast).
-    graft.functions.TopKCosRound.register(spark)
+    Functions.registerAll(spark)
     val tk = broadcast(probes).join(cand, Seq("centroid_id"))
       .filter(col("q_id") =!= col("n_id"))
       // rounding + sentinel + negation live inside topk_cos_round,
@@ -350,7 +351,7 @@ object Similarity {
       pairSalts: Int = 0): DataFrame = {
     require(pairSalts >= 0,
       s"pairSalts=$pairSalts must be >= 1, or 0 to derive from the census")
-    graft.functions.TopKCosRound.register(spark)
+    Functions.registerAll(spark)
     // SALTED pair generation: a dense corpus collapses into few cells
     // (the 10×-vector bench landed 2/3 of 20k vectors in two cells →
     // 46M pairs in ONE task each), so the A side carries a
@@ -572,7 +573,7 @@ object Similarity {
     // BigDecimal round(,4) costs ~15× the dot product it follows, and
     // only boundary pairs (within 0.6·1e-4 + 4 ulp of the threshold)
     // need the exact rounding — identical verdicts (RoundGeSpec)
-    graft.functions.RoundGe.register(spark)
+    Functions.registerAll(spark)
     val pairs = a.join(b, Seq("centroid", "_salt"))
       .filter(col("a_id") < col("b_id"))
       .withColumn("_rc", expr("dot64(va, vb)") / (col("na") * col("nb")))
@@ -611,7 +612,7 @@ object Similarity {
   def pqCodebooks(spark: SparkSession, emb: DataFrame,
       seedPred: org.apache.spark.sql.Column, m: Int = 8, k: Int = 16,
       iters: Int = 3, dims: Int = 64): Seq[Seq[Seq[Double]]] = {
-    Dot64.register(spark)
+    Functions.registerAll(spark)
     require(dims % m == 0, s"dims=$dims not divisible by m=$m subspaces")
     val subDim = dims / m
     val base = emb.select(col("vec_id"),
@@ -691,7 +692,7 @@ object Similarity {
   def pqSearchADC(spark: SparkSession, emb: DataFrame, codes: DataFrame,
       codebooks: Seq[Seq[Seq[Double]]],
       queryPred: org.apache.spark.sql.Column, topK: Int): DataFrame = {
-    graft.functions.AdcSum.register(spark)
+    Functions.registerAll(spark)
     pqSearch(emb.filter(queryPred), codes, codebooks, topK)
   }
 
@@ -788,7 +789,7 @@ object Similarity {
     // threshold verdict via round_ge (see semanticDedupFixed — the
     // per-pair BigDecimal was the scan's dominant term); survivors are
     // few, so the OUTPUT cosine's exact rounding is paid only by them
-    graft.functions.RoundGe.register(spark)
+    Functions.registerAll(spark)
     a.join(b, Seq(blockCol, "_salt"))
       .filter(col("a_id") < col("b_id"))
       .withColumn("_rc", expr("dot64(va, vb)") / (col("na") * col("nb")))
@@ -848,7 +849,7 @@ object Similarity {
     // threshold verdict via round_ge (see nearDupPairs); the zero-norm
     // guard (cosineTopK's) keeps NaN — which fails round_ge exactly as
     // it fails `round(·, 4) >= t` — instead of an ANSI 0/0 throw
-    graft.functions.RoundGe.register(spark)
+    Functions.registerAll(spark)
     a.join(b, Seq("centroid", "_salt"))
       .filter(col("a_id") < col("b_id"))
       .withColumn("_rc",
@@ -877,7 +878,7 @@ object Similarity {
     * form decides identically everywhere. */
   def meanPool(spark: SparkSession, emb: DataFrame,
       labelCol: String = "label", embCol: String = "embedding"): DataFrame = {
-    graft.functions.VecSum6.register(spark)
+    Functions.registerAll(spark)
     // ONE compiled vec_sum6 pass ([[graft.functions.VecSum6]]): each
     // row folds its dims terms into a flat long[] buffer where it is
     // scanned (map-side partials; the exchange carries |labels|
@@ -972,7 +973,7 @@ object Similarity {
       centers: Seq[(Long, Seq[Double])], path: String): Unit = {
     import spark.implicits._
     require(centers.nonEmpty, "no centroid vectors")
-    Dot64.register(spark)
+    Functions.registerAll(spark)
     val base = withVectors(spark, emb.filter(col("embedding").isNotNull))
     writeIvfFrom(spark, base, centers.toDF("centroid_id", "cv")
       .select(col("centroid_id"), col("cv"),
@@ -1158,8 +1159,8 @@ object Similarity {
     * restart the stream after a centroid retrain). */
   def assignToIndex(spark: SparkSession, emb: DataFrame,
       path: String): DataFrame = {
-    Dot64.register(spark)
-    val centRows = spark.read.parquet(s"$path/centroids")
+    Functions.registerAll(spark)
+    val centRows = Tables.read(spark, s"$path/centroids")
       .select(col("centroid_id"), col("cv"), col("cn"))
     require(centRows.limit(1).count() > 0, s"no centroids at $path/centroids")
     // compiled reference-object argmax instead of the typedLit +
@@ -1258,12 +1259,12 @@ object Similarity {
     * against q66's oracle verbatim). */
   def ivfTopKIndexed(spark: SparkSession, path: String, queries: DataFrame,
       nProbe: Int, k: Int): DataFrame = {
-    Dot64.register(spark)
+    Functions.registerAll(spark)
     // probe ranking as one compiled narrow centroid_topk call per
     // query (ivfTopK's rewired probe stage — the crossJoin + rank
     // window shuffled |queries| × centroids rows)
     val model = graft.functions.CentroidModelRef.collect(
-      spark.read.parquet(s"$path/centroids")
+      Tables.read(spark, s"$path/centroids")
         .select(col("centroid_id"), col("cv"), col("cn")))
     graft.functions.CentroidTopK.register(spark, model)
     // the probe compute (|queries| × centroids dot loops) spreads to
@@ -1291,7 +1292,6 @@ object Similarity {
     // pruning keeps the 64-dim vectors out of it, partition pruning
     // keeps it to the probed cells, and the |queries|·k result side
     // broadcasts
-    graft.functions.TopKCosRound.register(spark)
     val tk = broadcast(probes).join(cand, Seq("centroid_id"))
       .filter(col("q_id") =!= col("n_id"))
       // lazy boundary rounding inside the aggregate (see cosineTopK)
@@ -1362,7 +1362,7 @@ object Similarity {
     * index are bit-equal to in-memory ADC (spec-pinned). */
   def loadPqCodebooks(spark: SparkSession,
       path: String): Seq[Seq[Seq[Double]]] = {
-    val rows = spark.read.parquet(s"$path/codebooks")
+    val rows = Tables.read(spark, s"$path/codebooks")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
     rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (_, subRows) =>
       subRows.sortBy(_._2).map(_._3).toSeq
@@ -1376,7 +1376,9 @@ object Similarity {
     * original embeddings. */
   def pqSearchIndexed(spark: SparkSession, path: String,
       queries: DataFrame, topK: Int): DataFrame = {
-    graft.functions.AdcSum.register(spark)
+    Functions.registerAll(spark)
+    // an IVF-PQ index's code table, also searched here, is partitioned
+    // by cell, so this is no flat-table read
     pqSearch(queries, spark.read.parquet(s"$path/codes"),
       loadPqCodebooks(spark, path), topK)
   }
@@ -1403,7 +1405,7 @@ object Similarity {
   def hardNegatives(spark: SparkSession, emb: DataFrame,
       queryPred: org.apache.spark.sql.Column, k: Int,
       labelCol: String = "label"): DataFrame = {
-    graft.functions.TopKCosRound.register(spark)
+    Functions.registerAll(spark)
     val base = withVectors(spark, emb)
     val qv = base.filter(queryPred)
       .select(col("vec_id").as("q_id"), col(labelCol).as("q_label"),
@@ -1477,7 +1479,7 @@ object Similarity {
     * codegen. */
   def randomProject(spark: SparkSession, emb: DataFrame,
       outDims: Int = 16, dims: Int = 64): DataFrame = {
-    graft.functions.Dot64.register(spark)
+    Functions.registerAll(spark)
     val signs: Seq[Seq[Double]] =
       Seq.tabulate(outDims)(j => Seq.tabulate(dims)(d => rpSign(j, d)))
     // one rounded dot64 COLUMN per output dimension instead of a
@@ -1657,7 +1659,7 @@ object Similarity {
   def sqSearch(spark: SparkSession, emb: DataFrame,
       queryPred: org.apache.spark.sql.Column, topK: Int,
       dims: Int = 64): DataFrame = {
-    graft.functions.AdcSum.register(spark)
+    Functions.registerAll(spark)
     val (mins, maxs) = sqMinMax(spark, emb, dims)
     val codes = sqEncodeCodes(emb, mins, maxs)
       .select(col("vec_id").as("n_id"), col("codes"))
@@ -1786,7 +1788,7 @@ object Similarity {
   /** Reload a persisted SQ model ([[writeSqIndex]]). */
   def loadSqMinMax(spark: SparkSession,
       path: String): (IndexedSeq[Double], IndexedSeq[Double]) = {
-    val rows = spark.read.parquet(s"$path/minmax")
+    val rows = Tables.read(spark, s"$path/minmax")
       .collect().map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2)))
       .toMap
     (IndexedSeq.tabulate(rows.size)(rows(_)._1),
@@ -1798,17 +1800,16 @@ object Similarity {
     * only vec_id + codes are read). */
   def sqSearchIndexed(spark: SparkSession, path: String,
       queries: DataFrame, topK: Int, dims: Int = 64): DataFrame = {
-    graft.functions.AdcSum.register(spark)
+    Functions.registerAll(spark)
     val (mins, maxs) = loadSqMinMax(spark, path)
-    val codes = spark.read.parquet(s"$path/codes")
+    val codes = Tables.read(spark, s"$path/codes")
       .select(col("vec_id").as("n_id"), col("codes"))
     sqAdc(queries, codes, mins, maxs, topK, dims)
   }
 
   def ivfPqSearch(spark: SparkSession, path: String, queries: DataFrame,
       nProbe: Int, topK: Int): DataFrame = {
-    Dot64.register(spark)
-    graft.functions.AdcSum.register(spark)
+    Functions.registerAll(spark)
     val cbs = loadPqCodebooks(spark, path)
     val m = cbs.length
     val subDim = cbs.head.head.length
@@ -1817,7 +1818,7 @@ object Similarity {
     // cosine DESC, centroid-id tie-break; the crossJoin + rank window
     // it replaces shuffled |queries| × centroids rows)
     val model = graft.functions.CentroidModelRef.collect(
-      spark.read.parquet(s"$path/centroids")
+      Tables.read(spark, s"$path/centroids")
         .select(col("centroid_id"), col("cv"), col("cn")))
     graft.functions.CentroidTopK.register(spark, model)
     // spread + materialize once, exactly as ivfTopKIndexed's probes —
@@ -1853,7 +1854,6 @@ object Similarity {
     // (TopKMinRound — identical verdicts, no per-pair BigDecimal). The
     // candidate's cell id rejoins from a second column-pruned scan of
     // the SAME relation (one FileIndex, codes stay out of it).
-    graft.functions.TopKMinRound.register(spark)
     val tk = broadcast(probes).join(cand, Seq("centroid_id"))
       .filter(col("q_id") =!= col("n_id"))
       .withColumn("adc_raw",

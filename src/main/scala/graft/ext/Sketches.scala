@@ -57,7 +57,7 @@ object Sketches {
   def hllDistinct(docs: DataFrame, sourceCol: String = "source",
       textCol: String = "text"): DataFrame = {
     val m = 256
-    graft.functions.HllRegs.register(docs.sparkSession)
+    graft.functions.Functions.registerAll(docs.sparkSession)
     val tok = docs.select(col(sourceCol).as("source"),
       explode(split(col(textCol), " ")).as("w"))
     // ONE-PASS register build (graft.functions.HllRegs): one md5 + one
@@ -114,7 +114,7 @@ object Sketches {
   def hllDistinctMerged(docs: DataFrame, shard: Column,
       sourceCol: String = "source", textCol: String = "text"): DataFrame = {
     val m = 256
-    graft.functions.HllRegs.register(docs.sparkSession)
+    graft.functions.Functions.registerAll(docs.sparkSession)
     val tok = docs.select(col(sourceCol).as("source"), shard.as("_sh"),
       explode(split(col(textCol), " ")).as("w"))
     val regsArr = tok.groupBy(col("source"), col("_sh"))
@@ -180,7 +180,7 @@ object Sketches {
     // read it with element_at). Row r's hash stays DISJOINT 8-hex-char
     // substrings of ONE md5 per token (bytes 4r..4r+3).
     require(depth >= 1 && depth * 8 <= 32, s"depth=$depth needs ≤32 hex chars")
-    graft.functions.CmsSketch.register(docs.sparkSession)
+    graft.functions.Functions.registerAll(docs.sparkSession)
     val tok = docs.select(explode(split(col(textCol), " ")).as("word"))
     val exact = tok.groupBy(col("word")).agg(count(lit(1)).as("exact_cnt"))
     // exact top-k under a TOTAL order (count desc, word asc) — a
@@ -214,7 +214,7 @@ object Sketches {
       depth: Int = 4, width: Int = 1024, k: Int = 20,
       textCol: String = "text"): DataFrame = {
     require(depth >= 1 && depth * 8 <= 32, s"depth=$depth needs ≤32 hex chars")
-    graft.functions.CmsSketch.register(docs.sparkSession)
+    graft.functions.Functions.registerAll(docs.sparkSession)
     val tok = docs.select(shard.as("_sh"),
       explode(split(col(textCol), " ")).as("word"))
     val exact = tok.groupBy(col("word")).agg(count(lit(1)).as("exact_cnt"))

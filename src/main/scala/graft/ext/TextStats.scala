@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /** Text-analysis operators over a document table — language scoring,
   * quality features, token counting, fingerprints. All narrow per-row
   * transforms (plus one doc-level aggregate for shingle fingerprints):
@@ -452,7 +454,7 @@ object TextStats {
     * for the per-host dup profile. */
   def urlNormalize(docs: DataFrame, urlCol: String = "url",
       idCol: String = "doc_id"): DataFrame = {
-    graft.functions.UrlNorm.register(docs.sparkSession)
+    graft.functions.Functions.registerAll(docs.sparkSession)
     docs.select(col(idCol), col(urlCol),
         expr(s"url_norm($urlCol)").as("u"))
       .select(col(idCol), col(urlCol),
@@ -703,7 +705,7 @@ object TextStats {
       minWords: Long = 20, maxWords: Long = 10000,
       maxDupWordFrac: Double = 0.6, maxTopBigramFrac: Double = 0.06,
       minEntropy: Double = 2.8, textCol: String = "text"): DataFrame = {
-    graft.functions.GopherStats.register(docs.sparkSession)
+    graft.functions.Functions.registerAll(docs.sparkSession)
     docs.filter(col(textCol).isNotNull)
       .withColumn("gs", expr(s"gopher_stats($textCol)"))
       .withColumn("n_words", col("gs.n_words"))
@@ -738,8 +740,7 @@ object TextStats {
     * the DuckDB oracle and pinned equal by spec). */
   def fingerprints(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.functions.MinHash48.register(spark)
-    graft.functions.XorFp48.register(spark)
+    graft.functions.Functions.registerAll(spark)
     // null text dropped — parity with the relational form + oracle
     docs.filter(col(textCol).isNotNull)
       .select(col(idCol).as("doc_id"),
@@ -863,11 +864,11 @@ object TextStats {
   /** Reload a persisted LM model ([[writeLmModel]]). */
   def loadLmModel(spark: SparkSession, path: String): graft.functions.LmModel =
     new graft.functions.LmModel(
-      spark.read.parquet(s"$path/vocab")
+      Tables.read(spark, s"$path/vocab")
         .collect().map(r => (r.getString(0), r.getLong(1))),
-      spark.read.parquet(s"$path/bigrams")
+      Tables.read(spark, s"$path/bigrams")
         .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))),
-      spark.read.parquet(s"$path/meta").head().getLong(0))
+      Tables.read(spark, s"$path/meta").head().getLong(0))
 
   /** Score a corpus against a FIXED LM model with the compiled
     * `bigram_lm` expression — the production/streaming twin of
@@ -997,8 +998,8 @@ object TextStats {
   /** Reload a persisted DSIR model ([[writeDsirModel]]) — DECIMAL(38,18)
     * round-trips scale-9 values exactly. */
   def loadDsirModel(spark: SparkSession, path: String): DsirModel = {
-    val buckets = spark.read.parquet(s"$path/meta").head().getInt(0)
-    val byB = spark.read.parquet(s"$path/lambda")
+    val buckets = Tables.read(spark, s"$path/meta").head().getInt(0)
+    val byB = Tables.read(spark, s"$path/lambda")
       .collect().map(r => r.getInt(0) -> r.getDecimal(1).setScale(9)).toMap
     DsirModel(IndexedSeq.tabulate(buckets)(byB(_)), buckets)
   }

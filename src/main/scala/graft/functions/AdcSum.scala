@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -94,28 +93,6 @@ object AdcSum {
     case ArrayType(_, n) =>
       org.apache.spark.sql.catalyst.expressions.Cast(e, ArrayType(LongType, n))
     case _ => e
-  }
-
-  def builder(children: Seq[Expression]): AdcSum =
-    AdcSum(children(0), coerceCodes(children(1)))
-
-  /** `adc_sum_flat(flat_tbl, codes, width)` with foldable integer
-    * width. */
-  def flatBuilder(children: Seq[Expression]): AdcSumFlat =
-    AdcSumFlat(children(0), coerceCodes(children(1)),
-      children(2).eval().asInstanceOf[Int])
-
-  /** Idempotent registration (see MinHash48.register). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("adc_sum")
-    if (!reg.functionExists(id)) {
-      reg.createOrReplaceTempFunction("adc_sum", builder, "built-in")
-    }
-    val fid = org.apache.spark.sql.catalyst.FunctionIdentifier("adc_sum_flat")
-    if (!reg.functionExists(fid)) {
-      reg.createOrReplaceTempFunction("adc_sum_flat", flatBuilder, "built-in")
-    }
   }
 }
 

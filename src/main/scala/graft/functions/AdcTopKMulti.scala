@@ -339,13 +339,8 @@ object AdcTopKMulti {
     * pattern — binding resolves at analysis time). */
   def register(spark: org.apache.spark.sql.SparkSession,
       model: QueryAdcModelRef): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "adc_topk_multi",
-      (children: Seq[Expression]) => AdcTopKMulti(
-        AdcSum.coerceCodes(children.head), children(1), model,
-        children(2).eval().asInstanceOf[Int],
-        children(3).eval().asInstanceOf[Int]),
-      "built-in")
+    Functions.bind(spark, "adc_topk_multi", 4)(a =>
+      AdcTopKMulti(AdcSum.coerceCodes(a(0)), a(1), model, a.int(2), a.int(3)))
   }
 }
 

@@ -137,9 +137,6 @@ object BigramLm {
     * analysis is eager, so already-built plans keep the model they
     * captured (the [[BpeTokens.register]] contract). */
   def register(spark: SparkSession, model: LmModel): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bigram_lm",
-      (children: Seq[Expression]) => BigramLm(children.head, model),
-      "built-in")
+    Functions.bind(spark, "bigram_lm", 1)(a => BigramLm(a(0), model))
   }
 }

@@ -62,10 +62,7 @@ object BloomDecontam {
     * replaces any prior binding). */
   def register(spark: org.apache.spark.sql.SparkSession,
       model: BloomModelRef): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_decontam",
-      (children: Seq[Expression]) => BloomDecontam(children.head, model),
-      "built-in")
+    Functions.bind(spark, "bloom_decontam", 1)(a => BloomDecontam(a(0), model))
   }
 }
 

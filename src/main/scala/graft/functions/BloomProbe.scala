@@ -53,10 +53,7 @@ object BloomProbe {
     * any prior binding). */
   def register(spark: org.apache.spark.sql.SparkSession,
       model: BloomFilterRef): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      (children: Seq[Expression]) => BloomProbe(children.head, model),
-      "built-in")
+    Functions.bind(spark, "bloom_might_contain", 1)(a => BloomProbe(a(0), model))
   }
 }
 

@@ -150,10 +150,7 @@ object BpeTokens {
     * captures this table; later re-registration never rewrites
     * already-analyzed plans (BpeTokensSpec pins two tables coexisting). */
   def register(spark: SparkSession, merges: Seq[(String, String)]): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_tokens",
-      (children: Seq[Expression]) => BpeTokens(children.head, merges),
-      "built-in")
+    Functions.bind(spark, "bpe_tokens", 1)(a => BpeTokens(a(0), merges))
   }
 }
 

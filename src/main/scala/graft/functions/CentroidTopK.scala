@@ -99,11 +99,7 @@ object CentroidTopK {
     * disturbs an already-built plan). */
   def register(spark: org.apache.spark.sql.SparkSession,
       model: CentroidModelRef): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "centroid_topk",
-      (children: Seq[Expression]) => CentroidTopK(children.head, children(1),
-        model, children(2).eval().asInstanceOf[Int]),
-      "built-in")
+    Functions.bind(spark, "centroid_topk", 3)(a => CentroidTopK(a(0), a(1), model, a.int(2)))
   }
 }
 
@@ -148,10 +144,7 @@ case class CentroidMinD2(vec: Expression, model: CentroidModelRef)
 object CentroidMinD2 {
   def register(spark: org.apache.spark.sql.SparkSession,
       model: CentroidModelRef): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "centroid_min_d2",
-      (children: Seq[Expression]) => CentroidMinD2(children.head, model),
-      "built-in")
+    Functions.bind(spark, "centroid_min_d2", 1)(a => CentroidMinD2(a(0), model))
   }
 }
 

@@ -86,9 +86,6 @@ object ChunkWords {
   def register(spark: org.apache.spark.sql.SparkSession, width: Int,
       stride: Int): Unit = {
     require(width > 0 && stride > 0, "width/stride must be positive")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "chunk_words",
-      (children: Seq[Expression]) => ChunkWords(children.head, width, stride),
-      "built-in")
+    Functions.bind(spark, "chunk_words", 1)(a => ChunkWords(a(0), width, stride))
   }
 }

@@ -117,19 +117,4 @@ object CmsSketch {
       ((h(4 * r + 2) & 0xffL) << 8) | (h(4 * r + 3) & 0xffL)
     (u % width).toInt
   }
-
-  /** Idempotent session registration: `cms_sketch(word, depth, width)`
-    * with foldable integer depth/width. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("cms_sketch")
-    if (!reg.functionExists(id)) {
-      reg.createOrReplaceTempFunction(
-        "cms_sketch",
-        (children: Seq[Expression]) => CmsSketch(children.head,
-          children(1).eval().asInstanceOf[Int],
-          children(2).eval().asInstanceOf[Int]),
-        "built-in")
-    }
-  }
 }

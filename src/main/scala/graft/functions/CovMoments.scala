@@ -163,19 +163,3 @@ case class CovMoments(
       newChildren: IndexedSeq[Expression]): CovMoments =
     copy(child = newChildren.head)
 }
-
-object CovMoments {
-  /** Idempotent session registration (see MinHash48.register):
-    * `cov_moments(v, dims)` with a foldable integer dims. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("cov_moments")
-    if (!reg.functionExists(id)) {
-      reg.createOrReplaceTempFunction(
-        "cov_moments",
-        (children: Seq[Expression]) => CovMoments(children.head,
-          children(1).eval().asInstanceOf[Int]),
-        "built-in")
-    }
-  }
-}

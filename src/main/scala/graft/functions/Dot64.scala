@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -95,27 +94,17 @@ object Dot64 {
     acc
   }
 
-  /** Builder with numeric-array coercion: SQL literals like
+  /** `dot64(a, b)` with numeric-array coercion: SQL literals like
     * `array(1.0, 2.0)` are decimal arrays under ANSI — cast any
     * array<numeric> input to array<double> (matching the implicit-cast
     * behavior of built-in numeric functions). */
-  def builder(children: Seq[Expression]): Dot64 = {
+  def coerced(left: Expression, right: Expression): Dot64 = {
     def coerce(e: Expression): Expression = e.dataType match {
       case ArrayType(DoubleType, _) => e
       case ArrayType(_, n) =>
         org.apache.spark.sql.catalyst.expressions.Cast(e, ArrayType(DoubleType, n))
       case _ => e // let checkInputDataTypes report it
     }
-    Dot64(coerce(children(0)), coerce(children(1)))
-  }
-
-  /** Idempotent registration (see MinHash48.register — avoids the
-    * per-call re-registration WARN). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("dot64")
-    if (!reg.functionExists(id)) {
-      reg.createOrReplaceTempFunction("dot64", builder, "built-in")
-    }
+    Dot64(coerce(left), coerce(right))
   }
 }

@@ -60,10 +60,7 @@ object DsirScore {
 
   def register(spark: org.apache.spark.sql.SparkSession,
       model: DsirModelRef): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dsir_score",
-      (children: Seq[Expression]) => DsirScore(children.head, model),
-      "built-in")
+    Functions.bind(spark, "dsir_score", 1)(a => DsirScore(a(0), model))
   }
 }
 

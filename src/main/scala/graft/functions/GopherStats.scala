@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -109,17 +108,5 @@ object GopherStats {
     }
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](n.toLong, wm.size().toLong, entNanos, best.toLong, nBg.toLong))
-  }
-
-  /** Idempotent session registration (see MinHash48.register). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("gopher_stats")
-    if (!reg.functionExists(id)) {
-      reg.createOrReplaceTempFunction(
-        "gopher_stats",
-        (children: Seq[Expression]) => GopherStats(children.head),
-        "built-in")
-    }
   }
 }

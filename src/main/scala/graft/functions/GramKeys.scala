@@ -70,10 +70,7 @@ object GramKeys {
     * specific, so registration replaces any prior binding. */
   def register(spark: org.apache.spark.sql.SparkSession, sizes: Seq[Int],
       cap: Int = 4096): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gram_keys",
-      (children: Seq[Expression]) => GramKeys(children.head, sizes, cap),
-      "built-in")
+    Functions.bind(spark, "gram_keys", 1)(a => GramKeys(a(0), sizes, cap))
   }
 }
 

@@ -93,18 +93,3 @@ case class HllRegs(
       newChildren: IndexedSeq[Expression]): HllRegs =
     copy(child = newChildren.head)
 }
-
-object HllRegs {
-
-  /** Idempotent session registration: `hll_regs(word)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("hll_regs")
-    if (!reg.functionExists(id)) {
-      reg.createOrReplaceTempFunction(
-        "hll_regs",
-        (children: Seq[Expression]) => HllRegs(children.head),
-        "built-in")
-    }
-  }
-}

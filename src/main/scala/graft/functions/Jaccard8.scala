@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -59,17 +58,5 @@ object Jaccard8 {
     while (it.hasNext) if (sb.contains(it.next())) inter += 1
     val union = sa.size + sb.size - inter
     if (union == 0) 1.0 else inter.toDouble / union
-  }
-
-  /** Idempotent session registration (see MinHash48.register). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("jaccard8")
-    if (!reg.functionExists(id)) {
-      reg.createOrReplaceTempFunction(
-        "jaccard8",
-        (children: Seq[Expression]) => Jaccard8(children(0), children(1)),
-        "built-in")
-    }
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -124,20 +123,5 @@ object MinHash48 {
       i += 1
     }
     sb.toString
-  }
-
-  /** Register `minhash48` in the session's function registry (usable
-    * from SQL and `expr(...)` without session extensions). Idempotent:
-    * re-registering an existing temp function logs a WARN per call,
-    * which polluted round-1 bench output — skip if already present. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("minhash48")
-    if (!reg.functionExists(id)) {
-      reg.createOrReplaceTempFunction(
-        "minhash48",
-        (children: Seq[Expression]) => MinHash48(children.head, defaultSalts),
-        "built-in")
-    }
   }
 }

@@ -143,9 +143,6 @@ object NbClassify {
     * analysis is eager, so already-built plans keep the model they
     * captured (the [[BigramLm.register]] contract). */
   def register(spark: SparkSession, model: NbModel): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nb_classify",
-      (children: Seq[Expression]) => NbClassify(children.head, model),
-      "built-in")
+    Functions.bind(spark, "nb_classify", 1)(a => NbClassify(a(0), model))
   }
 }

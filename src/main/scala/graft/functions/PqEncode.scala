@@ -67,10 +67,7 @@ object PqEncode {
     * registration, [[SqEncode.register]]'s pattern). */
   def register(spark: org.apache.spark.sql.SparkSession,
       model: PqModelRef): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_encode",
-      (children: Seq[Expression]) => PqEncode(children.head, model),
-      "built-in")
+    Functions.bind(spark, "pq_encode", 1)(a => PqEncode(a(0), model))
   }
 }
 

@@ -65,10 +65,7 @@ object QcScore {
     * prior binding). */
   def register(spark: org.apache.spark.sql.SparkSession,
       model: QcModelRef): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "qc_score",
-      (children: Seq[Expression]) => QcScore(children.head, model),
-      "built-in")
+    Functions.bind(spark, "qc_score", 1)(a => QcScore(a(0), model))
   }
 }
 

@@ -55,6 +55,14 @@ case class RoundGe(child: Expression, threshold: Double, scale: Int)
 
 object RoundGe {
 
+  /** A constant threshold argument as a double, whichever numeric
+    * literal type the call used. */
+  def threshold(v: Any): Double = v match {
+    case d: java.lang.Double => d.doubleValue()
+    case d: java.math.BigDecimal => d.doubleValue()
+    case o: Any => o.toString.toDouble
+  }
+
   def compute(x: Double, t: Double, scale: Int): Boolean = {
     val q = math.pow(10.0, -scale)
     val m = 0.6 * q + 4.0 * Math.ulp(x)
@@ -66,25 +74,6 @@ object RoundGe {
         else BigDecimal.valueOf(x).setScale(scale, RoundingMode.HALF_UP)
           .doubleValue()
       r >= t
-    }
-  }
-
-  /** Idempotent registration: `round_ge(x, t, s)` with foldable
-    * threshold and scale. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val fid = org.apache.spark.sql.catalyst.FunctionIdentifier("round_ge")
-    if (!reg.functionExists(fid)) {
-      reg.createOrReplaceTempFunction(
-        "round_ge",
-        (children: Seq[Expression]) => RoundGe(children.head,
-          children(1).eval() match {
-            case d: java.lang.Double => d.doubleValue()
-            case d: java.math.BigDecimal => d.doubleValue()
-            case o: Any => o.toString.toDouble
-          },
-          children(2).eval().asInstanceOf[Int]),
-        "built-in")
     }
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -53,17 +52,5 @@ object Shingles8 {
     var i = 0
     while (it.hasNext) { out(i) = UTF8String.fromString(it.next()); i += 1 }
     new GenericArrayData(out)
-  }
-
-  /** Idempotent session registration (see MinHash48.register). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("shingles8")
-    if (!reg.functionExists(id)) {
-      reg.createOrReplaceTempFunction(
-        "shingles8",
-        (children: Seq[Expression]) => Shingles8(children.head),
-        "built-in")
-    }
   }
 }

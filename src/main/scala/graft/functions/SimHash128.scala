@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -94,17 +93,5 @@ object SimHash128 {
       l += 1
     }
     new GenericArrayData(out)
-  }
-
-  /** Idempotent session registration (see MinHash48.register). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("simhash128")
-    if (!reg.functionExists(id)) {
-      reg.createOrReplaceTempFunction(
-        "simhash128",
-        (children: Seq[Expression]) => SimHash128(children.head),
-        "built-in")
-    }
   }
 }

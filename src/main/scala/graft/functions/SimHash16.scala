@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -74,17 +73,5 @@ object SimHash16 {
       b += 1
     }
     out
-  }
-
-  /** Idempotent session registration (see MinHash48.register). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("simhash16")
-    if (!reg.functionExists(id)) {
-      reg.createOrReplaceTempFunction(
-        "simhash16",
-        (children: Seq[Expression]) => SimHash16(children.head),
-        "built-in")
-    }
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -93,17 +92,5 @@ object SimHash64 {
       l += 1
     }
     new GenericArrayData(out)
-  }
-
-  /** Idempotent session registration (see MinHash48.register). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("simhash64")
-    if (!reg.functionExists(id)) {
-      reg.createOrReplaceTempFunction(
-        "simhash64",
-        (children: Seq[Expression]) => SimHash64(children.head),
-        "built-in")
-    }
   }
 }

@@ -63,10 +63,7 @@ object SqEncode {
     * re-registration never disturbs an already-built plan). */
   def register(spark: org.apache.spark.sql.SparkSession,
       model: SqModelRef): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sq_encode",
-      (children: Seq[Expression]) => SqEncode(children.head, model),
-      "built-in")
+    Functions.bind(spark, "sq_encode", 1)(a => SqEncode(a(0), model))
   }
 }
 

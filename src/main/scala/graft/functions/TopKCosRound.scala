@@ -141,20 +141,3 @@ case class TopKCosRound(
       newChildren: IndexedSeq[Expression]): TopKCosRound =
     copy(score = newChildren(0), id = newChildren(1))
 }
-
-object TopKCosRound {
-  /** Idempotent registration:
-    * `topk_cos_round(raw_cos, id, k, scale)` with foldable k/scale. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val fid = org.apache.spark.sql.catalyst.FunctionIdentifier("topk_cos_round")
-    if (!reg.functionExists(fid)) {
-      reg.createOrReplaceTempFunction(
-        "topk_cos_round",
-        (children: Seq[Expression]) => TopKCosRound(children.head, children(1),
-          children(2).eval().asInstanceOf[Int],
-          children(3).eval().asInstanceOf[Int]),
-        "built-in")
-    }
-  }
-}

@@ -153,18 +153,4 @@ object TopKMin {
       if (n < k) n += 1
     }
   }
-
-  /** Idempotent session registration: `topk_min(score, id, k)` with
-    * foldable integer k. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val fid = org.apache.spark.sql.catalyst.FunctionIdentifier("topk_min")
-    if (!reg.functionExists(fid)) {
-      reg.createOrReplaceTempFunction(
-        "topk_min",
-        (children: Seq[Expression]) => TopKMin(children.head, children(1),
-          children(2).eval().asInstanceOf[Int]),
-        "built-in")
-    }
-  }
 }

@@ -150,21 +150,3 @@ case class TopKMinRound(
       newChildren: IndexedSeq[Expression]): TopKMinRound =
     copy(score = newChildren(0), id = newChildren(1))
 }
-
-object TopKMinRound {
-  /** Idempotent session registration:
-    * `topk_min_round(score, id, k, scale)` with foldable integer k
-    * and scale. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val fid = org.apache.spark.sql.catalyst.FunctionIdentifier("topk_min_round")
-    if (!reg.functionExists(fid)) {
-      reg.createOrReplaceTempFunction(
-        "topk_min_round",
-        (children: Seq[Expression]) => TopKMinRound(children.head, children(1),
-          children(2).eval().asInstanceOf[Int],
-          children(3).eval().asInstanceOf[Int]),
-        "built-in")
-    }
-  }
-}

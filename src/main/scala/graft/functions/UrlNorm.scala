@@ -146,15 +146,4 @@ object UrlNorm {
     InternalRow(UTF8String.fromString(sb.toString),
       UTF8String.fromString(host), UTF8String.fromString(rd))
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("url_norm")
-    if (!reg.functionExists(id)) {
-      reg.createOrReplaceTempFunction(
-        "url_norm",
-        (children: Seq[Expression]) => UrlNorm(children.head),
-        "built-in")
-    }
-  }
 }

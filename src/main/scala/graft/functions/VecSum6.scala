@@ -126,18 +126,3 @@ case class VecSum6(
       newChildren: IndexedSeq[Expression]): VecSum6 =
     copy(child = newChildren.head)
 }
-
-object VecSum6 {
-  /** Idempotent session registration (see CovMoments.register):
-    * `vec_sum6(v)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("vec_sum6")
-    if (!reg.functionExists(id)) {
-      reg.createOrReplaceTempFunction(
-        "vec_sum6",
-        (children: Seq[Expression]) => VecSum6(children.head),
-        "built-in")
-    }
-  }
-}

@@ -108,11 +108,7 @@ object WinnowKeys {
   def register(spark: org.apache.spark.sql.SparkSession, k: Int,
       w: Int): String = {
     val name = s"winnow_keys_${k}_$w"
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-      reg.createOrReplaceTempFunction(name,
-        (children: Seq[Expression]) => WinnowKeys(children.head, k, w),
-        "built-in")
+    Functions.bind(spark, name, 1, replace = false)(a => WinnowKeys(a(0), k, w))
     name
   }
 

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -65,17 +64,5 @@ object XorFp48 {
       i += 1
     }
     acc
-  }
-
-  /** Idempotent session registration (see MinHash48.register). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("xorfp48")
-    if (!reg.functionExists(id)) {
-      reg.createOrReplaceTempFunction(
-        "xorfp48",
-        (children: Seq[Expression]) => XorFp48(children.head),
-        "built-in")
-    }
   }
 }

@@ -1,47 +1,17 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{AdcSum, CmsSketch, CovMoments, HllRegs, Dot64, GopherStats, Jaccard8, MinHash48, Shingles8, SimHash16, SimHash64, XorFp48}
+import graft.functions.Functions
 
 /** SparkSessionExtensions injector — the engine's permanent extension
   * wiring. Users enable it with
-  * `spark.sql.extensions=graft.plans.GraftExtensions` and get the
-  * engine's custom expressions in every session (SQL, DataFrame,
-  * thriftserver) without per-session registration calls.
-  *
-  * Currently injects:
-  *  - `minhash48(text)` → array<long>: per-row MinHash signature
-  *    (graft.functions.MinHash48);
-  *  - `dot64(a, b)` → double: codegen'd array dot product
-  *    (graft.functions.Dot64);
-  *  - `simhash16(text)` → bigint: per-row 16-bit SimHash
-  *    (graft.functions.SimHash16);
-  *  - `simhash64(text)` → array<long>: four independent 16-bit SimHash
-  *    lanes for banded Hamming near-dup search (graft.functions.SimHash64);
-  *  - `xorfp48(text)` → bigint: per-row distinct-word xor fingerprint
-  *    (graft.functions.XorFp48);
-  *  - `jaccard8(a, b)` → double: exact 8-gram-set Jaccard of two texts
-  *    (graft.functions.Jaccard8);
-  *  - `shingles8(text)` → array<string>: the distinct 8-gram shingle
-  *    set itself (graft.functions.Shingles8) — precompute-once input
-  *    to set-based pair scoring;
-  *  - `gopher_stats(text)` → struct: the narrow quality gate's per-row
-  *    statistics in one compiled pass (graft.functions.GopherStats);
-  *  - `adc_sum(tbl, codes)` → double: codegen'd asymmetric-distance
-  *    table fold for PQ/SQ search (graft.functions.AdcSum);
-  *  - `adc_sum_flat(flat_tbl, codes, width)` → double: the same fold
-  *    over a pre-flattened table — strided primitive lookups, no
-  *    per-dimension array-view allocation on the pair hot loop
-  *    (graft.functions.AdcSumFlat);
-  *  - `cov_moments(v, dims)` → array<double>: one-pass covariance
-  *    moment aggregate (graft.functions.CovMoments);
-  *  - `cms_sketch(word, depth, width)` → array<long>: one-pass
-  *    Count–Min counter grid (graft.functions.CmsSketch);
-  *  - `hll_regs(word)` → array<long>: one-pass HyperLogLog register
-  *    minima (graft.functions.HllRegs).
+  * `spark.sql.extensions=graft.plans.GraftExtensions` and get every
+  * parameter-free custom expression of [[graft.functions.Functions.table]]
+  * in every session (SQL, DataFrame, thriftserver) without per-session
+  * registration calls. Model-bound functions (`bpe_tokens`,
+  * `centroid_topk`, …) need their model, so sessions bind those through
+  * each object's `register(spark, model…)`.
   *
   * One optimizer rule is injected: [[DotProductRewrite]], which
   * replaces the interpreted `aggregate(zip_with(a, b, (x,y) -> x*y),
@@ -55,67 +25,6 @@ import graft.functions.{AdcSum, CmsSketch, CovMoments, HllRegs, Dot64, GopherSta
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => DotProductRewrite)
-    ext.injectFunction((
-      FunctionIdentifier("minhash48"),
-      new ExpressionInfo(classOf[MinHash48].getName, "minhash48"),
-      (children: Seq[Expression]) =>
-        MinHash48(children.head, MinHash48.defaultSalts)))
-    ext.injectFunction((
-      FunctionIdentifier("adc_sum"),
-      new ExpressionInfo(classOf[AdcSum].getName, "adc_sum"),
-      (children: Seq[Expression]) => AdcSum.builder(children)))
-    ext.injectFunction((
-      FunctionIdentifier("adc_sum_flat"),
-      new ExpressionInfo(
-        classOf[graft.functions.AdcSumFlat].getName, "adc_sum_flat"),
-      (children: Seq[Expression]) => AdcSum.flatBuilder(children)))
-    ext.injectFunction((
-      FunctionIdentifier("dot64"),
-      new ExpressionInfo(classOf[Dot64].getName, "dot64"),
-      (children: Seq[Expression]) => Dot64.builder(children)))
-    ext.injectFunction((
-      FunctionIdentifier("simhash16"),
-      new ExpressionInfo(classOf[SimHash16].getName, "simhash16"),
-      (children: Seq[Expression]) => SimHash16(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (children: Seq[Expression]) => SimHash64(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("xorfp48"),
-      new ExpressionInfo(classOf[XorFp48].getName, "xorfp48"),
-      (children: Seq[Expression]) => XorFp48(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("jaccard8"),
-      new ExpressionInfo(classOf[Jaccard8].getName, "jaccard8"),
-      (children: Seq[Expression]) => Jaccard8(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("shingles8"),
-      new ExpressionInfo(classOf[Shingles8].getName, "shingles8"),
-      (children: Seq[Expression]) => Shingles8(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("gopher_stats"),
-      new ExpressionInfo(classOf[GopherStats].getName, "gopher_stats"),
-      (children: Seq[Expression]) => GopherStats(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("cov_moments"),
-      new ExpressionInfo(classOf[CovMoments].getName, "cov_moments"),
-      (children: Seq[Expression]) => CovMoments(children.head,
-        children(1).eval().asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("cms_sketch"),
-      new ExpressionInfo(classOf[CmsSketch].getName, "cms_sketch"),
-      (children: Seq[Expression]) => CmsSketch(children.head,
-        children(1).eval().asInstanceOf[Int],
-        children(2).eval().asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("hll_regs"),
-      new ExpressionInfo(classOf[HllRegs].getName, "hll_regs"),
-      (children: Seq[Expression]) => HllRegs(children.head)))
-    // bpe_tokens is the ONE runtime-registered function deliberately NOT
-    // injected here: its merge table is training-data-dependent (a
-    // constructor argument, not a child expression), so a static
-    // injection cannot exist — sessions register it per-vocabulary via
-    // BpeTokens.register(spark, merges).
+    Functions.inject(ext)
   }
 }

@@ -493,7 +493,7 @@ object Ext6Queries {
   private val q168 = Q(
     "q168_host_dup_profile",
     (s, d) => {
-      graft.functions.UrlNorm.register(s)
+      graft.functions.Functions.registerAll(s)
       graft.ext.Corpus.dupProfileBySource(
           Tables.documents(s, d)
             .withColumn("url", expr(urlFixture))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
+import graft.core.Tables
 import graft.pumle.Pipeline
 
 /** Structured Streaming surface (SURVEY §2.8): the reference's
@@ -200,7 +201,7 @@ object Streams {
     * `docs` needs (doc_id, text, ts). */
   def nearDupFlags(spark: SparkSession, docs: DataFrame, seenBuckets: DataFrame,
       bands: Int = 4, watermark: String = "10 minutes"): DataFrame = {
-    graft.functions.MinHash48.register(spark)
+    graft.functions.Functions.registerAll(spark)
     val stack = (0 until bands).map(b => s"$b, sig[$b]").mkString(", ")
     docs.filter(col("text").isNotNull)
       .withWatermark("ts", watermark)
@@ -249,8 +250,7 @@ object Streams {
       snapshot: DataFrame, bands: Int = 4, maxBucket: Int = 10,
       threshold: Double = 0.7, watermark: String = "10 minutes",
       keepCols: Seq[String] = Nil): DataFrame = {
-    graft.functions.MinHash48.register(spark)
-    graft.functions.Shingles8.register(spark)
+    graft.functions.Functions.registerAll(spark)
     val stack = (0 until bands).map(b => s"$b, sig[$b]").mkString(", ")
     // staticSide: this reshape (stack + corpus-keyed collect_list) and
     // the exact stage's distinct hash set below would otherwise re-run
@@ -327,7 +327,7 @@ object Streams {
       snapshot: DataFrame, watermark: String = "10 minutes",
       bands: Int = 4, maxBucket: Int = 10,
       threshold: Double = 0.7): DataFrame = {
-    graft.functions.UrlNorm.register(spark)
+    graft.functions.Functions.registerAll(spark)
     // the watermark is defined ONCE, upstream of both stateful dedups
     // (Spark disallows redefining it mid-plan); both union branches
     // descend from this node, so it propagates through the union
@@ -379,9 +379,9 @@ object Streams {
     require(maxDf <= pruneDf,
       s"maxDf=$maxDf exceeds the index's prune cap $pruneDf at " +
         s"$indexPath — fps in (prune_df, maxDf] were pruned at merge")
-    graft.functions.Shingles8.register(spark)
-    val snapshot = spark.read.parquet(s"$indexPath/docs")
-    val fpdf = spark.read.parquet(s"$indexPath/fpdf")
+    graft.functions.Functions.registerAll(spark)
+    val snapshot = Tables.read(spark, s"$indexPath/docs")
+    val fpdf = Tables.read(spark, s"$indexPath/fpdf")
     // static side: kept fingerprint -> candidate (seen_id, shingles)
     // list — the df cap applies HERE, so over-cap fps never produce a
     // candidate row (the batch form's order of operations)
@@ -587,9 +587,9 @@ object Streams {
     * a query row's answer never waits on a watermark. */
   def annEnrich(spark: SparkSession, queries: DataFrame, indexPath: String,
       nProbe: Int = 2, k: Int = 5): DataFrame = {
-    graft.functions.Dot64.register(spark)
+    graft.functions.Functions.registerAll(spark)
     import graft.ext.Similarity.withVectors
-    val cents = spark.read.parquet(s"$indexPath/centroids")
+    val cents = Tables.read(spark, s"$indexPath/centroids")
       .select(col("centroid_id"), col("cv"), col("cn"))
       .collect().map { r =>
         struct(lit(r.getLong(0)).as("cid"),
@@ -659,13 +659,13 @@ object Streams {
     * path's assumption too). */
   def pqEnrich(spark: SparkSession, queries: DataFrame, indexPath: String,
       nProbe: Int = 2, k: Int = 5): DataFrame = {
-    graft.functions.Dot64.register(spark)
+    graft.functions.Functions.registerAll(spark)
     import graft.ext.Similarity.withVectors
     val cbs = graft.ext.Similarity.loadPqCodebooks(spark, indexPath)
     val m = cbs.length
     val codeK = cbs.head.length
     val subDim = cbs.head.head.length
-    val cents = spark.read.parquet(s"$indexPath/centroids")
+    val cents = Tables.read(spark, s"$indexPath/centroids")
       .select(col("centroid_id"), col("cv"), col("cn"))
       .collect().map { r =>
         struct(lit(r.getLong(0)).as("cid"),
@@ -827,7 +827,7 @@ object Streams {
   def nearDupIntake(spark: SparkSession, emb: DataFrame, indexPath: String,
       threshold: Double, maxCluster: Int = Int.MaxValue): DataFrame = {
     require(maxCluster >= 1, s"maxCluster=$maxCluster must be >= 1")
-    graft.functions.Dot64.register(spark)
+    graft.functions.Functions.registerAll(spark)
     val assigned = spark.read.parquet(s"$indexPath/assigned")
     // hot-cell guard, the batch twin's (nearDupPairsAnn →
     // capHotClusters) conservative semantics on the STATIC side: a
@@ -926,7 +926,7 @@ object Streams {
     // census is persisted; the static side is built once per stream)
     val cap = if (maxBucket == 0)
       graft.ext.Dedup.deriveCap(spark, w, indexPath) else maxBucket
-    val small = spark.read.parquet(s"$indexPath/bsize")
+    val small = Tables.read(spark, s"$indexPath/bsize")
       .groupBy(col("band"), col("bval")).agg(sum(col("n")).as("n"))
       .filter(col("n") <= cap).select(col("band"), col("bval"))
     // staticSide: a stream-static join re-evaluates the static plan on

@@ -62,5 +62,13 @@ class BenchSpec extends SparkSpec {
     }
     assert(labeled.map(_._2).distinct ==
       Seq("components: edge input", "components: collect edges"))
+    // an unlabeled job's description lists its stage names sorted, so
+    // two runs of one plan record the same text
+    val unlabeled = row.jobs.filterNot(j => labeled.exists(_._1 == j.id))
+    assert(unlabeled.nonEmpty)
+    unlabeled.foreach { j =>
+      val parts = j.description.split(" \\| ").toSeq
+      assert(parts == parts.sorted, j.description)
+    }
   }
 }

@@ -180,7 +180,7 @@ class ExtApiSpec extends SparkSpec {
 
   test("verifyCandidates (set-based) matches the per-pair jaccard8 expression") {
     import spark.implicits._
-    graft.functions.Jaccard8.register(spark)
+    graft.functions.Functions.registerAll(spark)
     val tricky = docs.unionAll(Seq(
       (100L, "short"), (101L, "a  b"), (103L, "é ü 漢字 repeated é ü 漢字"))
       .toDF("doc_id", "text"))

@@ -168,7 +168,7 @@ class IvfIndexSpec extends SparkSpec {
       col("vec_id") < 3, dir, trainIters = 0)
     // replicate the append's assignment plan (the write itself hides the
     // frame): literal centroid array + array_min argmin over the increment
-    graft.functions.Dot64.register(spark)
+    graft.functions.Functions.registerAll(spark)
     val cents = spark.read.parquet(s"$dir/centroids")
       .select(col("centroid_id"), col("cv"), col("cn"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
@@ -240,7 +240,7 @@ class IvfIndexSpec extends SparkSpec {
     // the INDEX's own centroids put both in the same cell and the 4-dp
     // rounded cosine clears the threshold — written from scratch
     // (crossJoin + window-free argmax over the literal centroid table)
-    graft.functions.Dot64.register(spark)
+    graft.functions.Functions.registerAll(spark)
     val cents = spark.read.parquet(s"$dir/centroids")
       .select(col("centroid_id"), col("cv"), col("cn"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))

@@ -27,7 +27,7 @@ class SketchesSpec extends SparkSpec {
   test("cms_sketch aggregate equals the relational (r,c) grid cell for cell") {
     import org.apache.spark.sql.functions._
     val d = synth(300)
-    graft.functions.CmsSketch.register(spark)
+    graft.functions.Functions.registerAll(spark)
     val tok = d.select(explode(split(col("text"), " ")).as("word"))
     val grid = tok.agg(expr("cms_sketch(word, 4, 1024)"))
       .head().getSeq[Long](0)
@@ -49,7 +49,7 @@ class SketchesSpec extends SparkSpec {
   test("hll_regs aggregate equals the relational per-bucket min(sfx)") {
     import org.apache.spark.sql.functions._
     val d = synth(300)
-    graft.functions.HllRegs.register(spark)
+    graft.functions.Functions.registerAll(spark)
     val tok = d.select(explode(split(col("text"), " ")).as("w"))
     val regs = tok.agg(expr("hll_regs(w)")).head().getSeq[Long](0)
     val rel = tok.select(

@@ -9,7 +9,7 @@ import graft.pumle.SparkSpec
 class AdcSumSpec extends SparkSpec {
 
   test("adc_sum equals the interpreted aggregate/zip_with fold") {
-    AdcSum.register(spark)
+    Functions.registerAll(spark)
     val df = spark.range(50).selectExpr(
       "id",
       // ragged-ish deterministic table: 8 rows x 16 codes
@@ -26,7 +26,7 @@ class AdcSumSpec extends SparkSpec {
   }
 
   test("adc_sum accepts int-typed code arrays (implicit cast)") {
-    AdcSum.register(spark)
+    Functions.registerAll(spark)
     val r = spark.sql(
       """SELECT adc_sum(array(array(1.0d, 2.0d), array(3.0d, 4.0d)),
         |               array(1, 0)) AS s""".stripMargin).head()
@@ -40,7 +40,7 @@ class AdcSumSpec extends SparkSpec {
   // element_at is NULL out of range), never an unchecked
   // UnsafeArrayData read returning garbage.
   test("adc_sum is NULL on length mismatch, out-of-range or null codes") {
-    AdcSum.register(spark)
+    Functions.registerAll(spark)
     val rows = spark.sql(
       """SELECT
         |  adc_sum(array(array(1.0d, 2.0d), array(3.0d, 4.0d)),
@@ -65,7 +65,7 @@ class AdcSumSpec extends SparkSpec {
   }
 
   test("adc_sum_flat(flatten(tbl), codes, w) is bit-equal to adc_sum(tbl, codes)") {
-    AdcSum.register(spark)
+    Functions.registerAll(spark)
     val df = spark.range(200).selectExpr(
       "id",
       // uniform 8 rows x 16 codes (the flat form's precondition)
@@ -83,7 +83,7 @@ class AdcSumSpec extends SparkSpec {
   }
 
   test("adc_sum_flat: NULL on size/width mismatch, bad or null codes; int codes cast") {
-    AdcSum.register(spark)
+    Functions.registerAll(spark)
     val rows = spark.sql(
       """SELECT
         |  adc_sum_flat(array(1.0d, 2.0d, 3.0d, 4.0d), array(1, 0, 1), 2)

@@ -41,8 +41,7 @@ class AdcTopKMultiSpec extends SparkSpec {
   /** The relational SQ pipeline this round replaced — verbatim. */
   private def sqRelational(queryPred: org.apache.spark.sql.Column,
       topK: Int, embIn: DataFrame = emb): DataFrame = {
-    AdcSum.register(spark)
-    TopKMin.register(spark)
+    Functions.registerAll(spark)
     val (mins, maxs) = Similarity.sqMinMax(spark, embIn, dims)
     val codes = Similarity.sqEncodeCodes(embIn, mins, maxs)
       .select(col("vec_id").as("n_id"), col("codes"))
@@ -95,8 +94,7 @@ class AdcTopKMultiSpec extends SparkSpec {
   }
 
   test("pqSearchADC ≡ the relational form on the fixed codebook, k larger than matches") {
-    AdcSum.register(spark)
-    TopKMin.register(spark)
+    Functions.registerAll(spark)
     val cbs = Similarity.fixedCodebooks(m = 4, k = 8, subDim = dims / 4)
     val codes = Similarity.pqEncode(spark, emb, cbs)
     val m = cbs.length
@@ -155,7 +153,7 @@ class AdcTopKMultiSpec extends SparkSpec {
     val withNaN = emb.unionByName(
       Seq((500L, Array.fill(dims)(Float.NaN))).toDF("vec_id", "embedding"))
     def relational(topK: Int): Seq[(Long, Long, Long, Long)] = {
-      AdcSum.register(spark); TopKMin.register(spark)
+      Functions.registerAll(spark)
       val (mins, maxs) = Similarity.sqMinMax(spark, withNaN, dims)
       val codes = Similarity.sqEncodeCodes(withNaN, mins, maxs)
         .select(col("vec_id").as("n_id"), col("codes"))

@@ -50,7 +50,7 @@ class CentroidTopKSpec extends SparkSpec {
 
   private def frames() = {
     import spark.implicits._
-    Dot64.register(spark)
+    Functions.registerAll(spark)
     val (rows, cents) = buildCorpus()
     val base = rows.toDF("vec_id", "emb")
       .withColumn("v", expr("transform(emb, x -> CAST(x AS DOUBLE))"))

@@ -10,7 +10,7 @@ class Dot64Spec extends SparkSpec {
 
   test("dot64 == aggregate(zip_with(...)) bit-for-bit") {
     import spark.implicits._
-    Dot64.register(spark)
+    Functions.registerAll(spark)
     val rnd = new scala.util.Random(7)
     val rows = (1 to 50).map { i =>
       (i.toLong, Array.fill(64)(rnd.nextDouble() - 0.5),
@@ -26,7 +26,7 @@ class Dot64Spec extends SparkSpec {
 
   test("dot64 handles empty and mismatched lengths") {
     import spark.implicits._
-    Dot64.register(spark)
+    Functions.registerAll(spark)
     val df = Seq(
       (Array.empty[Double], Array.empty[Double]),
       (Array(1.0, 2.0, 3.0), Array(4.0, 5.0))).toDF("a", "b")
@@ -37,7 +37,7 @@ class Dot64Spec extends SparkSpec {
 
   test("dot64 coerces numeric (int/decimal) arrays to double") {
     import spark.implicits._
-    Dot64.register(spark)
+    Functions.registerAll(spark)
     val r = Seq((Array(1, 2), Array(3, 4))).toDF("a", "b")
       .select(expr("dot64(a, b)")).head().getDouble(0)
     assert(r == 11.0)

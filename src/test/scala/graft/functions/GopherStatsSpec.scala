@@ -33,7 +33,7 @@ class GopherStatsSpec extends SparkSpec {
       |  'n_bigrams', CAST(size(bg) AS BIGINT))""".stripMargin
 
   private def bothForms(docs: org.apache.spark.sql.DataFrame) = {
-    GopherStats.register(spark)
+    Functions.registerAll(spark)
     docs
       .withColumn("ws", split(col("text"), " "))
       .withColumn("wstat", expr(

@@ -20,7 +20,7 @@ class MinHash48Spec extends SparkSpec {
 
   test("expression signature == relational explode+min signature") {
     import spark.implicits._
-    MinHash48.register(spark)
+    Functions.registerAll(spark)
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "short"),
@@ -48,7 +48,7 @@ class MinHash48Spec extends SparkSpec {
 
   test("expression plan is narrow: no Exchange, no Generate") {
     import spark.implicits._
-    MinHash48.register(spark)
+    Functions.registerAll(spark)
     val p = Seq((1L, "hello world document"))
       .toDF("doc_id", "text")
       .select(col("doc_id"), expr("minhash48(text)"))
@@ -59,7 +59,7 @@ class MinHash48Spec extends SparkSpec {
 
   test("null text yields null signature") {
     import spark.implicits._
-    MinHash48.register(spark)
+    Functions.registerAll(spark)
     val r = Seq((1L, null: String)).toDF("doc_id", "text")
       .select(expr("minhash48(text)")).head()
     assert(r.isNullAt(0))

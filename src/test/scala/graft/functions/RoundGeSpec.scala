@@ -52,7 +52,7 @@ class RoundGeSpec extends SparkSpec {
 
   test("SQL registration and null propagation") {
     import spark.implicits._
-    RoundGe.register(spark)
+    Functions.registerAll(spark)
     val out = Seq(Some(0.36), Some(0.34), Some(0.34995), None)
       .toDF("x")
       .selectExpr("round_ge(x, CAST(0.35 AS DOUBLE), 4) AS v")

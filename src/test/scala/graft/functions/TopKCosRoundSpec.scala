@@ -17,8 +17,7 @@ class TopKCosRoundSpec extends SparkSpec {
   private def compare(rows: Seq[(Long, Double, Long)], k: Int,
       scale: Int): Unit = {
     import spark.implicits._
-    TopKMin.register(spark)
-    TopKCosRound.register(spark)
+    Functions.registerAll(spark)
     val df = rows.toDF("g", "c", "id").repartition(8)
     def shape(agg: String) = df
       .groupBy(col("g")).agg(expr(agg).as("tk"))

@@ -18,8 +18,7 @@ class TopKMinRoundSpec extends SparkSpec {
   private def compare(rows: Seq[(Long, Double, Long)], k: Int,
       scale: Int): Unit = {
     import spark.implicits._
-    TopKMin.register(spark)
-    TopKMinRound.register(spark)
+    Functions.registerAll(spark)
     val df = rows.toDF("g", "s", "id")
     // force real partial/merge paths: many partitions per group
     val spread = df.repartition(8)
@@ -89,7 +88,7 @@ class TopKMinRoundSpec extends SparkSpec {
       (1L, -0.0000006, 3L), (1L, 1e-9, 4L), (1L, -1.0000005, 5L))
     compare(rows, k = 3, scale = 6)
     import spark.implicits._
-    TopKMinRound.register(spark)
+    Functions.registerAll(spark)
     val out = rows.toDF("g", "s", "id")
       .groupBy(col("g")).agg(expr("topk_min_round(s, id, 5, 6)").as("tk"))
       .select(explode(col("tk.score"))).collect().map(_.getDouble(0))

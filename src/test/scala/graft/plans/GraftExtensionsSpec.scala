@@ -1,11 +1,52 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The extensions class must give a fresh session `minhash48` with no
-  * explicit registration call. */
+import graft.functions.Functions
+
+/** The extensions class must give a fresh session every function of
+  * [[Functions.table]] with no explicit registration call. */
 class GraftExtensionsSpec extends AnyFunSuite {
+
+  /** One SQL call per [[Functions.table]] entry. */
+  private val calls: Map[String, String] = Map(
+    "minhash48" -> "minhash48('the quick brown fox')",
+    "shingles8" -> "shingles8('a b c d e f g h i')",
+    "jaccard8" -> "jaccard8('a b c d e f g h i', 'a b c d e f g h i')",
+    "dot64" -> "dot64(array(1.0d), array(2.0d))",
+    "simhash16" -> "simhash16('a b')",
+    "simhash64" -> "simhash64('a b')",
+    "simhash128" -> "simhash128('a b')",
+    "xorfp48" -> "xorfp48('a b')",
+    "gopher_stats" -> "gopher_stats('a b c')",
+    "cov_moments" -> "cov_moments(array(1.0d, 2.0d), 2)",
+    "cms_sketch" -> "cms_sketch('a', 2, 8)",
+    "hll_regs" -> "hll_regs('a')",
+    "adc_sum" -> "adc_sum(array(array(1.0d, 2.0d)), array(1L))",
+    "adc_sum_flat" -> "adc_sum_flat(array(1.0d, 2.0d), array(1L), 2)",
+    "topk_min" -> "topk_min(0.5d, 1L, 3)",
+    "topk_min_round" -> "topk_min_round(0.5d, 1L, 3, 6)",
+    "topk_cos_round" -> "topk_cos_round(0.5d, 1L, 3, 6)",
+    "round_ge" -> "round_ge(0.5d, 0.4, 2)",
+    "url_norm" -> "url_norm('http://example.com/a')",
+    "vec_sum6" -> "vec_sum6(array(1.0d, 2.0d))")
+
+  private val tableNames = Functions.table.map(_.id.funcName).toSet
+
+  /** The function names a session resolves beyond Spark's built-ins. */
+  private def added(spark: SparkSession): Set[String] = {
+    val builtin = FunctionRegistry.builtin.listFunction().toSet
+    spark.sessionState.functionRegistry.listFunction().filterNot(builtin)
+      .map(_.funcName).toSet
+  }
+
+  private def evalAll(spark: SparkSession): Unit = {
+    assert(calls.keySet == tableNames, "one SQL call per table entry")
+    for ((name, call) <- calls)
+      assert(spark.sql(s"SELECT $call").head() != null, s"$name did not evaluate")
+  }
 
   test("spark.sql.extensions injects minhash48 into new sessions") {
     // getOrCreate returns any existing default session (which pre-dates
@@ -33,16 +74,23 @@ class GraftExtensionsSpec extends AnyFunSuite {
       val r2 = spark.sql("SELECT minhash48('the quick brown fox') AS sig")
         .head().getSeq[Long](0)
       assert(r == r2)
-      // the injection set tracks Functions.registerAll: every statically
-      // injectable function resolves in pure SQL with no register call
-      // (bpe_tokens is excluded by design — vocabulary-dependent)
-      for (f <- Seq("dot64(array(1.0d), array(2.0d))",
-          "simhash16('a b')", "simhash64('a b')", "xorfp48('a b')",
-          "jaccard8('a b c d e f g h i', 'a b c d e f g h i')",
-          "shingles8('a b c d e f g h i')", "gopher_stats('a b c')",
-          "cov_moments(array(1.0d, 2.0d), 2)",
-          "adc_sum(array(array(1.0d, 2.0d)), array(1L))"))
-        assert(spark.sql(s"SELECT $f").head() != null, s"$f not injected")
+      // every table function resolves in pure SQL with no register
+      // call, and the extension adds exactly the table's names
+      assert(added(spark) == tableNames)
+      evalAll(spark)
+      // a session without the extension resolves the same names after
+      // Functions.registerAll
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      val plain = SparkSession.builder()
+        .master("local[2]")
+        .appName("graft-register-test")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+      assert(added(plain).isEmpty)
+      Functions.registerAll(plain)
+      assert(added(plain) == tableNames)
+      evalAll(plain)
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()

@@ -127,7 +127,7 @@ class StreamsSpec extends SparkSpec {
   test("streaming CMS tracker equals the batch cms_sketch grid over everything seen") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.CmsSketch.register(spark)
+    graft.functions.Functions.registerAll(spark)
     val watch = Seq("alpha", "beta", "unseen")
     val mem = MemoryStream[(String, String)]
     val q = Streams.cmsTrack(mem.toDF().toDF("source", "text"), watch)
